@@ -195,20 +195,19 @@ object Bench {
     // phantom face regressions, q_link_predict and pipeline_train_corpus,
     // that the same code never reproduced on a quiet box). Such reps are
     // dropped from the per-face RAW median when at least one clean rep
-    // exists; the artifact records how many were excluded
+    // exists, and a face with no clean sample falls back to all its reps
+    // (BenchNorm.faceMedianSec); the artifact records how many were excluded
     // ("rep_excluded") and the history line keeps the unexcluded table
     // ("queries_allreps") so the old methodology's numbers stay readable.
     val repClean: Seq[Boolean] =
       repCpuMs.map(ms => ms > 0 && ms <= nominalMs * 1.4).toSeq
     val repExcluded =
       if (repClean.exists(identity)) repClean.count(c => !c) else 0
-    def faceMedian(name: String, excludeContended: Boolean): Double = {
-      val ts = passes.zip(repClean).flatMap { case (p, clean) =>
-        if (excludeContended && !clean) None
-        else p.collectFirst { case (`name`, t) if t >= 0 => t }
-      }
-      if (ts.nonEmpty) median(ts) else -1.0
-    }
+    def faceMedian(name: String, excludeContended: Boolean): Double =
+      graft.tools.BenchNorm.faceMedianSec(
+        passes.map(_.collectFirst { case (`name`, t) if t >= 0 => t }
+          .getOrElse(-1.0)),
+        repClean, excludeContended)
     // per-query median across reps; a query counts only reps where it ran
     val resultsAllReps = ordered.map { case (name, _) =>
       name -> faceMedian(name, excludeContended = false)

@@ -66,18 +66,24 @@ object Tables {
     * exchange-free plans (FanoutProbe r17: for q01-class aggregates the
     * exchange costs what the parallelism saves — this helper is only for
     * faces whose per-row compute dominates). Driver-side file metadata
-    * only; no extra Spark job. */
+    * only; no extra Spark job. Lengths come from the Hadoop FileSystem of
+    * each file's scheme, so `s3a://` and `hdfs://` tables are measured
+    * like local ones; a length that cannot be read fails the gate. */
   def fanOutSmallScan(df: DataFrame, bytesPerCore: Long = 8L << 20): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val files = try df.inputFiles catch { case _: Exception => Array.empty[String] }
-    val bytes = files.foldLeft(0L) { (acc, u) =>
-      val len = try new java.io.File(new java.net.URI(u).getPath).length
-        catch { case _: Exception => Long.MaxValue / 4096 }
-      acc + len
-    }
-    if (files.nonEmpty && files.length < cores / 2 &&
-        bytes < bytesPerCore * cores.toLong) df.repartition(cores)
-    else df
+    if (files.nonEmpty && files.length < cores / 2) {
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      val lens = files.map { u =>
+        try {
+          val p = new org.apache.hadoop.fs.Path(u)
+          Some(p.getFileSystem(conf).getFileStatus(p).getLen)
+        } catch { case _: Exception => None }
+      }
+      if (lens.forall(_.isDefined) &&
+          lens.flatten.sum < bytesPerCore * cores.toLong) df.repartition(cores)
+      else df
+    } else df
   }
 
   /** Cheap content fingerprint of an sf dir: (path, length, mtime) of every

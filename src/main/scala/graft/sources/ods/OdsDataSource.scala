@@ -4,7 +4,6 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -31,7 +30,7 @@ import graft.sources.xlsx.{XCell, XlsxDataSource, XlsxOptions, XlsxPartitionRead
   * the conversion (pruned columns are never converted). The xlsx path
   * keeps the throughput engineering (byte-level scanner, columnar
   * batches, intra-file threads); ods is the completeness-family member
-  * and rides row-based StAX. */
+  * and parses with StAX into the same columnar batches. */
 final class OdsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "ods"
   override def supportsExternalMetadata(): Boolean = true
@@ -133,23 +132,21 @@ final class OdsScan(fullSchema: StructType, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new OdsPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), columnar = true)
+      XlsxDataSource.captureConf())
 }
 
 final case class OdsInputPartition(path: String) extends InputPartition
 
+/** Batch scans read columnar, matching the xlsx family — Spark inserts
+  * codegen'd ColumnarToRow, the vectorized-parquet shape. */
 final class OdsPartitionReaderFactory(fullSchema: StructType,
-    required: StructType, opts: XlsxOptions, conf: XlsxDataSource.ConfProps,
-    /** Batch scans read columnar, matching the xlsx family default — Spark
-      * inserts codegen'd ColumnarToRow, the vectorized-parquet shape. The
-      * row reader stays for tests and any future row-path face. */
-    columnar: Boolean = false)
+    required: StructType, opts: XlsxOptions, conf: XlsxDataSource.ConfProps)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new OdsPartitionReader(fullSchema, required, opts, conf,
-      partition.asInstanceOf[OdsInputPartition].path)
+    throw new UnsupportedOperationException(
+      "ods scans are columnar: Spark reads them through createColumnarReader")
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new OdsColumnarPartitionReader(fullSchema, required, opts, conf,
@@ -157,9 +154,8 @@ final class OdsPartitionReaderFactory(fullSchema: StructType,
 }
 
 /** Bounded producer bridging the push-based StAX parse to the pull-based
-  * readers: a feeder thread queues post-skip rows (ragged-checked exactly
-  * like the xlsx path), the consumer drains. Shared by the row and
-  * columnar readers so the two paths cannot drift on parse semantics. */
+  * columnar reader: a feeder thread queues post-skip rows (ragged-checked
+  * exactly like the xlsx path), the consumer drains. */
 private[ods] final class OdsRowFeed(path: String, opts: XlsxOptions,
     conf: XlsxDataSource.ConfProps, resolved: XlsxSchema.Resolved) {
   private val queue = new java.util.concurrent.ArrayBlockingQueue[AnyRef](256)
@@ -213,48 +209,10 @@ private[ods] final class OdsRowFeed(path: String, opts: XlsxOptions,
   }
 }
 
-/** Row-based reader over one file's target table: rows stream through the
-  * shared XCell→Catalyst conversion; ragged rows (wider than row 1) error
-  * exactly like the xlsx path; short rows NULL-pad. */
-final class OdsPartitionReader(fullSchema: StructType, required: StructType,
-    opts: XlsxOptions, conf: XlsxDataSource.ConfProps, path: String)
-    extends PartitionReader[InternalRow] {
-
-  private val resolved = OdsDataSource.resolve(path, opts, conf)
-  // required column → its position in the sheet (fullSchema order = sheet order)
-  private val colIdx: Array[Int] =
-    required.fields.map(f => fullSchema.fieldIndex(f.name))
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  private val feed = new OdsRowFeed(path, opts, conf, resolved)
-  private var row: InternalRow = null
-  private var finished = false
-
-  override def next(): Boolean = {
-    if (finished) return false
-    val cells = feed.take()
-    if (cells == null) { finished = true; return false }
-    val values = new Array[Any](colIdx.length)
-    var i = 0
-    while (i < colIdx.length) {
-      val c = if (colIdx(i) < cells.length) cells(colIdx(i)) else XCell.XNone
-      values(i) = XlsxPartitionReader.convert(c, colTypes(i), resolved.coerceToString)
-      i += 1
-    }
-    row = new GenericInternalRow(values)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = {
-    finished = true
-    feed.close()
-  }
-}
-
-/** Columnar twin: the same feed fills reused OnHeapColumnVectors through
-  * `XlsxPartitionReader.writeVector` (the family's shared cell→vector
-  * semantics), emitting one ColumnarBatch per
-  * [[graft.sources.xlsx.XlsxColumnarPartitionReader.SeqBatchRows]] rows —
+/** Columnar reader over one file's target table: the feed's rows fill
+  * reused OnHeapColumnVectors through `XlsxPartitionReader.writeVector`
+  * (the family's shared cell→vector semantics), emitting one ColumnarBatch
+  * per [[graft.sources.xlsx.XlsxColumnarPartitionReader.SeqBatchRows]] rows —
   * Spark reads it through codegen'd ColumnarToRow, the same plan shape as
   * the xlsx batch path and the built-in vectorized parquet reader. */
 final class OdsColumnarPartitionReader(fullSchema: StructType,

@@ -6,7 +6,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -204,7 +203,7 @@ final class XlsxScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters, columnar = true)
+      XlsxDataSource.captureConf(), filters)
 
   /** Streaming face: the same scan over files arriving in a directory —
     * each micro-batch is the set of not-yet-seen files (one partition per
@@ -390,24 +389,22 @@ final case class XlsxInputPartition(path: String, sheet: Option[SheetRef] = None
     segRange: Option[SegRange] = None)
     extends InputPartition
 
+/** Batch and streaming scans both read columnar: one ColumnarBatch per
+  * parse chunk (or per [[XlsxColumnarPartitionReader.SeqBatchRows]] rows on
+  * the sequential path), read by Spark through codegen'd ColumnarToRow —
+  * the same shape as the built-in vectorized parquet reader. */
 final class XlsxPartitionReaderFactory(
     fullSchema: StructType,
     required: StructType,
     opts: XlsxOptions,
     conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    /** Batch scans read columnar (ColumnarBatch per parse chunk, Spark
-      * inserts codegen'd ColumnarToRow — the same shape as the built-in
-      * vectorized parquet reader); the streaming face keeps the row path. */
-    columnar: Boolean = false)
+    filters: Array[org.apache.spark.sql.sources.Filter])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XlsxInputPartition]
-    new XlsxPartitionReader(p.path, p.sheet, fullSchema, required, opts, conf,
-      filters, p.threads, p.segRange)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "xlsx scans are columnar: Spark reads them through createColumnarReader")
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[XlsxInputPartition]
@@ -416,184 +413,8 @@ final class XlsxPartitionReaderFactory(
   }
 }
 
-/** Streams one file's target sheet. Each file re-resolves its own header
-  * (cheap 2-row probe) so multi-file scans tolerate per-file header rows;
-  * column mapping is positional, like the reference.
-  */
-final class XlsxPartitionReader(
-    path: String,
-    sheet: Option[SheetRef],
-    fullSchema: StructType,
-    required: StructType,
-    opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
-    /** planner-assigned intra-file parse workers (explicit option or auto) */
-    threads: Int = 1,
-    /** segment-range slice of an indexed workbook (splittable path) */
-    segRange: Option[SegRange] = None)
-    extends PartitionReader[InternalRow] {
-
-  private val wb = XlsxDataSource.workbook(path, conf.toConf,
-    opts.maxSharedStringsBytes)
-  private val resolved = XlsxSchema.resolve(wb, opts, sheet.map(_.target))
-  /** Header/skipRows prefix still owed by THIS partition: ranged
-    * partitions subtract the rows earlier ranges already cover. */
-  private val effDropRows: Long =
-    segRange.map(r => math.max(0L, resolved.dropRows.toLong - r.rowsBefore))
-      .getOrElse(resolved.dropRows.toLong)
-  private val sheetTarget = sheet.map(_.target).getOrElse(
-    wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-  private val sheetNameValue: UTF8String =
-    UTF8String.fromString(sheet.map(_.name).getOrElse(""))
-  // positional index of each required column in the sheet; -1 marks the
-  // allSheets metadata column, which has no sheet position. Sheet
-  // positions count only DATA columns: a user-supplied schema may place
-  // _sheet_name anywhere, and fieldIndex over the full schema would then
-  // shift every column after it.
-  private val dataFieldNames: Array[String] =
-    if (opts.allSheets)
-      fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
-    else fullSchema.fieldNames
-  private val colIdx: Array[Int] = required.fieldNames.map { n =>
-    if (opts.allSheets && n == XlsxDataSource.SheetNameCol) -1
-    else dataFieldNames.indexOf(n)
-  }
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  // filters whose columns survive pruning can be evaluated on the row
-  private val requiredIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
-
-  /** Cell row → Catalyst values for the required columns — runs on the
-    * consumer thread for sequential scans, INSIDE the parse workers for
-    * `threads >= 2` (it is the per-cell match/boxing hot loop, and
-    * serializing it on one thread would cap the parallel scan). */
-  private def convertCells(cells: Array[XCell]): Array[Any] = {
-    val values = new Array[Any](colIdx.length)
-    var i = 0
-    while (i < colIdx.length) {
-      val c = colIdx(i)
-      values(i) =
-        if (c < 0) sheetNameValue
-        else {
-          val cell: XCell = if (c < cells.length) cells(c) else XCell.XNone
-          XlsxPartitionReader.convert(cell, colTypes(i), opts.coerceToString)
-        }
-      i += 1
-    }
-    values
-  }
-
-  /** Worker-side cell row → UnsafeRow (threads >= 2 path), or null when a
-    * pushed filter rejects the row. Writing UnsafeRows IN the parse workers
-    * (unboxed typed writes, one buffer copy) instead of boxing into
-    * `Array[Any]` + GenericInternalRow moves the whole row-materialization
-    * cost off the sequential consumer thread, and Spark's scan-side unsafe
-    * projection then reads direct-memory fields instead of unboxing. A
-    * filtered row still produces an entry (null) so the consumer can count
-    * it toward skipRows and ragged-row checks. */
-  private def convertToUnsafe(cells: Array[XCell]): AnyRef = {
-    if (evaluable.nonEmpty) {
-      // convert ONLY the filter-referenced columns for the eval — a full
-      // convertCells pass here would box every column a second time and
-      // forfeit most of the unsafe-path gain on filtered scans
-      val get: String => Any = name => {
-        val i = requiredIdx(name)
-        val c = colIdx(i)
-        if (c < 0) sheetNameValue
-        else XlsxPartitionReader.convert(
-          if (c < cells.length) cells(c) else XCell.XNone,
-          colTypes(i), opts.coerceToString)
-      }
-      if (!evaluable.forall(XlsxFilterEval.eval(_, get))) return null
-    }
-    val w = localWriter.get()
-    w.reset()
-    w.zeroOutNullBytes()
-    var i = 0
-    while (i < colIdx.length) {
-      val c = colIdx(i)
-      if (c < 0) w.write(i, sheetNameValue)
-      else {
-        val cell: XCell = if (c < cells.length) cells(c) else XCell.XNone
-        XlsxPartitionReader.writeCell(w, i, cell, typeCodes(i), opts.coerceToString)
-      }
-      i += 1
-    }
-    w.getRow.copy()
-  }
-
-  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val localWriter:
-      ThreadLocal[org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter] =
-    ThreadLocal.withInitial(() =>
-      new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(colIdx.length))
-
-  // segment-range partition: the sequential bounded-slice iterator (the
-  // split IS the parallelism); else threads >= 2 on a byte-scannable
-  // entry: parallel scanner with worker-side conversion; else sequential
-  private val iterE: Either[CellRowIterator, ParallelSheetScanner] =
-    segRange match {
-      case Some(r) =>
-        Left(wb.segmentRangeRowIterator(sheetTarget, r.s0, r.s1).getOrElse(
-          throw new IllegalStateException(
-            s"$path: segment index vanished for range [${r.s0},${r.s1}) — " +
-              "a whole-file fallback would DUPLICATE rows across partitions")))
-      case None if threads >= 2 =>
-        wb.convertingRowIterator(sheetTarget, threads,
-          cells => convertToUnsafe(cells), opts.chunkBytes)
-      case None => Left(wb.rowIterator(sheetTarget))
-    }
-  private val seqIter: CellRowIterator = iterE.left.toOption.orNull
-  private val parIter: ParallelSheetScanner = iterE.toOption.orNull
-
-  private var dropped = 0L
-  if (seqIter != null) {
-    while (dropped < effDropRows && seqIter.hasNext) {
-      seqIter.next(); dropped += 1
-    }
-  }
-  private var current: InternalRow = _
-
-  private def raggedCheck(rowIdx: Long, width: Int): Unit =
-    XlsxPartitionReader.raggedCheck(rowIdx, width, resolved.baseWidth)
-
-  private def accept(values: Array[Any]): Boolean = {
-    // pushed-filter early skip: drop non-matching rows before Spark sees them
-    val get: String => Any = name => values(requiredIdx(name))
-    if (evaluable.forall(XlsxFilterEval.eval(_, get))) {
-      current = new GenericInternalRow(values)
-      true
-    } else false
-  }
-
-  override def next(): Boolean = {
-    if (parIter != null) {
-      while (parIter.advance()) {
-        if (dropped < effDropRows) dropped += 1 // skipRows (converted needlessly; harmless)
-        else {
-          raggedCheck(parIter.rowIdx, parIter.rowWidth)
-          val row = parIter.rowConv // null = rejected by a pushed filter
-          if (row != null) { current = row.asInstanceOf[InternalRow]; return true }
-        }
-      }
-      false
-    } else {
-      while (seqIter.hasNext) {
-        val (rowIdx, cells) = seqIter.next()
-        raggedCheck(rowIdx, cells.length)
-        if (accept(convertCells(cells))) return true
-      }
-      false
-    }
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit =
-    if (parIter != null) parIter.close() else seqIter.close()
-}
-
+/** Cell conversion rules shared by the xlsx and ods columnar readers and
+  * the pushed-filter check. */
 object XlsxPartitionReader {
   /** Cell → Catalyst value under the reference's compatibility rules
     * (TypesCompatible, sheetreader_extension.cpp:225-250): exact type match
@@ -626,9 +447,8 @@ object XlsxPartitionReader {
   final val TDate = 3; final val TLong = 4; final val TInt = 5; final val TFloat = 6
   // Catch-all for DataTypes with no xlsx representation (user-supplied
   // TimestampType/DecimalType/... via supportsExternalMetadata): the boxed
-  // `convert` path reads them as NULL columns, so the unsafe path must too —
-  // throwing here would fail reader CONSTRUCTION even for threads=1, which
-  // never takes the unsafe path.
+  // `convert` reads them as NULL columns, so the vector writer must too —
+  // throwing here would fail reader CONSTRUCTION.
   final val TNull = 7
 
   def typeCode(dt: DataType): Int = dt match {
@@ -642,54 +462,8 @@ object XlsxPartitionReader {
     case _           => TNull
   }
 
-  /** Unboxed twin of [[convert]]: same value/NULL semantics, but writes the
-    * field straight into an UnsafeRowWriter. Every (code, cell) pair here
-    * MUST mirror the corresponding `convert` case — the differential ingest
-    * fuzz drives both paths over the same workbooks. */
-  def writeCell(
-      w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter,
-      i: Int, cell: XCell, code: Int, coerce: Boolean): Unit = (code: @annotation.switch) match {
-    case TDouble => cell match {
-      case XCell.XNumber(d) => w.write(i, d)
-      case _ => w.setNullAt(i)
-    }
-    case TString => cell match {
-      case XCell.XString(s) => w.write(i, UTF8String.fromString(s))
-      case XCell.XNumber(d) if coerce =>
-        w.write(i, UTF8String.fromString(
-          String.format(java.util.Locale.ROOT, "%f", Double.box(d))))
-      case XCell.XBool(b) if coerce =>
-        w.write(i, UTF8String.fromString(if (b) "TRUE" else "FALSE"))
-      case XCell.XDate(serial) if coerce =>
-        w.write(i, UTF8String.fromString(
-          java.time.LocalDate.ofEpochDay(XCell.serialToEpochDay(serial).toLong).toString))
-      case _ => w.setNullAt(i)
-    }
-    case TBool => cell match {
-      case XCell.XBool(b) => w.write(i, b)
-      case _ => w.setNullAt(i)
-    }
-    case TDate => cell match {
-      case XCell.XDate(serial) => w.write(i, XCell.serialToEpochDay(serial))
-      case _ => w.setNullAt(i)
-    }
-    case TLong => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toLong)
-      case _ => w.setNullAt(i)
-    }
-    case TInt => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toInt)
-      case _ => w.setNullAt(i)
-    }
-    case TFloat => cell match {
-      case XCell.XNumber(d) => w.write(i, d.toFloat)
-      case _ => w.setNullAt(i)
-    }
-    case TNull => w.setNullAt(i)
-  }
-
-  /** Columnar twin of [[writeCell]]: same value/NULL semantics, writing the
-    * cell into a WritableColumnVector slot instead of an UnsafeRow field.
+  /** Unboxed twin of [[convert]]: same value/NULL semantics, writing the
+    * cell into a WritableColumnVector slot instead of boxing a value.
     * Every (code, cell) pair MUST mirror `convert` — the xlsx oracle suite
     * rides this path end-to-end for every batch scan. */
   def writeVector(
@@ -745,14 +519,17 @@ object XlsxPartitionReader {
           s"Has: $width Expected: $baseWidth")
 }
 
-/** Columnar batch scan over one file's target sheet — the default batch-read
-  * path. With `threads >= 2` the parse workers build one ColumnarBatch per
-  * producer chunk ([[ParallelSheetScanner]]'s chunk face), so the consumer
-  * thread's per-row work drops to a metadata walk (row-index stitching +
-  * ragged checks) and Spark reads the batch through codegen'd ColumnarToRow —
-  * the vectorized-parquet shape, with no per-row InternalRow materialization
-  * anywhere on the sequential stages. Sequential scans (threads = 1, or the
-  * StAX/missing-entry fallback) batch consumer-side into reused vectors.
+/** Columnar batch scan over one file's target sheet — the only read path.
+  * Each file re-resolves its own header (cheap 2-row probe), so multi-file
+  * scans tolerate per-file header rows; column mapping is positional, like
+  * the reference. With `threads >= 2` the parse workers build one
+  * ColumnarBatch per producer chunk ([[ParallelSheetScanner]]'s chunk face),
+  * so the consumer thread's per-row work drops to a ragged-check walk over
+  * the chunk's stitched indices and Spark reads the batch through codegen'd
+  * ColumnarToRow — the vectorized-parquet shape, with no per-row
+  * InternalRow materialization anywhere on the sequential stages.
+  * Sequential scans (threads = 1, segment ranges, or the missing-entry StAX
+  * fallback) batch consumer-side into reused vectors.
   */
 final class XlsxColumnarPartitionReader(
     path: String,
@@ -772,6 +549,8 @@ final class XlsxColumnarPartitionReader(
   private val wb = XlsxDataSource.workbook(path, conf.toConf,
     opts.maxSharedStringsBytes)
   private val resolved = XlsxSchema.resolve(wb, opts, sheet.map(_.target))
+  /** Header/skipRows prefix still owed by THIS partition: ranged
+    * partitions subtract the rows earlier ranges already cover. */
   private val effDropRows: Long =
     segRange.map(r => math.max(0L, resolved.dropRows.toLong - r.rowsBefore))
       .getOrElse(resolved.dropRows.toLong)
@@ -779,6 +558,11 @@ final class XlsxColumnarPartitionReader(
     wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
   private val sheetNameBytes: Array[Byte] = sheet.map(_.name).getOrElse("")
     .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  // positional index of each required column in the sheet; -1 marks the
+  // allSheets metadata column, which has no sheet position. Sheet
+  // positions count only DATA columns: a user-supplied schema may place
+  // _sheet_name anywhere, and fieldIndex over the full schema would then
+  // shift every column after it.
   private val dataFieldNames: Array[String] =
     if (opts.allSheets)
       fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
@@ -864,24 +648,17 @@ final class XlsxColumnarPartitionReader(
     * parquet reader; worker-built batches are fresh per chunk instead. */
   private var seqVectors: Array[OnHeapColumnVector] = _
   private var current: ColumnarBatch = _
-  private var lastIdx = -1L
 
   override def next(): Boolean = {
     if (parIter != null) {
       while (parIter.advanceChunk()) {
-        // metadata walk: stitch implicit row indices across chunks and
-        // ragged-check every non-dropped row (dropped header/skip rows are
-        // exempt, same as the sequential path)
+        // metadata walk: ragged-check every non-dropped row (dropped
+        // header/skip rows are exempt, same as the sequential path)
         val idx = parIter.chunkIdx
-        val expl = parIter.chunkExplicitR
         val widths = parIter.chunkWidths
-        val exempt = parIter.chunkDropped
-        var i = 0
+        var i = parIter.chunkDropped
         while (i < idx.length) {
-          val abs = if (expl(i)) idx(i) else lastIdx + 1
-          lastIdx = abs
-          if (i >= exempt)
-            XlsxPartitionReader.raggedCheck(abs, widths(i), resolved.baseWidth)
+          XlsxPartitionReader.raggedCheck(idx(i), widths(i), resolved.baseWidth)
           i += 1
         }
         val b = parIter.chunkBatch.asInstanceOf[ColumnarBatch]

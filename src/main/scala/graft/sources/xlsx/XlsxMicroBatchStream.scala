@@ -118,14 +118,13 @@ final class XlsxMicroBatchStream(
     XlsxScan.partitionsFor(seen.slice(s, e).toSeq, opts)
   }
 
-  // columnar = true: micro-batches ride the same ColumnarBatch parse path
-  // as batch scans (Spark plans codegen'd ColumnarToRow above the
-  // streaming scan too) — a 100 TB backfill through readStream must not
-  // pay a slower parse rate than the batch side (r6 pinned columnar to
-  // batch only; parity is spec-asserted now)
+  // micro-batches ride the same ColumnarBatch parse path as batch scans
+  // (Spark plans codegen'd ColumnarToRow above the streaming scan too) — a
+  // 100 TB backfill through readStream must not pay a slower parse rate
+  // than the batch side (parity is spec-asserted)
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters, columnar = true)
+      XlsxDataSource.captureConf(), filters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -16,9 +16,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   *   producer thread:  inflate → locate row boundaries → cut ~`chunkBytes`
   *                     chunks ending on a row boundary
-  *   worker pool (N):  parse each chunk with an ordinary [[SheetScanner]]
-  *   caller thread:    merge chunk results in submission order, stitching
-  *                     implicit (r-attribute-less) row indices across chunks
+  *   worker pool (N):  parse each chunk with an ordinary [[SheetScanner]],
+  *                     then run `chunkConvert` over the chunk's rows
+  *   caller thread:    take chunk results in submission order
+  *                     ([[advanceChunk]]), stitching implicit
+  *                     (r-attribute-less) row indices across chunks
   *
   * Backpressure is the bounded future queue: at most `threads * 2` chunks
   * are in flight, so memory is O(threads · chunkBytes) regardless of sheet
@@ -28,6 +30,11 @@ import scala.collection.mutable.ArrayBuffer
   * entity quirk included — so a chunk cut is NEVER inside markup that the
   * scanner would have treated as content (the differential fuzz drives the
   * chunked path against StAX on adversarial sheets).
+  *
+  * The chunk face is the only consumer face: the columnar DSv2 reader
+  * builds one ColumnarBatch per chunk in `chunkConvert`, and the
+  * row iterator ([[ParallelSheetScanner.rowIterator]]) is an adapter whose
+  * transform hands the rows back unchanged.
   *
   * This is for the reference's headline scenario — one huge workbook on an
   * otherwise idle machine. Under a normal multi-file Spark scan each task
@@ -39,28 +46,19 @@ final class ParallelSheetScanner(
     dates: Array[Boolean],
     threads: Int,
     closeUnderlying: () => Unit,
-    chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes,
-    /** Optional per-row transform applied IN THE WORKER right after a row
-      * parses (the DSv2 reader passes its cell→Catalyst-value conversion
-      * here, so the per-cell match/boxing work fans out with the parse
-      * instead of serializing on the consumer thread). When set, drive the
-      * iterator with [[nextConverted]]; the raw `next()` face is disabled.
-      * The transform must be thread-safe and must not depend on the row's
-      * global index (workers see chunk-local parses). */
-    convert: Array[XCell] => AnyRef = null,
-    /** Optional per-CHUNK transform: called IN THE WORKER with all of a
-      * chunk's parsed rows at once — `(rows, dropFirst) => batch` — so a
-      * columnar reader can build one ColumnarBatch per chunk off the
-      * consumer thread. `dropFirst` is how many leading rows of THIS chunk
-      * fall inside the file-level `dropFirstRows` prefix (header/skipRows):
-      * the producer derives it EXACTLY from its boundary counts, so the
+    /** Per-CHUNK transform: called IN THE WORKER with all of a chunk's
+      * parsed rows at once — `(rows, dropFirst) => batch` — so a columnar
+      * reader can build one ColumnarBatch per chunk off the consumer
+      * thread. `dropFirst` is how many leading rows of THIS chunk fall
+      * inside the file-level `dropFirstRows` prefix (header/skipRows): the
+      * producer derives it EXACTLY from its boundary counts, so the
       * transform must exclude those rows from the batch (they still appear
-      * in the chunk metadata arrays for row-index stitching). Mutually
-      * exclusive with `convert`; drive the iterator with [[advanceChunk]] +
-      * the `chunk*` fields. Must be thread-safe and row-order-preserving. */
-    chunkConvert: (Array[Array[XCell]], Int) => AnyRef = null,
+      * in the chunk metadata arrays). Must be thread-safe and
+      * row-order-preserving. */
+    chunkConvert: (Array[Array[XCell]], Int) => AnyRef,
+    chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes,
     /** File-level leading-row drop (header + skipRows) dealt out to chunk
-      * workers via `chunkConvert`'s dropFirst argument. Chunk-face only. */
+      * workers via `chunkConvert`'s dropFirst argument. */
     dropFirstRows: Long = 0L,
     /** SEGMENT mode (non-null): the workbook carries a graft row-group
       * index ([[XlsxWriter.SegmentBytes]]), so the producer does NO
@@ -71,29 +69,10 @@ final class ParallelSheetScanner(
       * whole pipeline becomes embarrassingly parallel; `in` may be null.
       * Measured motivation: at t=8 the stream producer spends ~75% of
       * its wall time in boundary tracking — the plateau this removes. */
-    segmented: ParallelSheetScanner.SegmentIndex = null,
-    /** SPECULATIVE-TRACKING override for the index-less stream path:
-      * null = auto (engage at `threads >= 4`, where the single-thread
-      * boundary tracker is the measured pipeline floor), TRUE/FALSE =
-      * force. See [[produceSpeculative]]. */
-    specTrack: java.lang.Boolean = null)
-    extends CellRowIterator {
-  require(convert == null || chunkConvert == null,
-    "convert and chunkConvert are mutually exclusive")
+    segmented: ParallelSheetScanner.SegmentIndex = null)
+    extends AutoCloseable {
   require(threads >= 2, s"ParallelSheetScanner needs >= 2 threads, got $threads")
   import ParallelSheetScanner._
-
-  // DEFAULT OFF: the interleaved A/B (ParseBench foreign mode) measured
-  // the streaming pipeline already at the single-thread INFLATE ceiling
-  // on this class of hardware (track ~600 MB/s ≈ inflate ~650 MB/s, the
-  // two sequential stages pipeline to max ≈ inflate), so moving tracking
-  // into the worker pool only adds competition (0.82-0.96x). The
-  // machinery stays (differential-fuzz-pinned) as the opt-in for
-  // environments where tracking, not inflate, is the floor.
-  private val speculative: Boolean =
-    segmented == null && (
-      if (specTrack != null) specTrack.booleanValue()
-      else sys.props.get("graft.spectrack").contains("always"))
 
   // futures in submission order; capacity bounds in-flight chunks
   private val queue = new ArrayBlockingQueue[AnyRef](threads * 2)
@@ -146,10 +125,6 @@ final class ParallelSheetScanner(
   private def produce(): Unit = {
     try {
       if (segmented != null) { produceSegments(); return }
-      if (speculative) { produceSpeculative(); return }
-      val debug = java.lang.Boolean.getBoolean("graft.parsedebug")
-      var tRead, tScan, tSubmit = 0L
-      val tAll = System.nanoTime()
       val tracker = new RowBoundaryTracker
       var buf = new Array[Byte](chunkBytes + (chunkBytes >> 2))
       var filled = 0
@@ -163,21 +138,16 @@ final class ParallelSheetScanner(
         math.min(math.max(0L, dropFirstRows - rowsBefore), Int.MaxValue.toLong).toInt
       var done = false
       while (!done && !stopped) {
-        var t0 = if (debug) System.nanoTime() else 0L
         val n = prefetch.read(buf, filled, buf.length - filled)
-        if (debug) tRead += System.nanoTime() - t0
         if (n < 0) {
           if (filled > 0) submit(buf, filled, dropFor())
           done = true
         } else if (n > 0) {
           val from = filled
           filled += n
-          if (debug) t0 = System.nanoTime()
           val b = tracker.scan(buf, from, filled)
-          if (debug) tScan += System.nanoTime() - t0
           if (b >= 0) lastBoundary = b
           if (filled >= chunkBytes && lastBoundary > 0) {
-            if (debug) t0 = System.nanoTime()
             // zero-copy handoff: the worker parses [0, lastBoundary) of THIS
             // buffer; only the tail carries over into a fresh (or recycled)
             // one
@@ -191,7 +161,6 @@ final class ParallelSheetScanner(
             submit(buf, lastBoundary, dropFor())
             rowsBefore = tracker.boundaries
             buf = nbuf
-            if (debug) tSubmit += System.nanoTime() - t0
             filled = tail
             lastBoundary = -1
           } else if (filled == buf.length) {
@@ -200,176 +169,11 @@ final class ParallelSheetScanner(
           }
         }
       }
-      if (debug) System.err.println(
-        f"[parse-producer] total ${(System.nanoTime() - tAll) / 1e9}%.3f s: " +
-        f"read ${tRead / 1e9}%.3f scan ${tScan / 1e9}%.3f submit ${tSubmit / 1e9}%.3f")
     } catch {
       case _: InterruptedException => // close() raced us; fall through to End
       case t: Throwable => producerError = t
     } finally {
       putQuietly(End)
-    }
-  }
-
-  /** SPECULATIVE parallel boundary tracking for index-less streams — the
-    * r12 measurement showed the stream producer spends ~75% of its wall
-    * time in [[RowBoundaryTracker.scan]], capping foreign (no-index)
-    * workbooks at a one-core tracking floor however many parse workers
-    * wait behind it. This producer removes tracking from the sequential
-    * path:
-    *
-    *   1. blocks are cut at SPECULATIVE boundaries — the last literal
-    *      `</row>` byte sequence in each ~chunkBytes window, found by a
-    *      plain substring scan over the inflated bytes (no state
-    *      machine: the literal may legitimately sit inside a comment,
-    *      CDATA section, PI, or `<is><t>` text — validation below
-    *      catches exactly those);
-    *   2. each block runs a FRESH [[RowBoundaryTracker]] in the worker
-    *      pool, assuming it starts just past a genuine row boundary in
-    *      clean Text state (exactly a fresh tracker's initial state);
-    *   3. this thread settles track results IN ORDER and validates the
-    *      chain inductively: block 0 starts at the true stream start, and
-    *      block i+1's assumption is PROVEN by block i's track ending
-    *      clean — every boundary counted and every byte attributed
-    *      exactly as the sequential tracker would have, or nothing is.
-    *
-    * When a block does NOT end clean (an adversarial cut, or a row
-    * spanning the block), only its validated prefix [0, lastBoundary)
-    * parses; the tail carries into the next block, whose speculative
-    * result is discarded and re-tracked on this thread from the genuine
-    * boundary (the carry always starts at one). Worst case — pathological
-    * sheets where every cut lands inside markup — degrades to exactly the
-    * sequential tracking cost, never to wrong output; the differential
-    * fuzz drives this path with forced-tiny blocks over comment/CDATA
-    * sheets. Parse submission order, chunk semantics, dropFirstRows
-    * dealing and the consumer contract are IDENTICAL to the streaming
-    * producer — workers just do the tracking too. */
-  private def produceSpeculative(): Unit = {
-    val lit = Array[Byte]('<', '/', 'r', 'o', 'w', '>')
-    final case class TrackRes(rows: Long, lastBoundary: Int, cleanEnd: Boolean)
-    def track(buf: Array[Byte], len: Int): Future[TrackRes] =
-      pool.submit(new Callable[TrackRes] {
-        override def call(): TrackRes = {
-          val tr = new RowBoundaryTracker
-          val last = tr.scan(buf, 0, len)
-          TrackRes(tr.boundaries, last, last == len && tr.freshText)
-        }
-      })
-    // blocks awaiting in-order validation; bounded so memory stays
-    // O(threads · chunkBytes) alongside the parse queue's own bound
-    val pending = new java.util.ArrayDeque[(Array[Byte], Int, Future[TrackRes])]()
-    var rowsBefore = 0L
-    def dropFor(): Int =
-      math.min(math.max(0L, dropFirstRows - rowsBefore), Int.MaxValue.toLong).toInt
-    var chainClean = true // next pending block truly starts at a boundary
-    var carry: Array[Byte] = null // bytes after the last GENUINE boundary
-    var carryLen = 0
-
-    // sequential re-track of a broken-chain block (rare): the carry always
-    // starts at a genuine boundary, so a fresh tracker is the true state
-    def settleBroken(buf: Array[Byte], len: Int): Unit = {
-      val merged = new Array[Byte](carryLen + len)
-      if (carryLen > 0) System.arraycopy(carry, 0, merged, 0, carryLen)
-      System.arraycopy(buf, 0, merged, carryLen, len)
-      val mlen = carryLen + len
-      val tr = new RowBoundaryTracker
-      val last = tr.scan(merged, 0, mlen)
-      if (last == mlen && tr.freshText) {
-        submit(merged, mlen, dropFor()); rowsBefore += tr.boundaries
-        carry = null; carryLen = 0; chainClean = true
-      } else if (last > 0) {
-        carry = java.util.Arrays.copyOfRange(merged, last, mlen)
-        carryLen = mlen - last
-        submit(merged, last, dropFor()); rowsBefore += tr.boundaries
-      } else {
-        carry = merged; carryLen = mlen
-      }
-    }
-
-    def settleOne(): Unit = {
-      val (buf, len, fut) = pending.pollFirst()
-      if (chainClean) {
-        val res = fut.get()
-        if (res.cleanEnd) {
-          submit(buf, len, dropFor()); rowsBefore += res.rows
-        } else if (res.lastBoundary > 0) {
-          // valid track, bogus speculative END cut: parse the validated
-          // prefix, carry the tail (copied BEFORE the parse worker may
-          // recycle the array)
-          carry = java.util.Arrays.copyOfRange(buf, res.lastBoundary, len)
-          carryLen = len - res.lastBoundary
-          submit(buf, res.lastBoundary, dropFor()); rowsBefore += res.rows
-          chainClean = false
-        } else {
-          // no boundary in the whole block: everything carries
-          carry = java.util.Arrays.copyOf(buf, len); carryLen = len
-          chainClean = false
-        }
-      } else {
-        // chain broken upstream: this block's speculative track assumed a
-        // start state that never happened — discard and re-track from the
-        // carried genuine boundary. The zombie task may still be reading
-        // `buf`, so the array is NOT recycled on this path.
-        fut.cancel(false)
-        settleBroken(buf, len)
-      }
-    }
-
-    var buf: Array[Byte] = {
-      val r = bufPool.poll()
-      if (r != null && r.length >= chunkBytes) r else new Array[Byte](chunkBytes)
-    }
-    var filled = 0
-    var lastLit = -1 // end offset of the last `</row>` literal seen in buf
-    var done = false
-    while (!done && !stopped) {
-      val n = prefetch.read(buf, filled, buf.length - filled)
-      if (n < 0) done = true
-      else if (n > 0) {
-        // incremental literal scan over the new bytes (5-byte overlap
-        // covers a literal split across reads)
-        var q = math.max(0, filled - 5)
-        filled += n
-        val stop = filled - lit.length
-        while (q <= stop) {
-          if (buf(q) == '<' && buf(q + 1) == '/' && buf(q + 2) == 'r' &&
-              buf(q + 3) == 'o' && buf(q + 4) == 'w' && buf(q + 5) == '>')
-            lastLit = q + 6
-          q += 1
-        }
-        if (filled >= chunkBytes && lastLit > 0) {
-          val cut = lastLit
-          val tail = filled - cut
-          val minLen = math.max(buf.length, chunkBytes)
-          val recycled = bufPool.poll()
-          val nbuf =
-            if (recycled != null && recycled.length >= minLen) recycled
-            else new Array[Byte](minLen)
-          System.arraycopy(buf, cut, nbuf, 0, tail)
-          pending.addLast((buf, cut, track(buf, cut)))
-          buf = nbuf
-          filled = tail
-          lastLit = -1
-          if (pending.size > threads) settleOne()
-        } else if (filled == buf.length) {
-          // no boundary candidate yet: grow and keep reading
-          buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-        }
-      }
-    }
-    while (!pending.isEmpty && !stopped) settleOne()
-    if (!stopped && (filled > 0 || carryLen > 0)) {
-      // final remainder (worksheet trailer included), via the carry path
-      // so a broken chain merges correctly; chainClean w/ no carry is the
-      // same arraycopy with carryLen = 0
-      val fb = buf; val fl = filled
-      if (chainClean && carryLen == 0) submit(fb, fl, dropFor())
-      else {
-        val merged = new Array[Byte](carryLen + fl)
-        if (carryLen > 0) System.arraycopy(carry, 0, merged, 0, carryLen)
-        System.arraycopy(fb, 0, merged, carryLen, fl)
-        submit(merged, carryLen + fl, dropFor())
-      }
     }
   }
 
@@ -445,133 +249,40 @@ final class ParallelSheetScanner(
       new ByteArrayInputStream(chunk, 0, len), strings, dates, () => ())
     val idx = new ArrayBuffer[Long]()
     val explicitR = new ArrayBuffer[Boolean]()
-    val rows = if (convert == null) new ArrayBuffer[Array[XCell]]() else null
-    val conv = if (convert != null) new ArrayBuffer[AnyRef]() else null
-    val widths = if (convert != null || chunkConvert != null) new ArrayBuffer[Int]() else null
+    val rows = new ArrayBuffer[Array[XCell]]()
+    val widths = new ArrayBuffer[Int]()
     while (sc.hasNext) {
       val (i, cells) = sc.next()
       idx += i
       explicitR += sc.lastRowExplicit
-      if (convert == null) rows += cells
-      else { conv += convert(cells); widths += cells.length }
-      if (chunkConvert != null) widths += cells.length
+      rows += cells
+      widths += cells.length
     }
-    val out = if (chunkConvert != null) {
-      val rowArr = rows.toArray
-      val dropped = math.min(dropFirst, rowArr.length)
-      ParsedChunk(idx.toArray, explicitR.toArray, null, null, widths.toArray,
-        chunkConvert(rowArr, dropped), dropped)
-    } else
-      ParsedChunk(idx.toArray, explicitR.toArray,
-        if (rows == null) null else rows.toArray,
-        if (conv == null) null else conv.toArray,
-        if (widths == null) null else widths.toArray)
+    val rowArr = rows.toArray
+    val dropped = math.min(dropFirst, rowArr.length)
+    val out = ParsedChunk(idx.toArray, explicitR.toArray, widths.toArray,
+      chunkConvert(rowArr, dropped), dropped)
     // the chunk's bytes are fully consumed — recycle the buffer; offer()
     // drops it when the pool is at capacity (exact bound, no size() scan)
     bufPool.offer(chunk)
     out
   }
 
-  // ---- consumer (the iterator face) ---------------------------------------
-
-  private var cur: ParsedChunk = _
-  private var curI = 0
-  private var lastIdx = -1L // last emitted absolute row index
-  private var ended = false
-  private var nrValid = false
-  private var nrIdx = 0L
-  private var nrCells: Array[XCell] = _
-  private var nrConv: AnyRef = _
-  private var nrWidth = 0
-
-  override def hasNext: Boolean = {
-    if (chunkConvert != null) throw new UnsupportedOperationException(
-      "row faces are disabled when a chunkConvert fn is set; drive advanceChunk()")
-    if (nrValid) return true
-    if (ended) return false
-    while (cur == null || curI >= cur.idx.length) {
-      queue.take() match {
-        case End =>
-          ended = true
-          if (producerError != null) { close(); throw producerError }
-          close()
-          return false
-        case f: Future[_] =>
-          // a worker parse failure must tear the pipeline down (producer,
-          // prefetch, pool, underlying stream) and surface the CAUSE, the
-          // same exception the sequential scanner would have thrown
-          cur =
-            try f.get().asInstanceOf[ParsedChunk]
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                ended = true
-                close()
-                throw Option(e.getCause).getOrElse(e)
-              case e: InterruptedException =>
-                ended = true
-                close()
-                throw e
-            }
-          curI = 0
-      }
-    }
-    // stitch: an implicit row numbers from the previously EMITTED row, not
-    // from the chunk-local counter (which started at -1)
-    val abs = if (cur.explicitR(curI)) cur.idx(curI) else lastIdx + 1
-    lastIdx = abs
-    nrIdx = abs
-    if (convert == null) nrCells = cur.rows(curI)
-    else { nrConv = cur.conv(curI); nrWidth = cur.widths(curI) }
-    nrValid = true
-    curI += 1
-    true
-  }
-
-  override def next(): (Long, Array[XCell]) = {
-    // with a convert fn the raw cells are never materialized chunk-side;
-    // the Iterator face is deliberately unusable rather than subtly wrong
-    if (convert != null) throw new UnsupportedOperationException(
-      "next() is disabled when a convert fn is set; drive nextConverted()")
-    if (!hasNext) throw new NoSuchElementException
-    nrValid = false
-    (nrIdx, nrCells)
-  }
-
-  /** Converted-row face (convert != null): (absolute row index, the
-    * convert() result, the parsed cell count for ragged-row checks). */
-  def nextConverted(): (Long, AnyRef, Int) = {
-    require(convert != null, "nextConverted() needs a convert fn")
-    if (!hasNext) throw new NoSuchElementException
-    nrValid = false
-    (nrIdx, nrConv, nrWidth)
-  }
-
-  /** Allocation-free converted-row face: `advance()` then read the three
-    * `row*` fields. `nextConverted` allocates a Tuple3 + two boxes per row —
-    * real money on the consumer thread, which is the pipeline's sequential
-    * merge stage. Fields are valid until the next `advance()`. */
-  def advance(): Boolean = {
-    val h = hasNext
-    if (h) nrValid = false
-    h
-  }
-  def rowIdx: Long = nrIdx
-  def rowConv: AnyRef = nrConv
-  def rowWidth: Int = nrWidth
-
-  // ---- chunk face (chunkConvert != null) -----------------------------------
+  // ---- consumer: the chunk face --------------------------------------------
 
   private var chunkCur: ParsedChunk = _
+  private var lastIdx = -1L // absolute index of the last row handed out
+  private var ended = false
 
-  /** Whole-chunk face: pull the next parsed chunk (worker-built batch plus
-    * the per-row index/width metadata the consumer needs for row-number
-    * stitching, skipRows and ragged checks). Returns false at stream end.
-    * A chunk may carry ZERO rows (a producer tail holding only trailing
-    * markup) — its batch is whatever chunkConvert returned for an empty
-    * row set; callers skip it and keep pulling. Do not interleave with the
-    * row faces. */
+  /** Pull the next parsed chunk: the worker-built `chunkBatch` plus the
+    * per-row metadata the consumer needs for skipRows and ragged checks.
+    * Returns false at stream end. Row indices are stitched here, in
+    * submission order: an implicit (r-attribute-less) row numbers from the
+    * previous row, not from the worker's chunk-local counter (which started
+    * at -1). A chunk may carry ZERO rows (a producer tail holding only
+    * trailing markup) — its batch is whatever chunkConvert returned for an
+    * empty row set; callers skip it and keep pulling. */
   def advanceChunk(): Boolean = {
-    require(chunkConvert != null, "advanceChunk() needs a chunkConvert fn")
     if (ended) return false
     queue.take() match {
       case End =>
@@ -580,6 +291,9 @@ final class ParallelSheetScanner(
         close()
         false
       case f: Future[_] =>
+        // a worker parse failure must tear the pipeline down (producer,
+        // prefetch, pool, underlying stream) and surface the CAUSE, the
+        // same exception the sequential scanner would have thrown
         chunkCur =
           try f.get().asInstanceOf[ParsedChunk]
           catch {
@@ -592,12 +306,20 @@ final class ParallelSheetScanner(
               close()
               throw e
           }
+        val idx = chunkCur.idx
+        val expl = chunkCur.explicitR
+        var i = 0
+        while (i < idx.length) {
+          if (!expl(i)) idx(i) = lastIdx + 1
+          lastIdx = idx(i)
+          i += 1
+        }
         true
     }
   }
   def chunkBatch: AnyRef = chunkCur.batch
+  /** Absolute (stitched) row index of every parsed row in this chunk. */
   def chunkIdx: Array[Long] = chunkCur.idx
-  def chunkExplicitR: Array[Boolean] = chunkCur.explicitR
   def chunkWidths: Array[Int] = chunkCur.widths
   /** Leading rows of this chunk excluded from the batch (file-level
     * header/skipRows prefix): present in the metadata arrays, exempt from
@@ -710,12 +432,46 @@ object ParallelSheetScanner {
       compressedSize: Long, cuts: Array[Array[Long]], totalUncomp: Long,
       totalRows: Long)
 
+  /** Row face over the chunk face: the chunk transform returns each
+    * chunk's parsed rows as they are, and the iterator walks them with the
+    * scanner's stitched indices — the same stitching the columnar reader
+    * rides. */
+  def rowIterator(in: InputStream, strings: Array[String],
+      dates: Array[Boolean], threads: Int, closeUnderlying: () => Unit,
+      chunkBytes: Int = DefaultChunkBytes,
+      segmented: SegmentIndex = null): CellRowIterator =
+    new ChunkRows(new ParallelSheetScanner(in, strings, dates, threads,
+      closeUnderlying, (rows, _) => rows, chunkBytes, segmented = segmented))
+
+  private final class ChunkRows(sc: ParallelSheetScanner) extends CellRowIterator {
+    private var rows: Array[Array[XCell]] = Array.empty
+    private var idx: Array[Long] = Array.empty
+    private var i = 0
+
+    override def hasNext: Boolean = {
+      while (i >= rows.length && sc.advanceChunk()) {
+        rows = sc.chunkBatch.asInstanceOf[Array[Array[XCell]]]
+        idx = sc.chunkIdx
+        i = 0
+      }
+      i < rows.length
+    }
+
+    override def next(): (Long, Array[XCell]) = {
+      if (!hasNext) throw new NoSuchElementException
+      i += 1
+      (idx(i - 1), rows(i - 1))
+    }
+
+    override def close(): Unit = sc.close()
+  }
+
   private case object End
-  private final case class ParsedChunk(
-      idx: Array[Long], explicitR: Array[Boolean], rows: Array[Array[XCell]],
-      conv: Array[AnyRef], widths: Array[Int], batch: AnyRef = null,
-      dropped: Int = 0)
+  private final case class ParsedChunk(idx: Array[Long],
+      explicitR: Array[Boolean], widths: Array[Int], batch: AnyRef,
+      dropped: Int)
 }
+
 
 /** Incremental locator of row boundaries in a SpreadsheetML byte stream.
   *
@@ -758,14 +514,6 @@ final class RowBoundaryTracker {
     * leading-row drop out to chunk workers exactly (boundaries ≡ rows the
     * chunk's parser will emit, because cuts land ON boundaries). */
   def boundaries: Long = bcount
-
-  /** True iff the tracker currently sits in plain Text state with no
-    * element containment — exactly a FRESH tracker's initial state, which
-    * is also the state just past any genuine row boundary. The
-    * speculative producer's chain validation: a block whose scan ends
-    * `freshText` at a counted boundary PROVES the next block's
-    * fresh-tracker assumption. */
-  def freshText: Boolean = state == Text && !inV && !inIs && !inT
 
   /** Feed buf[from, to); returns offset just past the last row end, or -1. */
   def scan(buf: Array[Byte], from: Int, to: Int): Int = {

@@ -269,24 +269,13 @@ object XlsxParser {
       } finally it.close()
     }
 
-    /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
-      * PartitionReader needs (next()/get() driven from the scan), so the
-      * sheet never has to be buffered in memory. Close() releases the zip
-      * stream; exhausting the iterator also closes it.
-      *
-      * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
-      * the chunked [[ParallelSheetScanner]] (the reference's `threads` knob:
-      * one big workbook parsed by N cores); UTF-16 workbooks transcode on
-      * the fly ([[Utf16ToUtf8Stream]]) and ride the same scanners.
-      */
     /** Open `path` and sniff the encoding BOM once: Left(an iterator for
       * the missing-entry StAX fallback), Right(the positioned byte stream
-      * + closer) for the byte scanners. A UTF-16 BOM no longer falls back
-      * to StAX (r10): the entry transcodes to UTF-8 on the fly and rides
-      * the same scanner + columnar pipeline — the scanner matches tags
-      * bytewise and ignores the prolog's declared encoding. The single
-      * copy of this dispatch — rowIterator and convertingRowIterator both
-      * ride it. */
+      * + closer) for the byte scanners. A UTF-16 BOM does not fall back to
+      * StAX (r10): the entry transcodes to UTF-8 on the fly and rides the
+      * same scanner + columnar pipeline — the scanner matches tags bytewise
+      * and ignores the prolog's declared encoding. The single copy of this
+      * dispatch — rowIterator and chunkingRowIterator both ride it. */
     private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
       openEntryStream(path) match {
         case None => Left(new RowIterator(None, sharedStrings, dateStyles))
@@ -380,65 +369,54 @@ object XlsxParser {
           () => { inf.end(); fis.close() })
       }
 
+    /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
+      * PartitionReader needs (next()/get() driven from the scan), so the
+      * sheet never has to be buffered in memory. Close() releases the zip
+      * stream; exhausting the iterator also closes it.
+      *
+      * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
+      * the chunked [[ParallelSheetScanner]] through its row adapter (the
+      * reference's `threads` knob: one big workbook parsed by N cores);
+      * UTF-16 workbooks transcode on the fly ([[Utf16ToUtf8Stream]]) and
+      * ride the same scanners. */
     def rowIterator(path: String, threads: Int = 1): CellRowIterator = {
       if (threads >= 2) segmentIndexFor(path, threads) match {
         case Some(seg) =>
-          return new ParallelSheetScanner(null, sharedStrings, dateStyles,
-            threads, () => (), segmented = seg)
+          return ParallelSheetScanner.rowIterator(null, sharedStrings,
+            dateStyles, threads, () => (), segmented = seg)
         case None =>
       }
       openSniffed(path) match {
         case Left(it) => it
         case Right((in, closeAll)) =>
           if (threads >= 2)
-            new ParallelSheetScanner(in, sharedStrings, dateStyles, threads, closeAll)
+            ParallelSheetScanner.rowIterator(in, sharedStrings, dateStyles,
+              threads, closeAll)
           else new SheetScanner(in, sharedStrings, dateStyles, closeAll)
       }
     }
 
-    /** Parallel row iterator with a WORKER-side per-row transform — the
-      * DSv2 reader passes its cell→Catalyst conversion here so that work
-      * fans out with the parse. Right(parallel scanner, drive with
-      * nextConverted — its raw Iterator face is disabled) on the byte
-      * path; Left(plain iterator) when the entry is missing or UTF-16
-      * (the caller converts on its own thread there). */
-    private[xlsx] def convertingRowIterator(path: String, threads: Int,
-        convert: Array[XCell] => AnyRef,
-        chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Either[CellRowIterator, ParallelSheetScanner] = {
-      segmentIndexFor(path, threads).foreach { seg =>
-        return Right(new ParallelSheetScanner(null, sharedStrings, dateStyles,
-          threads, () => (), chunkBytes = chunkBytes, convert = convert,
-          segmented = seg))
-      }
-      openSniffed(path) match {
-        case Left(it) => Left(it)
-        case Right((in, closeAll)) =>
-          Right(new ParallelSheetScanner(in, sharedStrings, dateStyles, threads,
-            closeAll, chunkBytes = chunkBytes, convert = convert))
-      }
-    }
-
-    /** Parallel row iterator with a WORKER-side per-CHUNK transform — the
+    /** Parallel scanner with a WORKER-side per-CHUNK transform — the
       * columnar DSv2 reader passes its rows→ColumnarBatch builder here so
       * whole batches materialize off the consumer thread. Right(parallel
-      * scanner, drive with advanceChunk); Left(plain iterator) when the
-      * entry is missing or UTF-16 (the caller batches on its own thread). */
+      * scanner, drive with advanceChunk) on the byte path, UTF-16 included
+      * (it transcodes onto the byte scanner); Left(the StAX fallback
+      * iterator) only when the worksheet entry is missing (the caller
+      * batches on its own thread). */
     private[xlsx] def chunkingRowIterator(path: String, threads: Int,
         chunkConvert: (Array[Array[XCell]], Int) => AnyRef,
         dropFirstRows: Long = 0L,
         chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Either[CellRowIterator, ParallelSheetScanner] = {
       segmentIndexFor(path, threads).foreach { seg =>
         return Right(new ParallelSheetScanner(null, sharedStrings, dateStyles,
-          threads, () => (), chunkBytes = chunkBytes,
-          chunkConvert = chunkConvert, dropFirstRows = dropFirstRows,
+          threads, () => (), chunkConvert, chunkBytes, dropFirstRows,
           segmented = seg))
       }
       openSniffed(path) match {
         case Left(it) => Left(it)
         case Right((in, closeAll)) =>
           Right(new ParallelSheetScanner(in, sharedStrings, dateStyles, threads,
-            closeAll, chunkBytes = chunkBytes, chunkConvert = chunkConvert,
-            dropFirstRows = dropFirstRows))
+            closeAll, chunkConvert, chunkBytes, dropFirstRows))
       }
     }
 

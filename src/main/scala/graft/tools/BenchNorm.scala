@@ -43,6 +43,19 @@ object BenchNorm {
     if (ok.isEmpty) -1.0 else median(ok)
   }
 
+  /** Raw cross-rep median for one face over the reps where it ran
+    * (t >= 0). With `excludeContended`, reps whose anchor marked the box
+    * contended (`repClean` false) are left out — unless that leaves the
+    * face no sample, in which case every rep counts, so a face that only
+    * ran in contended reps keeps a time instead of dropping out of the
+    * table. -1 when the face never ran. */
+  def faceMedianSec(repTimesSec: Seq[Double], repClean: Seq[Boolean],
+      excludeContended: Boolean): Double = {
+    val ran = repTimesSec.zip(repClean).filter(_._1 >= 0)
+    val clean = if (excludeContended) ran.filter(_._2) else ran
+    median((if (clean.nonEmpty) clean else ran).map(_._1))
+  }
+
   // --- history-line scraping (same regex idiom as Bench.reportTrend:
   // the lines are our own single-line JSON, written by Bench itself) ---
 

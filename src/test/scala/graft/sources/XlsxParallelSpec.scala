@@ -32,7 +32,7 @@ class XlsxParallelSpec extends SparkSpec {
     val it =
       if (chunkBytes > 0) {
         val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
-        new ParallelSheetScanner(raw, wb.sharedStrings, wb.dateStyles,
+        ParallelSheetScanner.rowIterator(raw, wb.sharedStrings, wb.dateStyles,
           threads, closeAll, chunkBytes)
       } else wb.rowIterator("xl/worksheets/sheet1.xml", threads)
     try it.map { case (i, cs) => (i, cs.toSeq) }.toList
@@ -60,28 +60,26 @@ class XlsxParallelSpec extends SparkSpec {
     val wb = new XlsxParser.Workbook(
       () => new java.io.FileInputStream(file), Some(file))
     val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
-    // tiny chunks force dozens of ParsedChunks through the converted face
+    // tiny chunks force dozens of chunks through the chunk face; the
+    // transform runs in the workers and sees each chunk's parsed rows
     val par = new ParallelSheetScanner(raw, wb.sharedStrings, wb.dateStyles,
-      threads = 3, closeAll, chunkBytes = 32 << 10,
-      convert = cells => Integer.valueOf(cells.length))
+      threads = 3, closeAll, (rows, _) => rows.map(_.length),
+      chunkBytes = 32 << 10)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
-    while (par.hasNext) {
-      val (i, v, w) = par.nextConverted()
-      out += ((i, v.asInstanceOf[Integer].intValue, w))
-    }
+    var chunks = 0
+    try while (par.advanceChunk()) {
+      chunks += 1
+      val conv = par.chunkBatch.asInstanceOf[Array[Int]]
+      par.chunkIdx.indices.foreach { i =>
+        out += ((par.chunkIdx(i), conv(i), par.chunkWidths(i)))
+      }
+    } finally par.close()
     val seq = drain(1)
+    assert(chunks > 10, s"only $chunks chunks")
     assert(out.size == seq.size)
     assert(out.map(_._1).toSeq == seq.map(_._1)) // stitched absolute indices
     assert(out.map(_._3).toSeq == seq.map(_._2.size)) // widths track the cells
-    assert(out.forall(t => t._2 == t._3)) // convert() saw the same rows
-    // the raw Iterator face must refuse, not return garbage
-    val wb2 = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
-    val (raw2, closeAll2) = wb2.openEntryStream("xl/worksheets/sheet1.xml").get
-    val par2 = new ParallelSheetScanner(raw2, wb2.sharedStrings, wb2.dateStyles,
-      threads = 2, closeAll2, convert = cells => Integer.valueOf(0))
-    try intercept[UnsupportedOperationException] { par2.next() }
-    finally par2.close()
+    assert(out.forall(t => t._2 == t._3)) // the transform saw the same rows
   }
 
   test("skipRows and pushed filters behave identically under threads") {
@@ -210,8 +208,8 @@ class XlsxParallelSpec extends SparkSpec {
     }
     val before = Thread.activeCount()
     var closed = false
-    val it = new ParallelSheetScanner(failing, Array.empty, Array.empty,
-      threads = 2, () => closed = true, chunkBytes = 16)
+    val it = ParallelSheetScanner.rowIterator(failing, Array.empty,
+      Array.empty, threads = 2, () => closed = true, chunkBytes = 16)
     val e = intercept[Exception] { while (it.hasNext) it.next() }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(m => Option(m.getMessage).getOrElse("")).mkString("; ")

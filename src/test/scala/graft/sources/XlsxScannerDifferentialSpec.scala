@@ -185,28 +185,38 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
         val wb3 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
         val (raw, closeAll) =
           wb3.openEntryStream("xl/worksheets/sheet1.xml").get
-        val par = new ParallelSheetScanner(raw, wb3.sharedStrings,
-          wb3.dateStyles, threads = 3, closeAll, chunkBytes = cb)
-        val chunked = drain(par)
+        val chunked = drain(ParallelSheetScanner.rowIterator(raw,
+          wb3.sharedStrings, wb3.dateStyles, threads = 3, closeAll,
+          chunkBytes = cb))
         assert(chunked == stax,
           s"trial $trial chunked(chunkBytes=$cb) diverged\nsheet:\n$sheet\n" +
             s"chunked: $chunked\nstax: $stax")
 
-        // SPECULATIVE-tracking path, forced on with the same tiny block
-        // target: cuts land at literal `</row>` occurrences — including
-        // fake ones inside comments/CDATA/inline text, which the chain
-        // validation must catch and re-track (the fallback IS the point
-        // of this fuzz)
-        val wb4 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
-        val (raw4, closeAll4) =
-          wb4.openEntryStream("xl/worksheets/sheet1.xml").get
-        val spec = new ParallelSheetScanner(raw4, wb4.sharedStrings,
-          wb4.dateStyles, threads = 3, closeAll4, chunkBytes = cb,
-          specTrack = java.lang.Boolean.TRUE)
-        val specRows = drain(spec)
-        assert(specRows == stax,
-          s"trial $trial speculative(chunkBytes=$cb) diverged\nsheet:\n$sheet\n" +
-            s"spec: $specRows\nstax: $stax")
+        // the chunk face as the columnar DSv2 reader drives it: stitched
+        // indices, widths, and the producer's dealing of a leading-row
+        // drop, counted by a worker-side transform
+        Seq(0, 2).foreach { drop =>
+          val wb4 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+          val par = wb4.chunkingRowIterator("xl/worksheets/sheet1.xml",
+            threads = 3, (rows, dropFirst) => Integer.valueOf(rows.length - dropFirst),
+            dropFirstRows = drop.toLong, chunkBytes = cb).toOption.get
+          val idx = Seq.newBuilder[Long]
+          val widths = Seq.newBuilder[Int]
+          var kept, dropped = 0
+          try while (par.advanceChunk()) {
+            idx ++= par.chunkIdx
+            widths ++= par.chunkWidths
+            kept += par.chunkBatch.asInstanceOf[Integer].intValue
+            dropped += par.chunkDropped
+          } finally par.close()
+          val expDropped = math.min(drop, stax.size)
+          val got = (idx.result(), widths.result(), kept, dropped)
+          val want = (stax.map(_._1), stax.map(_._2.size),
+            stax.size - expDropped, expDropped)
+          assert(got == want,
+            s"trial $trial chunk face(chunkBytes=$cb, drop=$drop) diverged\n" +
+              s"sheet:\n$sheet\ngot: $got\nwant: $want")
+        }
       }
 
       // tracker slice invariance: feeding the SAME bytes in random tiny

@@ -29,6 +29,22 @@ class BenchNormSpec extends AnyFunSuite {
     assert(BenchNorm.median(Nil) == -1.0)
   }
 
+  test("faceMedianSec drops contended reps, but falls back to all reps " +
+      "when no clean rep ran the face") {
+    val clean = Seq(true, false, true)
+    // clean reps ran the face: the contended 9.0 is left out
+    assert(BenchNorm.faceMedianSec(Seq(1.0, 9.0, 3.0), clean,
+      excludeContended = true) == 2.0)
+    assert(BenchNorm.faceMedianSec(Seq(1.0, 9.0, 3.0), clean,
+      excludeContended = false) == 3.0)
+    // the face ran only in the contended rep: it keeps that time
+    assert(BenchNorm.faceMedianSec(Seq(-1.0, 9.0, -1.0), clean,
+      excludeContended = true) == 9.0)
+    // never ran at all
+    assert(BenchNorm.faceMedianSec(Seq(-1.0, -1.0, -1.0), clean,
+      excludeContended = true) == -1.0)
+  }
+
   private def line(code: String, sf: String, qn: Map[String, Double]): String =
     s"""{"metric":"total","value":1.0,"code":"$code","queries":{"x":9.9},""" +
       qn.map { case (k, v) => "\"" + k + "\":" + v }
