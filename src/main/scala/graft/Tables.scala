@@ -63,10 +63,10 @@ object Tables {
     *      (< bytesPerCore × cores).
     * At 100 TB both gates fail (thousands of files, TB of bytes) and the
     * frame passes through untouched; the cheap-compute faces keep their
-    * exchange-free plans (FanoutProbe r17: for q01-class aggregates the
-    * exchange costs what the parallelism saves — this helper is only for
-    * faces whose per-row compute dominates). Driver-side file metadata
-    * only; no extra Spark job. Lengths come from the Hadoop FileSystem of
+    * exchange-free plans (OPTIMIZATION_r17.md, round-robin fan-out: for
+    * q01-class aggregates the exchange costs what the parallelism saves —
+    * this helper is only for faces whose per-row compute dominates).
+    * Driver-side file metadata only; no extra Spark job. Lengths come from the Hadoop FileSystem of
     * each file's scheme, so `s3a://` and `hdfs://` tables are measured
     * like local ones; a length that cannot be read fails the gate. */
   def fanOutSmallScan(df: DataFrame, bytesPerCore: Long = 8L << 20): DataFrame = {

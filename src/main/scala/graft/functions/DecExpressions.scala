@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * The tier's exact moments were spelled `sum(x.cast(DECIMAL(28,s)))`:
   * order-independent and exact, but every UPDATE of a >18-digit decimal
   * buffer round-trips a java.math.BigDecimal through UnsafeRow bytes —
-  * measured ~0.3 s per aggregate column per 600k rows at sf0.1 (DecProbe:
+  * measured ~0.3 s per aggregate column per 600k rows at sf0.1 (OPTIMIZATION_r17.md:
   * five decimal sums 1.81 s vs five double sums 0.27 s over the same
   * scan; the double→decimal CAST itself is ~free).
   *

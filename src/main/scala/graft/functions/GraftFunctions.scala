@@ -152,7 +152,7 @@ object GraftFunctions {
     val dec18 = org.apache.spark.sql.types.DecimalType(18, scale)
     // coalesce, not CASE WHEN on the cast: a CASE evaluates the (string-
     // routed, expensive) double→decimal cast in both the predicate and the
-    // else branch — measured +0.9 s over five sums of 600k rows (DecProbe
+    // else branch — measured +0.9 s over five sums of 600k rows (OPTIMIZATION_r17.md,
     // int128_x5 0.78 → 1.70 s). coalesce evaluates it ONCE; only rows
     // whose cast came back null (true null or overflow) touch the guard.
     val guarded = coalesce(

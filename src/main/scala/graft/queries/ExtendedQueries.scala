@@ -1312,7 +1312,7 @@ object ExtendedQueries {
     // <5 baskets before the pair fan-out) was built and probe-rejected:
     // at sf0.1 every part appears in ~30 baskets (20k parts / 600k basket
     // rows), so the >=5-support prune removes ZERO rows and its extra
-    // groupBy+semi-join pass cost +0.8 s (Basket2Probe: old 1.28 s, pruned
+    // groupBy+semi-join pass cost +0.8 s (OPTIMIZATION_r18.md: old 1.28 s, pruned
     // 2.09 s, pruned_rows == basket_rows). Kept the exchange-shared
     // self-join spelling.
     "q_basket_pairs" -> ((s, dir) => {

@@ -520,9 +520,10 @@ object XlsxPartitionReader {
 }
 
 /** Columnar batch scan over one file's target sheet — the only read path.
-  * Each file re-resolves its own header (cheap 2-row probe), so multi-file
-  * scans tolerate per-file header rows; column mapping is positional, like
-  * the reference. With `threads >= 2` the parse workers build one
+  * Each file re-resolves its own header (cheap 2-row probe over the
+  * shared-strings prefix), so multi-file scans tolerate per-file header
+  * rows; column mapping is positional, like the reference. With
+  * `threads >= 2` the parse workers build one
   * ColumnarBatch per producer chunk ([[ParallelSheetScanner]]'s chunk face),
   * so the consumer thread's per-row work drops to a ragged-check walk over
   * the chunk's stitched indices and Spark reads the batch through codegen'd

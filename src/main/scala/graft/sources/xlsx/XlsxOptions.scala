@@ -37,7 +37,11 @@ final case class XlsxOptions(
     threads: Option[Int] = None,
     /** Per-task cap on decoded sharedStrings bytes — the one xlsx structure
       * whose memory is set by the FILE, not the scan; a pathological
-      * workbook aborts with a clear error instead of OOMing the task. */
+      * workbook aborts with a clear error instead of OOMing the task. It
+      * is enforced where the whole table is decoded: in the scan tasks, on
+      * executors. Schema inference reads only a prefix of the table (at
+      * most this budget, and no error when it stops there) unless a probe
+      * row reaches past the prefix. */
     maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes,
     /** Streaming only: cap on files ADMITTED per micro-batch (Spark's file
       * source spelling). Without it a backfilled drop-box directory arrives

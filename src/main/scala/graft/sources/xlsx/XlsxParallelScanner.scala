@@ -1,7 +1,7 @@
 package graft.sources.xlsx
 
 import java.io.{ByteArrayInputStream, InputStream}
-import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutorService, Executors, Future, ThreadFactory, TimeUnit}
+import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, FutureTask, ThreadFactory, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -42,7 +42,11 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class ParallelSheetScanner(
     in: InputStream,
-    strings: Array[String],
+    /** The shared-strings table, asked for by the first worker that
+      * parses a chunk — so a table decode runs while the producer and
+      * prefetch threads keep inflating and tracking, off the critical
+      * path. Called at most once per scanner. */
+    strings: () => Array[String],
     dates: Array[Boolean],
     threads: Int,
     closeUnderlying: () => Unit,
@@ -89,6 +93,17 @@ final class ParallelSheetScanner(
     new java.util.concurrent.ArrayBlockingQueue[Array[Byte]](threads * 2)
   @volatile private var producerError: Throwable = _
   @volatile private var stopped = false
+
+  // `strings` behind a once-only task: the first worker runs it, later
+  // ones wait in get() (interruptibly, so close() can end them), and a
+  // failure — the sharedStrings budget guard — is kept and rethrown to
+  // every chunk instead of being decoded again by each worker
+  private val table = new FutureTask[Array[String]](() => strings())
+  private def sharedStrings(): Array[String] = {
+    table.run()
+    try table.get()
+    catch { case e: ExecutionException => throw Option(e.getCause).getOrElse(e) }
+  }
 
   private val pool: ExecutorService =
     Executors.newFixedThreadPool(threads, new ThreadFactory {
@@ -246,7 +261,7 @@ final class ParallelSheetScanner(
 
   private def parseChunk(chunk: Array[Byte], len: Int, dropFirst: Int): ParsedChunk = {
     val sc = new SheetScanner(
-      new ByteArrayInputStream(chunk, 0, len), strings, dates, () => ())
+      new ByteArrayInputStream(chunk, 0, len), sharedStrings(), dates, () => ())
     val idx = new ArrayBuffer[Long]()
     val explicitR = new ArrayBuffer[Boolean]()
     val rows = new ArrayBuffer[Array[XCell]]()
@@ -297,7 +312,7 @@ final class ParallelSheetScanner(
         chunkCur =
           try f.get().asInstanceOf[ParsedChunk]
           catch {
-            case e: java.util.concurrent.ExecutionException =>
+            case e: ExecutionException =>
               ended = true
               close()
               throw Option(e.getCause).getOrElse(e)
@@ -440,7 +455,7 @@ object ParallelSheetScanner {
       dates: Array[Boolean], threads: Int, closeUnderlying: () => Unit,
       chunkBytes: Int = DefaultChunkBytes,
       segmented: SegmentIndex = null): CellRowIterator =
-    new ChunkRows(new ParallelSheetScanner(in, strings, dates, threads,
+    new ChunkRows(new ParallelSheetScanner(in, () => strings, dates, threads,
       closeUnderlying, (rows, _) => rows, chunkBytes, segmented = segmented))
 
   private final class ChunkRows(sc: ParallelSheetScanner) extends CellRowIterator {

@@ -97,15 +97,30 @@ object XlsxParser {
     f
   }
 
+  /** Strings a schema probe decodes from the front of the shared-strings
+    * table ([[Workbook.sharedStringsPrefix]]). Excel writes the table in
+    * about first-use order, so a sheet's first rows find their strings
+    * here; a probe row that reaches past the prefix re-runs over the
+    * whole table. */
+  val ProbeStrings: Int = 1024
+
   /** Opens `open()` several times — once per zip entry family — so the
     * source can be any re-openable stream (local file, HDFS, S3A).
     *
+    * Only a scan decodes the whole shared-strings table
+    * ([[sharedStrings]]); the schema probe reads a prefix of it
+    * ([[sharedStringsPrefix]]), so planning never holds the table and
+    * the `maxSharedStringsBytes` budget is enforced where the table is
+    * decoded, in the scan task.
+    *
     * `localFile`, when set, short-circuits entry access through
     * `java.util.zip.ZipFile` (central-directory seek) instead of
-    * sequentially inflating the stream up to each entry — a reader touches
-    * ~6 entries per file (rels, workbook, styles, shared strings, schema
-    * probe, row scan), so direct seeks measurably cut per-file overhead on
-    * multi-file scans. Object stores keep the streaming path. */
+    * sequentially inflating the stream up to each entry — a reader opens
+    * ~7 entries per file (rels, workbook, styles, the shared-strings
+    * prefix and the sheet for the schema probe, the whole shared-strings
+    * table and the sheet for the scan), so direct seeks measurably cut
+    * per-file overhead on multi-file scans. Object stores keep the
+    * streaming path. */
   final class Workbook(open: () => InputStream,
       localFile: Option[java.io.File] = None,
       maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes) {
@@ -129,24 +144,53 @@ object XlsxParser {
       out.toSeq
     }
 
-    /** Hot for string-heavy workbooks (Excel interns every sheet string
-      * here) — byte scanner by default, StAX on a UTF-16 BOM. */
+    /** The whole shared-strings table, decoded once per workbook by the
+      * byte scanner (a UTF-16 table transcodes onto it). Hot for
+      * string-heavy workbooks: Excel interns every sheet string here.
+      * Throws the `maxSharedStringsBytes` guard. Sequential and
+      * segment-range scans force it before their first row; the parallel
+      * scan hands its first worker the thunk, so the decode overlaps the
+      * sheet's inflate. */
     lazy val sharedStrings: Array[String] =
-      openEntryStream("xl/sharedStrings.xml") match {
-        case None => Array.empty
-        case Some((raw, closeAll)) =>
+      sharedStringsEntry(SharedStringsScanner.parse(_, maxSharedStringsBytes).toArray)
+        .getOrElse(Array.empty)
+
+    /** The first [[ProbeStrings]] strings of the table, and whether they are
+      * all of it — what a schema probe resolves its rows against. An index
+      * inside the prefix names the same string as in [[sharedStrings]]; one
+      * past it reads as [[XCell.XError]]. A prefix that would pass the
+      * budget stops short of it instead of failing, and counts as partial:
+      * the guard belongs to the scan that decodes the whole table. */
+    private[xlsx] def sharedStringsPrefix: (Array[String], Boolean) =
+      sharedStringsEntry { src =>
+        val out = ArrayBuffer[String]()
+        val whole =
           try {
-            val in = new java.io.PushbackInputStream(raw, 2)
-            val b0 = in.read(); val b1 = in.read()
-            val utf16 = (b0 == 0xFE && b1 == 0xFF) || (b0 == 0xFF && b1 == 0xFE)
-            if (b1 != -1) in.unread(b1)
-            if (b0 != -1) in.unread(b0)
-            // UTF-16 transcodes on the fly and rides the SAME byte scanner
-            // (r10 — the StAX shared-strings fallback is now fuzz-only)
-            val src: InputStream = if (utf16) new Utf16ToUtf8Stream(in) else in
-            SharedStringsScanner.parse(src, maxSharedStringsBytes).toArray
-          } finally closeAll()
+            SharedStringsScanner.parseInto(src, out, maxSharedStringsBytes,
+              ProbeStrings)
+            out.length < ProbeStrings
+          } catch { case _: SharedStringsScanner.BudgetExceeded => false }
+        (out.toArray, whole)
+      }.getOrElse((Array.empty, true))
+
+    /** Runs `parse` over `xl/sharedStrings.xml` after the UTF-16 BOM sniff
+      * (UTF-16 transcodes on the fly and rides the same byte scanner; the
+      * StAX shared-strings path is fuzz-only). None when the part is
+      * absent. */
+    private def sharedStringsEntry[T](parse: InputStream => T): Option[T] =
+      openEntryStream("xl/sharedStrings.xml").map { case (raw, closeAll) =>
+        try parse(sniffUtf16(raw)) finally closeAll()
       }
+
+    /** `raw`, transcoded to UTF-8 when it opens with a UTF-16 BOM. */
+    private def sniffUtf16(raw: InputStream): InputStream = {
+      val in = new java.io.PushbackInputStream(raw, 2)
+      val b0 = in.read(); val b1 = in.read()
+      val utf16 = (b0 == 0xFE && b1 == 0xFF) || (b0 == 0xFF && b1 == 0xFE)
+      if (b1 != -1) in.unread(b1)
+      if (b0 != -1) in.unread(b0)
+      if (utf16) new Utf16ToUtf8Stream(in) else in
+    }
 
     /** package-visible so the differential fuzz can drive the StAX path
       * against the byte scanner on identical input */
@@ -186,8 +230,7 @@ object XlsxParser {
             val frag = xr.getElementText
             pendingBytes += utf8Len(frag)
             if (retained + pendingBytes > maxSharedStringsBytes)
-              throw new IllegalStateException(
-                SharedStringsScanner.guardMessage(maxSharedStringsBytes))
+              throw new SharedStringsScanner.BudgetExceeded(maxSharedStringsBytes)
             sb.append(frag)
           case XMLStreamConstants.END_ELEMENT
               if inSi && (xr.getLocalName == "rPh" || xr.getLocalName == "phoneticPr") =>
@@ -257,9 +300,15 @@ object XlsxParser {
 
     /** Stream rows of one worksheet. Rows arrive as dense arrays (width =
       * max seen cell column in that row); gaps are XNone. Stops early when
-      * `onRow` returns false (schema probes read only 2 rows). */
-    def foreachRow(path: String, onRow: (Long, Array[XCell]) => Boolean): Unit = {
-      val it = rowIterator(path)
+      * `onRow` returns false (schema probes read only 2 rows). Shared-string
+      * cells resolve against `strings`: the whole table unless given. */
+    def foreachRow(path: String, onRow: (Long, Array[XCell]) => Boolean,
+        strings: Array[String] = sharedStrings): Unit = {
+      val it = openSniffed(path) match {
+        case Left(it) => it
+        case Right((in, closeAll)) =>
+          new SheetScanner(in, strings, dateStyles, closeAll)
+      }
       try {
         var continue = true
         while (continue && it.hasNext) {
@@ -269,24 +318,18 @@ object XlsxParser {
       } finally it.close()
     }
 
-    /** Open `path` and sniff the encoding BOM once: Left(an iterator for
-      * the missing-entry StAX fallback), Right(the positioned byte stream
-      * + closer) for the byte scanners. A UTF-16 BOM does not fall back to
-      * StAX (r10): the entry transcodes to UTF-8 on the fly and rides the
-      * same scanner + columnar pipeline — the scanner matches tags bytewise
-      * and ignores the prolog's declared encoding. The single copy of this
-      * dispatch — rowIterator and chunkingRowIterator both ride it. */
+    /** Open `path` and sniff the encoding BOM once: Left(the empty
+      * iterator of a missing worksheet entry), Right(the positioned byte
+      * stream + closer) for the byte scanners. A UTF-16 BOM does not fall
+      * back to StAX (r10): the entry transcodes to UTF-8 on the fly and
+      * rides the same scanner + columnar pipeline — the scanner matches
+      * tags bytewise and ignores the prolog's declared encoding. The single
+      * copy of this dispatch — foreachRow, rowIterator and
+      * chunkingRowIterator all ride it. */
     private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
       openEntryStream(path) match {
-        case None => Left(new RowIterator(None, sharedStrings, dateStyles))
-        case Some((raw, closeAll)) =>
-          val in = new java.io.PushbackInputStream(raw, 2)
-          val b0 = in.read(); val b1 = in.read()
-          val utf16 = (b0 == 0xFE && b1 == 0xFF) || (b0 == 0xFF && b1 == 0xFE)
-          if (b1 != -1) in.unread(b1)
-          if (b0 != -1) in.unread(b0)
-          if (utf16) Right((new Utf16ToUtf8Stream(in), closeAll))
-          else Right((in, closeAll))
+        case None => Left(new RowIterator(None, Array.empty, Array.empty))
+        case Some((raw, closeAll)) => Right((sniffUtf16(raw), closeAll))
       }
 
     /** The workbook's graft row-group index for a worksheet entry, when
@@ -309,7 +352,14 @@ object XlsxParser {
       * to SPLIT one workbook across Spark partitions (segment-range
       * input partitions), which beats intra-task threads when cores are
       * otherwise idle: partition-level parallelism schedules, retries
-      * and locality-tracks like any other scan. */
+      * and locality-tracks like any other scan.
+      *
+      * Trusted only when the worksheet entry's CRC-32 and sizes, as the
+      * central directory records them, equal the ones the index recorded
+      * ([[XlsxWriter.SegmentVersion]]): an unzip / re-zip round trip keeps
+      * the sheet bytes and the index but re-deflates the sheet, and the
+      * recorded cut offsets would then point into a different stream.
+      * A version-1 index records no such fields and is ignored. */
     private[xlsx] def segmentIndexRaw(path: String)
         : Option[ParallelSheetScanner.SegmentIndex] =
       localFile.flatMap { f =>
@@ -319,7 +369,7 @@ object XlsxParser {
               val d = new java.io.DataInputStream(
                 new java.io.BufferedInputStream(s))
               if (d.readLong() != XlsxWriter.SegmentMagic ||
-                  d.readInt() != 1) None
+                  d.readInt() != XlsxWriter.SegmentVersion) None
               else {
                 val n = d.readInt()
                 val cuts = Array.fill(n) {
@@ -327,8 +377,13 @@ object XlsxParser {
                 }
                 val totalUncomp = d.readLong()
                 val totalRows = d.readLong()
+                val crc = d.readLong()
+                val compressed = d.readLong()
+                val uncompressed = d.readLong()
                 ZipRaw.locate(f, path)
-                  .filter(_.method == java.util.zip.ZipEntry.DEFLATED)
+                  .filter(re => re.method == java.util.zip.ZipEntry.DEFLATED &&
+                    re.crc == crc && re.compressedSize == compressed &&
+                    re.uncompressedSize == uncompressed)
                   .map(re => ParallelSheetScanner.SegmentIndex(
                     f, re.dataOffset, re.compressedSize, cuts,
                     totalUncomp, totalRows))
@@ -400,23 +455,24 @@ object XlsxParser {
       * columnar DSv2 reader passes its rows→ColumnarBatch builder here so
       * whole batches materialize off the consumer thread. Right(parallel
       * scanner, drive with advanceChunk) on the byte path, UTF-16 included
-      * (it transcodes onto the byte scanner); Left(the StAX fallback
-      * iterator) only when the worksheet entry is missing (the caller
-      * batches on its own thread). */
+      * (it transcodes onto the byte scanner); Left(the empty iterator of a
+      * missing worksheet entry). The shared-strings table is not decoded
+      * here: the scanner's first worker decodes it while the producer
+      * starts inflating the sheet. */
     private[xlsx] def chunkingRowIterator(path: String, threads: Int,
         chunkConvert: (Array[Array[XCell]], Int) => AnyRef,
         dropFirstRows: Long = 0L,
         chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Either[CellRowIterator, ParallelSheetScanner] = {
       segmentIndexFor(path, threads).foreach { seg =>
-        return Right(new ParallelSheetScanner(null, sharedStrings, dateStyles,
-          threads, () => (), chunkConvert, chunkBytes, dropFirstRows,
-          segmented = seg))
+        return Right(new ParallelSheetScanner(null, () => sharedStrings,
+          dateStyles, threads, () => (), chunkConvert, chunkBytes,
+          dropFirstRows, segmented = seg))
       }
       openSniffed(path) match {
         case Left(it) => Left(it)
         case Right((in, closeAll)) =>
-          Right(new ParallelSheetScanner(in, sharedStrings, dateStyles, threads,
-            closeAll, chunkConvert, chunkBytes, dropFirstRows))
+          Right(new ParallelSheetScanner(in, () => sharedStrings, dateStyles,
+            threads, closeAll, chunkConvert, chunkBytes, dropFirstRows))
       }
     }
 

@@ -59,22 +59,39 @@ object XlsxSchema {
     row.nonEmpty && row.forall(_.isInstanceOf[XCell.XString])
 
   /** Probe the first two post-skip rows of the target sheet and resolve the
-    * schema per the reference's rules. Opens the workbook stream once.
-    * `targetOverride` points at a specific worksheet part (the allSheets
-    * fan-out resolves each sheet's own header/types).
+    * schema per the reference's rules. `targetOverride` points at a
+    * specific worksheet part (the allSheets fan-out resolves each sheet's
+    * own header/types).
+    *
+    * The probe rows resolve their shared strings against the table's
+    * prefix ([[XlsxParser.Workbook.sharedStringsPrefix]]), never the whole
+    * table, so neither the driver's schema inference nor a reader's own
+    * probe waits on a full table decode. The result equals a whole-table
+    * probe by construction: an index inside the prefix names the same
+    * string, and one past it reads as an error cell — on which, unless
+    * the prefix was the whole table, the probe runs again over
+    * [[XlsxParser.Workbook.sharedStrings]].
     */
   def resolve(wb: XlsxParser.Workbook, opts: XlsxOptions,
               targetOverride: Option[String] = None): Resolved = {
     val path = targetOverride.getOrElse(
       wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-    val probe = ArrayBuffer[Array[XCell]]()
-    var seen = 0
-    wb.foreachRow(path, (_, cells) => {
-      seen += 1
-      if (seen > opts.skipRows) probe += cells
-      probe.length < 2
-    })
-    fromProbe(probe.toSeq, opts)
+    def probe(strings: Array[String]): Seq[Array[XCell]] = {
+      val rows = ArrayBuffer[Array[XCell]]()
+      var seen = 0
+      wb.foreachRow(path, (_, cells) => {
+        seen += 1
+        if (seen > opts.skipRows) rows += cells
+        rows.length < 2
+      }, strings)
+      rows.toSeq
+    }
+    val (prefix, whole) = wb.sharedStringsPrefix
+    val rows = probe(prefix)
+    fromProbe(
+      if (whole || !rows.exists(_.contains(XCell.XError))) rows
+      else probe(wb.sharedStrings),
+      opts)
   }
 
   /** The rule core on already-probed post-skip rows — shared by the xlsx

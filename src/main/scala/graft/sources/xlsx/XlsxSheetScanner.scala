@@ -563,16 +563,30 @@ object SharedStringsScanner {
       "memory. Raise the maxSharedStringsBytes option if the executor heap " +
       "has room, or split the workbook."
 
+  /** The budget guard's failure: what a scan over a too-large table
+    * reports. A prefix read catches it and keeps what `out` already holds. */
+  final class BudgetExceeded(limit: Long)
+      extends IllegalStateException(guardMessage(limit))
+
   def parse(in: InputStream,
       maxBytes: Long = DefaultMaxBytes): ArrayBuffer[String] = {
     val out = ArrayBuffer[String]()
+    parseInto(in, out, maxBytes)
+    out
+  }
+
+  /** Appends the table's strings to `out`, stopping after `limit` of them
+    * — a prefix read never decodes the tail. Throws [[BudgetExceeded]]
+    * once the retained bytes would pass `maxBytes`; `out` then holds the
+    * strings completed before that point, each at its table index. */
+  def parseInto(in: InputStream, out: ArrayBuffer[String],
+      maxBytes: Long = DefaultMaxBytes, limit: Int = Int.MaxValue): Unit = {
     var retained = 0L
     // budget check on every accumulation, not just at </si>: ONE huge
     // string must hit the guard too (otherwise the buffer doubles
     // unboundedly before the si ever closes)
     def checkBudget(pending: Int): Unit =
-      if (retained + pending > maxBytes)
-        throw new IllegalStateException(guardMessage(maxBytes))
+      if (retained + pending > maxBytes) throw new BudgetExceeded(maxBytes)
     val buf = new Array[Byte](1 << 16)
     var pos = 0
     var lim = 0
@@ -663,7 +677,7 @@ object SharedStringsScanner {
     }
 
     var b = rb()
-    while (b != -1) {
+    while (b != -1 && out.length < limit) {
       if (b == '<') {
         val c = rb()
         if (c == '/') {
@@ -675,8 +689,7 @@ object SharedStringsScanner {
           else if (nameIs("si")) {
             inSi = false
             retained += txtLen
-            if (retained > maxBytes)
-              throw new IllegalStateException(guardMessage(maxBytes))
+            if (retained > maxBytes) throw new BudgetExceeded(maxBytes)
             out += (if (txtLen == 0) ""
                     else new String(txt, 0, txtLen, StandardCharsets.UTF_8))
           }
@@ -733,6 +746,5 @@ object SharedStringsScanner {
         b = rb()
       }
     }
-    out
   }
 }

@@ -39,6 +39,15 @@ object XlsxWriter {
   /** Magic + version prefix of the segment index entry. */
   val SegmentMagic: Long = 0x4752465453454731L // "GRFTSEG1"
 
+  /** Segment index layout: magic, version, cut count, the cuts, total
+    * uncompressed bytes, total rows, then the worksheet entry's CRC-32,
+    * compressed and uncompressed sizes. The reader checks those three
+    * against the archive's central directory, so an index copied into a
+    * repacked archive (same sheet bytes, different deflate stream) is
+    * ignored instead of steering workers into the wrong offsets. Version
+    * 1 had no such fields and is never trusted. */
+  val SegmentVersion: Int = 2
+
   /** [[java.util.zip.ZipOutputStream]] with deflate FULL_FLUSH control
     * over the CURRENT entry. Safe with the JDK's bookkeeping by
     * construction: both the entry's recorded compressed size and the
@@ -96,18 +105,23 @@ object XlsxWriter {
       }
   }
 
+  /** `sheet` is the worksheet's closed entry: the zip stream has filled
+    * in its CRC-32 and sizes. */
   private def segmentIndexBytes(cuts: Seq[(Long, Long, Long)],
-      totalUncomp: Long, totalRows: Long): Array[Byte] = {
+      totalUncomp: Long, totalRows: Long, sheet: ZipEntry): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val d = new java.io.DataOutputStream(bos)
     d.writeLong(SegmentMagic)
-    d.writeInt(1)
+    d.writeInt(SegmentVersion)
     d.writeInt(cuts.length)
     cuts.foreach { case (c, u, r) =>
       d.writeLong(c); d.writeLong(u); d.writeLong(r)
     }
     d.writeLong(totalUncomp)
     d.writeLong(totalRows)
+    d.writeLong(sheet.getCrc)
+    d.writeLong(sheet.getCompressedSize)
+    d.writeLong(sheet.getSize)
     d.flush()
     bos.toByteArray
   }
@@ -131,12 +145,13 @@ object XlsxWriter {
       putEntry(zip, "xl/styles.xml", stylesXml)
       sheets.zipWithIndex.foreach { case (sheet, i) =>
         val path = s"xl/worksheets/sheet${i + 1}.xml"
-        zip.putNextEntry(new ZipEntry(path))
+        val entry = new ZipEntry(path)
+        zip.putNextEntry(entry)
         val (cuts, totalUncomp, totalRows) = writeSheet(zip, sheet)
         zip.closeEntry()
         if (cuts.nonEmpty)
           putEntryBytes(zip, segmentIndexName(path),
-            segmentIndexBytes(cuts, totalUncomp, totalRows))
+            segmentIndexBytes(cuts, totalUncomp, totalRows, entry))
       }
     } finally zip.close()
   }
@@ -150,6 +165,7 @@ object XlsxWriter {
       out: OutputStream, sheetName: String, header: Option[Seq[String]]) {
     private val zip = new FlushableZipOutputStream(out)
     private val counting = new CountingOutputStream(new NonClosing(zip))
+    private val sheetEntry = new ZipEntry("xl/worksheets/sheet1.xml")
     private val w = {
       putEntry(zip, "[Content_Types].xml", contentTypes(1))
       putEntry(zip, "_rels/.rels",
@@ -160,7 +176,7 @@ object XlsxWriter {
       putEntry(zip, "xl/workbook.xml", workbookXml(Seq(sheetName)))
       putEntry(zip, "xl/_rels/workbook.xml.rels", workbookRels(1))
       putEntry(zip, "xl/styles.xml", stylesXml)
-      zip.putNextEntry(new ZipEntry("xl/worksheets/sheet1.xml"))
+      zip.putNextEntry(sheetEntry)
       val wr = new java.io.BufferedWriter(
         new java.io.OutputStreamWriter(counting, StandardCharsets.UTF_8))
       wr.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
@@ -183,8 +199,8 @@ object XlsxWriter {
       val totalUncomp = counting.count
       zip.closeEntry()
       if (rec.cuts.nonEmpty)
-        putEntryBytes(zip, segmentIndexName("xl/worksheets/sheet1.xml"),
-          segmentIndexBytes(rec.cuts.toSeq, totalUncomp, r - 1L))
+        putEntryBytes(zip, segmentIndexName(sheetEntry.getName),
+          segmentIndexBytes(rec.cuts.toSeq, totalUncomp, r - 1L, sheetEntry))
       zip.close()
     }
   }

@@ -24,10 +24,13 @@ import java.io.RandomAccessFile
   */
 object ZipRaw {
 
-  /** @param dataOffset     absolute file offset of the entry's first data byte
-    * @param compressedSize deflate byte count (from the central directory)
-    * @param method         zip method (8 = deflate) */
-  final case class RawEntry(dataOffset: Long, compressedSize: Long, method: Int)
+  /** @param dataOffset       absolute file offset of the entry's first data byte
+    * @param compressedSize   deflate byte count (from the central directory)
+    * @param method           zip method (8 = deflate)
+    * @param crc              CRC-32 of the uncompressed data
+    * @param uncompressedSize inflated byte count */
+  final case class RawEntry(dataOffset: Long, compressedSize: Long, method: Int,
+      crc: Long, uncompressedSize: Long)
 
   private def u16(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
@@ -80,6 +83,7 @@ object ZipRaw {
         raf.readFully(hdr)
         if (u32(hdr, 0) != 0x02014b50L) return None
         val method = u16(hdr, 10)
+        val crc = u32(hdr, 16)
         var usize = u32(hdr, 24)
         var csize = u32(hdr, 20)
         val nameLen = u16(hdr, 28)
@@ -137,7 +141,7 @@ object ZipRaw {
           if (u32(loc, 0) != 0x04034b50L) return None
           val nl = u16(loc, 26)
           val el = u16(loc, 28)
-          return Some(RawEntry(locOff + 30L + nl + el, csize, method))
+          return Some(RawEntry(locOff + 30L + nl + el, csize, method, crc, usize))
         }
         i += 1
       }

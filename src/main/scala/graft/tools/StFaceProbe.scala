@@ -9,8 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * micro-batch's durationMs map (triggerExecution / queryPlanning /
   * getBatch / addBatch / walCommit / commitOffsets / ...) plus the state
   * operator commit times — so the fixed per-batch floor of the replay
-  * faces is attributable per face, not just for the one shape StProbe
-  * hard-codes.
+  * faces is attributable per face, not just for one hard-coded shape.
   *
   * `runMain graft.tools.StFaceProbe <sfDir> <face...>`
   */

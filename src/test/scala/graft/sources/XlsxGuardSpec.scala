@@ -85,6 +85,40 @@ class XlsxGuardSpec extends SparkSpec {
     assert(ok.count() == 50)
   }
 
+  test("the budget is enforced where the whole table is decoded: schema " +
+      "inference succeeds, the scan fails at threads 1 and 2") {
+    val bytes = hotStringsWorkbook(n = 50, len = 100)
+    val f = java.io.File.createTempFile("hotstrings", ".xlsx")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, bytes)
+    def load(threads: Int) = spark.read.format("xlsx")
+      .option("max_shared_strings_bytes", "1000")
+      .option("threads", threads.toString)
+      .load(f.getAbsolutePath)
+    // planning probes two rows against a prefix of the table, never the
+    // whole of it, so the driver neither holds the table nor fails on it
+    assert(load(1).schema.fieldNames.toSeq == Seq("String0"))
+    def pipelineThreads(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter { t =>
+        t.isAlive && (t.getName.startsWith("xlsx-parse-") ||
+          t.getName == "xlsx-chunk-producer" || t.getName == "xlsx-inflate")
+      }.toSet
+    val before = pipelineThreads()
+    Seq(1, 2).foreach { threads =>
+      val e = intercept[Exception](load(threads).collect())
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("; ")
+      assert(msgs.contains(SharedStringsScanner.guardMessage(1000L)),
+        s"threads=$threads: $msgs")
+    }
+    // the failed parallel scan tore its pipeline down
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((pipelineThreads() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert((pipelineThreads() -- before).isEmpty,
+      (pipelineThreads() -- before).map(_.getName))
+  }
+
   test("distributed allSheets enumeration returns the driver-pool partitions") {
     // 3 files x 2 sheets; cutover=1 forces the Spark-job path
     val paths = (1 to 3).map { i =>

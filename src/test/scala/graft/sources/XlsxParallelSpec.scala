@@ -62,7 +62,7 @@ class XlsxParallelSpec extends SparkSpec {
     val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
     // tiny chunks force dozens of chunks through the chunk face; the
     // transform runs in the workers and sees each chunk's parsed rows
-    val par = new ParallelSheetScanner(raw, wb.sharedStrings, wb.dateStyles,
+    val par = new ParallelSheetScanner(raw, () => wb.sharedStrings, wb.dateStyles,
       threads = 3, closeAll, (rows, _) => rows.map(_.length),
       chunkBytes = 32 << 10)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()

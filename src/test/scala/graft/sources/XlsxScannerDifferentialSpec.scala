@@ -5,9 +5,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.util.Random
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.{Random, Try}
 
 /** Shared random-SpreadsheetML fuzz fixtures: the scanner-level differential
   * spec and the end-to-end DSv2 reader fuzz both draw from here. */
@@ -252,5 +255,121 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
             s"whole: $whole\nsliced: $sliced\nbyByte: $byByte")
       }
     }
+  }
+
+  // ---- schema probe over the shared-strings prefix ------------------------
+
+  private def opts(kv: (String, String)*): XlsxOptions =
+    XlsxOptions.from(new CaseInsensitiveStringMap(kv.toMap.asJava))
+
+  /** The probe as it ran before the prefix: the first two post-skip rows
+    * resolved against the whole table. */
+  private def wholeTableResolve(wb: XlsxParser.Workbook,
+      o: XlsxOptions): Either[String, XlsxSchema.Resolved] =
+    Try {
+      val rows = ArrayBuffer[Array[XCell]]()
+      var seen = 0
+      wb.foreachRow("xl/worksheets/sheet1.xml", (_, cells) => {
+        seen += 1
+        if (seen > o.skipRows) rows += cells
+        rows.length < 2
+      })
+      XlsxSchema.fromProbe(rows.toSeq, o)
+    }.toEither.left.map(_.getMessage)
+
+  private def prefixResolve(wb: XlsxParser.Workbook,
+      o: XlsxOptions): Either[String, XlsxSchema.Resolved] =
+    Try(XlsxSchema.resolve(wb, o)).toEither.left.map(_.getMessage)
+
+  /** A table of `n` distinct strings `s0 … s(n-1)`. */
+  private def table(n: Int): String =
+    (0 until n).map(i => s"<si><t>s$i</t></si>").mkString("<sst>", "", "</sst>")
+
+  private def workbook(sheet: String, sst: Option[Array[Byte]]): XlsxParser.Workbook = {
+    val bos = new ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos, StandardCharsets.UTF_8)
+    def put(name: String, content: Array[Byte]): Unit = {
+      z.putNextEntry(new ZipEntry(name)); z.write(content); z.closeEntry()
+    }
+    put("xl/workbook.xml", SheetFuzz.workbookXml.getBytes(StandardCharsets.UTF_8))
+    put("xl/_rels/workbook.xml.rels", SheetFuzz.relsXml.getBytes(StandardCharsets.UTF_8))
+    put("xl/styles.xml", SheetFuzz.stylesXml.getBytes(StandardCharsets.UTF_8))
+    sst.foreach(put("xl/sharedStrings.xml", _))
+    put("xl/worksheets/sheet1.xml", sheet.getBytes(StandardCharsets.UTF_8))
+    z.close()
+    val bytes = bos.toByteArray
+    new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+  }
+
+  private def utf8(s: String): Option[Array[Byte]] =
+    Some(s.getBytes(StandardCharsets.UTF_8))
+
+  test("schema probe over the shared-strings prefix resolves as the whole " +
+      "table on 200 random sheets") {
+    val rnd = new Random(0xC0FFEE)
+    val big = utf8(table(XlsxParser.ProbeStrings + 6))
+    // the fuzz sheets reference indices 0-4; on the big table they map to
+    // both prefix edges, a valid index past the prefix and one past the end
+    val remap = Map("0" -> "0", "1" -> "1023", "2" -> "1024", "3" -> "1029",
+      "4" -> "5000")
+    (1 to 200).foreach { trial =>
+      val sheet = randomSheet(rnd)
+      val remapped = """t="s"><v>(\d)</v>""".r.replaceAllIn(sheet,
+        m => s"""t="s"><v>${remap(m.group(1))}</v>""")
+      val o = opts("skipRows" -> rnd.nextInt(3).toString,
+        "hasHeader" -> (rnd.nextInt(4) == 0).toString)
+      Seq((sheet, utf8(sharedXml)), (remapped, big), (sheet, None)).foreach {
+        case (sh, sst) =>
+          val got = prefixResolve(workbook(sh, sst), o)
+          val want = wholeTableResolve(workbook(sh, sst), o)
+          assert(got == want, s"trial $trial diverged (${sst.map(_.length)} " +
+            s"table bytes, $o)\nsheet:\n$sh\ngot: $got\nwant: $want")
+      }
+    }
+  }
+
+  test("schema probe over the shared-strings prefix: pinned edge cases") {
+    def sheet(rows: String*): String =
+      rows.zipWithIndex.map { case (cells, i) => s"""<row r="${i + 1}">$cells</row>""" }
+        .mkString("<worksheet><sheetData>", "", "</sheetData></worksheet>")
+    def s(i: Int): String = s"""<c t="s"><v>$i</v></c>"""
+    val num = """<c><v>1.5</v></c>"""
+    val big = table(2000)
+    def names(r: Either[String, XlsxSchema.Resolved]): Seq[String] =
+      r.toOption.get.schema.fieldNames.toSeq
+    def check(sh: String, sst: Option[Array[Byte]], o: XlsxOptions = opts())
+        : Either[String, XlsxSchema.Resolved] = {
+      val got = prefixResolve(workbook(sh, sst), o)
+      assert(got == wholeTableResolve(workbook(sh, sst), o), sh)
+      got
+    }
+
+    // header strings past the prefix: the probe goes to the whole table
+    assert(names(check(sheet(s(1500) + s(1024), num + num), utf8(big))) ==
+      Seq("s1500", "s1024"))
+    // header strings inside it, data past it
+    assert(names(check(sheet(s(0) + s(1023), s(1999) + num), utf8(big))) ==
+      Seq("s0", "s1023"))
+    // an index past the end of the table stays an error (STRING) cell
+    assert(names(check(sheet(s(99999) + num), utf8(big))) ==
+      Seq("String0", "Numeric1"))
+    // a t="e" cell in row 1 re-probes and gives the same answer
+    assert(names(check(sheet("""<c t="e"><v>#N/A</v></c>""" + s(3), num + num),
+      utf8(big))) == Seq("String0", "String1"))
+    // skipRows pushes the probe onto rows that reference past the prefix
+    val skipped = sheet(s(0), s(1), s(2), s(1700) + s(1701), num + num)
+    assert(names(check(skipped, utf8(big), opts("skipRows" -> "3"))) ==
+      Seq("s1700", "s1701"))
+    // a UTF-16 table (BOM-sniffed and transcoded, like the scan's)
+    Seq(StandardCharsets.UTF_16BE, StandardCharsets.UTF_16LE).foreach { cs =>
+      val bom = if (cs == StandardCharsets.UTF_16BE) Array(0xFE, 0xFF) else Array(0xFF, 0xFE)
+      val sst16 = Some(bom.map(_.toByte) ++ big.getBytes(cs))
+      assert(names(check(sheet(s(7) + s(1998), num + num), sst16)) ==
+        Seq("s7", "s1998"))
+    }
+    // no sharedStrings part: every shared-string cell is an error cell
+    assert(names(check(sheet(s(0) + num), None)) == Seq("String0", "Numeric1"))
+    assert(names(check(sheet("""<c t="inlineStr"><is><t>h</t></is></c>""", num),
+      None)) == Seq("h"))
   }
 }

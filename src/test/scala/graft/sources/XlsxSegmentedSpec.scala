@@ -1,6 +1,9 @@
 package graft.sources.xlsx
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
+import org.apache.spark.sql.functions.{count, lit, sum}
+
+import scala.jdk.CollectionConverters._
 
 /** The splittable-xlsx path (r12): our writer embeds a row-group index
   * (`xl/graft/sheetN.idx` + deflate FULL_FLUSH cuts at row boundaries),
@@ -12,9 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * content), (b) the segmented read returns row-for-row exactly the
   * sequential read, (c) skipRows prefixes deal across segment
   * boundaries exactly, and (d) files WITHOUT an index keep the
-  * streaming pipeline (fallback is parallelism, never correctness).
+  * streaming pipeline (fallback is parallelism, never correctness) —
+  * as do files whose index no longer describes the sheet's deflate
+  * stream.
   */
-class XlsxSegmentedSpec extends AnyFunSuite {
+class XlsxSegmentedSpec extends SparkSpec {
 
   private val rows = 60000
   private lazy val file: java.io.File = {
@@ -41,7 +46,7 @@ class XlsxSegmentedSpec extends AnyFunSuite {
       val d = new java.io.DataInputStream(
         zf.getInputStream(zf.getEntry("xl/graft/sheet1.idx")))
       assert(d.readLong() == XlsxWriter.SegmentMagic)
-      assert(d.readInt() == 1)
+      assert(d.readInt() == 2)
       val n = d.readInt()
       assert(n >= 2, s"60k rows should cut >= 2 segments, got $n")
       var prevC, prevU, prevR = -1L
@@ -52,9 +57,17 @@ class XlsxSegmentedSpec extends AnyFunSuite {
       }
       val totalUncomp = d.readLong(); val totalRows = d.readLong()
       assert(totalUncomp > prevU && totalRows == rows + 1L)
+      // v2 tail: the sheet entry as the central directory describes it
+      val (crc, csize, usize) = (d.readLong(), d.readLong(), d.readLong())
+      val sheet = zf.getEntry("xl/worksheets/sheet1.xml")
+      assert((crc, csize, usize) ==
+        ((sheet.getCrc, sheet.getCompressedSize, sheet.getSize)))
+      assert(usize == totalUncomp && d.read() == -1)
       val re = ZipRaw.locate(file, "xl/worksheets/sheet1.xml")
       assert(re.isDefined && re.get.method == java.util.zip.ZipEntry.DEFLATED)
       assert(re.get.compressedSize > prevC)
+      assert(re.get.crc == crc && re.get.compressedSize == csize &&
+        re.get.uncompressedSize == usize)
     } finally zf.close()
   }
 
@@ -169,5 +182,48 @@ class XlsxSegmentedSpec extends AnyFunSuite {
     var n = 0
     while (par.hasNext) { par.next(); n += 1 }
     assert(n == 500)
+  }
+
+  test("a repacked workbook ignores its stale index and reads every row") {
+    // graft writes the index; an unzip / re-zip round trip with
+    // java.util.zip keeps the sheet bytes and copies the index verbatim,
+    // but re-deflates the sheet, so every recorded cut points into a
+    // different stream
+    val n = 300000
+    val src = java.io.File.createTempFile("repack-src", ".xlsx")
+    src.deleteOnExit()
+    val out = new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(src), 1 << 16)
+    try XlsxWriter.write(out, Seq(XlsxWriter.SheetSpec("S", Some(Seq("a", "b")),
+      (1 to n).iterator.map(i => Seq[Any](i.toLong, s"row $i")))))
+    finally out.close()
+    val repacked = java.io.File.createTempFile("repacked", ".xlsx")
+    repacked.deleteOnExit()
+    val zf = new java.util.zip.ZipFile(src)
+    val zout = new java.util.zip.ZipOutputStream(
+      new java.io.FileOutputStream(repacked))
+    try zf.entries().asScala.foreach { e =>
+      zout.putNextEntry(new java.util.zip.ZipEntry(e.getName))
+      val in = zf.getInputStream(e)
+      try in.transferTo(zout) finally in.close()
+      zout.closeEntry()
+    } finally { zout.close(); zf.close() }
+
+    val sheet = "xl/worksheets/sheet1.xml"
+    def index(f: java.io.File) =
+      new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+        .segmentIndexRaw(sheet)
+    assert(index(src).exists(_.cuts.nonEmpty), "the source must be indexed")
+    val kept = new java.util.zip.ZipFile(repacked)
+    try assert(kept.getEntry(XlsxWriter.segmentIndexName(sheet)) != null)
+    finally kept.close()
+    assert(index(repacked).isEmpty, "a stale index must not be trusted")
+
+    val want = (n.toLong, n.toLong * (n + 1) / 2)
+    Seq(src, repacked).foreach { f =>
+      val r = spark.read.format("xlsx").load(f.getAbsolutePath)
+        .agg(count(lit(1)), sum("a")).head()
+      assert((r.getLong(0), r.getDouble(1).toLong) == want, f.getName)
+    }
   }
 }
