@@ -81,19 +81,7 @@ object Bench {
     if (!gatePassed)
       System.err.println(f"[bench] load gate GAVE UP after $gateWaits waits " +
         f"(load still $gateLoad%.2f) — measuring contended; artifact says so")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r17: the suite cycles ~400 distinct plans per rep; the default
-      // 100-entry codegen class cache thrashes and Janino recompiles every
-      // face's generated classes every rep (thread samples caught
-      // CodeGenerator.compile mid-bench). Static conf, so set at session
-      // build; sized for a wide query surface, scale-independent.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // *_check keys are CORRECTNESS-only faces (sketch + exact + bound
     // boolean): benching them would re-time the exact computation the

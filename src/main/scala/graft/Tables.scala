@@ -14,8 +14,8 @@ object Tables {
 
   /** Schema memo per table file (r17, opt guide §1.2/§6): schema
     * INFERENCE re-reads the parquet footer on the driver at every plan
-    * build — measured ~70 ms per load (LoadProbe: 93 ms plan-only with
-    * inference vs 22 ms with an explicit schema), and the bench surface
+    * build — measured ~70 ms per load (93 ms plan-only with inference vs
+    * 22 ms with an explicit schema; OPTIMIZATION_r17.md §5), and the bench surface
     * performs ~600 loads per rep. The key includes the table file's
     * (path, length, mtime) fingerprint, so a REGENERATED file (or a spec
     * rewriting its fixture dir) re-infers instead of serving a stale

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,7 @@ object Verify {
     val outDir = args(1)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r17: the suite cycles ~400 distinct plans per rep; the default
-      // 100-entry codegen class cache thrashes and Janino recompiles every
-      // face's generated classes every rep (thread samples caught
-      // CodeGenerator.compile mid-bench). Static conf, so set at session
-      // build; sized for a wide query surface, scale-independent.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-face failures must leave a visible artifact: in round 8 nine faces

@@ -11,37 +11,39 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.sources.xlsx.{XCell, XlsxDataSource, XlsxOptions, XlsxPartitionReader, XlsxSchema}
+import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, XlsxDataSource, XlsxOptions, XlsxSchema, XlsxWriteBuilder}
 
 /** `spark.read.format("ods")` / `df.write.format("ods")` — the OpenDocument
-  * spreadsheet twin of the xlsx source: SAME option surface (sheetName /
-  * sheetIndex / hasHeader / skipRows / types / forceTypes /
-  * coerceToString), SAME schema-inference and NULL/coercion rules
-  * (XlsxSchema.fromProbe / XlsxPartitionReader.convert are shared), over
-  * the ODF container parsed by [[OdsParser]].
+  * spreadsheet twin of the xlsx source, a thin format layer over the xlsx
+  * source's pieces: the SAME option surface (sheetName / sheetIndex /
+  * hasHeader / skipRows / types / forceTypes / coerceToString), path
+  * resolution (`XlsxDataSource.resolvePaths`), probe rule and
+  * schema-inference and NULL/coercion rules (`XlsxSchema`), sequential
+  * columnar batch loop ([[RowBatchReader]]) and DSv2 writer
+  * ([[XlsxWriteBuilder]] over [[OdsWriter]]). Only the container differs:
+  * rows come from [[OdsParser]]'s pull iterator, on the task thread.
   *
   * Scale shape matches the family design: one InputPartition per file
   * (deflate streams don't split; a directory fans out across the
   * cluster), schema from the first file only, column pruning pushed into
-  * the conversion (pruned columns are never converted). The xlsx path
-  * keeps the throughput engineering (byte-level scanner, columnar
-  * batches, intra-file threads); ods is the completeness-family member
-  * and parses with StAX into the same columnar batches. */
+  * the conversion (pruned columns are never converted). Batch read and
+  * write only: no streaming, no allSheets, no intra-file threads and no
+  * filter pushdown, which stay with the xlsx flagship. */
 final class OdsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "ods"
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = OdsDataSource.resolvePaths(options)
+    val paths = XlsxDataSource.resolvePaths(options, OdsWriter.extension)
     if (paths.isEmpty)
       throw new IllegalArgumentException(
         "ods: no input files found — schema inference needs at least one document")
-    val opts = XlsxOptions.from(options)
-    OdsDataSource.resolve(paths.head, opts).schema
+    OdsDataSource.resolve(paths.head, XlsxOptions.from(options),
+      XlsxDataSource.captureConf()).schema
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -52,42 +54,17 @@ final class OdsDataSource extends TableProvider with DataSourceRegister {
 }
 
 object OdsDataSource {
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val conf = XlsxDataSource.hadoopConf()
-    Option(options.get("path")).toSeq.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".ods"))
-            .map(_.getPath.toString)
-        else Seq(st.getPath.toString)
-      }
-    }.sorted
-  }
+  /** The target table's rows of one document. */
+  def rows(path: String, opts: XlsxOptions,
+      conf: XlsxDataSource.ConfProps): CellRowIterator =
+    OdsParser.rows(() => {
+      val p = new Path(path)
+      p.getFileSystem(conf.toConf).open(p)
+    }, opts.sheetName, opts.effectiveSheetIndex)
 
-  private[ods] def opener(path: String,
-      conf: XlsxDataSource.ConfProps): () => java.io.InputStream = { () =>
-    val p = new Path(path)
-    p.getFileSystem(conf.toConf).open(p)
-  }
-
-  /** Probe the first two post-skip rows and resolve the schema with the
-    * family's shared rules. */
   def resolve(path: String, opts: XlsxOptions,
-      conf: XlsxDataSource.ConfProps = XlsxDataSource.captureConf()): XlsxSchema.Resolved = {
-    val probe = ArrayBuffer[Array[XCell]]()
-    var seen = 0
-    OdsParser.foreachRow(opener(path, conf), opts.sheetName,
-      opts.effectiveSheetIndex - 1, (_, cells) => {
-        seen += 1
-        if (seen > opts.skipRows) probe += cells
-        probe.length < 2
-      })
-    XlsxSchema.fromProbe(probe.toSeq, opts)
-  }
+      conf: XlsxDataSource.ConfProps): XlsxSchema.Resolved =
+    XlsxSchema.fromProbe(XlsxSchema.probe(rows(path, opts, conf), opts), opts)
 }
 
 final class OdsTable(schema: StructType, opts: XlsxOptions,
@@ -100,13 +77,11 @@ final class OdsTable(schema: StructType, opts: XlsxOptions,
       TableCapability.TRUNCATE).asJava
 
   override def newScanBuilder(map: CaseInsensitiveStringMap): ScanBuilder =
-    new OdsScanBuilder(schema, opts, OdsDataSource.resolvePaths(map))
+    new OdsScanBuilder(schema, opts,
+      XlsxDataSource.resolvePaths(map, OdsWriter.extension))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new OdsWriteBuilder(
-      Option(info.options.get("path")).getOrElse(
-        throw new IllegalArgumentException("ods write requires a path")),
-      info.schema(), opts)
+    new XlsxWriteBuilder(info, opts, OdsWriter)
 }
 
 final class OdsScanBuilder(fullSchema: StructType, opts: XlsxOptions,
@@ -137,8 +112,9 @@ final class OdsScan(fullSchema: StructType, required: StructType,
 
 final case class OdsInputPartition(path: String) extends InputPartition
 
-/** Batch scans read columnar, matching the xlsx family — Spark inserts
-  * codegen'd ColumnarToRow, the vectorized-parquet shape. */
+/** Batch scans read columnar through the xlsx source's sequential batch
+  * loop — Spark inserts codegen'd ColumnarToRow, the vectorized-parquet
+  * shape. Each file resolves its own header, as xlsx files do. */
 final class OdsPartitionReaderFactory(fullSchema: StructType,
     required: StructType, opts: XlsxOptions, conf: XlsxDataSource.ConfProps)
     extends PartitionReaderFactory {
@@ -148,198 +124,11 @@ final class OdsPartitionReaderFactory(fullSchema: StructType,
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new OdsColumnarPartitionReader(fullSchema, required, opts, conf,
-      partition.asInstanceOf[OdsInputPartition].path)
-}
-
-/** Bounded producer bridging the push-based StAX parse to the pull-based
-  * columnar reader: a feeder thread queues post-skip rows (ragged-checked
-  * exactly like the xlsx path), the consumer drains. */
-private[ods] final class OdsRowFeed(path: String, opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps, resolved: XlsxSchema.Resolved) {
-  private val queue = new java.util.concurrent.ArrayBlockingQueue[AnyRef](256)
-  private val Done = new Object
-  @volatile private var err: Throwable = null
-  @volatile private var closed = false
-
-  private val feeder = new Thread(() => {
-    try {
-      var emitted = 0L
-      OdsParser.foreachRow(OdsDataSource.opener(path, conf), opts.sheetName,
-        opts.effectiveSheetIndex - 1, (_, cells) => {
-          emitted += 1
-          if (emitted > resolved.dropRows) {
-            if (cells.length > resolved.baseWidth)
-              throw new IllegalStateException(
-                s"Row $emitted has more columns than the first row. " +
-                  s"Has: ${cells.length} Expected: ${resolved.baseWidth}")
-            queue.put(cells)
-          }
-          !closed // stop parsing promptly once the reader is closed
-        })
-    } catch { case t: Throwable => if (!closed) err = t }
-    finally {
-      // Done handshake must neither block forever (reader closed with a
-      // full queue → no consumer) nor get lost (consumer still draining):
-      // bounded offers until delivered or the reader is gone
-      var delivered = false
-      while (!delivered && !closed) {
-        try delivered = queue.offer(Done, 50,
-          java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch { case _: InterruptedException => delivered = closed }
-      }
-    }
-  }, s"ods-feeder-$path")
-  feeder.setDaemon(true)
-  feeder.start()
-
-  /** Blocking take: null at end of stream (re-raising any feeder error).
-    * Callers must not take() again after null. */
-  def take(): Array[XCell] = queue.take() match {
-    case Done =>
-      if (err != null) throw err
-      null
-    case r => r.asInstanceOf[Array[XCell]]
-  }
-
-  def close(): Unit = {
-    closed = true
-    feeder.interrupt()
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val path = partition.asInstanceOf[OdsInputPartition].path
+    val resolved = OdsDataSource.resolve(path, opts, conf)
+    new RowBatchReader(OdsDataSource.rows(path, opts, conf),
+      resolved.dropRows, resolved.baseWidth,
+      new RowColumns(fullSchema, required, resolved.coerceToString))
   }
 }
-
-/** Columnar reader over one file's target table: the feed's rows fill
-  * reused OnHeapColumnVectors through `XlsxPartitionReader.writeVector`
-  * (the family's shared cell→vector semantics), emitting one ColumnarBatch
-  * per [[graft.sources.xlsx.XlsxColumnarPartitionReader.SeqBatchRows]] rows —
-  * Spark reads it through codegen'd ColumnarToRow, the same plan shape as
-  * the xlsx batch path and the built-in vectorized parquet reader. */
-final class OdsColumnarPartitionReader(fullSchema: StructType,
-    required: StructType, opts: XlsxOptions, conf: XlsxDataSource.ConfProps,
-    path: String)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-  import graft.sources.xlsx.XlsxColumnarPartitionReader.SeqBatchRows
-
-  private val resolved = OdsDataSource.resolve(path, opts, conf)
-  private val colIdx: Array[Int] =
-    required.fields.map(f => fullSchema.fieldIndex(f.name))
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  private val colCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val feed = new OdsRowFeed(path, opts, conf, resolved)
-  private var vectors: Array[OnHeapColumnVector] = _
-  private var current: ColumnarBatch = _
-  private var finished = false
-
-  override def next(): Boolean = {
-    if (finished) return false
-    if (vectors == null)
-      vectors = colTypes.map(dt => new OnHeapColumnVector(SeqBatchRows, dt))
-    else vectors.foreach(_.reset())
-    var out = 0
-    while (out < SeqBatchRows && !finished) {
-      val cells = feed.take()
-      if (cells == null) finished = true
-      else {
-        var i = 0
-        while (i < colIdx.length) {
-          val c = if (colIdx(i) < cells.length) cells(colIdx(i)) else XCell.XNone
-          XlsxPartitionReader.writeVector(vectors(i), out, c, colCodes(i),
-            resolved.coerceToString)
-          i += 1
-        }
-        out += 1
-      }
-    }
-    if (out == 0) false
-    else {
-      current = new ColumnarBatch(vectors.toArray[ColumnVector], out)
-      true
-    }
-  }
-
-  override def get(): ColumnarBatch = current
-  override def close(): Unit = {
-    finished = true
-    feed.close()
-  }
-}
-
-final class OdsWriteBuilder(path: String, schema: StructType, opts: XlsxOptions)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new OdsBatchWrite(path, schema, opts, doTruncate)
-  }
-}
-
-final class OdsBatchWrite(path: String, schema: StructType, opts: XlsxOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(XlsxDataSource.hadoopConf())
-    if (truncate && fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    new OdsDataWriterFactory(path, schema, opts.writeHeader,
-      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class OdsDataWriterFactory(path: String, schema: StructType,
-    header: Boolean, tableName: String, conf: XlsxDataSource.ConfProps)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new OdsDataWriter(path, schema, header, tableName, partitionId, taskId, conf)
-}
-
-/** One .ods file per write task, streamed row-by-row. */
-final class OdsDataWriter(dir: String, schema: StructType, header: Boolean,
-    tableName: String, partitionId: Int, taskId: Long,
-    conf: XlsxDataSource.ConfProps) extends DataWriter[InternalRow] {
-
-  private val file = new Path(dir, f"part-$partitionId%05d-$taskId.ods")
-  private val fs = file.getFileSystem(conf.toConf)
-  private val out = fs.create(file, true)
-  private val sheet = new OdsWriter.StreamingOdsWriter(
-    out, tableName, if (header) Some(schema.fieldNames.toSeq) else None)
-
-  override def write(record: InternalRow): Unit = {
-    val vs: Seq[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (record.isNullAt(i)) null
-      else f.dataType match {
-        case StringType  => record.getUTF8String(i).toString
-        case DoubleType  => record.getDouble(i)
-        case FloatType   => record.getFloat(i).toDouble
-        case IntegerType => record.getInt(i)
-        case LongType    => record.getLong(i)
-        case ShortType   => record.getShort(i).toInt
-        case ByteType    => record.getByte(i).toInt
-        case BooleanType => record.getBoolean(i)
-        case DateType    => java.time.LocalDate.ofEpochDay(record.getInt(i).toLong)
-        case other => throw new IllegalArgumentException(
-          s"ods write: unsupported column type $other")
-      }
-    }.toSeq
-    sheet.addRow(vs)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    sheet.finish()
-    out.close()
-    OdsCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    try { sheet.finish(); out.close() } catch { case _: Throwable => }
-    try { fs.delete(file, false); () } catch { case _: Throwable => }
-  }
-
-  override def close(): Unit = ()
-}
-
-final case class OdsCommit(path: String) extends WriterCommitMessage

@@ -6,13 +6,14 @@ import java.util.zip.ZipInputStream
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
-import graft.sources.xlsx.XCell
+import graft.sources.xlsx.{CellRowIterator, XCell, XlsxOptions}
 
 /** OpenDocument spreadsheet (.ods) content parser — the second container
   * format of the spreadsheet family. Reads `content.xml` with StAX and
-  * emits rows as the SAME [[XCell]] values the xlsx path uses, so schema
-  * inference, NULL/coercion rules and the DSv2 conversion layer are shared
-  * verbatim (XlsxSchema.fromProbe / XlsxPartitionReader.convert).
+  * hands out rows as a [[CellRowIterator]] of the SAME [[XCell]] values the
+  * xlsx path uses, so schema inference, NULL/coercion rules and the
+  * columnar batch loop are the xlsx source's own (XlsxSchema.probe /
+  * fromProbe, RowBatchReader).
   *
   * ODS specifics handled here, per OASIS ODF 1.2 §9.1.3-9.1.4:
   *   - `table:number-columns-repeated` / `table:number-rows-repeated`
@@ -27,11 +28,10 @@ import graft.sources.xlsx.XCell
   *     valueless cells → empty.
   *
   * Throughput engineering stays concentrated in the flagship xlsx scanner
-  * (byte-level, columnar, intra-file parallel); ods rides plain StAX — a
-  * completeness-family source, one partition per file. */
+  * (byte-level, columnar, intra-file parallel); ods rides plain StAX on
+  * the task thread — a completeness-family source, one partition per
+  * file. */
 object OdsParser {
-
-  private val excelEpochDay: Long = LocalDate.of(1899, 12, 30).toEpochDay
 
   private val factory = {
     val f = XMLInputFactory.newInstance()
@@ -53,23 +53,6 @@ object OdsParser {
     zip
   }
 
-  /** Table names in document order. */
-  def sheetNames(open: () => InputStream): Seq[String] = {
-    val zip = openContent(open)
-    val names = scala.collection.mutable.ArrayBuffer[String]()
-    try {
-      val r = factory.createXMLStreamReader(zip)
-      try {
-        while (r.hasNext) {
-          if (r.next() == XMLStreamConstants.START_ELEMENT &&
-              r.getLocalName == "table")
-            names += Option(attr(r, "name")).getOrElse(s"Table${names.size + 1}")
-        }
-      } finally r.close()
-    } finally zip.close()
-    names.toSeq
-  }
-
   private def attr(r: XMLStreamReader, local: String): String = {
     var i = 0
     while (i < r.getAttributeCount) {
@@ -79,139 +62,165 @@ object OdsParser {
     null
   }
 
-  /** Stream the rows of one table (by name, or the `sheetIndex`-th table
-    * when `sheet` is None) as XCell arrays. `onRow(rowIdx, cells)` returns
-    * false to stop early. Trailing empty cells/rows are trimmed; interior
-    * repeats expand. */
-  def foreachRow(open: () => InputStream, sheet: Option[String], sheetIndex: Int,
-      onRow: (Long, Array[XCell]) => Boolean): Unit = {
-    val zip = openContent(open)
-    try {
-      val r = factory.createXMLStreamReader(zip)
-      try {
-        var tableOrdinal = -1
-        var inTarget = false
-        var sawTarget = false
-        var rowIdx = 0L
-        var pendingEmptyRows = 0L // trailing-empty-run candidate, flushed lazily
-        var stop = false
+  private def repeat(r: XMLStreamReader, local: String): Long = {
+    val v = attr(r, local)
+    if (v == null) 1L else math.max(1L, v.toLong)
+  }
 
-        // current row accumulation
-        var cells: scala.collection.mutable.ArrayBuffer[XCell] = null
-        var rowRepeat = 1L
-        var trailingEmpty = 0 // run of empty cells at the current tail
+  /** The rows of one table — by name, or the `sheetIndex`-th (1-based)
+    * when `sheet` is None — pulled from one StAX cursor. Row indices are
+    * 0-based positions in the table. A missing table raises when the
+    * document ends without it. */
+  def rows(open: () => InputStream, sheet: Option[String],
+      sheetIndex: Int): CellRowIterator =
+    new TableRows(openContent(open), sheet, sheetIndex)
 
-        // current cell accumulation
-        var cellRepeat = 1L
-        var cellValue: XCell = XCell.XNone
-        var inCell = false
-        var inPara = false // only text:p content is cell text (not markup whitespace)
-        var text: java.lang.StringBuilder = null
+  private val NoCells = Array.empty[XCell]
 
-        def flushPendingEmpties(): Boolean = {
-          while (pendingEmptyRows > 0 && !stop) {
-            if (!onRow(rowIdx, Array.empty[XCell])) stop = true
-            rowIdx += 1
-            pendingEmptyRows -= 1
-          }
-          !stop
-        }
+  private final class TableRows(zip: ZipInputStream, sheet: Option[String],
+      sheetIndex: Int) extends CellRowIterator {
+    private val r =
+      try factory.createXMLStreamReader(zip)
+      catch { case t: Throwable => zip.close(); throw t }
+    private var closed = false
+    private var tables = 0 // tables started so far
+    private var inTarget = false
+    private var sawTarget = false
+    private var ended = false // target table closed or document ended
+    private var rowIdx = 0L
+    // empty rows are held as a count: emitted only once a non-empty row
+    // follows, so trailing filler is never materialized
+    private var heldEmpty = 0L
+    private var dueEmpty = 0L // held empties released ahead of `row`
+    private var row: Array[XCell] = NoCells
+    private var rowLeft = 0L // copies of `row` (number-rows-repeated) left
 
-        while (r.hasNext && !stop) {
-          r.next() match {
-            case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
-              case "table" =>
-                tableOrdinal += 1
-                inTarget = sheet match {
-                  case Some(n) => Option(attr(r, "name")).contains(n)
-                  case None    => tableOrdinal == sheetIndex
-                }
-                if (inTarget) sawTarget = true
-              case "table-row" if inTarget =>
-                cells = scala.collection.mutable.ArrayBuffer[XCell]()
-                trailingEmpty = 0
-                rowRepeat = math.max(1L,
-                  Option(attr(r, "number-rows-repeated")).map(_.toLong).getOrElse(1L))
-              case "table-cell" | "covered-table-cell" if inTarget && cells != null =>
-                inCell = true
-                cellRepeat = math.max(1L,
-                  Option(attr(r, "number-columns-repeated")).map(_.toLong).getOrElse(1L))
-                cellValue = Option(attr(r, "value-type")).getOrElse("") match {
-                  case "float" | "percentage" | "currency" =>
-                    Option(attr(r, "value"))
-                      .map(v => XCell.XNumber(v.toDouble): XCell).getOrElse(XCell.XNone)
-                  case "boolean" =>
-                    Option(attr(r, "boolean-value"))
-                      .map(v => XCell.XBool(v == "true"): XCell).getOrElse(XCell.XNone)
-                  case "date" =>
-                    Option(attr(r, "date-value")).map { v =>
-                      val day = LocalDate.parse(v.take(10)).toEpochDay
-                      XCell.XDate((day - excelEpochDay).toDouble): XCell
-                    }.getOrElse(XCell.XNone)
-                  case "string" =>
-                    // ODF allows the value in an attribute instead of the
-                    // text:p body; the body form falls through to XNone and
-                    // is collected below
-                    Option(attr(r, "string-value"))
-                      .map(v => XCell.XString(v): XCell).getOrElse(XCell.XNone)
-                  case _ => XCell.XNone // string cells read their text:p body
-                }
-                text = new java.lang.StringBuilder()
-              case "p" if inCell =>
-                inPara = true
-                if (text.length() > 0) text.append('\n') // multi-paragraph cell
-              case _ => ()
-            }
-            case XMLStreamConstants.CHARACTERS if inPara =>
-              text.append(r.getText)
-            case XMLStreamConstants.END_ELEMENT => r.getLocalName match {
-              case "p" if inPara =>
-                inPara = false
-              case "table-cell" | "covered-table-cell" if inCell =>
-                inCell = false
-                inPara = false
-                val v = cellValue match {
-                  case XCell.XNone if text.length() > 0 =>
-                    XCell.XString(text.toString)
-                  case other => other
-                }
-                val isEmpty = v == XCell.XNone
-                // an empty run might be trailing filler (width up to 16384):
-                // append now, trim at row end; clamp absurd runs of nothing
-                val n = if (isEmpty) math.min(cellRepeat, 16384L) else cellRepeat
-                var i = 0L
-                while (i < n) { cells += v; i += 1 }
-                trailingEmpty = if (isEmpty) trailingEmpty + n.toInt else 0
-              case "table-row" if inTarget && cells != null =>
-                val row = cells.dropRight(trailingEmpty).toArray
-                cells = null
-                if (row.isEmpty) {
-                  // candidate trailing filler: hold, emit only if content follows
-                  pendingEmptyRows += rowRepeat
-                } else {
-                  if (flushPendingEmpties()) {
-                    var k = 0L
-                    while (k < rowRepeat && !stop) {
-                      if (!onRow(rowIdx, row)) stop = true
-                      rowIdx += 1
-                      k += 1
-                    }
-                  }
-                }
-              case "table" if inTarget =>
-                inTarget = false // pending trailing empties are dropped
-                stop = true      // target table fully read
-              case _ => ()
-            }
+    // per-row buffers, reused
+    private val cells = scala.collection.mutable.ArrayBuffer[XCell]()
+    private val text = new java.lang.StringBuilder()
+
+    override def hasNext: Boolean =
+      dueEmpty > 0 || rowLeft > 0 || (!ended && advance())
+
+    override def next(): (Long, Array[XCell]) = {
+      if (!hasNext) throw new NoSuchElementException
+      val i = rowIdx
+      rowIdx += 1
+      if (dueEmpty > 0) { dueEmpty -= 1; (i, NoCells) }
+      else { rowLeft -= 1; (i, row) }
+    }
+
+    override def close(): Unit = if (!closed) {
+      closed = true
+      try r.close() finally zip.close()
+    }
+
+    private def finish(): Boolean = {
+      ended = true
+      close()
+      if (!sawTarget)
+        throw new IllegalArgumentException(sheet match {
+          case Some(n) => s"ods: no table named '$n'"
+          case None    => XlsxOptions.sheetIndexOutOfRange(sheetIndex, tables)
+        })
+      false // held trailing empties are dropped
+    }
+
+    /** Parse up to the next non-empty row of the target table: true with
+      * `row`/`rowLeft`/`dueEmpty` set, false at the end of the table. */
+    private def advance(): Boolean = {
+      var inRow = false
+      var rowRepeat = 1L
+      var trailingEmpty = 0 // run of empty cells at the current tail
+      var inCell = false
+      var inPara = false // only text:p content is cell text (not markup whitespace)
+      var cellRepeat = 1L
+      var cellValue: XCell = XCell.XNone
+      while (r.hasNext) {
+        r.next() match {
+          case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
+            case "table" =>
+              tables += 1
+              inTarget = sheet match {
+                case Some(n) => attr(r, "name") == n
+                case None    => tables == sheetIndex
+              }
+              if (inTarget) sawTarget = true
+            case "table-row" if inTarget =>
+              inRow = true
+              cells.clear()
+              trailingEmpty = 0
+              rowRepeat = repeat(r, "number-rows-repeated")
+            case "table-cell" | "covered-table-cell" if inTarget && inRow =>
+              inCell = true
+              cellRepeat = repeat(r, "number-columns-repeated")
+              val vt = attr(r, "value-type")
+              cellValue = if (vt == null) XCell.XNone else vt match {
+                case "float" | "percentage" | "currency" =>
+                  val v = attr(r, "value")
+                  if (v == null) XCell.XNone else XCell.XNumber(v.toDouble)
+                case "boolean" =>
+                  val v = attr(r, "boolean-value")
+                  if (v == null) XCell.XNone else XCell.XBool(v == "true")
+                case "date" =>
+                  val v = attr(r, "date-value")
+                  if (v == null) XCell.XNone
+                  else XCell.XDate((LocalDate.parse(v.take(10)).toEpochDay -
+                    XCell.ExcelEpochDay).toDouble)
+                case "string" =>
+                  // ODF allows the value in an attribute instead of the
+                  // text:p body; the body form falls through to XNone and
+                  // is collected below
+                  val v = attr(r, "string-value")
+                  if (v == null) XCell.XNone else XCell.XString(v)
+                case _ => XCell.XNone
+              }
+              text.setLength(0)
+            case "p" if inCell =>
+              inPara = true
+              if (text.length() > 0) text.append('\n') // multi-paragraph cell
             case _ => ()
           }
+          case XMLStreamConstants.CHARACTERS if inPara =>
+            text.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
+          case XMLStreamConstants.END_ELEMENT => r.getLocalName match {
+            case "p" if inPara =>
+              inPara = false
+            case "table-cell" | "covered-table-cell" if inCell =>
+              inCell = false
+              inPara = false
+              val v =
+                if (cellValue == XCell.XNone && text.length() > 0)
+                  XCell.XString(text.toString)
+                else cellValue
+              val isEmpty = v == XCell.XNone
+              // an empty run might be trailing filler (width up to 16384):
+              // append now, trim at row end; clamp absurd runs of nothing
+              val n = if (isEmpty) math.min(cellRepeat, 16384L) else cellRepeat
+              var i = 0L
+              while (i < n) { cells += v; i += 1 }
+              trailingEmpty = if (isEmpty) trailingEmpty + n.toInt else 0
+            case "table-row" if inTarget && inRow =>
+              inRow = false
+              val width = cells.length - trailingEmpty
+              if (width == 0) heldEmpty += rowRepeat
+              else {
+                row = new Array[XCell](width)
+                cells.copyToArray(row, 0, width)
+                rowLeft = rowRepeat
+                dueEmpty = heldEmpty
+                heldEmpty = 0
+                return true
+              }
+            case "table" if inTarget =>
+              inTarget = false
+              return finish() // target table fully read
+            case _ => ()
+          }
+          case _ => ()
         }
-        if (!sawTarget)
-          throw new IllegalArgumentException(sheet match {
-            case Some(n) => s"ods: no table named '$n'"
-            case None    => s"ods: no table at index $sheetIndex"
-          })
-      } finally r.close()
-    } finally zip.close()
+      }
+      finish()
+    }
   }
 }

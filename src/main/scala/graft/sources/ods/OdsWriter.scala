@@ -4,19 +4,27 @@ import java.io.OutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
 
+import graft.sources.xlsx.{SheetFormat, SheetWriter, XlsxWriter}
+
 /** Minimal OpenDocument spreadsheet writer — the .ods twin of
-  * [[graft.sources.xlsx.XlsxWriter]]: one table per file, rows streamed
-  * straight into the zip (O(1) memory in the row count). Container per
-  * ODF 1.2 §3: a STORED (uncompressed) `mimetype` first entry, a
-  * `META-INF/manifest.xml`, and `content.xml` holding the table. Strings
-  * escape XML; numbers write `office:value`; booleans
-  * `office:boolean-value`; dates `office:date-value` (ISO local date). */
-object OdsWriter {
+  * [[graft.sources.xlsx.XlsxWriter]] and the sheet format the shared DSv2
+  * writer streams `df.write.format("ods")` into: one table per file, rows
+  * streamed straight into the zip (O(1) memory in the row count). Container
+  * per ODF 1.2 §3: a STORED (uncompressed) `mimetype` first entry, a
+  * `META-INF/manifest.xml`, and `content.xml` holding the table. Text and
+  * numbers use the xlsx writer's XML escape and double format; booleans
+  * write `office:boolean-value`, dates `office:date-value` (ISO local
+  * date). */
+object OdsWriter extends SheetFormat {
+  val extension = "ods"
+  def sheetWriter(out: OutputStream, sheetName: String,
+      header: Option[Seq[String]]): SheetWriter =
+    new StreamingOdsWriter(out, sheetName, header)
 
   private val Mimetype = "application/vnd.oasis.opendocument.spreadsheet"
 
   final class StreamingOdsWriter(out: OutputStream, tableName: String,
-      header: Option[Seq[String]]) {
+      header: Option[Seq[String]]) extends SheetWriter {
     private val zip = new ZipOutputStream(out, StandardCharsets.UTF_8)
     private val w = {
       // mimetype MUST be first and STORED so magic-byte sniffers see it
@@ -43,7 +51,7 @@ object OdsWriter {
           |<office:document-content xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0" xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" office:version="1.2">
           |<office:body><office:spreadsheet>
           |""".stripMargin)
-      w.write(s"""<table:table table:name="${esc(tableName)}">\n""")
+      w.write(s"""<table:table table:name="${XlsxWriter.esc(tableName)}">\n""")
       header.foreach(h => writeRowTo(w, h.map(s => s: Any)))
       w
     }
@@ -64,22 +72,12 @@ object OdsWriter {
     }
   }
 
-  private def esc(s: String): String = {
-    val b = new java.lang.StringBuilder(s.length + 16)
-    s.foreach {
-      case '&' => b.append("&amp;"); case '<' => b.append("&lt;")
-      case '>' => b.append("&gt;"); case '"' => b.append("&quot;")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
   private def writeRowTo(w: java.io.Writer, values: Seq[Any]): Unit = {
     w.write("<table:table-row>")
     values.foreach {
       case null => w.write("<table:table-cell/>")
       case s: String =>
-        w.write(s"""<table:table-cell office:value-type="string"><text:p>${esc(s)}</text:p></table:table-cell>""")
+        w.write(s"""<table:table-cell office:value-type="string"><text:p>${XlsxWriter.esc(s)}</text:p></table:table-cell>""")
       case b: Boolean =>
         w.write(s"""<table:table-cell office:value-type="boolean" office:boolean-value="$b"><text:p>$b</text:p></table:table-cell>""")
       case d: java.time.LocalDate =>
@@ -100,9 +98,7 @@ object OdsWriter {
   }
 
   private def writeNum(w: java.io.Writer, d: Double): Unit = {
-    // office:value round-trips the double exactly via its shortest repr
-    val repr = if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15)
-      d.toLong.toString else d.toString
+    val repr = XlsxWriter.fmt(d)
     w.write(s"""<table:table-cell office:value-type="float" office:value="$repr"><text:p>$repr</text:p></table:table-cell>""")
   }
 }

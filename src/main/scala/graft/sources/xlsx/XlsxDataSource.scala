@@ -40,7 +40,7 @@ final class XlsxDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = XlsxDataSource.resolvePaths(options)
+    val paths = XlsxDataSource.resolvePaths(options, XlsxWriter.extension)
     if (paths.isEmpty)
       throw new IllegalArgumentException(
         "xlsx: no input files found — schema inference needs at least one " +
@@ -71,9 +71,11 @@ object XlsxDataSource {
   /** Name of the per-row sheet column the allSheets scan appends. */
   val SheetNameCol = "_sheet_name"
 
-  /** All concrete .xlsx file paths for the scan: each entry may be a file, a
-    * directory (expanded non-recursively to its *.xlsx members) or a glob. */
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
+  /** All concrete file paths for the scan, from the `paths` option (a
+    * JSON array, as `load(p1, p2)` passes it) or else `path`: each entry
+    * may be a file, a directory (expanded non-recursively to its members
+    * named `*.<extension>`) or a glob. */
+  def resolvePaths(options: CaseInsensitiveStringMap, extension: String): Seq[String] = {
     val raw: Seq[String] =
       Option(options.get("paths")).map(parseJsonStringArray).getOrElse(
         Option(options.get("path")).toSeq)
@@ -85,7 +87,8 @@ object XlsxDataSource {
       matched.flatMap { st =>
         if (st.isDirectory)
           fs.listStatus(st.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".xlsx"))
+            .filter(f => f.isFile &&
+              f.getPath.getName.toLowerCase.endsWith("." + extension))
             .map(_.getPath.toString)
         else Seq(st.getPath.toString)
       }
@@ -150,13 +153,11 @@ final class XlsxTable(
 
   override def newScanBuilder(caseInsensitiveStringMap: CaseInsensitiveStringMap): ScanBuilder =
     new XlsxScanBuilder(schema, opts,
-      XlsxDataSource.resolvePaths(caseInsensitiveStringMap), caseInsensitiveStringMap)
+      XlsxDataSource.resolvePaths(caseInsensitiveStringMap, XlsxWriter.extension),
+      caseInsensitiveStringMap)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new XlsxWriteBuilder(
-      Option(info.options.get("path")).getOrElse(
-        throw new IllegalArgumentException("xlsx write requires a path")),
-      info.schema(), opts)
+    new XlsxWriteBuilder(info, opts, XlsxWriter)
 }
 
 final class XlsxScanBuilder(fullSchema: StructType, opts: XlsxOptions, paths: Seq[String],
@@ -390,8 +391,8 @@ final case class XlsxInputPartition(path: String, sheet: Option[SheetRef] = None
     extends InputPartition
 
 /** Batch and streaming scans both read columnar: one ColumnarBatch per
-  * parse chunk (or per [[XlsxColumnarPartitionReader.SeqBatchRows]] rows on
-  * the sequential path), read by Spark through codegen'd ColumnarToRow —
+  * parse chunk (or per [[RowBatchReader.BatchRows]] rows on the
+  * sequential path), read by Spark through codegen'd ColumnarToRow —
   * the same shape as the built-in vectorized parquet reader. */
 final class XlsxPartitionReaderFactory(
     fullSchema: StructType,
@@ -519,18 +520,149 @@ object XlsxPartitionReader {
           s"Has: $width Expected: $baseWidth")
 }
 
-/** Columnar batch scan over one file's target sheet — the only read path.
+/** How a scan's required columns are cut from parsed cell rows into column
+  * vectors — the per-row half of every columnar spreadsheet scan: xlsx's
+  * worker-built chunk batches, and the sequential [[RowBatchReader]] of
+  * xlsx and ods alike. Column mapping is positional, like the reference.
+  * `sheetName` is the value of the allSheets `_sheet_name` column (None:
+  * the scan has no such column); rows are pre-checked against the pushed
+  * `filters` whose columns the scan reads. Immutable, so worker threads
+  * share it. */
+final class RowColumns(
+    fullSchema: StructType,
+    required: StructType,
+    coerce: Boolean,
+    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    sheetName: Option[String] = None) {
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+
+  private val sheetNameBytes: Array[Byte] = sheetName.getOrElse("")
+    .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  // positional index of each required column in the sheet; -1 marks the
+  // allSheets metadata column, which has no sheet position. Sheet
+  // positions count only DATA columns: a user-supplied schema may place
+  // _sheet_name anywhere, and fieldIndex over the full schema would then
+  // shift every column after it.
+  private val dataFieldNames: Array[String] =
+    if (sheetName.isDefined)
+      fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
+    else fullSchema.fieldNames
+  private val colIdx: Array[Int] = required.fieldNames.map { n =>
+    if (sheetName.isDefined && n == XlsxDataSource.SheetNameCol) -1
+    else dataFieldNames.indexOf(n)
+  }
+  val colTypes: Array[DataType] = required.fields.map(_.dataType)
+  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
+  private val requiredIdx: Map[String, Int] =
+    required.fieldNames.zipWithIndex.toMap
+  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
+
+  /** Pushed-filter early skip on only the filter-referenced columns. */
+  def passes(cells: Array[XCell]): Boolean =
+    evaluable.isEmpty || {
+      val get: String => Any = name => {
+        val i = requiredIdx(name)
+        val c = colIdx(i)
+        if (c < 0) UTF8String.fromBytes(sheetNameBytes)
+        else XlsxPartitionReader.convert(
+          if (c < cells.length) cells(c) else XCell.XNone,
+          colTypes(i), coerce)
+      }
+      evaluable.forall(XlsxFilterEval.eval(_, get))
+    }
+
+  def writeRow(vectors: Array[OnHeapColumnVector], out: Int,
+      cells: Array[XCell]): Unit = {
+    var j = 0
+    while (j < colIdx.length) {
+      val c = colIdx(j)
+      if (c < 0) vectors(j).putByteArray(out, sheetNameBytes)
+      else XlsxPartitionReader.writeVector(vectors(j), out,
+        if (c < cells.length) cells(c) else XCell.XNone,
+        typeCodes(j), coerce)
+      j += 1
+    }
+  }
+
+  /** Worker-side chunk transform: parsed rows → one ColumnarBatch, excluding
+    * the producer-assigned leading-drop prefix and filter-rejected rows.
+    * Thread-safe: allocates fresh vectors per chunk. */
+  def buildBatch(rows: Array[Array[XCell]], dropFirst: Int): AnyRef = {
+    val n = rows.length
+    val vectors = colTypes.map(dt =>
+      new OnHeapColumnVector(math.max(1, n - dropFirst), dt))
+    var out = 0
+    var i = dropFirst
+    while (i < n) {
+      val cells = rows(i)
+      if (passes(cells)) { writeRow(vectors, out, cells); out += 1 }
+      i += 1
+    }
+    new ColumnarBatch(vectors.toArray[ColumnVector], out)
+  }
+}
+
+/** The one sequential batch loop of the spreadsheet sources: drops the
+  * header/skipRows prefix (`dropRows`), then fills reused
+  * OnHeapColumnVectors with up to [[RowBatchReader.BatchRows]] rows per
+  * ColumnarBatch, ragged-checking each row against the sheet's width —
+  * like the vectorized parquet reader, which Spark reads through codegen'd
+  * ColumnarToRow. Serves every xlsx scan without parse workers (threads =
+  * 1, segment ranges, the missing-entry fallback) and every ods scan.
+  * Closing it closes `rows`. */
+final class RowBatchReader(rows: CellRowIterator, dropRows: Long,
+    baseWidth: Int, cols: RowColumns)
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+
+  private var dropped = 0L
+  while (dropped < dropRows && rows.hasNext) { rows.next(); dropped += 1 }
+
+  private var vectors: Array[OnHeapColumnVector] = _
+  private var current: ColumnarBatch = _
+
+  override def next(): Boolean = {
+    if (vectors == null)
+      vectors = cols.colTypes.map(dt =>
+        new OnHeapColumnVector(RowBatchReader.BatchRows, dt))
+    else vectors.foreach(_.reset())
+    var out = 0
+    while (out < RowBatchReader.BatchRows && rows.hasNext) {
+      val (rowIdx, cells) = rows.next()
+      XlsxPartitionReader.raggedCheck(rowIdx, cells.length, baseWidth)
+      if (cols.passes(cells)) { cols.writeRow(vectors, out, cells); out += 1 }
+    }
+    if (out == 0) false
+    else {
+      current = new ColumnarBatch(vectors.toArray[ColumnVector], out)
+      true
+    }
+  }
+
+  override def get(): ColumnarBatch = current
+  override def close(): Unit = rows.close()
+}
+
+object RowBatchReader {
+  /** Rows per sequential batch: big enough to amortize the per-batch
+    * handoff, small enough that 32 concurrent single-threaded file tasks ×
+    * a few live batches stay well inside executor memory. */
+  val BatchRows: Int = 4096
+}
+
+/** Columnar batch scan over one file's target sheet — the xlsx read path.
   * Each file re-resolves its own header (cheap 2-row probe over the
   * shared-strings prefix), so multi-file scans tolerate per-file header
-  * rows; column mapping is positional, like the reference. With
-  * `threads >= 2` the parse workers build one
+  * rows. With `threads >= 2` the parse workers build one
   * ColumnarBatch per producer chunk ([[ParallelSheetScanner]]'s chunk face),
   * so the consumer thread's per-row work drops to a ragged-check walk over
   * the chunk's stitched indices and Spark reads the batch through codegen'd
   * ColumnarToRow — the vectorized-parquet shape, with no per-row
   * InternalRow materialization anywhere on the sequential stages.
   * Sequential scans (threads = 1, segment ranges, or the missing-entry StAX
-  * fallback) batch consumer-side into reused vectors.
+  * fallback) go through the shared [[RowBatchReader]].
   */
 final class XlsxColumnarPartitionReader(
     path: String,
@@ -544,8 +676,7 @@ final class XlsxColumnarPartitionReader(
     /** segment-range slice of an indexed workbook (splittable path) */
     segRange: Option[SegRange] = None)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val wb = XlsxDataSource.workbook(path, conf.toConf,
     opts.maxSharedStringsBytes)
@@ -557,71 +688,9 @@ final class XlsxColumnarPartitionReader(
       .getOrElse(resolved.dropRows.toLong)
   private val sheetTarget = sheet.map(_.target).getOrElse(
     wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-  private val sheetNameBytes: Array[Byte] = sheet.map(_.name).getOrElse("")
-    .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  // positional index of each required column in the sheet; -1 marks the
-  // allSheets metadata column, which has no sheet position. Sheet
-  // positions count only DATA columns: a user-supplied schema may place
-  // _sheet_name anywhere, and fieldIndex over the full schema would then
-  // shift every column after it.
-  private val dataFieldNames: Array[String] =
-    if (opts.allSheets)
-      fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
-    else fullSchema.fieldNames
-  private val colIdx: Array[Int] = required.fieldNames.map { n =>
-    if (opts.allSheets && n == XlsxDataSource.SheetNameCol) -1
-    else dataFieldNames.indexOf(n)
-  }
-  private val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val requiredIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
-
-  /** Pushed-filter early skip on only the filter-referenced columns. */
-  private def passes(cells: Array[XCell]): Boolean =
-    evaluable.isEmpty || {
-      val get: String => Any = name => {
-        val i = requiredIdx(name)
-        val c = colIdx(i)
-        if (c < 0) UTF8String.fromBytes(sheetNameBytes)
-        else XlsxPartitionReader.convert(
-          if (c < cells.length) cells(c) else XCell.XNone,
-          colTypes(i), opts.coerceToString)
-      }
-      evaluable.forall(XlsxFilterEval.eval(_, get))
-    }
-
-  private def writeRow(vectors: Array[OnHeapColumnVector], out: Int,
-      cells: Array[XCell]): Unit = {
-    var j = 0
-    while (j < colIdx.length) {
-      val c = colIdx(j)
-      if (c < 0) vectors(j).putByteArray(out, sheetNameBytes)
-      else XlsxPartitionReader.writeVector(vectors(j), out,
-        if (c < cells.length) cells(c) else XCell.XNone,
-        typeCodes(j), opts.coerceToString)
-      j += 1
-    }
-  }
-
-  /** Worker-side chunk transform: parsed rows → one ColumnarBatch, excluding
-    * the producer-assigned leading-drop prefix and filter-rejected rows.
-    * Thread-safe: allocates fresh vectors per chunk, touches no reader state
-    * beyond immutable arrays. */
-  private def buildBatch(rows: Array[Array[XCell]], dropFirst: Int): AnyRef = {
-    val n = rows.length
-    val vectors = colTypes.map(dt =>
-      new OnHeapColumnVector(math.max(1, n - dropFirst), dt))
-    var out = 0
-    var i = dropFirst
-    while (i < n) {
-      val cells = rows(i)
-      if (passes(cells)) { writeRow(vectors, out, cells); out += 1 }
-      i += 1
-    }
-    new ColumnarBatch(vectors.toArray[ColumnVector], out)
-  }
+  private val cols = new RowColumns(fullSchema, required, opts.coerceToString,
+    filters,
+    if (opts.allSheets) Some(sheet.map(_.name).getOrElse("")) else None)
 
   private val iterE: Either[CellRowIterator, ParallelSheetScanner] =
     segRange match {
@@ -631,27 +700,19 @@ final class XlsxColumnarPartitionReader(
             s"$path: segment index vanished for range [${r.s0},${r.s1}) — " +
               "a whole-file fallback would DUPLICATE rows across partitions")))
       case None if threads >= 2 =>
-        wb.chunkingRowIterator(sheetTarget, threads, buildBatch,
+        wb.chunkingRowIterator(sheetTarget, threads, cols.buildBatch,
           resolved.dropRows.toLong, opts.chunkBytes)
       case None => Left(wb.rowIterator(sheetTarget))
     }
-  private val seqIter: CellRowIterator = iterE.left.toOption.orNull
+  private val seq: RowBatchReader = iterE.left.toOption
+    .map(new RowBatchReader(_, effDropRows, resolved.baseWidth, cols)).orNull
   private val parIter: ParallelSheetScanner = iterE.toOption.orNull
 
-  private var dropped = 0L
-  if (seqIter != null) {
-    while (dropped < effDropRows && seqIter.hasNext) {
-      seqIter.next(); dropped += 1
-    }
-  }
-
-  /** Reused across sequential batches (reset per fill), like the vectorized
-    * parquet reader; worker-built batches are fresh per chunk instead. */
-  private var seqVectors: Array[OnHeapColumnVector] = _
   private var current: ColumnarBatch = _
 
-  override def next(): Boolean = {
-    if (parIter != null) {
+  override def next(): Boolean =
+    if (seq != null) seq.next()
+    else {
       while (parIter.advanceChunk()) {
         // metadata walk: ragged-check every non-dropped row (dropped
         // header/skip rows are exempt, same as the sequential path)
@@ -667,53 +728,33 @@ final class XlsxColumnarPartitionReader(
         b.close() // zero-row producer tail: skip and keep pulling
       }
       false
-    } else {
-      if (seqVectors == null)
-        seqVectors = colTypes.map(dt =>
-          new OnHeapColumnVector(XlsxColumnarPartitionReader.SeqBatchRows, dt))
-      else seqVectors.foreach(_.reset())
-      var out = 0
-      while (out < XlsxColumnarPartitionReader.SeqBatchRows && seqIter.hasNext) {
-        val (rowIdx, cells) = seqIter.next()
-        XlsxPartitionReader.raggedCheck(rowIdx, cells.length, resolved.baseWidth)
-        if (passes(cells)) { writeRow(seqVectors, out, cells); out += 1 }
-      }
-      if (out == 0) false
-      else {
-        current = new ColumnarBatch(seqVectors.toArray[ColumnVector], out)
-        true
-      }
     }
-  }
 
-  override def get(): ColumnarBatch = current
+  override def get(): ColumnarBatch = if (seq != null) seq.get() else current
   override def close(): Unit =
-    if (parIter != null) parIter.close() else seqIter.close()
-}
-
-object XlsxColumnarPartitionReader {
-  /** Consumer-side batch size for sequential scans: big enough to amortize
-    * the per-batch handoff, small enough that 32 concurrent single-threaded
-    * file tasks × a few live batches stay well inside executor memory. */
-  val SeqBatchRows: Int = 4096
+    if (seq != null) seq.close() else parIter.close()
 }
 
 // ---------------------------------------------------------------------------
-// Write path
+// Write path — every spreadsheet format: one file per write task, streamed
+// row by row into the format's sheet writer
 // ---------------------------------------------------------------------------
 
-final class XlsxWriteBuilder(path: String, schema: StructType, opts: XlsxOptions)
-    extends WriteBuilder with SupportsTruncate {
+final class XlsxWriteBuilder(info: LogicalWriteInfo, opts: XlsxOptions,
+    format: SheetFormat) extends WriteBuilder with SupportsTruncate {
+  private val path = Option(info.options.get("path")).getOrElse(
+    throw new IllegalArgumentException(s"${format.extension} write requires a path"))
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new XlsxBatchWrite(path, schema, opts, doTruncate)
+    override def toBatch: BatchWrite =
+      new XlsxBatchWrite(path, info.schema(), opts, doTruncate, format)
   }
 }
 
-final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions, truncate: Boolean)
-    extends BatchWrite {
+final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions,
+    truncate: Boolean, format: SheetFormat) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // Driver-side: prepare the output directory.
     val p = new Path(path)
@@ -721,20 +762,21 @@ final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions, 
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
     new XlsxDataWriterFactory(path, schema, opts.writeHeader,
-      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf())
+      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf(), format)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 final class XlsxDataWriterFactory(path: String, schema: StructType, header: Boolean,
-    sheetName: String, conf: XlsxDataSource.ConfProps)
+    sheetName: String, conf: XlsxDataSource.ConfProps, format: SheetFormat)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new XlsxDataWriter(path, schema, header, sheetName, partitionId, taskId, conf)
+    new XlsxDataWriter(path, schema, header, sheetName, partitionId, taskId, conf,
+      format)
 }
 
-/** One .xlsx file per write task, streamed row-by-row into the zip. */
+/** One file per write task, streamed row-by-row into the zip. */
 final class XlsxDataWriter(
     dir: String,
     schema: StructType,
@@ -742,35 +784,43 @@ final class XlsxDataWriter(
     sheetName: String,
     partitionId: Int,
     taskId: Long,
-    conf: XlsxDataSource.ConfProps)
+    conf: XlsxDataSource.ConfProps,
+    format: SheetFormat)
     extends DataWriter[InternalRow] {
 
-  private val file = new Path(dir, f"part-$partitionId%05d-$taskId.xlsx")
+  private val file =
+    new Path(dir, f"part-$partitionId%05d-$taskId.${format.extension}")
   private val fs = file.getFileSystem(conf.toConf)
   private val out = fs.create(file, true)
-  private val sheet = new XlsxWriter.StreamingWorkbookWriter(
+  private val sheet = format.sheetWriter(
     out, sheetName, if (header) Some(schema.fieldNames.toSeq) else None)
+  private val types: Array[DataType] = schema.fields.map(_.dataType)
 
   override def write(record: InternalRow): Unit = {
-    val vs: Seq[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (record.isNullAt(i)) null
-      else f.dataType match {
-        case StringType  => record.getUTF8String(i).toString
-        case DoubleType  => record.getDouble(i)
-        case FloatType   => record.getFloat(i).toDouble
-        case IntegerType => record.getInt(i)
-        case LongType    => record.getLong(i)
-        case ShortType   => record.getShort(i).toInt
-        case ByteType    => record.getByte(i).toInt
-        case BooleanType => record.getBoolean(i)
-        case DateType    => java.time.LocalDate.ofEpochDay(record.getInt(i).toLong)
-        case other =>
-          throw new IllegalArgumentException(
-            s"xlsx write: unsupported column type $other (supported: " +
-              "string, double/float, int/long/short/byte, boolean, date)")
-      }
-    }.toSeq
-    sheet.addRow(vs)
+    val vs = new Array[Any](types.length)
+    var i = 0
+    while (i < vs.length) {
+      if (!record.isNullAt(i)) vs(i) = value(record, i, types(i))
+      i += 1
+    }
+    sheet.addRow(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
+  }
+
+  /** A non-null Catalyst value as the sheet writers' cell value. */
+  private def value(record: InternalRow, i: Int, dt: DataType): Any = dt match {
+    case StringType  => record.getUTF8String(i).toString
+    case DoubleType  => record.getDouble(i)
+    case FloatType   => record.getFloat(i).toDouble
+    case IntegerType => record.getInt(i)
+    case LongType    => record.getLong(i)
+    case ShortType   => record.getShort(i).toInt
+    case ByteType    => record.getByte(i).toInt
+    case BooleanType => record.getBoolean(i)
+    case DateType    => java.time.LocalDate.ofEpochDay(record.getInt(i).toLong)
+    case other =>
+      throw new IllegalArgumentException(
+        s"${format.extension} write: unsupported column type $other (supported: " +
+          "string, double/float, int/long/short/byte, boolean, date)")
   }
 
   override def commit(): WriterCommitMessage = {

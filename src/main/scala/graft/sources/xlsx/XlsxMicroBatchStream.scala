@@ -69,7 +69,7 @@ final class XlsxMicroBatchStream(
   }
 
   /** Re-glob the scan's original path options against the filesystem. */
-  private def listNow(): Seq[String] = XlsxDataSource.resolvePaths(options)
+  private def listNow(): Seq[String] = XlsxDataSource.resolvePaths(options, XlsxWriter.extension)
 
   override def latestOffset(): Offset = synchronized {
     val conf = XlsxDataSource.hadoopConf()

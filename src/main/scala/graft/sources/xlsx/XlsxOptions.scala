@@ -62,6 +62,11 @@ final case class XlsxOptions(
 object XlsxOptions {
   private val allowedTypes = Set("STRING", "VARCHAR", "DOUBLE", "BOOLEAN", "DATE")
 
+  /** Error message for a `sheetIndex` outside a workbook's `count` sheets
+    * (1-based, as the user gave it), for every format. */
+  def sheetIndexOutOfRange(index: Int, count: Int): String =
+    s"sheet_index $index out of range 1..$count"
+
   def from(map: CaseInsensitiveStringMap): XlsxOptions = {
     def str(keys: String*): Option[String] =
       keys.collectFirst { case k if map.containsKey(k) => map.get(k) }

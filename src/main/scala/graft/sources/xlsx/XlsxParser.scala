@@ -21,10 +21,12 @@ object XCell {
   case object XError extends XCell
   case object XNone extends XCell
 
-  /** Excel's day-0 epoch. serial→epochDay conversion mirrors the reference's
-    * seconds/86400 floor (sheetreader_extension.cpp:170-175). */
-  private val excelEpoch: Long = LocalDate.of(1899, 12, 30).toEpochDay
-  def serialToEpochDay(serial: Double): Int = (excelEpoch + math.floor(serial).toLong).toInt
+  /** Excel's day-0 epoch (1899-12-30) as an epoch day: serial = epochDay −
+    * this, for every format that reads or writes date serials.
+    * serial→epochDay conversion mirrors the reference's seconds/86400 floor
+    * (sheetreader_extension.cpp:170-175). */
+  val ExcelEpochDay: Long = LocalDate.of(1899, 12, 30).toEpochDay
+  def serialToEpochDay(serial: Double): Int = (ExcelEpochDay + math.floor(serial).toLong).toInt
 }
 
 final case class SheetInfo(name: String, target: String)
@@ -293,22 +295,19 @@ object XlsxParser {
             .getOrElse(throw new IllegalArgumentException(s"Sheet '$n' not found; have ${sheets.map(_.name).mkString(", ")}"))
         case None =>
           if (sheetIndex < 1 || sheetIndex > sheets.size)
-            throw new IllegalArgumentException(s"sheet_index $sheetIndex out of range 1..${sheets.size}")
+            throw new IllegalArgumentException(
+              XlsxOptions.sheetIndexOutOfRange(sheetIndex, sheets.size))
           sheets(sheetIndex - 1).target
       }
     }
 
     /** Stream rows of one worksheet. Rows arrive as dense arrays (width =
       * max seen cell column in that row); gaps are XNone. Stops early when
-      * `onRow` returns false (schema probes read only 2 rows). Shared-string
-      * cells resolve against `strings`: the whole table unless given. */
+      * `onRow` returns false. Shared-string cells resolve against
+      * `strings`: the whole table unless given. */
     def foreachRow(path: String, onRow: (Long, Array[XCell]) => Boolean,
         strings: Array[String] = sharedStrings): Unit = {
-      val it = openSniffed(path) match {
-        case Left(it) => it
-        case Right((in, closeAll)) =>
-          new SheetScanner(in, strings, dateStyles, closeAll)
-      }
+      val it = rows(path, strings)
       try {
         var continue = true
         while (continue && it.hasNext) {
@@ -318,13 +317,22 @@ object XlsxParser {
       } finally it.close()
     }
 
+    /** Sequential rows of one worksheet, shared-string cells resolved
+      * against `strings`. */
+    def rows(path: String, strings: Array[String]): CellRowIterator =
+      openSniffed(path) match {
+        case Left(it) => it
+        case Right((in, closeAll)) =>
+          new SheetScanner(in, strings, dateStyles, closeAll)
+      }
+
     /** Open `path` and sniff the encoding BOM once: Left(the empty
       * iterator of a missing worksheet entry), Right(the positioned byte
       * stream + closer) for the byte scanners. A UTF-16 BOM does not fall
       * back to StAX (r10): the entry transcodes to UTF-8 on the fly and
       * rides the same scanner + columnar pipeline — the scanner matches
       * tags bytewise and ignores the prolog's declared encoding. The single
-      * copy of this dispatch — foreachRow, rowIterator and
+      * copy of this dispatch — rows, rowIterator and
       * chunkingRowIterator all ride it. */
     private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
       openEntryStream(path) match {

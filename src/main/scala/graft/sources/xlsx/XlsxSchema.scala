@@ -1,7 +1,6 @@
 package graft.sources.xlsx
 
 import org.apache.spark.sql.types._
-import scala.collection.mutable.ArrayBuffer
 
 /** Schema-determination for one sheet, mirroring the reference's bind logic
   * (reference: src/sheetreader_extension.cpp:796-948):
@@ -16,7 +15,9 @@ import scala.collection.mutable.ArrayBuffer
   *     keyed by inferred type + column index (:566-595);
   *   - user `types=[...]` override: must supply >= sheet-width entries; each
   *     must match the inferred type unless `forceTypes` or (STRING &&
-  *     coerceToString); extra entries append `Column N` columns (:896-938).
+  *     coerceToString); extra entries append `Column N` columns (:896-938);
+  *   - a repeated column name becomes `name_1`, `name_2`, … (compared
+  *     case-insensitively), so Spark can resolve every column.
   */
 object XlsxSchema {
 
@@ -55,6 +56,24 @@ object XlsxSchema {
     case "DATE"               => s"Date$i"
   }
 
+  /** Column names Spark can resolve: a later repeat of a name (compared
+    * case-insensitively, as Spark's default resolver does) becomes
+    * `name_1`, `name_2`, … — the first suffix no other column uses. */
+  private def distinct(names: Seq[String]): Seq[String] = {
+    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    val taken = scala.collection.mutable.Set(names.map(key): _*)
+    val seen = scala.collection.mutable.Set[String]()
+    names.map { n =>
+      if (seen.add(key(n))) n
+      else {
+        val renamed = Iterator.from(1).map(k => s"${n}_$k")
+          .find(c => !taken.contains(key(c))).get
+        taken += key(renamed)
+        renamed
+      }
+    }
+  }
+
   private def allString(row: Array[XCell]): Boolean =
     row.nonEmpty && row.forall(_.isInstanceOf[XCell.XString])
 
@@ -76,23 +95,19 @@ object XlsxSchema {
               targetOverride: Option[String] = None): Resolved = {
     val path = targetOverride.getOrElse(
       wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
-    def probe(strings: Array[String]): Seq[Array[XCell]] = {
-      val rows = ArrayBuffer[Array[XCell]]()
-      var seen = 0
-      wb.foreachRow(path, (_, cells) => {
-        seen += 1
-        if (seen > opts.skipRows) rows += cells
-        rows.length < 2
-      }, strings)
-      rows.toSeq
-    }
     val (prefix, whole) = wb.sharedStringsPrefix
-    val rows = probe(prefix)
+    val rows = probe(wb.rows(path, prefix), opts)
     fromProbe(
       if (whole || !rows.exists(_.contains(XCell.XError))) rows
-      else probe(wb.sharedStrings),
+      else probe(wb.rows(path, wb.sharedStrings), opts),
       opts)
   }
+
+  /** The probe rule of every format: the first two rows after `skipRows`.
+    * Closes `rows`. */
+  def probe(rows: CellRowIterator, opts: XlsxOptions): Seq[Array[XCell]] =
+    try rows.drop(opts.skipRows).take(2).map(_._2).toList
+    finally rows.close()
 
   /** The rule core on already-probed post-skip rows — shared by the xlsx
     * path above and the ods source (same option surface, same inference
@@ -150,7 +165,7 @@ object XlsxSchema {
       case None => (typeNames, names)
     }
 
-    val fields = finalNames.zip(finalTypes).map { case (n, t) =>
+    val fields = distinct(finalNames).zip(finalTypes).map { case (n, t) =>
       StructField(n, toDataType(t), nullable = true)
     }
     Resolved(

@@ -5,6 +5,22 @@ import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+/** A spreadsheet container the DSv2 write path streams into: one sheet per
+  * write task, in files named `part-*.<extension>`. */
+trait SheetFormat extends Serializable {
+  def extension: String
+  def sheetWriter(out: OutputStream, sheetName: String,
+      header: Option[Seq[String]]): SheetWriter
+}
+
+/** One sheet being streamed: rows in order, then `finish` completes the
+  * container and closes its stream. Cell values as in
+  * [[XlsxWriter.SheetSpec]]. */
+trait SheetWriter {
+  def addRow(values: Seq[Any]): Unit
+  def finish(): Unit
+}
+
 /** Minimal SpreadsheetML (.xlsx) writer — the sandbox-local way to produce
   * xlsx fixtures and the backing of the `xlsx` DSv2 write path. Beyond the
   * reference (read-only), but required for round-trip tests (SURVEY §2.1 #15).
@@ -16,15 +32,17 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * style index 1 (numFmtId 14) so readers tag them as dates. Rows stream
   * straight to the zip — nothing is buffered.
   */
-object XlsxWriter {
+object XlsxWriter extends SheetFormat {
+  val extension = "xlsx"
+  def sheetWriter(out: OutputStream, sheetName: String,
+      header: Option[Seq[String]]): SheetWriter =
+    new StreamingWorkbookWriter(out, sheetName, header)
 
   /** One sheet: optional header row (written as strings) + data rows.
     * Supported cell values: null, String, Double/Float/Int/Long/Short/Byte,
     * Boolean, java.time.LocalDate, java.sql.Date.
     */
   final case class SheetSpec(name: String, header: Option[Seq[String]], rows: Iterator[Seq[Any]])
-
-  private val excelEpochDay: Long = LocalDate.of(1899, 12, 30).toEpochDay
 
   /** Uncompressed bytes between worksheet SEGMENT cuts. Every cut is a
     * deflate FULL_FLUSH at a row boundary, recorded in a sidecar
@@ -162,7 +180,8 @@ object XlsxWriter {
     * task writing millions of rows never buffers them).
     */
   final class StreamingWorkbookWriter(
-      out: OutputStream, sheetName: String, header: Option[Seq[String]]) {
+      out: OutputStream, sheetName: String, header: Option[Seq[String]])
+      extends SheetWriter {
     private val zip = new FlushableZipOutputStream(out)
     private val counting = new CountingOutputStream(new NonClosing(zip))
     private val sheetEntry = new ZipEntry("xl/worksheets/sheet1.xml")
@@ -302,9 +321,9 @@ object XlsxWriter {
         case b: Byte    => w.write(s"""<c r="$ref"><v>$b</v></c>""")
         case b: Boolean => w.write(s"""<c r="$ref" t="b"><v>${if (b) 1 else 0}</v></c>""")
         case d: LocalDate =>
-          w.write(s"""<c r="$ref" s="1"><v>${d.toEpochDay - excelEpochDay}</v></c>""")
+          w.write(s"""<c r="$ref" s="1"><v>${d.toEpochDay - XCell.ExcelEpochDay}</v></c>""")
         case d: java.sql.Date =>
-          w.write(s"""<c r="$ref" s="1"><v>${d.toLocalDate.toEpochDay - excelEpochDay}</v></c>""")
+          w.write(s"""<c r="$ref" s="1"><v>${d.toLocalDate.toEpochDay - XCell.ExcelEpochDay}</v></c>""")
         case other =>
           throw new IllegalArgumentException(
             s"xlsx write: unsupported value type ${other.getClass.getName}")
@@ -316,7 +335,7 @@ object XlsxWriter {
   /** Shortest round-trip decimal form (Java Double.toString) so a write →
     * read cycle reproduces the exact same double; integral values drop the
     * ".0" to match how spreadsheet tools store whole numbers. */
-  private def fmt(d: Double): String = {
+  private[sources] def fmt(d: Double): String = {
     if (d == 0.0) {
       // the integral fast path would drop the sign of -0.0
       if (1 / d < 0) "-0" else "0"
@@ -336,7 +355,7 @@ object XlsxWriter {
     sb.toString
   }
 
-  private def esc(s: String): String = {
+  private[sources] def esc(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     s.foreach {
       case '&' => sb.append("&amp;")

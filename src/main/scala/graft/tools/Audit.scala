@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Scale-smell audit over every SparkEntry query: flags plan shapes that
   * break at 100 TB — cartesian products, nested-loop joins, and broadcast
@@ -25,13 +24,7 @@ object Audit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) Some(args(1)) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val rows = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Round-17 measurement probe (opt guide §1): for each named face, after a
   * warmup run, times N iterations split into (a) DataFrame construction
@@ -17,19 +16,7 @@ object OverheadProbe {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r17: the suite cycles ~400 distinct plans per rep; the default
-      // 100-entry codegen class cache thrashes and Janino recompiles every
-      // face's generated classes every rep (thread samples caught
-      // CodeGenerator.compile mid-bench). Static conf, so set at session
-      // build; sized for a wide query surface, scale-independent.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -25,19 +25,7 @@ object ScaleBench {
     val sfTag = args(1)
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r17: the suite cycles ~400 distinct plans per rep; the default
-      // 100-entry codegen class cache thrashes and Janino recompiles every
-      // face's generated classes every rep (thread samples caught
-      // CodeGenerator.compile mid-bench). Static conf, so set at session
-      // build; sized for a wide query surface, scale-independent.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val faces = names.map(n => n -> graft.SparkEntry.queries(n))
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

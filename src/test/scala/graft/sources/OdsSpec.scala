@@ -146,7 +146,7 @@ class OdsSpec extends SparkSpec {
     assert(plan.contains("ColumnarToRow"),
       s"expected a columnar ods scan (ColumnarToRow), got:\n$plan")
     // Values survive the vector path bit-for-bit — 9000 rows forces
-    // multiple SeqBatchRows-sized batches plus a partial tail, and the
+    // multiple RowBatchReader.BatchRows-sized batches plus a partial tail, and the
     // column set covers double/string/bool/date vector writers.
     val got = back.orderBy(col("x")).collect()
     assert(got.length == 9000)
@@ -175,5 +175,71 @@ class OdsSpec extends SparkSpec {
       spark.read.format("ods").option("sheetName", "Nope").load(ragged).collect()
     }
     assert(missing.getMessage.contains("no table named"))
+  }
+
+  test("text and doubles round-trip as in xlsx: CR LF, control chars, -0.0") {
+    val dir = tempDir().resolve("esc").toString
+    Seq(("a\r\nb", -0.0), ("ctl\u0001x", 1.5)).toDF("s", "d")
+      .write.format("ods").mode("overwrite").save(dir)
+    val back = spark.read.format("ods").load(dir).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._2)
+    // XML cannot carry U+0001; the writer substitutes U+FFFD, as xlsx does
+    assert(back.map(_._1).toSeq == Seq("a\r\nb", "ctl\uFFFDx"))
+    assert(java.lang.Double.doubleToRawLongBits(back(0)._2) ==
+      java.lang.Double.doubleToRawLongBits(-0.0))
+  }
+
+  /** One-table document: header `k`, then the single value `v`. */
+  private def oneValue(dir: Path, name: String, v: Int): String = rawOds(dir, name,
+    s"""<table:table table:name="S">
+       |<table:table-row><table:table-cell office:value-type="string"><text:p>k</text:p></table:table-cell></table:table-row>
+       |<table:table-row><table:table-cell office:value-type="float" office:value="$v"/></table:table-row>
+       |</table:table>
+       |""".stripMargin)
+
+  test("load(p1, p2) reads every path") {
+    val dir = tempDir()
+    val (p1, p2) = (oneValue(dir, "a.ods", 1), oneValue(dir, "b.ods", 2))
+    val both = spark.read.format("ods").load(p1, p2)
+    assert(both.collect().map(_.getDouble(0)).sorted.toSeq == Seq(1.0, 2.0))
+  }
+
+  test("a sheetIndex past the tables names the 1-based index, in xlsx's wording") {
+    val p = oneValue(tempDir(), "one.ods", 1)
+    for (i <- Seq(3, 0)) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("ods").option("sheetIndex", i.toString).load(p)
+      }
+      assert(e.getMessage == s"sheet_index $i out of range 1..1")
+    }
+  }
+
+  test("repeated header names get _1, _2 suffixes in both formats") {
+    val dir = tempDir()
+    val header = Seq("x", "x", "z", "X")
+    val xlsx = dir.resolve("dup.xlsx")
+    val out = Files.newOutputStream(xlsx)
+    try graft.sources.xlsx.XlsxWriter.write(out, Seq(
+      graft.sources.xlsx.XlsxWriter.SheetSpec("S", Some(header),
+        Iterator(Seq[Any](1.0, 2.0, "a", 3.0)))))
+    finally out.close()
+    def cell(v: String) =
+      s"""<table:table-cell office:value-type="string"><text:p>$v</text:p></table:table-cell>"""
+    def num(v: Double) =
+      s"""<table:table-cell office:value-type="float" office:value="$v"/>"""
+    val ods = rawOds(dir, "dup.ods",
+      s"""<table:table table:name="S">
+         |<table:table-row>${header.map(cell).mkString}</table:table-row>
+         |<table:table-row>${num(1.0)}${num(2.0)}${cell("a")}${num(3.0)}</table:table-row>
+         |</table:table>
+         |""".stripMargin)
+    for ((format, path) <- Seq("xlsx" -> xlsx.toString, "ods" -> ods)) {
+      val df = spark.read.format(format).load(path)
+      assert(df.schema.fieldNames.toSeq == Seq("x", "x_1", "z", "X_2"), format)
+      val r = df.collect().head
+      assert((r.getDouble(0), r.getDouble(1), r.getString(2), r.getDouble(3)) ==
+        ((1.0, 2.0, "a", 3.0)), format)
+      assert(df.select("x_1").collect().head.getDouble(0) == 2.0, format)
+    }
   }
 }
