@@ -30,9 +30,10 @@ import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, XlsxData
   * Scale shape matches the family design: one InputPartition per file
   * (deflate streams don't split; a directory fans out across the
   * cluster), schema from the first file only, column pruning pushed into
-  * the conversion (pruned columns are never converted). Batch read and
-  * write only: no streaming, no allSheets, no intra-file threads and no
-  * filter pushdown, which stay with the xlsx flagship. */
+  * the conversion (pruned columns are never converted); filters are
+  * Spark's, as for xlsx. Batch read and write only: no streaming, no
+  * allSheets and no intra-file threads, which stay with the xlsx
+  * flagship. */
 final class OdsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "ods"
   override def supportsExternalMetadata(): Boolean = true

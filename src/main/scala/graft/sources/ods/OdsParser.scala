@@ -83,7 +83,7 @@ object OdsParser {
       try factory.createXMLStreamReader(zip)
       catch { case t: Throwable => zip.close(); throw t }
     private var closed = false
-    private var tables = 0 // tables started so far
+    private val tableNames = scala.collection.mutable.ArrayBuffer[String]()
     private var inTarget = false
     private var sawTarget = false
     private var ended = false // target table closed or document ended
@@ -120,8 +120,8 @@ object OdsParser {
       close()
       if (!sawTarget)
         throw new IllegalArgumentException(sheet match {
-          case Some(n) => s"ods: no table named '$n'"
-          case None    => XlsxOptions.sheetIndexOutOfRange(sheetIndex, tables)
+          case Some(n) => XlsxOptions.sheetNotFound(n, tableNames.toSeq)
+          case None    => XlsxOptions.sheetIndexOutOfRange(sheetIndex, tableNames.length)
         })
       false // held trailing empties are dropped
     }
@@ -140,10 +140,11 @@ object OdsParser {
         r.next() match {
           case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
             case "table" =>
-              tables += 1
+              val name = Option(attr(r, "name")).getOrElse("")
+              tableNames += name
               inTarget = sheet match {
-                case Some(n) => attr(r, "name") == n
-                case None    => tables == sheetIndex
+                case Some(n) => name == n
+                case None    => tableNames.length == sheetIndex
               }
               if (inTarget) sawTarget = true
             case "table-row" if inTarget =>

@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -31,7 +30,12 @@ import scala.jdk.CollectionConverters._
   *     parse) for the one-huge-workbook case where cores would otherwise
   *     idle.
   *   - Column pruning is pushed into the reader: pruned columns are never
-  *     converted (SupportsPushDownRequiredColumns).
+  *     converted (SupportsPushDownRequiredColumns). Filters are not: like
+  *     the reference, which leaves every query to DuckDB, the reader only
+  *     parses, and Spark's codegen'd Filter above ColumnarToRow is the one
+  *     place a predicate is evaluated — with Spark's own semantics (−0.0
+  *     equals 0.0, NaN ordering), which a second evaluator would have to
+  *     mirror exactly.
   *   - Multi-file scans (directory / glob) are a superset of the reference,
   *     which errors on more than one file (:650).
   */
@@ -162,10 +166,8 @@ final class XlsxTable(
 
 final class XlsxScanBuilder(fullSchema: StructType, opts: XlsxOptions, paths: Seq[String],
     options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // Preserve fullSchema field order; Spark passes a subset.
@@ -173,17 +175,7 @@ final class XlsxScanBuilder(fullSchema: StructType, opts: XlsxOptions, paths: Se
     required = StructType(fullSchema.fields.filter(f => keep.contains(f.name)))
   }
 
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(XlsxFilterEval.supported(fullSchema, _))
-    // everything also stays residual: the reader's evaluation is a pure
-    // early-skip optimization, Spark still re-checks
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan =
-    new XlsxScan(fullSchema, required, opts, paths, pushed, options)
+  override def build(): Scan = new XlsxScan(fullSchema, required, opts, paths, options)
 }
 
 final class XlsxScan(
@@ -191,27 +183,25 @@ final class XlsxScan(
     required: StructType,
     opts: XlsxOptions,
     paths: Seq[String],
-    filters: Array[org.apache.spark.sql.sources.Filter],
     options: CaseInsensitiveStringMap)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String =
-    s"xlsx scan of ${paths.size} file(s), PushedFilters: [${filters.mkString(", ")}]"
+  override def description(): String = s"xlsx scan of ${paths.size} file(s)"
 
   override def planInputPartitions(): Array[InputPartition] =
     XlsxScan.partitionsFor(paths, opts)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters)
+      XlsxDataSource.captureConf())
 
   /** Streaming face: the same scan over files arriving in a directory —
     * each micro-batch is the set of not-yet-seen files (one partition per
     * file, or per (file, sheet) under allSheets), the arrival pattern of a
     * spreadsheet drop-box. */
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XlsxMicroBatchStream(fullSchema, required, opts, options, filters,
+    new XlsxMicroBatchStream(fullSchema, required, opts, options,
       checkpointLocation)
 }
 
@@ -398,8 +388,7 @@ final class XlsxPartitionReaderFactory(
     fullSchema: StructType,
     required: StructType,
     opts: XlsxOptions,
-    conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter])
+    conf: XlsxDataSource.ConfProps)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     throw new UnsupportedOperationException(
@@ -410,46 +399,19 @@ final class XlsxPartitionReaderFactory(
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[XlsxInputPartition]
     new XlsxColumnarPartitionReader(p.path, p.sheet, fullSchema, required, opts,
-      conf, filters, p.threads, p.segRange)
+      conf, p.threads, p.segRange)
   }
 }
 
-/** Cell conversion rules shared by the xlsx and ods columnar readers and
-  * the pushed-filter check. */
+/** Cell conversion rules shared by the xlsx and ods columnar readers. */
 object XlsxPartitionReader {
-  /** Cell → Catalyst value under the reference's compatibility rules
-    * (TypesCompatible, sheetreader_extension.cpp:225-250): exact type match
-    * materializes; STRING additionally accepts any cell when coerceToString;
-    * everything else (and empty/error cells) is NULL.
-    */
-  def convert(cell: XCell, dt: DataType, coerce: Boolean): Any = (dt, cell) match {
-    case (StringType, XCell.XString(s)) => UTF8String.fromString(s)
-    // user-supplied schemas (spark.read.schema(...)) may narrow numerics
-    case (LongType, XCell.XNumber(d))    => d.toLong
-    case (IntegerType, XCell.XNumber(d)) => d.toInt
-    case (FloatType, XCell.XNumber(d))   => d.toFloat
-    case (StringType, XCell.XNumber(d)) if coerce =>
-      // std::to_string(double): fixed 6 decimals (reference :182-221)
-      UTF8String.fromString(String.format(java.util.Locale.ROOT, "%f", Double.box(d)))
-    case (StringType, XCell.XBool(b)) if coerce =>
-      UTF8String.fromString(if (b) "TRUE" else "FALSE")
-    case (StringType, XCell.XDate(serial)) if coerce =>
-      UTF8String.fromString(
-        java.time.LocalDate.ofEpochDay(XCell.serialToEpochDay(serial).toLong).toString)
-    case (DoubleType, XCell.XNumber(d)) => d
-    case (BooleanType, XCell.XBool(b))  => b
-    case (DateType, XCell.XDate(serial)) => XCell.serialToEpochDay(serial)
-    case _ => null
-  }
-
   // compact type codes so the per-cell hot loop switches on an int instead
   // of pattern-matching a DataType
   final val TDouble = 0; final val TString = 1; final val TBool = 2
   final val TDate = 3; final val TLong = 4; final val TInt = 5; final val TFloat = 6
   // Catch-all for DataTypes with no xlsx representation (user-supplied
-  // TimestampType/DecimalType/... via supportsExternalMetadata): the boxed
-  // `convert` reads them as NULL columns, so the vector writer must too —
-  // throwing here would fail reader CONSTRUCTION.
+  // TimestampType/DecimalType/... via supportsExternalMetadata): they read
+  // as NULL columns — throwing here would fail reader CONSTRUCTION.
   final val TNull = 7
 
   def typeCode(dt: DataType): Int = dt match {
@@ -463,10 +425,12 @@ object XlsxPartitionReader {
     case _           => TNull
   }
 
-  /** Unboxed twin of [[convert]]: same value/NULL semantics, writing the
-    * cell into a WritableColumnVector slot instead of boxing a value.
-    * Every (code, cell) pair MUST mirror `convert` — the xlsx oracle suite
-    * rides this path end-to-end for every batch scan. */
+  /** Cell → Catalyst value under the reference's compatibility rules
+    * (TypesCompatible, sheetreader_extension.cpp:225-250), written into a
+    * WritableColumnVector slot: exact type match materializes; STRING
+    * additionally accepts any cell when coerceToString; everything else
+    * (and empty/error cells) is NULL. The one place a cell is converted:
+    * Spark evaluates every filter above the scan. */
   def writeVector(
       v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
       i: Int, cell: XCell, code: Int, coerce: Boolean): Unit = (code: @annotation.switch) match {
@@ -525,14 +489,13 @@ object XlsxPartitionReader {
   * worker-built chunk batches, and the sequential [[RowBatchReader]] of
   * xlsx and ods alike. Column mapping is positional, like the reference.
   * `sheetName` is the value of the allSheets `_sheet_name` column (None:
-  * the scan has no such column); rows are pre-checked against the pushed
-  * `filters` whose columns the scan reads. Immutable, so worker threads
+  * the scan has no such column). Every row goes into the batch: filters
+  * are Spark's, evaluated above the scan. Immutable, so worker threads
   * share it. */
 final class RowColumns(
     fullSchema: StructType,
     required: StructType,
     coerce: Boolean,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     sheetName: Option[String] = None) {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -554,23 +517,6 @@ final class RowColumns(
   }
   val colTypes: Array[DataType] = required.fields.map(_.dataType)
   private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
-  private val requiredIdx: Map[String, Int] =
-    required.fieldNames.zipWithIndex.toMap
-  private val evaluable = filters.filter(_.references.forall(requiredIdx.contains))
-
-  /** Pushed-filter early skip on only the filter-referenced columns. */
-  def passes(cells: Array[XCell]): Boolean =
-    evaluable.isEmpty || {
-      val get: String => Any = name => {
-        val i = requiredIdx(name)
-        val c = colIdx(i)
-        if (c < 0) UTF8String.fromBytes(sheetNameBytes)
-        else XlsxPartitionReader.convert(
-          if (c < cells.length) cells(c) else XCell.XNone,
-          colTypes(i), coerce)
-      }
-      evaluable.forall(XlsxFilterEval.eval(_, get))
-    }
 
   def writeRow(vectors: Array[OnHeapColumnVector], out: Int,
       cells: Array[XCell]): Unit = {
@@ -586,20 +532,15 @@ final class RowColumns(
   }
 
   /** Worker-side chunk transform: parsed rows → one ColumnarBatch, excluding
-    * the producer-assigned leading-drop prefix and filter-rejected rows.
-    * Thread-safe: allocates fresh vectors per chunk. */
+    * the producer-assigned leading-drop prefix. Thread-safe: allocates
+    * fresh vectors per chunk. */
   def buildBatch(rows: Array[Array[XCell]], dropFirst: Int): AnyRef = {
     val n = rows.length
     val vectors = colTypes.map(dt =>
       new OnHeapColumnVector(math.max(1, n - dropFirst), dt))
-    var out = 0
     var i = dropFirst
-    while (i < n) {
-      val cells = rows(i)
-      if (passes(cells)) { writeRow(vectors, out, cells); out += 1 }
-      i += 1
-    }
-    new ColumnarBatch(vectors.toArray[ColumnVector], out)
+    while (i < n) { writeRow(vectors, i - dropFirst, rows(i)); i += 1 }
+    new ColumnarBatch(vectors.toArray[ColumnVector], n - dropFirst)
   }
 }
 
@@ -632,7 +573,8 @@ final class RowBatchReader(rows: CellRowIterator, dropRows: Long,
     while (out < RowBatchReader.BatchRows && rows.hasNext) {
       val (rowIdx, cells) = rows.next()
       XlsxPartitionReader.raggedCheck(rowIdx, cells.length, baseWidth)
-      if (cols.passes(cells)) { cols.writeRow(vectors, out, cells); out += 1 }
+      cols.writeRow(vectors, out, cells)
+      out += 1
     }
     if (out == 0) false
     else {
@@ -661,8 +603,8 @@ object RowBatchReader {
   * the chunk's stitched indices and Spark reads the batch through codegen'd
   * ColumnarToRow — the vectorized-parquet shape, with no per-row
   * InternalRow materialization anywhere on the sequential stages.
-  * Sequential scans (threads = 1, segment ranges, or the missing-entry StAX
-  * fallback) go through the shared [[RowBatchReader]].
+  * Sequential scans (threads = 1, segment ranges, or a missing worksheet
+  * entry's empty iterator) go through the shared [[RowBatchReader]].
   */
 final class XlsxColumnarPartitionReader(
     path: String,
@@ -671,7 +613,6 @@ final class XlsxColumnarPartitionReader(
     required: StructType,
     opts: XlsxOptions,
     conf: XlsxDataSource.ConfProps,
-    filters: Array[org.apache.spark.sql.sources.Filter],
     threads: Int,
     /** segment-range slice of an indexed workbook (splittable path) */
     segRange: Option[SegRange] = None)
@@ -689,7 +630,6 @@ final class XlsxColumnarPartitionReader(
   private val sheetTarget = sheet.map(_.target).getOrElse(
     wb.sheetPath(opts.sheetName, opts.effectiveSheetIndex))
   private val cols = new RowColumns(fullSchema, required, opts.coerceToString,
-    filters,
     if (opts.allSheets) Some(sheet.map(_.name).getOrElse("")) else None)
 
   private val iterE: Either[CellRowIterator, ParallelSheetScanner] =

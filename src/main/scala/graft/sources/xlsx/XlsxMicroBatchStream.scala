@@ -36,7 +36,6 @@ final class XlsxMicroBatchStream(
     required: StructType,
     opts: XlsxOptions,
     options: CaseInsensitiveStringMap,
-    filters: Array[org.apache.spark.sql.sources.Filter],
     checkpointLocation: String)
     extends MicroBatchStream {
 
@@ -124,7 +123,7 @@ final class XlsxMicroBatchStream(
   // than the batch side (parity is spec-asserted)
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf(), filters)
+      XlsxDataSource.captureConf())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -67,6 +67,11 @@ object XlsxOptions {
   def sheetIndexOutOfRange(index: Int, count: Int): String =
     s"sheet_index $index out of range 1..$count"
 
+  /** Error message for a `sheetName` that names none of `have`, the
+    * document's sheets in order, for every format. */
+  def sheetNotFound(name: String, have: Seq[String]): String =
+    s"Sheet '$name' not found; have ${have.mkString(", ")}"
+
   def from(map: CaseInsensitiveStringMap): XlsxOptions = {
     def str(keys: String*): Option[String] =
       keys.collectFirst { case k if map.containsKey(k) => map.get(k) }

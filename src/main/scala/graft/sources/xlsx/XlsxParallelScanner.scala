@@ -458,7 +458,7 @@ object ParallelSheetScanner {
     new ChunkRows(new ParallelSheetScanner(in, () => strings, dates, threads,
       closeUnderlying, (rows, _) => rows, chunkBytes, segmented = segmented))
 
-  private final class ChunkRows(sc: ParallelSheetScanner) extends CellRowIterator {
+  private[xlsx] final class ChunkRows(sc: ParallelSheetScanner) extends CellRowIterator {
     private var rows: Array[Array[XCell]] = Array.empty
     private var idx: Array[Long] = Array.empty
     private var i = 0

@@ -177,7 +177,7 @@ object XlsxParser {
 
     /** Runs `parse` over `xl/sharedStrings.xml` after the UTF-16 BOM sniff
       * (UTF-16 transcodes on the fly and rides the same byte scanner; the
-      * StAX shared-strings path is fuzz-only). None when the part is
+      * StAX shared-strings path is a test oracle). None when the part is
       * absent. */
     private def sharedStringsEntry[T](parse: InputStream => T): Option[T] =
       openEntryStream("xl/sharedStrings.xml").map { case (raw, closeAll) =>
@@ -192,60 +192,6 @@ object XlsxParser {
       if (b1 != -1) in.unread(b1)
       if (b0 != -1) in.unread(b0)
       if (utf16) new Utf16ToUtf8Stream(in) else in
-    }
-
-    /** package-visible so the differential fuzz can drive the StAX path
-      * against the byte scanner on identical input */
-    private[xlsx] def sharedStringsStax(xr: XMLStreamReader): Array[String] = {
-      val out = ArrayBuffer[String]()
-      var inSi = false
-      var phoneticDepth = 0 // inside <rPh>/<phoneticPr>: furigana, not text
-      var retained = 0L
-      // count UTF-8 bytes like the byte-scanner path (UTF-16 chars would
-      // under-enforce the budget up to 3x on CJK text, exactly where the
-      // OOM guard matters); surrogate pairs count 3+3 vs a true 4, erring
-      // toward earlier abort. Checked per <t> fragment, not just at </si>,
-      // so a single giant run still hits the guard (one element's text is
-      // the remaining granularity — StAX materializes it whole, and this
-      // path only serves the rare UTF-16 workbooks).
-      def utf8Len(s: CharSequence): Long = {
-        var n = 0L
-        var i = 0
-        while (i < s.length) {
-          val c = s.charAt(i)
-          n += (if (c < 0x80) 1 else if (c < 0x800) 2 else 3)
-          i += 1
-        }
-        n
-      }
-      var pendingBytes = 0L
-      val sb = new StringBuilder
-      while (xr.hasNext) {
-        xr.next() match {
-          case XMLStreamConstants.START_ELEMENT if xr.getLocalName == "si" =>
-            inSi = true; sb.setLength(0); pendingBytes = 0L
-          case XMLStreamConstants.START_ELEMENT
-              if inSi && (xr.getLocalName == "rPh" || xr.getLocalName == "phoneticPr") =>
-            phoneticDepth += 1
-          case XMLStreamConstants.START_ELEMENT
-              if inSi && phoneticDepth == 0 && xr.getLocalName == "t" =>
-            val frag = xr.getElementText
-            pendingBytes += utf8Len(frag)
-            if (retained + pendingBytes > maxSharedStringsBytes)
-              throw new SharedStringsScanner.BudgetExceeded(maxSharedStringsBytes)
-            sb.append(frag)
-          case XMLStreamConstants.END_ELEMENT
-              if inSi && (xr.getLocalName == "rPh" || xr.getLocalName == "phoneticPr") =>
-            phoneticDepth -= 1
-          case XMLStreamConstants.END_ELEMENT if xr.getLocalName == "si" =>
-            inSi = false
-            retained += pendingBytes
-            pendingBytes = 0L
-            out += sb.toString
-          case _ =>
-        }
-      }
-      out.toArray
     }
 
     /** styleIndex → isDateFormat, from xl/styles.xml cellXfs numFmtIds. */
@@ -292,29 +238,14 @@ object XlsxParser {
       sheetName match {
         case Some(n) =>
           sheets.find(_.name == n).map(_.target)
-            .getOrElse(throw new IllegalArgumentException(s"Sheet '$n' not found; have ${sheets.map(_.name).mkString(", ")}"))
+            .getOrElse(throw new IllegalArgumentException(
+              XlsxOptions.sheetNotFound(n, sheets.map(_.name))))
         case None =>
           if (sheetIndex < 1 || sheetIndex > sheets.size)
             throw new IllegalArgumentException(
               XlsxOptions.sheetIndexOutOfRange(sheetIndex, sheets.size))
           sheets(sheetIndex - 1).target
       }
-    }
-
-    /** Stream rows of one worksheet. Rows arrive as dense arrays (width =
-      * max seen cell column in that row); gaps are XNone. Stops early when
-      * `onRow` returns false. Shared-string cells resolve against
-      * `strings`: the whole table unless given. */
-    def foreachRow(path: String, onRow: (Long, Array[XCell]) => Boolean,
-        strings: Array[String] = sharedStrings): Unit = {
-      val it = rows(path, strings)
-      try {
-        var continue = true
-        while (continue && it.hasNext) {
-          val (idx, cells) = it.next()
-          continue = onRow(idx, cells)
-        }
-      } finally it.close()
     }
 
     /** Sequential rows of one worksheet, shared-string cells resolved
@@ -332,11 +263,11 @@ object XlsxParser {
       * back to StAX (r10): the entry transcodes to UTF-8 on the fly and
       * rides the same scanner + columnar pipeline — the scanner matches
       * tags bytewise and ignores the prolog's declared encoding. The single
-      * copy of this dispatch — rows, rowIterator and
-      * chunkingRowIterator all ride it. */
+      * copy of this dispatch — rows and chunkingRowIterator ride it, and
+      * rowIterator builds on those two. */
     private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
       openEntryStream(path) match {
-        case None => Left(new RowIterator(None, Array.empty, Array.empty))
+        case None => Left(CellRowIterator.empty)
         case Some((raw, closeAll)) => Right((sniffUtf16(raw), closeAll))
       }
 
@@ -438,26 +369,17 @@ object XlsxParser {
       * stream; exhausting the iterator also closes it.
       *
       * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
-      * the chunked [[ParallelSheetScanner]] through its row adapter (the
-      * reference's `threads` knob: one big workbook parsed by N cores);
-      * UTF-16 workbooks transcode on the fly ([[Utf16ToUtf8Stream]]) and
-      * ride the same scanners. */
-    def rowIterator(path: String, threads: Int = 1): CellRowIterator = {
-      if (threads >= 2) segmentIndexFor(path, threads) match {
-        case Some(seg) =>
-          return ParallelSheetScanner.rowIterator(null, sharedStrings,
-            dateStyles, threads, () => (), segmented = seg)
-        case None =>
+      * the chunked [[ParallelSheetScanner]] (the reference's `threads`
+      * knob: one big workbook parsed by N cores) through
+      * [[chunkingRowIterator]] with a transform that hands each chunk's rows
+      * back unchanged; UTF-16 workbooks transcode on the fly
+      * ([[Utf16ToUtf8Stream]]) and ride the same scanners. */
+    def rowIterator(path: String, threads: Int = 1): CellRowIterator =
+      if (threads < 2) rows(path, sharedStrings)
+      else chunkingRowIterator(path, threads, (rows, _) => rows) match {
+        case Left(empty) => empty
+        case Right(sc) => new ParallelSheetScanner.ChunkRows(sc)
       }
-      openSniffed(path) match {
-        case Left(it) => it
-        case Right((in, closeAll)) =>
-          if (threads >= 2)
-            ParallelSheetScanner.rowIterator(in, sharedStrings, dateStyles,
-              threads, closeAll)
-          else new SheetScanner(in, sharedStrings, dateStyles, closeAll)
-      }
-    }
 
     /** Parallel scanner with a WORKER-side per-CHUNK transform — the
       * columnar DSv2 reader passes its rows→ColumnarBatch builder here so
@@ -484,122 +406,10 @@ object XlsxParser {
       }
     }
 
-    /** StAX-backed row iterator regardless of encoding — the differential
-      * fuzz spec drives this against the byte scanner on identical input. */
-    private[xlsx] def rowIteratorStax(path: String): CellRowIterator =
-      new RowIterator(openEntry(path), sharedStrings, dateStyles)
-
     /** Raw inflated entry stream for throughput probes (graft.tools). */
     def entryStreamForProbe(path: String): (InputStream, () => Unit) =
       openEntryStream(path).getOrElse(
         throw new IllegalArgumentException(s"no entry $path"))
-
-    final class RowIterator(
-        entry: Option[(XMLStreamReader, () => Unit)],
-        strings: Array[String],
-        dates: Array[Boolean])
-        extends CellRowIterator {
-      private val xr = entry.map(_._1).orNull
-      private var closed = entry.isEmpty
-      private var nextRow: (Long, Array[XCell]) = _
-      private var rowIdx = -1L
-
-      override def hasNext: Boolean = {
-        if (nextRow != null) return true
-        if (closed) return false
-        nextRow = advance()
-        if (nextRow == null) { close(); false } else true
-      }
-
-      override def next(): (Long, Array[XCell]) = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRow; nextRow = null; r
-      }
-
-      override def close(): Unit = if (!closed) { closed = true; entry.foreach(_._2()) }
-
-      /** Advance the StAX cursor to the next </row>; null at stream end. */
-      private def advance(): (Long, Array[XCell]) = {
-        var cells = ArrayBuffer[XCell]()
-        var col = -1
-        var t = ""
-        var style = -1
-        var inV = false
-        var inIs = false
-        val text = new StringBuilder
-        while (xr.hasNext) {
-          xr.next() match {
-            case XMLStreamConstants.START_ELEMENT => xr.getLocalName match {
-              case "row" =>
-                rowIdx = attr(xr, "r").map(_.toLong - 1).getOrElse(rowIdx + 1)
-                cells = ArrayBuffer[XCell]()
-              case "c" =>
-                col = attr(xr, "r").map(colOf).getOrElse(cells.length)
-                t = attr(xr, "t").getOrElse("")
-                style = attr(xr, "s").map(_.toInt).getOrElse(-1)
-              case "v" => inV = true; text.setLength(0)
-              case "is" => inIs = true; text.setLength(0)
-              case "t" if inIs => text.append(xr.getElementText)
-              case _ =>
-            }
-            case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA if inV =>
-              text.appendAll(xr.getTextCharacters, xr.getTextStart, xr.getTextLength)
-            case XMLStreamConstants.END_ELEMENT => xr.getLocalName match {
-              case "v" =>
-                inV = false
-                setCell(cells, col, parseCell(t, text.toString, style, strings, dates))
-              case "is" =>
-                inIs = false
-                setCell(cells, col, XCell.XString(text.toString))
-              case "c" =>
-                // <c> with no <v>/<is> child: leave as gap (XNone)
-                col = -1; t = ""; style = -1
-              case "row" =>
-                return (rowIdx, cells.toArray)
-              case _ =>
-            }
-            case _ =>
-          }
-        }
-        null
-      }
-    }
-
-    private def parseCell(t: String, raw: String, style: Int,
-                          strings: Array[String], dates: Array[Boolean]): XCell = t match {
-      case "s" =>
-        // Bad/empty shared-string index → error cell → NULL, not a crashed
-        // scan (reference: sheetreader_extension.cpp:117-135).
-        try {
-          val i = raw.trim.toInt
-          if (i >= 0 && i < strings.length) XCell.XString(strings(i)) else XCell.XError
-        } catch { case _: NumberFormatException => XCell.XError }
-      case "str" | "inlineStr" => XCell.XString(raw)
-      case "b" => XCell.XBool(raw.trim == "1" || raw.trim.equalsIgnoreCase("true"))
-      case "e" => XCell.XError
-      case "" | "n" =>
-        try {
-          val d = raw.trim.toDouble
-          if (style >= 0 && style < dates.length && dates(style)) XCell.XDate(d)
-          else XCell.XNumber(d)
-        } catch { case _: NumberFormatException => XCell.XError }
-      case _ => XCell.XError
-    }
-
-    private def setCell(cells: ArrayBuffer[XCell], col: Int, v: XCell): Unit = {
-      val c = if (col < 0) cells.length else col
-      while (cells.length <= c) cells += XCell.XNone
-      cells(c) = v
-    }
-
-    /** Column index from an A1-style ref: "BC12" → 54. */
-    private def colOf(ref: String): Int = {
-      var i = 0; var n = 0
-      while (i < ref.length && ref.charAt(i).isLetter) {
-        n = n * 26 + (ref.charAt(i).toUpper - 'A' + 1); i += 1
-      }
-      n - 1
-    }
 
     private def readRels(): Map[String, String] = {
       val m = mutable.Map[String, String]()
@@ -623,7 +433,7 @@ object XlsxParser {
     /** Open the zip and position an XML reader at entry `name`; the returned
       * thunk closes both the XML reader and the zip stream. None if the
       * entry does not exist. */
-    private def openEntry(name: String): Option[(XMLStreamReader, () => Unit)] =
+    private[xlsx] def openEntry(name: String): Option[(XMLStreamReader, () => Unit)] =
       openEntryStream(name).map { case (s, closeAll) =>
         val xr = xif.createXMLStreamReader(s)
         (xr, () => { try xr.close() finally closeAll() })
@@ -634,7 +444,14 @@ object XlsxParser {
     private[xlsx] def openEntryStream(name: String): Option[(InputStream, () => Unit)] =
       localFile match {
         case Some(f) =>
-          val zf = new java.util.zip.ZipFile(f)
+          val zf =
+            try new java.util.zip.ZipFile(f)
+            catch { case e: java.util.zip.ZipException =>
+              val named = new java.util.zip.ZipException(
+                s"${f.getPath}: not a readable zip archive (${e.getMessage})")
+              named.initCause(e)
+              throw named
+            }
           Option(zf.getEntry(name)) match {
             case None => zf.close(); None
             case Some(e) =>
@@ -652,15 +469,16 @@ object XlsxParser {
           in.close()
           None
       }
+  }
 
-    private def attr(xr: XMLStreamReader, local: String): Option[String] = {
-      var i = 0
-      while (i < xr.getAttributeCount) {
-        if (xr.getAttributeLocalName(i) == local) return Some(xr.getAttributeValue(i))
-        i += 1
-      }
-      None
+  /** The value of the attribute with local name `local`, if present. */
+  private[xlsx] def attr(xr: XMLStreamReader, local: String): Option[String] = {
+    var i = 0
+    while (i < xr.getAttributeCount) {
+      if (xr.getAttributeLocalName(i) == local) return Some(xr.getAttributeValue(i))
+      i += 1
     }
+    None
   }
 
   /** Reads at most `limit` bytes from `in`, then reports EOF WITHOUT

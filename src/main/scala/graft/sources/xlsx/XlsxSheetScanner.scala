@@ -5,9 +5,19 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 /** Pull iterator over worksheet rows — the contract a DSv2 PartitionReader
-  * drives. Implemented by the byte-level [[SheetScanner]] (hot path) and the
-  * StAX [[XlsxParser.Workbook.RowIterator]] (non-UTF-8 fallback). */
+  * drives. Implemented by the byte-level [[SheetScanner]], the chunked
+  * [[ParallelSheetScanner]]'s row adapter and the ods `OdsParser`; UTF-16
+  * sheets transcode onto the byte scanner. */
 trait CellRowIterator extends Iterator[(Long, Array[XCell])] with AutoCloseable
+
+object CellRowIterator {
+  /** The rows of a missing worksheet entry: none, and nothing to close. */
+  val empty: CellRowIterator = new CellRowIterator {
+    override def hasNext: Boolean = false
+    override def next(): (Long, Array[XCell]) = throw new NoSuchElementException
+    override def close(): Unit = ()
+  }
+}
 
 /** Byte-level SpreadsheetML worksheet scanner — the per-core hot path of the
   * xlsx scan. The reference's C++ core gets its throughput from a custom

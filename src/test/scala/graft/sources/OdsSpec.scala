@@ -174,7 +174,7 @@ class OdsSpec extends SparkSpec {
     val missing = intercept[Exception] {
       spark.read.format("ods").option("sheetName", "Nope").load(ragged).collect()
     }
-    assert(missing.getMessage.contains("no table named"))
+    assert(missing.getMessage.contains("Sheet 'Nope' not found; have S"))
   }
 
   test("text and doubles round-trip as in xlsx: CR LF, control chars, -0.0") {

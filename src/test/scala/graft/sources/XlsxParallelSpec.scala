@@ -122,7 +122,7 @@ class XlsxParallelSpec extends SparkSpec {
     assert(serial.size == 300)
     val chunked = read(Map("threads" -> "3", "chunkBytes" -> "256"))
     assert(chunked == serial)
-    // pushed filter evaluated in the chunk workers, same tiny chunks
+    // a filter over the same tiny chunks, evaluated by Spark above the scan
     def readFiltered(threads: Int) = {
       spark.read.format("xlsx").option("skipRows", "3")
         .option("threads", threads.toString).option("chunkBytes", "256")

@@ -42,9 +42,8 @@ class XlsxParserSpec extends AnyFunSuite {
 
   private def rows(bytes: Array[Byte]): Seq[Array[XCell]] = {
     val wb = workbook(bytes)
-    val buf = scala.collection.mutable.ArrayBuffer[Array[XCell]]()
-    wb.foreachRow("xl/worksheets/sheet1.xml", (_, cells) => { buf += cells; true })
-    buf.toSeq
+    val it = wb.rows("xl/worksheets/sheet1.xml", wb.sharedStrings)
+    try it.map(_._2).toList finally it.close()
   }
 
   test("shared strings resolve, including empty and multi-run <si>") {

@@ -12,7 +12,8 @@ import scala.util.Random
   * row indices, bad shared-string refs) read through
   * `spark.read.format("xlsx")` — sequentially AND with tiny-chunk parallel
   * parsing — must match an expected row set computed INDEPENDENTLY of the
-  * byte scanners (StAX rows + the reader's own resolve/convert rules).
+  * byte scanners and of the column-vector writer ([[XlsxOracle]]'s StAX
+  * rows and boxed `convert`, plus the reader's own resolve rules).
   * A workbook whose rows go ragged must raise the ragged error on every
   * path. This is the layer above XlsxScannerDifferentialSpec: it pins the
   * worker-side batch building, the producer's drop-dealing, index
@@ -29,7 +30,7 @@ class XlsxReaderFuzzSpec extends SparkSpec {
       java.util.Collections.emptyMap[String, String]()))
     val resolved = XlsxSchema.resolve(wb, opts)
     val rows = {
-      val it = wb.rowIteratorStax("xl/worksheets/sheet1.xml")
+      val it = XlsxOracle.rows(wb, "xl/worksheets/sheet1.xml")
       try it.map(_._2).toList finally it.close()
     }
     val data = rows.drop(resolved.dropRows)
@@ -37,7 +38,7 @@ class XlsxReaderFuzzSpec extends SparkSpec {
     else Right(data.map { cells =>
       resolved.schema.fields.zipWithIndex.map { case (f, i) =>
         val cell = if (i < cells.length) cells(i) else XCell.XNone
-        XlsxPartitionReader.convert(cell, f.dataType, coerce = false) match {
+        XlsxOracle.convert(cell, f.dataType, coerce = false) match {
           case null => "∅"
           case u: org.apache.spark.unsafe.types.UTF8String => u.toString
           case d: java.lang.Double => d.toString

@@ -1,4 +1,4 @@
-// in the xlsx package for access to the test-only StAX iterator hook
+// in the xlsx package for access to XlsxOracle and the package-private hooks
 package graft.sources.xlsx
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -155,8 +155,7 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
         .parse(new ByteArrayInputStream(bytes)).toSeq
       val xif = javax.xml.stream.XMLInputFactory.newInstance()
       xif.setProperty(javax.xml.stream.XMLInputFactory.IS_COALESCING, true)
-      val wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(Array.empty))
-      val stax = wb.sharedStringsStax(
+      val stax = XlsxOracle.sharedStrings(
         xif.createXMLStreamReader(new ByteArrayInputStream(bytes))).toSeq
       assert(scanner == stax,
         s"trial $trial diverged\nsst:\n$sst\nscanner: $scanner\nstax: $stax")
@@ -175,7 +174,7 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
       val wb1 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
       val scanner = drain(wb1.rowIterator("xl/worksheets/sheet1.xml"))
       val wb2 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
-      val stax = drain(wb2.rowIteratorStax("xl/worksheets/sheet1.xml"))
+      val stax = drain(XlsxOracle.rows(wb2, "xl/worksheets/sheet1.xml"))
 
       assert(scanner == stax,
         s"trial $trial diverged\nsheet:\n$sheet\nscanner: $scanner\nstax: $stax")
@@ -269,7 +268,7 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
     Try {
       val rows = ArrayBuffer[Array[XCell]]()
       var seen = 0
-      wb.foreachRow("xl/worksheets/sheet1.xml", (_, cells) => {
+      XlsxOracle.foreachRow(wb, "xl/worksheets/sheet1.xml", (_, cells) => {
         seen += 1
         if (seen > o.skipRows) rows += cells
         rows.length < 2

@@ -7,7 +7,9 @@ import java.time.LocalDate
 import graft.SparkSpec
 import graft.sources.xlsx.XlsxWriter
 import graft.sources.xlsx.XlsxWriter.SheetSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -197,20 +199,70 @@ class XlsxSourceSpec extends SparkSpec {
     assert(df.collect().map(_.getDate(0).toLocalDate).toSet == dates.toSet)
   }
 
-  test("filters push into the scan (early row skip + PushedFilters in plan)") {
+  test("filters stay with Spark: a Filter above BatchScan, no pushed filters") {
     val p = one(Some(Seq("name", "price", "ok")), Seq(
       Seq("a", 1.0, true), Seq("b", 5.0, false),
       Seq("c", 10.0, true), Seq(null, 7.0, true)))
     val df = spark.read.format("xlsx").load(p)
       .filter(col("price") > 4.0 && col("name").isNotNull)
     assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("b", "c"))
-    val scanDesc = df.queryExecution.executedPlan.toString
-    assert(scanDesc.contains("PushedFilters") &&
-      (scanDesc.contains("GreaterThan(price") || scanDesc.contains("price")),
-      s"expected pushed filters in scan description:\n$scanDesc")
+    val plan = df.queryExecution.sparkPlan
+    val scans = plan.collect { case s: BatchScanExec => s }
+    assert(scans.size == 1 && !scans.head.scan.description().contains("PushedFilters"),
+      s"expected one xlsx scan with no pushed filters:\n$plan")
+    assert(plan.collect { case f: FilterExec => f }
+        .exists(f => f.condition.references.exists(_.name == "price") &&
+          f.find(_.isInstanceOf[BatchScanExec]).isDefined),
+      s"expected a Filter on price above the scan:\n$plan")
     // equality and string filters too
     val eq = spark.read.format("xlsx").load(p).filter(col("name") === "c")
     assert(eq.count() == 1)
+  }
+
+  test("-0.0 equals 0.0 under every filter at threads 1, 2 and on a stream") {
+    val dir = Files.createTempDirectory("graft_negzero_")
+    val out = new FileOutputStream(dir.resolve("z.xlsx").toFile)
+    try XlsxWriter.write(out, Seq(SheetSpec("Sheet1", Some(Seq("k", "x")),
+      Iterator(Seq[Any]("neg", -0.0), Seq[Any]("pos", 0.0), Seq[Any]("one", 1.0)))))
+    finally out.close()
+    val filters: Seq[(String, Column)] = Seq(
+      "x === 0.0" -> (col("x") === 0.0),
+      "x >= 0.0" -> (col("x") >= 0.0),
+      "x <= -0.0" -> (col("x") <= -0.0),
+      "isin(0.0)" -> col("x").isin(0.0))
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.getString(0)).sorted.toSeq
+    val all = spark.read.format("xlsx").load(dir.toString)
+    assert(all.collect().map(_.getDouble(1)).exists(d =>
+      java.lang.Double.doubleToRawLongBits(d) == java.lang.Double.doubleToRawLongBits(-0.0)),
+      "the workbook must carry a -0.0 cell")
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(all.collect(): _*), all.schema)
+    filters.zipWithIndex.foreach { case ((name, f), i) =>
+      val want = keys(local.filter(f))
+      assert(want.contains("neg") && want.contains("pos"), s"$name: $want")
+      Seq("1", "2").foreach { t =>
+        val got = keys(spark.read.format("xlsx").option("threads", t)
+          .load(dir.toString).filter(f))
+        assert(got == want, s"$name at threads $t")
+      }
+      val q = spark.readStream.format("xlsx").load(dir.toString).filter(f)
+        .writeStream.format("memory").queryName(s"negzero_$i")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(keys(spark.table(s"negzero_$i")) == want, s"$name on the stream")
+      } finally q.stop()
+    }
+  }
+
+  test("a truncated workbook fails at load with an error naming the file") {
+    val p = one(Some(Seq("k", "v")), (1 to 2000).map(i => Seq[Any](s"r$i", i.toDouble)))
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(p))
+    val cut = Files.createTempFile("graft_truncated_", ".xlsx")
+    Files.write(cut, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    val e = intercept[Exception] { spark.read.format("xlsx").load(cut.toString) }
+    assert(e.getMessage.contains(cut.toString), e.getMessage)
   }
 
   test("SQL surface: CREATE TEMPORARY VIEW ... USING xlsx") {
