@@ -17,8 +17,9 @@ import graft.sources.xlsx.{SheetFormat, SheetWriter, XlsxWriter}
   * date). */
 object OdsWriter extends SheetFormat {
   val extension = "ods"
+  /** `threads` is ignored: content.xml deflates inline. */
   def sheetWriter(out: OutputStream, sheetName: String,
-      header: Option[Seq[String]]): SheetWriter =
+      header: Option[Seq[String]], threads: Int): SheetWriter =
     new StreamingOdsWriter(out, sheetName, header)
 
   private val Mimetype = "application/vnd.oasis.opendocument.spreadsheet"
@@ -70,6 +71,8 @@ object OdsWriter extends SheetFormat {
       zip.closeEntry()
       zip.close()
     }
+
+    def abort(): Unit = zip.close()
   }
 
   private def writeRowTo(w: java.io.Writer, values: Seq[Any]): Unit = {

@@ -254,19 +254,19 @@ object XlsxScan {
     }
     if (metas.forall(_.isEmpty)) return parts
     val totalSegs = metas.zipWithIndex.map { case (m, _) =>
-      m.map(_.cuts.length + 1).getOrElse(1)
+      m.map(_.segments).getOrElse(1)
     }.sum
     parts.zip(metas).flatMap {
       case (p, None) => Seq(p)
       case (p, Some(si)) =>
-        val nSeg = si.cuts.length + 1
+        val nSeg = si.segments
         val k = math.max(1, math.min(nSeg,
           (cores.toLong * nSeg / math.max(1, totalSegs)).toInt))
         if (k <= 1) Seq(p)
         else (0 until k).map { j =>
           val s0 = (j.toLong * nSeg / k).toInt
           val s1 = ((j + 1).toLong * nSeg / k).toInt
-          val rowsBefore = if (s0 == 0) 0L else si.cuts(s0 - 1)(2)
+          val rowsBefore = si.rowsBefore(s0)
           p.copy(segRange = Some(SegRange(s0, s1, rowsBefore)))
         }
     }
@@ -339,24 +339,29 @@ object XlsxScan {
         val sheetsPerFile = parts.groupBy(_.path).view.mapValues(_.length).toMap
         val weights = parts.map(p => bytes(p.path) / sheetsPerFile(p.path))
         val total = weights.sum
-        val spare = cores - parts.length
-        val cap = math.max(1, cores / 2) // reference's single-file default
         parts.zip(weights).map { case (p, w) =>
           // segment-range partitions stay single-threaded: their file's
           // parallelism already went partition-shaped in trySplitByIndex
           if (p.segRange.isDefined) p: InputPartition
-          else {
-            val t = 1 + math.round(spare * w / total).toInt
-            p.copy(threads = math.min(cap, t)): InputPartition
-          }
+          else p.copy(threads = autoThreads(cores, parts.length, w / total)): InputPartition
         }
       }
   }
 
+  /** The AUTO thread rule of reads and writes: a task of `parts` that
+    * carries `share` of the work gets 1 + its share of the cores the
+    * partitions leave spare, capped at the reference's single-file default
+    * `cores / 2`; with at least as many partitions as cores every task
+    * stays single-threaded. */
+  private[xlsx] def autoThreads(cores: Int, parts: Int, share: Double): Int =
+    if (parts >= cores) 1
+    else math.min(math.max(1, cores / 2),
+      1 + math.round((cores - parts) * share).toInt)
+
   /** Cores one task can realistically fan worker threads across: the
     * per-executor core count on a cluster; the local[N] thread count in
     * local mode (defaultParallelism). */
-  private def executorCores(): Int =
+  private[xlsx] def executorCores(): Int =
     SparkSession.getActiveSession.map { s =>
       s.sparkContext.getConf.getOption("spark.executor.cores").map(_.toInt)
         .getOrElse(s.sparkContext.defaultParallelism)
@@ -701,19 +706,25 @@ final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions,
     val fs = p.getFileSystem(XlsxDataSource.hadoopConf())
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
+    // compression workers per task: the read's AUTO rule over the write's
+    // partitions, or the `threads` option verbatim
+    val parts = math.max(1, info.numPartitions)
+    val threads = opts.threads.getOrElse(
+      XlsxScan.autoThreads(XlsxScan.executorCores(), parts, 1.0 / parts))
     new XlsxDataWriterFactory(path, schema, opts.writeHeader,
-      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf(), format)
+      opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf(), format,
+      threads)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 final class XlsxDataWriterFactory(path: String, schema: StructType, header: Boolean,
-    sheetName: String, conf: XlsxDataSource.ConfProps, format: SheetFormat)
-    extends DataWriterFactory {
+    sheetName: String, conf: XlsxDataSource.ConfProps, format: SheetFormat,
+    threads: Int) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new XlsxDataWriter(path, schema, header, sheetName, partitionId, taskId, conf,
-      format)
+      format, threads)
 }
 
 /** One file per write task, streamed row-by-row into the zip. */
@@ -725,7 +736,8 @@ final class XlsxDataWriter(
     partitionId: Int,
     taskId: Long,
     conf: XlsxDataSource.ConfProps,
-    format: SheetFormat)
+    format: SheetFormat,
+    threads: Int)
     extends DataWriter[InternalRow] {
 
   private val file =
@@ -733,7 +745,7 @@ final class XlsxDataWriter(
   private val fs = file.getFileSystem(conf.toConf)
   private val out = fs.create(file, true)
   private val sheet = format.sheetWriter(
-    out, sheetName, if (header) Some(schema.fieldNames.toSeq) else None)
+    out, sheetName, if (header) Some(schema.fieldNames.toSeq) else None, threads)
   private val types: Array[DataType] = schema.fields.map(_.dataType)
 
   override def write(record: InternalRow): Unit = {
@@ -769,8 +781,10 @@ final class XlsxDataWriter(
     XlsxCommit(file.toString)
   }
 
+  /** Stop without completing the container (`sheet.abort` closes `out`),
+    * then delete the partial file. */
   override def abort(): Unit = {
-    try { sheet.finish(); out.close() } catch { case _: Throwable => }
+    try sheet.abort() catch { case _: Throwable => }
     try fs.delete(file, false) catch { case _: Throwable => }
   }
 

@@ -1,7 +1,10 @@
 package graft.sources.xlsx
 
 import java.io.{ByteArrayInputStream, InputStream}
+import java.nio.channels.FileChannel
+import java.nio.file.StandardOpenOption
 import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, FutureTask, ThreadFactory, TimeUnit}
+import java.util.zip.{CRC32, DataFormatException, Inflater}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -128,8 +131,7 @@ final class ParallelSheetScanner(
   // one channel, positional (thread-safe) reads from every worker
   private val segChannel =
     if (segmented == null) null
-    else java.nio.channels.FileChannel.open(segmented.file.toPath,
-      java.nio.file.StandardOpenOption.READ)
+    else FileChannel.open(segmented.file.toPath, StandardOpenOption.READ)
 
   private val producer = new Thread(() => produce(), "xlsx-chunk-producer")
   producer.setDaemon(true)
@@ -199,50 +201,17 @@ final class ParallelSheetScanner(
     * O(threads × segmentBytes) like the streaming path). */
   private def produceSegments(): Unit = {
     val seg = segmented
-    val nSeg = seg.cuts.length + 1
-    var i = 0
-    while (i < nSeg && !stopped) {
-      val cOff = if (i == 0) 0L else seg.cuts(i - 1)(0)
-      val uOff = if (i == 0) 0L else seg.cuts(i - 1)(1)
-      val rowsBefore = if (i == 0) 0L else seg.cuts(i - 1)(2)
-      val cEnd = if (i < seg.cuts.length) seg.cuts(i)(0) else seg.compressedSize
-      val uEnd = if (i < seg.cuts.length) seg.cuts(i)(1) else seg.totalUncomp
-      val drop = math.min(math.max(0L, dropFirstRows - rowsBefore),
+    var k = 0
+    while (k < seg.segments && !stopped) {
+      val drop = math.min(math.max(0L, dropFirstRows - seg.rowsBefore(k)),
         Int.MaxValue.toLong).toInt
-      val cLen = (cEnd - cOff).toInt
-      val uLen = (uEnd - uOff).toInt
-      val dataOff = seg.dataOffset + cOff
-      val segNo = i
+      val segNo = k
       putQuietly(pool.submit(new Callable[ParsedChunk] {
-        override def call(): ParsedChunk = {
-          val comp = java.nio.ByteBuffer.allocate(cLen)
-          var pos = dataOff
-          while (comp.hasRemaining) {
-            val r = segChannel.read(comp, pos)
-            if (r < 0) throw new java.io.EOFException(
-              s"xlsx segment $segNo: EOF at file offset $pos")
-            pos += r
-          }
-          val recycled = bufPool.poll()
-          val out =
-            if (recycled != null && recycled.length >= uLen) recycled
-            else new Array[Byte](uLen)
-          val inf = new java.util.zip.Inflater(true)
-          try {
-            inf.setInput(comp.array(), 0, cLen)
-            var off = 0
-            while (off < uLen) {
-              val k = inf.inflate(out, off, uLen - off)
-              if (k == 0) throw new java.io.IOException(
-                s"xlsx segment $segNo truncated: $off of $uLen bytes " +
-                  s"(finished=${inf.finished()})")
-              off += k
-            }
-          } finally inf.end()
-          parseChunk(out, uLen, drop)
-        }
+        override def call(): ParsedChunk =
+          parseChunk(seg.inflate(segChannel, segNo, bufPool.poll()),
+            seg.uncompressedLength(segNo), drop)
       }))
-      i += 1
+      k += 1
     }
   }
 
@@ -439,13 +408,96 @@ object ParallelSheetScanner {
 
   /** A workbook's graft row-group index, resolved to raw file geometry:
     * `cuts(i) = (compressed offset, uncompressed offset, rows before)` of
-    * the (i+1)-th segment start WITHIN the worksheet entry's deflate
-    * data, which begins at `dataOffset` in `file`. Segment boundaries are
-    * writer-recorded FULL_FLUSH points landing exactly after a `</row>`
-    * in Text state, so each slice inflates AND parses independently. */
-  final case class SegmentIndex(file: java.io.File, dataOffset: Long,
-      compressedSize: Long, cuts: Array[Array[Long]], totalUncomp: Long,
-      totalRows: Long)
+    * the (i+1)-th segment start WITHIN the deflate data of worksheet
+    * `entry`, which begins at `dataOffset` in `file`. Segment boundaries
+    * are writer-recorded FULL_FLUSH points landing exactly after a
+    * `</row>` in Text state, so each slice inflates AND parses
+    * independently. `segmentCrcs` holds each segment's CRC-32 (index
+    * version 3), or is null for a version-2 index, whose segments are
+    * read unchecked. */
+  final case class SegmentIndex(file: java.io.File, entry: String,
+      dataOffset: Long, compressedSize: Long, cuts: Array[Array[Long]],
+      totalUncomp: Long, totalRows: Long, segmentCrcs: Array[Int]) {
+    def segments: Int = cuts.length + 1
+    // segment k's start in field f of a cut; segment `segments` is the end
+    private def start(k: Int, f: Int, end: Long): Long =
+      if (k == 0) 0L else if (k == segments) end else cuts(k - 1)(f)
+    def compressedStart(k: Int): Long = start(k, 0, compressedSize)
+    def uncompressedStart(k: Int): Long = start(k, 1, totalUncomp)
+    def rowsBefore(k: Int): Long = start(k, 2, totalRows)
+    def uncompressedLength(k: Int): Int =
+      (uncompressedStart(k + 1) - uncompressedStart(k)).toInt
+
+    /** Segment `k`, pread from `ch` and inflated into `reuse` when it is
+      * large enough (else into a new array, which is returned), its
+      * CRC-32 checked when the index records one. Every failure names the
+      * file, the worksheet and the segment. */
+    def inflate(ch: FileChannel, k: Int, reuse: Array[Byte]): Array[Byte] = {
+      def corrupt(why: String) = new java.io.IOException(
+        s"$file: worksheet $entry segment $k is corrupt: $why")
+      val cLen = (compressedStart(k + 1) - compressedStart(k)).toInt
+      val uLen = uncompressedLength(k)
+      val comp = java.nio.ByteBuffer.allocate(cLen)
+      var pos = dataOffset + compressedStart(k)
+      while (comp.hasRemaining) {
+        val r = ch.read(comp, pos)
+        if (r < 0) throw corrupt(s"end of file at offset $pos")
+        pos += r
+      }
+      val out = if (reuse != null && reuse.length >= uLen) reuse else new Array[Byte](uLen)
+      val inf = new Inflater(true)
+      try {
+        inf.setInput(comp.array(), 0, cLen)
+        var off = 0
+        while (off < uLen) {
+          val n = inf.inflate(out, off, uLen - off)
+          if (n == 0) throw corrupt(s"inflates to $off of $uLen bytes")
+          off += n
+        }
+      } catch {
+        case e: DataFormatException => throw corrupt(s"bad deflate data (${e.getMessage})")
+      } finally inf.end()
+      if (segmentCrcs != null) {
+        val crc = new CRC32
+        crc.update(out, 0, uLen)
+        if (crc.getValue.toInt != segmentCrcs(k)) throw corrupt("CRC-32 mismatch")
+      }
+      out
+    }
+  }
+
+  /** Segments [s0, s1) of `seg` as one stream. Each segment is inflated
+    * and checked whole ([[SegmentIndex.inflate]]) before its first byte is
+    * handed out, so a corrupt segment fails before any of its rows. */
+  private[xlsx] final class SegmentStream(seg: SegmentIndex, s0: Int, s1: Int)
+      extends InputStream {
+    private val ch = FileChannel.open(seg.file.toPath, StandardOpenOption.READ)
+    private var next = s0
+    private var buf: Array[Byte] = _
+    private var pos, len = 0
+
+    private def fill(): Boolean = {
+      while (pos == len && next < s1) {
+        buf = seg.inflate(ch, next, buf)
+        pos = 0
+        len = seg.uncompressedLength(next)
+        next += 1
+      }
+      pos < len
+    }
+    override def read(): Int =
+      if (!fill()) -1 else { pos += 1; buf(pos - 1) & 0xff }
+    override def read(b: Array[Byte], off: Int, n: Int): Int =
+      if (n == 0) 0
+      else if (!fill()) -1
+      else {
+        val m = math.min(n, len - pos)
+        System.arraycopy(buf, pos, b, off, m)
+        pos += m
+        m
+      }
+    override def close(): Unit = ch.close()
+  }
 
   /** Row face over the chunk face: the chunk transform returns each
     * chunk's parsed rows as they are, and the iterator walks them with the

@@ -298,7 +298,11 @@ object XlsxParser {
       * ([[XlsxWriter.SegmentVersion]]): an unzip / re-zip round trip keeps
       * the sheet bytes and the index but re-deflates the sheet, and the
       * recorded cut offsets would then point into a different stream.
-      * A version-1 index records no such fields and is ignored. */
+      * A version-3 index also records each segment's CRC-32, which every
+      * segment read checks where it inflates the segment; a version-2
+      * index (an older graft writer) has none, so its workbooks still
+      * split but their segments are read unchecked. A version-1 index
+      * records no entry fields and is ignored. */
     private[xlsx] def segmentIndexRaw(path: String)
         : Option[ParallelSheetScanner.SegmentIndex] =
       localFile.flatMap { f =>
@@ -307,8 +311,9 @@ object XlsxParser {
             try {
               val d = new java.io.DataInputStream(
                 new java.io.BufferedInputStream(s))
-              if (d.readLong() != XlsxWriter.SegmentMagic ||
-                  d.readInt() != XlsxWriter.SegmentVersion) None
+              val version =
+                if (d.readLong() != XlsxWriter.SegmentMagic) 0 else d.readInt()
+              if (version != 2 && version != 3) None
               else {
                 val n = d.readInt()
                 val cuts = Array.fill(n) {
@@ -319,13 +324,15 @@ object XlsxParser {
                 val crc = d.readLong()
                 val compressed = d.readLong()
                 val uncompressed = d.readLong()
+                val segmentCrcs =
+                  if (version == 3) Array.fill(n + 1)(d.readInt()) else null
                 ZipRaw.locate(f, path)
                   .filter(re => re.method == java.util.zip.ZipEntry.DEFLATED &&
                     re.crc == crc && re.compressedSize == compressed &&
                     re.uncompressedSize == uncompressed)
                   .map(re => ParallelSheetScanner.SegmentIndex(
-                    f, re.dataOffset, re.compressedSize, cuts,
-                    totalUncomp, totalRows))
+                    f, path, re.dataOffset, re.compressedSize, cuts,
+                    totalUncomp, totalRows, segmentCrcs))
               }
             } catch { case _: java.io.IOException => None }
             finally closeAll()
@@ -333,34 +340,20 @@ object XlsxParser {
       }
 
     /** Sequential iterator over segments [s0, s1) of an indexed worksheet
-      * — the execution face of a segment-range InputPartition: pread the
-      * compressed slice, inflate it alone (full-flush start), cap the
-      * inflated side at the recorded uncompressed length (a mid-stream
-      * slice never "finishes" the inflater — the cap is what ends it),
-      * and run the ordinary [[SheetScanner]]. None when the index (or
+      * — the execution face of a segment-range InputPartition: each
+      * segment is read, inflated alone (full-flush start) and checked
+      * before the ordinary [[SheetScanner]] sees a byte of it
+      * ([[ParallelSheetScanner.SegmentStream]]). None when the index (or
       * the raw zip geometry) is unavailable — callers treat that as a
       * hard error, because re-reading the whole file in a RANGE
       * partition would duplicate rows, not merely slow down. */
     private[xlsx] def segmentRangeRowIterator(path: String, s0: Int, s1: Int)
         : Option[CellRowIterator] =
       segmentIndexRaw(path).map { seg =>
-        val nSeg = seg.cuts.length + 1
-        require(s0 >= 0 && s0 < s1 && s1 <= nSeg,
-          s"bad segment range [$s0,$s1) of $nSeg")
-        val c0 = if (s0 == 0) 0L else seg.cuts(s0 - 1)(0)
-        val u0 = if (s0 == 0) 0L else seg.cuts(s0 - 1)(1)
-        val c1 = if (s1 == nSeg) seg.compressedSize else seg.cuts(s1 - 1)(0)
-        val u1 = if (s1 == nSeg) seg.totalUncomp else seg.cuts(s1 - 1)(1)
-        val fis = new java.io.FileInputStream(seg.file)
-        fis.getChannel.position(seg.dataOffset + c0)
-        val inf = new java.util.zip.Inflater(true)
-        val inflated = new java.util.zip.InflaterInputStream(
-          new BoundedInputStream(
-            new java.io.BufferedInputStream(fis, 1 << 16), c1 - c0),
-          inf, 1 << 16)
-        new SheetScanner(new BoundedInputStream(inflated, u1 - u0),
-          sharedStrings, dateStyles,
-          () => { inf.end(); fis.close() })
+        require(s0 >= 0 && s0 < s1 && s1 <= seg.segments,
+          s"bad segment range [$s0,$s1) of ${seg.segments}")
+        val in = new ParallelSheetScanner.SegmentStream(seg, s0, s1)
+        new SheetScanner(in, sharedStrings, dateStyles, () => in.close())
       }
 
     /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
@@ -479,25 +472,6 @@ object XlsxParser {
       i += 1
     }
     None
-  }
-
-  /** Reads at most `limit` bytes from `in`, then reports EOF WITHOUT
-    * touching the underlying stream again — the cap that ends a
-    * mid-stream deflate slice cleanly (asking the inflater for one more
-    * byte past the recorded length would throw "unexpected end"). */
-  private[xlsx] final class BoundedInputStream(in: InputStream, limit: Long)
-      extends InputStream {
-    private var left = limit
-    override def read(): Int =
-      if (left <= 0) -1
-      else { val b = in.read(); if (b >= 0) left -= 1; b }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (left <= 0) return -1
-      val n = in.read(b, off, math.min(len.toLong, left).toInt)
-      if (n > 0) left -= n
-      n
-    }
-    override def close(): Unit = in.close()
   }
 
   /** StAX close() would close the whole zip stream; shield it. */

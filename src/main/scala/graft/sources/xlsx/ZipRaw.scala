@@ -2,25 +2,28 @@ package graft.sources.xlsx
 
 import java.io.RandomAccessFile
 
-/** Raw zip central-directory locator: the byte range of an entry's
-  * COMPRESSED data inside the archive file. `java.util.zip.ZipFile` only
-  * hands out inflated streams; the segmented parallel scanner needs the
-  * raw deflate bytes so each worker can inflate its own full-flush
-  * segment independently (see [[XlsxWriter.SegmentBytes]]).
+/** The zip format at the byte level, both ways. Reading: the byte range
+  * of an entry's COMPRESSED data inside the archive file.
+  * `java.util.zip.ZipFile` only hands out inflated streams; the segmented
+  * parallel scanner needs the raw deflate bytes so each worker can
+  * inflate its own full-flush segment independently (see
+  * [[XlsxWriter.SegmentBytes]]). Writing: the records [[XlsxWriter]]
+  * frames its pre-deflated entries with, since `ZipOutputStream` only
+  * takes bytes it deflates itself.
   *
   * Handles both plain zip32 and ZIP64 archives. ZIP64 matters precisely
   * at the scale the segmented reader was built for: any workbook past
   * 4 GiB (or with a >4 GiB worksheet part) gets a zip64 central
-  * directory — `java.util.zip.ZipOutputStream`, XlsxWriter's own base
-  * class, emits one automatically — so a zip32-only locator would fall
-  * back to the sequential pipeline on exactly the files that most need
-  * splitting (r12 VERDICT "What's wrong" #2). Resolution order follows
-  * APPNOTE 4.5: EOCD → zip64 EOCD locator (the 20-byte record directly
-  * before the EOCD) → zip64 EOCD record for directory offset/count, and
-  * per-entry 0x0001 extra fields for any 0xffffffff/0xffff header
-  * field. Any parse surprise still returns None and the caller falls
-  * back to the streaming pipeline, so this can never be a correctness
-  * cliff, only a parallelism one.
+  * directory — the record encoders below emit one whenever a size, an
+  * offset or the entry count overflows its 32-bit field — so a
+  * zip32-only locator would fall back to the sequential pipeline on
+  * exactly the files that most need splitting (r12 VERDICT "What's
+  * wrong" #2). Resolution order follows APPNOTE 4.5: EOCD → zip64 EOCD
+  * locator (the 20-byte record directly before the EOCD) → zip64 EOCD
+  * record for directory offset/count, and per-entry 0x0001 extra fields
+  * for any 0xffffffff/0xffff header field. Any parse surprise still
+  * returns None and the caller falls back to the streaming pipeline, so
+  * this can never be a correctness cliff, only a parallelism one.
   */
 object ZipRaw {
 
@@ -154,4 +157,81 @@ object ZipRaw {
       case scala.util.control.NonFatal(_) => None
     } finally raf.close()
   }
+
+  // ---- record encoders (APPNOTE 4.3): pure functions of their fields ------
+
+  private val Mask32 = 0xffffffffL
+  /** General-purpose flags: sizes and CRC follow the data in a data
+    * descriptor (bit 3), the name is UTF-8 (bit 11) — as
+    * `ZipOutputStream` flags a streamed DEFLATED entry. */
+  private val Flags = 0x0808
+  /** DOS date of 1980-01-01, time 00:00: a fixed stamp keeps the archive
+    * a pure function of its content. */
+  private val DosDate = 0x21
+
+  private final class Rec(size: Int) {
+    val b = new Array[Byte](size)
+    private var p = 0
+    def u16(v: Int): Rec = { b(p) = v.toByte; b(p + 1) = (v >> 8).toByte; p += 2; this }
+    def u32(v: Long): Rec = { u16((v & 0xffff).toInt); u16(((v >> 16) & 0xffff).toInt) }
+    def u64(v: Long): Rec = { u32(v & Mask32); u32(v >>> 32) }
+    def bytes(a: Array[Byte]): Rec = {
+      System.arraycopy(a, 0, b, p, a.length); p += a.length; this
+    }
+  }
+
+  /** Local header of a DEFLATED entry whose CRC and sizes follow its data
+    * in [[dataDescriptor]]. */
+  def localHeader(name: Array[Byte]): Array[Byte] =
+    new Rec(30 + name.length).u32(0x04034b50L).u16(20).u16(Flags).u16(8)
+      .u16(0).u16(DosDate).u32(0).u32(0).u32(0).u16(name.length).u16(0)
+      .bytes(name).b
+
+  /** Data descriptor: 8-byte sizes once either size reaches 4 GiB, which
+    * is where `ZipInputStream` looks for them. */
+  def dataDescriptor(crc: Long, compressedSize: Long,
+      uncompressedSize: Long): Array[Byte] =
+    if (compressedSize >= Mask32 || uncompressedSize >= Mask32)
+      new Rec(24).u32(0x08074b50L).u32(crc).u64(compressedSize)
+        .u64(uncompressedSize).b
+    else
+      new Rec(16).u32(0x08074b50L).u32(crc).u32(compressedSize)
+        .u32(uncompressedSize).b
+
+  /** Central directory header: a field that does not fit 32 bits reads
+    * 0xffffffff and moves to the 0x0001 extra field, which lists only
+    * those fields, in APPNOTE order. */
+  def centralHeader(name: Array[Byte], crc: Long, compressedSize: Long,
+      uncompressedSize: Long, localOffset: Long): Array[Byte] = {
+    val wide = Seq(uncompressedSize, compressedSize, localOffset)
+      .filter(_ >= Mask32)
+    val extra = if (wide.isEmpty) 0 else 4 + 8 * wide.length
+    def field(v: Long) = if (v >= Mask32) Mask32 else v
+    val version = if (wide.isEmpty) 20 else 45
+    val r = new Rec(46 + name.length + extra).u32(0x02014b50L).u16(version)
+      .u16(version).u16(Flags).u16(8).u16(0).u16(DosDate).u32(crc)
+      .u32(field(compressedSize)).u32(field(uncompressedSize))
+      .u16(name.length).u16(extra).u16(0).u16(0).u16(0).u32(0)
+      .u32(field(localOffset)).bytes(name)
+    if (extra > 0) {
+      r.u16(0x0001).u16(extra - 4)
+      wide.foreach(r.u64)
+    }
+    r.b
+  }
+
+  /** The records after the central directory, which starts at `cdOffset`
+    * and is `cdSize` bytes long: the end record, behind a zip64 end record
+    * and locator when the count, size or offset overflows. */
+  def endRecords(entries: Long, cdOffset: Long, cdSize: Long): Array[Byte] =
+    if (entries < 0xffffL && cdOffset < Mask32 && cdSize < Mask32)
+      new Rec(22).u32(0x06054b50L).u16(0).u16(0).u16(entries.toInt)
+        .u16(entries.toInt).u32(cdSize).u32(cdOffset).u16(0).b
+    else
+      new Rec(56 + 20 + 22)
+        .u32(0x06064b50L).u64(44).u16(45).u16(45).u32(0).u32(0)
+        .u64(entries).u64(entries).u64(cdSize).u64(cdOffset)
+        .u32(0x07064b50L).u32(0).u64(cdOffset + cdSize).u32(1)
+        .u32(0x06054b50L).u16(0).u16(0).u16(0xffff).u16(0xffff)
+        .u32(Mask32).u32(Mask32).u16(0).b
 }

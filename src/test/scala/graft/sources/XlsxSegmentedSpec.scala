@@ -46,23 +46,37 @@ class XlsxSegmentedSpec extends SparkSpec {
       val d = new java.io.DataInputStream(
         zf.getInputStream(zf.getEntry("xl/graft/sheet1.idx")))
       assert(d.readLong() == XlsxWriter.SegmentMagic)
-      assert(d.readInt() == 2)
+      assert(d.readInt() == XlsxWriter.SegmentVersion)
       val n = d.readInt()
+      val starts = scala.collection.mutable.ArrayBuffer(0L)
       assert(n >= 2, s"60k rows should cut >= 2 segments, got $n")
       var prevC, prevU, prevR = -1L
       (0 until n).foreach { _ =>
         val c = d.readLong(); val u = d.readLong(); val r = d.readLong()
         assert(c > prevC && u > prevU && r > prevR, "cuts must be increasing")
         prevC = c; prevU = u; prevR = r
+        starts += u
       }
       val totalUncomp = d.readLong(); val totalRows = d.readLong()
       assert(totalUncomp > prevU && totalRows == rows + 1L)
-      // v2 tail: the sheet entry as the central directory describes it
+      // the sheet entry as the central directory describes it
       val (crc, csize, usize) = (d.readLong(), d.readLong(), d.readLong())
       val sheet = zf.getEntry("xl/worksheets/sheet1.xml")
       assert((crc, csize, usize) ==
         ((sheet.getCrc, sheet.getCompressedSize, sheet.getSize)))
-      assert(usize == totalUncomp && d.read() == -1)
+      assert(usize == totalUncomp)
+      // v3 tail: each segment's CRC-32, over its slice of the sheet XML
+      val xml = {
+        val in = zf.getInputStream(sheet)
+        try in.readAllBytes() finally in.close()
+      }
+      starts += usize
+      (0 to n).foreach { k =>
+        val c = new java.util.zip.CRC32
+        c.update(xml, starts(k).toInt, (starts(k + 1) - starts(k)).toInt)
+        assert(d.readInt() == c.getValue.toInt, s"segment $k CRC-32")
+      }
+      assert(d.read() == -1)
       val re = ZipRaw.locate(file, "xl/worksheets/sheet1.xml")
       assert(re.isDefined && re.get.method == java.util.zip.ZipEntry.DEFLATED)
       assert(re.get.compressedSize > prevC)
