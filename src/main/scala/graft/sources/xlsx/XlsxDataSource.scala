@@ -706,11 +706,10 @@ final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions,
     val fs = p.getFileSystem(XlsxDataSource.hadoopConf())
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    // compression workers per task: the read's AUTO rule over the write's
-    // partitions, or the `threads` option verbatim
+    // deflate workers per task: the read's AUTO rule over the write's
+    // partitions
     val parts = math.max(1, info.numPartitions)
-    val threads = opts.threads.getOrElse(
-      XlsxScan.autoThreads(XlsxScan.executorCores(), parts, 1.0 / parts))
+    val threads = XlsxScan.autoThreads(XlsxScan.executorCores(), parts, 1.0 / parts)
     new XlsxDataWriterFactory(path, schema, opts.writeHeader,
       opts.sheetName.getOrElse("Sheet1"), XlsxDataSource.captureConf(), format,
       threads)

@@ -33,9 +33,7 @@ final case class XlsxOptions(
       * cores, sized proportional to each file's bytes — a single huge
       * workbook gets cores/2, a 32-file scan on 32 cores gets 1 per task,
       * and the one 10 GB straggler among small files gets the spare
-      * cores. An explicit value applies to every partition as-is. On
-      * write, the same rule (or value) sets each task's deflate workers
-      * ([[XlsxScan.autoThreads]] over the write's partitions). */
+      * cores. An explicit value applies to every partition as-is. */
     threads: Option[Int] = None,
     /** Per-task cap on decoded sharedStrings bytes — the one xlsx structure
       * whose memory is set by the FILE, not the scan; a pathological

@@ -109,14 +109,7 @@ final class ParallelSheetScanner(
   }
 
   private val pool: ExecutorService =
-    Executors.newFixedThreadPool(threads, new ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger()
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"xlsx-parse-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    })
+    Executors.newFixedThreadPool(threads, ParallelSheetScanner.daemonThreads("xlsx-parse"))
 
   // Inflate on its own thread: deflate yields ~4 KiB per read and costs a
   // core of its own; decoupling it from boundary tracking makes the
@@ -405,6 +398,17 @@ object ParallelSheetScanner {
     * (short tail after the producer finishes) while per-chunk overhead
     * (buffer alloc, queue hop, per-chunk scanner setup) stays amortized. */
   val DefaultChunkBytes: Int = 2 << 20
+
+  /** Daemon threads named `<prefix>-1`, `<prefix>-2`, … for a worker pool
+    * (the reader's parse workers, the writer's deflate workers). */
+  def daemonThreads(prefix: String): ThreadFactory = new ThreadFactory {
+    private val n = new java.util.concurrent.atomic.AtomicInteger()
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"$prefix-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
 
   /** A workbook's graft row-group index, resolved to raw file geometry:
     * `cuts(i) = (compressed offset, uncompressed offset, rows before)` of

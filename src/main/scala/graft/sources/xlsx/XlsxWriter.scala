@@ -3,7 +3,7 @@ package graft.sources.xlsx
 import java.io.{ByteArrayOutputStream, DataOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDate
-import java.util.concurrent.{ExecutionException, FutureTask, LinkedBlockingQueue}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, FutureTask, TimeUnit}
 import java.util.zip.{CRC32, Deflater}
 
 import scala.collection.mutable.ArrayBuffer
@@ -278,34 +278,6 @@ object XlsxWriter extends SheetFormat {
   private final class Pending(val task: FutureTask[Deflated],
       val buf: Array[Byte], val uStart: Long, val rowsBefore: Long)
 
-  /** Daemon threads `xlsx-deflate-N` of one worksheet, started as segments
-    * arrive (at most `n`) and joined by [[stop]]. */
-  private final class DeflateWorkers(n: Int) {
-    private val queue = new LinkedBlockingQueue[Runnable]()
-    private val started = ArrayBuffer.empty[Thread]
-
-    def submit(task: Runnable): Unit = {
-      if (started.length < n) {
-        val t = new Thread(() => work(), s"xlsx-deflate-${started.length + 1}")
-        t.setDaemon(true)
-        t.start()
-        started += t
-      }
-      queue.put(task)
-    }
-
-    private def work(): Unit =
-      try while (true) queue.take().run()
-      catch { case _: InterruptedException => }
-
-    /** A running deflate finishes (and ends its Deflater); queued ones are
-      * left to the caller to cancel. */
-    def stop(): Unit = {
-      started.foreach(_.interrupt())
-      started.foreach(_.join())
-    }
-  }
-
   /** One worksheet entry of `zip`. The calling thread encodes rows into
     * the current segment and, at the first row boundary at or past
     * [[SegmentBytes]], hands the segment to [[deflateSegment]]: inline at
@@ -318,7 +290,11 @@ object XlsxWriter extends SheetFormat {
       header: Option[Seq[String]], threads: Int) {
     require(threads >= 1, s"xlsx write: threads must be >= 1, got $threads")
     private val enc = new SheetEncoder(SegmentBytes + (SegmentBytes >> 3))
-    private val workers = if (threads > 1) new DeflateWorkers(threads) else null
+    // daemon threads `xlsx-deflate-N`, started as segments arrive
+    private val workers: ExecutorService =
+      if (threads > 1) Executors.newFixedThreadPool(threads,
+        ParallelSheetScanner.daemonThreads("xlsx-deflate"))
+      else null
     private val inFlight = new java.util.ArrayDeque[Pending]()
     private val spare = new java.util.ArrayDeque[Array[Byte]]()
     private val crc = new CRC32
@@ -349,15 +325,19 @@ object XlsxWriter extends SheetFormat {
         if (cuts.nonEmpty) zip.putEntry(segmentIndexName(path), index())
       } finally stopWorkers()
 
-    /** Cancel the segments not yet deflated and stop the workers; a
-      * running deflate completes and ends its Deflater. */
+    /** Drop the segments not yet written and stop the workers: a queued
+      * deflate never starts, a running one completes and ends its
+      * Deflater. */
     def abort(): Unit = {
-      inFlight.forEach(_.task.cancel(false))
       inFlight.clear()
       stopWorkers()
     }
 
-    private def stopWorkers(): Unit = if (workers != null) workers.stop()
+    // a deflate ignores interrupts and takes milliseconds: wait it out
+    private def stopWorkers(): Unit = if (workers != null) {
+      workers.shutdownNow()
+      workers.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
 
     private def handOff(last: Boolean): Unit = {
       val buf = enc.buf
@@ -367,7 +347,7 @@ object XlsxWriter extends SheetFormat {
       inFlight.add(new Pending(task, buf, uncompressed, segmentRows))
       uncompressed += len
       segmentRows = rows
-      if (workers == null) task.run() else workers.submit(task)
+      if (workers == null) task.run() else workers.execute(task)
       inFlight.forEach(p => if (p.task.isDone) result(p.task))
       while (!inFlight.isEmpty &&
           (inFlight.peek.task.isDone || inFlight.size > threads)) writeHead()
@@ -590,7 +570,7 @@ object XlsxWriter extends SheetFormat {
 
   /** `s` as XML text: the worksheet encoder's escapes, as a string. */
   private[sources] def esc(s: String): String = {
-    val e = new SheetEncoder(s.length + 16)
+    val e = new SheetEncoder(6 * math.min(s.length, 4096) + 4) // text's first ensure
     e.text(s)
     new String(e.buf, 0, e.size, UTF_8)
   }

@@ -9,6 +9,8 @@ import graft.SparkSpec
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.functions.{col, sum, udf}
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,7 +20,7 @@ import scala.jdk.CollectionConverters._
   * through every zip reader the sources use; the zip64 record forms read
   * back past 4 GiB; a corrupt segment fails with a named error; and an
   * aborted write leaves neither a file nor a thread behind. */
-class XlsxWriterSpec extends SparkSpec {
+class XlsxWriterSpec extends SparkSpec with Eventually {
   import WriterGoldenData.Case
   import XlsxWriterSpec.deflateThreads
 
@@ -272,35 +274,37 @@ class XlsxWriterSpec extends SparkSpec {
   }
 
   test("an aborted DSv2 write leaves no part file and no deflate thread; " +
-      "AUTO picks 2 deflate threads for one partition on local[4]") {
-    // rows of about 250 XML bytes: row 25000 is past two segments
+      "AUTO picks 2 deflate threads for one partition and 1 for four on local[4]") {
+    // rows of about 250 XML bytes: a partition's row 25000 is past two
+    // segments, and every partition fails there
     val text = udf { (i: Long) =>
-      if (i == 25000L) throw new IllegalStateException("mid-stream failure")
-      if (i == 24999L) XlsxWriterSpec.seen = deflateThreads
+      if (i % 30000 == 25000L) throw new IllegalStateException("mid-stream failure")
+      if (i % 30000 == 24999L) XlsxWriterSpec.seen = deflateThreads
       s"row $i " + "abcdefghij" * 10
     }
-    val frame = spark.range(0, 30000, 1, 1)
-      .select(col("id"), text(col("id")).as("s"), (col("id") * 0.5).as("x"))
-    Seq(Some(1), Some(2), None).foreach { threads =>
-      val dir = Files.createTempDirectory("graft_abort_")
-      val w = frame.write.format("xlsx").mode("overwrite")
-      val e = intercept[Exception](quietly(
-        threads.fold(w)(t => w.option("threads", t.toLong)).save(dir.toString)))
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("mid-stream failure")))
-      val left = dir.toFile.list().filter(_.contains("part-"))
-      assert(left.isEmpty, s"threads $threads left ${left.mkString(", ")}")
-      assert(deflateThreads.isEmpty, s"threads $threads left $deflateThreads")
-      val want = threads match {
-        case Some(1) => Set.empty[String]
-        case _ => Set("xlsx-deflate-1", "xlsx-deflate-2")
+    Seq(1 -> Set("xlsx-deflate-1", "xlsx-deflate-2"), 4 -> Set.empty[String])
+      .foreach { case (parts, want) =>
+        val dir = Files.createTempDirectory("graft_abort_")
+        quietly {
+          val e = intercept[Exception](spark.range(0, 30000L * parts, 1, parts)
+            .select(col("id"), text(col("id")).as("s"), (col("id") * 0.5).as("x"))
+            .write.format("xlsx").mode("overwrite").save(dir.toString))
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => String.valueOf(t.getMessage).contains("mid-stream failure")))
+          // the failed job's other tasks end after `save` throws, and a
+          // stopped pool's threads exit just after it terminates
+          eventually(timeout(Span(30, Seconds))) {
+            val left = dir.toFile.list().filter(_.contains("part-"))
+            assert(left.isEmpty, s"$parts partitions left ${left.mkString(", ")}")
+            assert(deflateThreads.isEmpty, s"$parts partitions left $deflateThreads")
+          }
+        }
+        assert(XlsxWriterSpec.seen == want, s"$parts partitions")
       }
-      assert(XlsxWriterSpec.seen == want, s"threads $threads")
-    }
     val dir = Files.createTempDirectory("graft_written_").toString
     spark.range(0, 30000, 1, 1).select(col("id"), (col("id") * 0.5).as("x"))
-      .write.format("xlsx").mode("overwrite").option("threads", 2L).save(dir)
-    assert(deflateThreads.isEmpty)
+      .write.format("xlsx").mode("overwrite").save(dir)
+    eventually(timeout(Span(5, Seconds)))(assert(deflateThreads.isEmpty))
     assert(spark.read.format("xlsx").load(dir).count() == 30000)
   }
 
