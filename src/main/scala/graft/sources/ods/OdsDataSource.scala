@@ -15,7 +15,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, XlsxDataSource, XlsxOptions, XlsxSchema, XlsxWriteBuilder}
+import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, RowSource, XlsxDataSource, XlsxOptions, XlsxSchema, XlsxWriteBuilder}
 
 /** `spark.read.format("ods")` / `df.write.format("ods")` — the OpenDocument
   * spreadsheet twin of the xlsx source, a thin format layer over the xlsx
@@ -23,7 +23,8 @@ import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, XlsxData
   * hasHeader / skipRows / types / forceTypes / coerceToString), path
   * resolution (`XlsxDataSource.resolvePaths`), probe rule and
   * schema-inference and NULL/coercion rules (`XlsxSchema`), sequential
-  * columnar batch loop ([[RowBatchReader]]) and DSv2 writer
+  * columnar batch loop ([[RowBatchReader]], fed through the cell adapter
+  * `RowSource.of`) and DSv2 writer
   * ([[XlsxWriteBuilder]] over [[OdsWriter]]). Only the container differs:
   * rows come from [[OdsParser]]'s pull iterator, on the task thread.
   *
@@ -128,7 +129,7 @@ final class OdsPartitionReaderFactory(fullSchema: StructType,
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val path = partition.asInstanceOf[OdsInputPartition].path
     val resolved = OdsDataSource.resolve(path, opts, conf)
-    new RowBatchReader(OdsDataSource.rows(path, opts, conf),
+    new RowBatchReader(RowSource.of(OdsDataSource.rows(path, opts, conf)),
       resolved.dropRows, resolved.baseWidth,
       new RowColumns(fullSchema, required, resolved.coerceToString))
   }

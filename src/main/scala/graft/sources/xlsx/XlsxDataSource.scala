@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -192,6 +193,10 @@ final class XlsxScan(
   override def planInputPartitions(): Array[InputPartition] =
     XlsxScan.partitionsFor(paths, opts)
 
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(
+    new XlsxScan.TableDecodeMetric, new XlsxScan.ChunkWaitMetric,
+    new XlsxScan.CellsMetric)
+
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts,
       XlsxDataSource.captureConf())
@@ -206,6 +211,32 @@ final class XlsxScan(
 }
 
 object XlsxScan {
+  // The scan's task metrics, summed over tasks in BatchScanExec's SQL
+  // metrics: the shared-strings decode and the wait for parse workers on
+  // the task thread, and the cells scanned.
+  final val TableDecodeMs = "xlsxTableDecodeMs"
+  final val ChunkWaitMs = "xlsxChunkWaitMs"
+  final val CellsScanned = "xlsxCellsScanned"
+
+  final class TableDecodeMetric extends CustomSumMetric {
+    override def name(): String = TableDecodeMs
+    override def description(): String = "xlsx shared-strings decode on the task thread (ms)"
+  }
+  final class ChunkWaitMetric extends CustomSumMetric {
+    override def name(): String = ChunkWaitMs
+    override def description(): String = "xlsx task thread waiting for parse workers (ms)"
+  }
+  final class CellsMetric extends CustomSumMetric {
+    override def name(): String = CellsScanned
+    override def description(): String = "xlsx cells scanned"
+  }
+
+  private[xlsx] def taskMetric(metric: String, v: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = metric
+      override def value(): Long = v
+    }
+
   /** Above this file count, allSheets enumeration runs as a Spark job
     * instead of a driver-side pool. The driver pool (16 threads, one
     * workbook.xml read per file) is fine to ~10^5 files; beyond that the
@@ -408,9 +439,10 @@ final class XlsxPartitionReaderFactory(
   }
 }
 
-/** Cell conversion rules shared by the xlsx and ods columnar readers. */
+/** Column type codes and the ragged-row rule shared by the xlsx and ods
+  * columnar readers. */
 object XlsxPartitionReader {
-  // compact type codes so the per-cell hot loop switches on an int instead
+  // compact type codes so the per-cell hot path switches on an int instead
   // of pattern-matching a DataType
   final val TDouble = 0; final val TString = 1; final val TBool = 2
   final val TDate = 3; final val TLong = 4; final val TInt = 5; final val TFloat = 6
@@ -418,6 +450,8 @@ object XlsxPartitionReader {
   // TimestampType/DecimalType/... via supportsExternalMetadata): they read
   // as NULL columns — throwing here would fail reader CONSTRUCTION.
   final val TNull = 7
+  /** The allSheets `_sheet_name` column: the sheet's name in every row. */
+  final val TSheet = 8
 
   def typeCode(dt: DataType): Int = dt match {
     case DoubleType  => TDouble
@@ -430,162 +464,109 @@ object XlsxPartitionReader {
     case _           => TNull
   }
 
-  /** Cell → Catalyst value under the reference's compatibility rules
-    * (TypesCompatible, sheetreader_extension.cpp:225-250), written into a
-    * WritableColumnVector slot: exact type match materializes; STRING
-    * additionally accepts any cell when coerceToString; everything else
-    * (and empty/error cells) is NULL. The one place a cell is converted:
-    * Spark evaluates every filter above the scan. */
-  def writeVector(
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-      i: Int, cell: XCell, code: Int, coerce: Boolean): Unit = (code: @annotation.switch) match {
-    case TDouble => cell match {
-      case XCell.XNumber(d) => v.putDouble(i, d)
-      case _ => v.putNull(i)
-    }
-    case TString => cell match {
-      case XCell.XString(s) =>
-        v.putByteArray(i, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case XCell.XNumber(d) if coerce =>
-        v.putByteArray(i, String.format(java.util.Locale.ROOT, "%f", Double.box(d))
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case XCell.XBool(b) if coerce =>
-        v.putByteArray(i, (if (b) "TRUE" else "FALSE")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case XCell.XDate(serial) if coerce =>
-        v.putByteArray(i, java.time.LocalDate.ofEpochDay(
-          XCell.serialToEpochDay(serial).toLong).toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case _ => v.putNull(i)
-    }
-    case TBool => cell match {
-      case XCell.XBool(b) => v.putBoolean(i, b)
-      case _ => v.putNull(i)
-    }
-    case TDate => cell match {
-      case XCell.XDate(serial) => v.putInt(i, XCell.serialToEpochDay(serial))
-      case _ => v.putNull(i)
-    }
-    case TLong => cell match {
-      case XCell.XNumber(d) => v.putLong(i, d.toLong)
-      case _ => v.putNull(i)
-    }
-    case TInt => cell match {
-      case XCell.XNumber(d) => v.putInt(i, d.toInt)
-      case _ => v.putNull(i)
-    }
-    case TFloat => cell match {
-      case XCell.XNumber(d) => v.putFloat(i, d.toFloat)
-      case _ => v.putNull(i)
-    }
-    case TNull => v.putNull(i)
-  }
-
   /** Ragged-wide row is an error (reference: sheetreader_extension.cpp:417-422). */
   def raggedCheck(rowIdx: Long, width: Int, baseWidth: Int): Unit =
     if (width > baseWidth)
       throw new IllegalStateException(
         s"Row ${rowIdx + 1} has more columns than the first row. " +
           s"Has: $width Expected: $baseWidth")
+
+  /** The ragged check over every row of a chunk past its dropped prefix
+    * (dropped header/skip rows are exempt). */
+  def raggedCheck(chunk: ParsedChunk, baseWidth: Int): Unit = {
+    var i = chunk.dropped
+    while (i < chunk.widths.length) {
+      raggedCheck(chunk.idx(i), chunk.widths(i), baseWidth)
+      i += 1
+    }
+  }
 }
 
-/** How a scan's required columns are cut from parsed cell rows into column
-  * vectors — the per-row half of every columnar spreadsheet scan: xlsx's
-  * worker-built chunk batches, and the sequential [[RowBatchReader]] of
-  * xlsx and ods alike. Column mapping is positional, like the reference.
-  * `sheetName` is the value of the allSheets `_sheet_name` column (None:
-  * the scan has no such column). Every row goes into the batch: filters
-  * are Spark's, evaluated above the scan. Immutable, so worker threads
-  * share it. */
+/** How a scan's required columns are cut from a sheet's cells — the
+  * layout every [[ColumnChunk]] of the scan writes: xlsx's worker-built
+  * chunk batches, and the sequential [[RowBatchReader]] of xlsx and ods
+  * alike. Column mapping is positional, like the reference. `sheetName` is
+  * the value of the allSheets `_sheet_name` column (None: the scan has no
+  * such column). Every row goes into the batch: filters are Spark's,
+  * evaluated above the scan. Immutable, so worker threads share it. */
 final class RowColumns(
     fullSchema: StructType,
     required: StructType,
-    coerce: Boolean,
+    private[xlsx] val coerce: Boolean,
     sheetName: Option[String] = None) {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import XlsxPartitionReader._
 
-  private val sheetNameBytes: Array[Byte] = sheetName.getOrElse("")
+  private[xlsx] val sheetNameBytes: Array[Byte] = sheetName.getOrElse("")
     .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  // positional index of each required column in the sheet; -1 marks the
-  // allSheets metadata column, which has no sheet position. Sheet
-  // positions count only DATA columns: a user-supplied schema may place
-  // _sheet_name anywhere, and fieldIndex over the full schema would then
-  // shift every column after it.
+  // Sheet positions count only DATA columns: a user-supplied schema may
+  // place _sheet_name anywhere, and fieldIndex over the full schema would
+  // then shift every column after it.
   private val dataFieldNames: Array[String] =
     if (sheetName.isDefined)
       fullSchema.fieldNames.filterNot(_ == XlsxDataSource.SheetNameCol)
     else fullSchema.fieldNames
-  private val colIdx: Array[Int] = required.fieldNames.map { n =>
-    if (sheetName.isDefined && n == XlsxDataSource.SheetNameCol) -1
-    else dataFieldNames.indexOf(n)
+  private val isSheetCol: Array[Boolean] = required.fieldNames.map(n =>
+    sheetName.isDefined && n == XlsxDataSource.SheetNameCol)
+  private[xlsx] val colTypes: Array[DataType] = required.fields.map(_.dataType)
+  private[xlsx] val typeCodes: Array[Int] = colTypes.indices.map(j =>
+    if (isSheetCol(j)) TSheet else typeCode(colTypes(j))).toArray
+  /** Sheet column → its required column, or -1 for a pruned one. */
+  private[xlsx] val reqOf: Array[Int] = {
+    val pos = required.fieldNames.indices.map(j =>
+      if (isSheetCol(j)) -1 else dataFieldNames.indexOf(required.fieldNames(j)))
+    val a = Array.fill(if (pos.isEmpty) 0 else pos.max + 1)(-1)
+    pos.zipWithIndex.foreach { case (p, j) => if (p >= 0) a(p) = j }
+    a
   }
-  val colTypes: Array[DataType] = required.fields.map(_.dataType)
-  private val typeCodes: Array[Int] = colTypes.map(XlsxPartitionReader.typeCode)
+  /** Whether a string column is required: only then does the scan need
+    * the shared-strings table. */
+  val needsTable: Boolean = typeCodes.contains(TString)
 
-  def writeRow(vectors: Array[OnHeapColumnVector], out: Int,
-      cells: Array[XCell]): Unit = {
-    var j = 0
-    while (j < colIdx.length) {
-      val c = colIdx(j)
-      if (c < 0) vectors(j).putByteArray(out, sheetNameBytes)
-      else XlsxPartitionReader.writeVector(vectors(j), out,
-        if (c < cells.length) cells(c) else XCell.XNone,
-        typeCodes(j), coerce)
-      j += 1
+  /** An empty chunk of this layout: it skips its first `dropFirst` rows
+    * and stores up to `limit`. */
+  def newChunk(dropFirst: Int, limit: Int = Int.MaxValue): ColumnChunk =
+    new ColumnChunk(this, dropFirst, limit)
+
+  /** A parse worker's chunk scan: the chunk's rows, scanned in place
+    * straight into a finished [[ColumnChunk]]. */
+  def chunkParser(dates: Array[Boolean]): (Array[Byte], Int, Int) => ParsedChunk =
+    (bytes, len, dropFirst) => {
+      val chunk = newChunk(dropFirst)
+      val sc = SheetScanCore.over(bytes, len, dates)
+      while (sc.nextRow(chunk)) ()
+      chunk.finish()
     }
-  }
-
-  /** Worker-side chunk transform: parsed rows → one ColumnarBatch, excluding
-    * the producer-assigned leading-drop prefix. Thread-safe: allocates
-    * fresh vectors per chunk. */
-  def buildBatch(rows: Array[Array[XCell]], dropFirst: Int): AnyRef = {
-    val n = rows.length
-    val vectors = colTypes.map(dt =>
-      new OnHeapColumnVector(math.max(1, n - dropFirst), dt))
-    var i = dropFirst
-    while (i < n) { writeRow(vectors, i - dropFirst, rows(i)); i += 1 }
-    new ColumnarBatch(vectors.toArray[ColumnVector], n - dropFirst)
-  }
 }
 
-/** The one sequential batch loop of the spreadsheet sources: drops the
-  * header/skipRows prefix (`dropRows`), then fills reused
-  * OnHeapColumnVectors with up to [[RowBatchReader.BatchRows]] rows per
-  * ColumnarBatch, ragged-checking each row against the sheet's width —
+/** The one sequential batch loop of the spreadsheet sources: fills a
+  * [[ColumnChunk]] with up to [[RowBatchReader.BatchRows]] rows of `rows`
+  * per ColumnarBatch, the header/skipRows prefix (`dropRows`) scanned but
+  * not stored, ragged-checking each stored row against the sheet's width —
   * like the vectorized parquet reader, which Spark reads through codegen'd
   * ColumnarToRow. Serves every xlsx scan without parse workers (threads =
   * 1, segment ranges, the missing-entry fallback) and every ods scan.
-  * Closing it closes `rows`. */
-final class RowBatchReader(rows: CellRowIterator, dropRows: Long,
-    baseWidth: Int, cols: RowColumns)
+  * `table` is the shared-strings table, asked for by the first batch with
+  * a shared-string cell. Closing it closes `rows`. */
+final class RowBatchReader(rows: RowSource, dropRows: Long,
+    baseWidth: Int, cols: RowColumns,
+    table: () => Array[Array[Byte]] = () => Array.empty)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private var dropped = 0L
-  while (dropped < dropRows && rows.hasNext) { rows.next(); dropped += 1 }
-
-  private var vectors: Array[OnHeapColumnVector] = _
+  private var owed = dropRows // prefix rows not yet scanned
   private var current: ColumnarBatch = _
+  /** Cells scanned so far. */
+  var cells = 0L
 
   override def next(): Boolean = {
-    if (vectors == null)
-      vectors = cols.colTypes.map(dt =>
-        new OnHeapColumnVector(RowBatchReader.BatchRows, dt))
-    else vectors.foreach(_.reset())
-    var out = 0
-    while (out < RowBatchReader.BatchRows && rows.hasNext) {
-      val (rowIdx, cells) = rows.next()
-      XlsxPartitionReader.raggedCheck(rowIdx, cells.length, baseWidth)
-      cols.writeRow(vectors, out, cells)
-      out += 1
-    }
-    if (out == 0) false
-    else {
-      current = new ColumnarBatch(vectors.toArray[ColumnVector], out)
-      true
-    }
+    val chunk = cols.newChunk(math.min(owed, Int.MaxValue).toInt, RowBatchReader.BatchRows)
+    while (!chunk.full && rows.nextRow(chunk)) ()
+    chunk.finish()
+    owed -= chunk.dropped
+    cells += chunk.cells
+    XlsxPartitionReader.raggedCheck(chunk, baseWidth)
+    current = chunk.batch(table())
+    chunk.stored > 0
   }
 
   override def get(): ColumnarBatch = current
@@ -602,14 +583,15 @@ object RowBatchReader {
 /** Columnar batch scan over one file's target sheet — the xlsx read path.
   * Each file re-resolves its own header (cheap 2-row probe over the
   * shared-strings prefix), so multi-file scans tolerate per-file header
-  * rows. With `threads >= 2` the parse workers build one
-  * ColumnarBatch per producer chunk ([[ParallelSheetScanner]]'s chunk face),
-  * so the consumer thread's per-row work drops to a ragged-check walk over
-  * the chunk's stitched indices and Spark reads the batch through codegen'd
-  * ColumnarToRow — the vectorized-parquet shape, with no per-row
-  * InternalRow materialization anywhere on the sequential stages.
-  * Sequential scans (threads = 1, segment ranges, or a missing worksheet
-  * entry's empty iterator) go through the shared [[RowBatchReader]].
+  * rows. With `threads >= 2` the parse workers scan each producer chunk
+  * straight into a ColumnarBatch ([[ParallelSheetScanner]]'s chunk face,
+  * [[ColumnChunk]]); shared-string cells keep their table ids, so no
+  * worker waits for the table. This (the task) thread decodes the table
+  * meanwhile, then per chunk ragged-checks the stitched row indices and
+  * attaches the table to the batch's dictionary columns — the
+  * vectorized-parquet shape, with no per-row InternalRow or cell object
+  * anywhere. Sequential scans (threads = 1, segment ranges, or a missing
+  * worksheet entry) go through the shared [[RowBatchReader]].
   */
 final class XlsxColumnarPartitionReader(
     path: String,
@@ -637,45 +619,69 @@ final class XlsxColumnarPartitionReader(
   private val cols = new RowColumns(fullSchema, required, opts.coerceToString,
     if (opts.allSheets) Some(sheet.map(_.name).getOrElse("")) else None)
 
-  private val iterE: Either[CellRowIterator, ParallelSheetScanner] =
+  private val source: Either[RowSource, ParallelSheetScanner] =
     segRange match {
       case Some(r) =>
-        Left(wb.segmentRangeRowIterator(sheetTarget, r.s0, r.s1).getOrElse(
+        Left(wb.segmentRangeRows(sheetTarget, r.s0, r.s1).getOrElse(
           throw new IllegalStateException(
             s"$path: segment index vanished for range [${r.s0},${r.s1}) — " +
               "a whole-file fallback would DUPLICATE rows across partitions")))
       case None if threads >= 2 =>
-        wb.chunkingRowIterator(sheetTarget, threads, cols.buildBatch,
-          resolved.dropRows.toLong, opts.chunkBytes)
-      case None => Left(wb.rowIterator(sheetTarget))
+        wb.chunkingRowIterator(sheetTarget, threads, cols.chunkParser(wb.dateStyles),
+          resolved.dropRows.toLong, opts.chunkBytes).toRight(RowSource.empty)
+      case None => Left(wb.sheetRows(sheetTarget))
     }
-  private val seq: RowBatchReader = iterE.left.toOption
-    .map(new RowBatchReader(_, effDropRows, resolved.baseWidth, cols)).orNull
-  private val parIter: ParallelSheetScanner = iterE.toOption.orNull
+  private val seq: RowBatchReader = source.left.toOption
+    .map(new RowBatchReader(_, effDropRows, resolved.baseWidth, cols, () => table()))
+    .orNull
+  private val parIter: ParallelSheetScanner = source.toOption.orNull
 
   private var current: ColumnarBatch = _
+  private var strings: Array[Array[Byte]] = _
+  private var tableNs = 0L
+  private var waitNs = 0L
+  private var chunkCells = 0L
 
-  override def next(): Boolean =
+  /** The shared-strings table, decoded once on this thread. A failure
+    * (the `maxSharedStringsBytes` guard) tears the scan down before it
+    * fails the task. */
+  private def table(): Array[Array[Byte]] = {
+    if (strings == null) {
+      val t0 = System.nanoTime()
+      strings = try wb.sharedStringBytes() catch { case e: Throwable => close(); throw e }
+      tableNs += System.nanoTime() - t0
+    }
+    strings
+  }
+
+  override def next(): Boolean = {
+    // first call: decode the table while the parse workers scan the sheet
+    if (cols.needsTable) table()
     if (seq != null) seq.next()
     else {
+      var t0 = System.nanoTime()
       while (parIter.advanceChunk()) {
-        // metadata walk: ragged-check every non-dropped row (dropped
-        // header/skip rows are exempt, same as the sequential path)
-        val idx = parIter.chunkIdx
-        val widths = parIter.chunkWidths
-        var i = parIter.chunkDropped
-        while (i < idx.length) {
-          XlsxPartitionReader.raggedCheck(idx(i), widths(i), resolved.baseWidth)
-          i += 1
-        }
-        val b = parIter.chunkBatch.asInstanceOf[ColumnarBatch]
-        if (b.numRows > 0) { current = b; return true }
-        b.close() // zero-row producer tail: skip and keep pulling
+        waitNs += System.nanoTime() - t0
+        val chunk = parIter.chunk.asInstanceOf[ColumnChunk]
+        chunkCells += chunk.cells
+        XlsxPartitionReader.raggedCheck(chunk, resolved.baseWidth)
+        // a zero-row producer tail is skipped
+        if (chunk.stored > 0) { current = chunk.batch(table()); return true }
+        t0 = System.nanoTime()
       }
+      waitNs += System.nanoTime() - t0
       false
     }
+  }
 
   override def get(): ColumnarBatch = if (seq != null) seq.get() else current
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    XlsxScan.taskMetric(XlsxScan.TableDecodeMs, tableNs / 1000000L),
+    XlsxScan.taskMetric(XlsxScan.ChunkWaitMs, waitNs / 1000000L),
+    XlsxScan.taskMetric(XlsxScan.CellsScanned,
+      if (seq != null) seq.cells else chunkCells))
+
   override def close(): Unit =
     if (seq != null) seq.close() else parIter.close()
 }

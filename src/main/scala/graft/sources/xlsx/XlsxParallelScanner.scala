@@ -1,9 +1,9 @@
 package graft.sources.xlsx
 
-import java.io.{ByteArrayInputStream, InputStream}
+import java.io.InputStream
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
-import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, FutureTask, ThreadFactory, TimeUnit}
+import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, ThreadFactory, TimeUnit}
 import java.util.zip.{CRC32, DataFormatException, Inflater}
 
 import scala.collection.mutable.ArrayBuffer
@@ -19,8 +19,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   *   producer thread:  inflate → locate row boundaries → cut ~`chunkBytes`
   *                     chunks ending on a row boundary
-  *   worker pool (N):  parse each chunk with an ordinary [[SheetScanner]],
-  *                     then run `chunkConvert` over the chunk's rows
+  *   worker pool (N):  `parse` each chunk in place with a [[SheetScanCore]]
+  *                     — the columnar reader scans it straight into a
+  *                     [[ColumnChunk]], which needs no shared-strings table
   *   caller thread:    take chunk results in submission order
   *                     ([[advanceChunk]]), stitching implicit
   *                     (r-attribute-less) row indices across chunks
@@ -34,10 +35,10 @@ import scala.collection.mutable.ArrayBuffer
   * scanner would have treated as content (the differential fuzz drives the
   * chunked path against StAX on adversarial sheets).
   *
-  * The chunk face is the only consumer face: the columnar DSv2 reader
-  * builds one ColumnarBatch per chunk in `chunkConvert`, and the
-  * row iterator ([[ParallelSheetScanner.rowIterator]]) is an adapter whose
-  * transform hands the rows back unchanged.
+  * The chunk face is the only consumer face: the columnar DSv2 reader's
+  * `parse` builds one ColumnarBatch per chunk, and the row iterator
+  * ([[ParallelSheetScanner.rowIterator]]) is an adapter whose `parse`
+  * keeps each chunk's rows as [[XCell]]s.
   *
   * This is for the reference's headline scenario — one huge workbook on an
   * otherwise idle machine. Under a normal multi-file Spark scan each task
@@ -45,27 +46,20 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class ParallelSheetScanner(
     in: InputStream,
-    /** The shared-strings table, asked for by the first worker that
-      * parses a chunk — so a table decode runs while the producer and
-      * prefetch threads keep inflating and tracking, off the critical
-      * path. Called at most once per scanner. */
-    strings: () => Array[String],
-    dates: Array[Boolean],
     threads: Int,
     closeUnderlying: () => Unit,
-    /** Per-CHUNK transform: called IN THE WORKER with all of a chunk's
-      * parsed rows at once — `(rows, dropFirst) => batch` — so a columnar
-      * reader can build one ColumnarBatch per chunk off the consumer
-      * thread. `dropFirst` is how many leading rows of THIS chunk fall
-      * inside the file-level `dropFirstRows` prefix (header/skipRows): the
-      * producer derives it EXACTLY from its boundary counts, so the
-      * transform must exclude those rows from the batch (they still appear
-      * in the chunk metadata arrays). Must be thread-safe and
-      * row-order-preserving. */
-    chunkConvert: (Array[Array[XCell]], Int) => AnyRef,
+    /** Per-CHUNK parse, called IN THE WORKER: `(bytes, length, dropFirst)
+      * => chunk` scans `bytes[0, length)` — whole rows — into a
+      * [[ParsedChunk]]. `dropFirst` is how many leading rows of THIS chunk
+      * fall inside the file-level `dropFirstRows` prefix (header/skipRows):
+      * the producer derives it EXACTLY from its boundary counts, so the
+      * chunk must keep those rows out of its data (they still appear in
+      * its metadata). The bytes are recycled once it returns. Must be
+      * thread-safe. */
+    parse: (Array[Byte], Int, Int) => ParsedChunk,
     chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes,
     /** File-level leading-row drop (header + skipRows) dealt out to chunk
-      * workers via `chunkConvert`'s dropFirst argument. */
+      * workers via `parse`'s dropFirst argument. */
     dropFirstRows: Long = 0L,
     /** SEGMENT mode (non-null): the workbook carries a graft row-group
       * index ([[XlsxWriter.SegmentBytes]]), so the producer does NO
@@ -96,17 +90,6 @@ final class ParallelSheetScanner(
     new java.util.concurrent.ArrayBlockingQueue[Array[Byte]](threads * 2)
   @volatile private var producerError: Throwable = _
   @volatile private var stopped = false
-
-  // `strings` behind a once-only task: the first worker runs it, later
-  // ones wait in get() (interruptibly, so close() can end them), and a
-  // failure — the sharedStrings budget guard — is kept and rethrown to
-  // every chunk instead of being decoded again by each worker
-  private val table = new FutureTask[Array[String]](() => strings())
-  private def sharedStrings(): Array[String] = {
-    table.run()
-    try table.get()
-    catch { case e: ExecutionException => throw Option(e.getCause).getOrElse(e) }
-  }
 
   private val pool: ExecutorService =
     Executors.newFixedThreadPool(threads, ParallelSheetScanner.daemonThreads("xlsx-parse"))
@@ -222,23 +205,7 @@ final class ParallelSheetScanner(
     }))
 
   private def parseChunk(chunk: Array[Byte], len: Int, dropFirst: Int): ParsedChunk = {
-    val sc = new SheetScanner(
-      new ByteArrayInputStream(chunk, 0, len), sharedStrings(), dates, () => ())
-    val idx = new ArrayBuffer[Long]()
-    val explicitR = new ArrayBuffer[Boolean]()
-    val rows = new ArrayBuffer[Array[XCell]]()
-    val widths = new ArrayBuffer[Int]()
-    while (sc.hasNext) {
-      val (i, cells) = sc.next()
-      idx += i
-      explicitR += sc.lastRowExplicit
-      rows += cells
-      widths += cells.length
-    }
-    val rowArr = rows.toArray
-    val dropped = math.min(dropFirst, rowArr.length)
-    val out = ParsedChunk(idx.toArray, explicitR.toArray, widths.toArray,
-      chunkConvert(rowArr, dropped), dropped)
+    val out = parse(chunk, len, dropFirst)
     // the chunk's bytes are fully consumed — recycle the buffer; offer()
     // drops it when the pool is at capacity (exact bound, no size() scan)
     bufPool.offer(chunk)
@@ -251,14 +218,13 @@ final class ParallelSheetScanner(
   private var lastIdx = -1L // absolute index of the last row handed out
   private var ended = false
 
-  /** Pull the next parsed chunk: the worker-built `chunkBatch` plus the
+  /** Pull the next parsed chunk ([[chunk]]): the worker's result with the
     * per-row metadata the consumer needs for skipRows and ragged checks.
     * Returns false at stream end. Row indices are stitched here, in
     * submission order: an implicit (r-attribute-less) row numbers from the
     * previous row, not from the worker's chunk-local counter (which started
     * at -1). A chunk may carry ZERO rows (a producer tail holding only
-    * trailing markup) — its batch is whatever chunkConvert returned for an
-    * empty row set; callers skip it and keep pulling. */
+    * trailing markup); callers skip it and keep pulling. */
   def advanceChunk(): Boolean = {
     if (ended) return false
     queue.take() match {
@@ -294,7 +260,7 @@ final class ParallelSheetScanner(
         true
     }
   }
-  def chunkBatch: AnyRef = chunkCur.batch
+  def chunk: ParsedChunk = chunkCur
   /** Absolute (stitched) row index of every parsed row in this chunk. */
   def chunkIdx: Array[Long] = chunkCur.idx
   def chunkWidths: Array[Int] = chunkCur.widths
@@ -503,16 +469,36 @@ object ParallelSheetScanner {
     override def close(): Unit = ch.close()
   }
 
-  /** Row face over the chunk face: the chunk transform returns each
-    * chunk's parsed rows as they are, and the iterator walks them with the
-    * scanner's stitched indices — the same stitching the columnar reader
-    * rides. */
+  /** Row face over the chunk face: each worker keeps its chunk's rows as
+    * [[XCell]]s (shared strings resolved against `strings`), and the
+    * iterator walks them with the scanner's stitched indices — the same
+    * stitching the columnar reader rides. */
   def rowIterator(in: InputStream, strings: Array[String],
       dates: Array[Boolean], threads: Int, closeUnderlying: () => Unit,
       chunkBytes: Int = DefaultChunkBytes,
       segmented: SegmentIndex = null): CellRowIterator =
-    new ChunkRows(new ParallelSheetScanner(in, () => strings, dates, threads,
-      closeUnderlying, (rows, _) => rows, chunkBytes, segmented = segmented))
+    new ChunkRows(new ParallelSheetScanner(in, threads, closeUnderlying,
+      cellRows(strings, dates), chunkBytes, segmented = segmented))
+
+  /** The chunk parse of the row face. */
+  private[xlsx] def cellRows(strings: Array[String], dates: Array[Boolean])
+      : (Array[Byte], Int, Int) => ParsedChunk =
+    (bytes, len, dropFirst) =>
+      new RowsChunk(new SheetScanner(SheetScanCore.over(bytes, len, dates), strings), dropFirst)
+
+  /** A chunk's rows as cells. */
+  private final class RowsChunk(sc: SheetScanner, dropFirst: Int) extends ParsedChunk {
+    val rows: Array[Array[XCell]] = {
+      val out = ArrayBuffer[Array[XCell]]()
+      while (sc.hasNext) {
+        val (i, cells) = sc.next()
+        record(i, sc.lastRowExplicit, cells.length, cells.length)
+        out += cells
+      }
+      seal(dropFirst)
+      out.toArray
+    }
+  }
 
   private[xlsx] final class ChunkRows(sc: ParallelSheetScanner) extends CellRowIterator {
     private var rows: Array[Array[XCell]] = Array.empty
@@ -521,7 +507,7 @@ object ParallelSheetScanner {
 
     override def hasNext: Boolean = {
       while (i >= rows.length && sc.advanceChunk()) {
-        rows = sc.chunkBatch.asInstanceOf[Array[Array[XCell]]]
+        rows = sc.chunk.asInstanceOf[RowsChunk].rows
         idx = sc.chunkIdx
         i = 0
       }
@@ -538,9 +524,6 @@ object ParallelSheetScanner {
   }
 
   private case object End
-  private final case class ParsedChunk(idx: Array[Long],
-      explicitR: Array[Boolean], widths: Array[Int], batch: AnyRef,
-      dropped: Int)
 }
 
 

@@ -110,10 +110,11 @@ object XlsxParser {
     * source can be any re-openable stream (local file, HDFS, S3A).
     *
     * Only a scan decodes the whole shared-strings table
-    * ([[sharedStrings]]); the schema probe reads a prefix of it
-    * ([[sharedStringsPrefix]]), so planning never holds the table and
-    * the `maxSharedStringsBytes` budget is enforced where the table is
-    * decoded, in the scan task.
+    * ([[sharedStringBytes]]; the [[XCell]] faces use [[sharedStrings]]);
+    * the schema probe reads a prefix of it ([[sharedStringsPrefix]]), so
+    * planning never holds the table and the `maxSharedStringsBytes`
+    * budget is enforced where the table is decoded, on the scan task's
+    * thread.
     *
     * `localFile`, when set, short-circuits entry access through
     * `java.util.zip.ZipFile` (central-directory seek) instead of
@@ -146,15 +147,20 @@ object XlsxParser {
       out.toSeq
     }
 
-    /** The whole shared-strings table, decoded once per workbook by the
-      * byte scanner (a UTF-16 table transcodes onto it). Hot for
-      * string-heavy workbooks: Excel interns every sheet string here.
-      * Throws the `maxSharedStringsBytes` guard. Sequential and
-      * segment-range scans force it before their first row; the parallel
-      * scan hands its first worker the thunk, so the decode overlaps the
-      * sheet's inflate. */
+    /** The whole shared-strings table as `String`s, decoded once per
+      * workbook by the byte scanner (a UTF-16 table transcodes onto it) —
+      * what the [[XCell]] row faces resolve against. Throws the
+      * `maxSharedStringsBytes` guard. */
     lazy val sharedStrings: Array[String] =
       sharedStringsEntry(SharedStringsScanner.parse(_, maxSharedStringsBytes).toArray)
+        .getOrElse(Array.empty)
+
+    /** The whole table again, decoded afresh as one UTF-8 byte array per
+      * entry: a scan's string dictionary ([[SheetDictionary]]). Same scan,
+      * same budget; the reader decodes it on its task thread while the
+      * parse workers, which never need it, scan the sheet. */
+    private[xlsx] def sharedStringBytes(): Array[Array[Byte]] =
+      sharedStringsEntry(SharedStringsScanner.parseBytes(_, maxSharedStringsBytes))
         .getOrElse(Array.empty)
 
     /** The first [[ProbeStrings]] strings of the table, and whether they are
@@ -251,24 +257,28 @@ object XlsxParser {
     /** Sequential rows of one worksheet, shared-string cells resolved
       * against `strings`. */
     def rows(path: String, strings: Array[String]): CellRowIterator =
-      openSniffed(path) match {
-        case Left(it) => it
-        case Right((in, closeAll)) =>
-          new SheetScanner(in, strings, dateStyles, closeAll)
-      }
+      openSniffed(path).map { case (in, closeAll) =>
+        new SheetScanner(in, strings, dateStyles, closeAll)
+      }.getOrElse(CellRowIterator.empty)
 
-    /** Open `path` and sniff the encoding BOM once: Left(the empty
-      * iterator of a missing worksheet entry), Right(the positioned byte
-      * stream + closer) for the byte scanners. A UTF-16 BOM does not fall
-      * back to StAX (r10): the entry transcodes to UTF-8 on the fly and
-      * rides the same scanner + columnar pipeline — the scanner matches
-      * tags bytewise and ignores the prolog's declared encoding. The single
-      * copy of this dispatch — rows and chunkingRowIterator ride it, and
-      * rowIterator builds on those two. */
-    private def openSniffed(path: String): Either[CellRowIterator, (InputStream, () => Unit)] =
-      openEntryStream(path) match {
-        case None => Left(CellRowIterator.empty)
-        case Some((raw, closeAll)) => Right((sniffUtf16(raw), closeAll))
+    /** Sequential rows of one worksheet as cell events — a scan's
+      * sequential source; no rows for a missing entry. */
+    private[xlsx] def sheetRows(path: String): RowSource =
+      openSniffed(path).map { case (in, closeAll) =>
+        new SheetScanCore(in, dateStyles, closeAll)
+      }.getOrElse(RowSource.empty)
+
+    /** Open `path` with its CRC-32 checked ([[openEntryStream]]) and sniff
+      * the encoding BOM once: the positioned byte stream + closer for the
+      * byte scanners, or None for a missing worksheet entry. A UTF-16 BOM
+      * does not fall back to StAX (r10): the entry transcodes to UTF-8 on
+      * the fly and rides the same scanner + columnar pipeline — the scanner
+      * matches tags bytewise and ignores the prolog's declared encoding.
+      * The single copy of this dispatch — rows, sheetRows and
+      * chunkingRowIterator ride it. */
+    private def openSniffed(path: String): Option[(InputStream, () => Unit)] =
+      openEntryStream(path, checked = true).map { case (raw, closeAll) =>
+        (sniffUtf16(raw), closeAll)
       }
 
     /** The workbook's graft row-group index for a worksheet entry, when
@@ -339,65 +349,59 @@ object XlsxParser {
         }
       }
 
-    /** Sequential iterator over segments [s0, s1) of an indexed worksheet
-      * — the execution face of a segment-range InputPartition: each
-      * segment is read, inflated alone (full-flush start) and checked
-      * before the ordinary [[SheetScanner]] sees a byte of it
+    /** Sequential cell events over segments [s0, s1) of an indexed
+      * worksheet — the execution face of a segment-range InputPartition:
+      * each segment is read, inflated alone (full-flush start) and checked
+      * before the scanner sees a byte of it
       * ([[ParallelSheetScanner.SegmentStream]]). None when the index (or
       * the raw zip geometry) is unavailable — callers treat that as a
       * hard error, because re-reading the whole file in a RANGE
       * partition would duplicate rows, not merely slow down. */
-    private[xlsx] def segmentRangeRowIterator(path: String, s0: Int, s1: Int)
-        : Option[CellRowIterator] =
+    private[xlsx] def segmentRangeRows(path: String, s0: Int, s1: Int)
+        : Option[RowSource] =
       segmentIndexRaw(path).map { seg =>
         require(s0 >= 0 && s0 < s1 && s1 <= seg.segments,
           s"bad segment range [$s0,$s1) of ${seg.segments}")
         val in = new ParallelSheetScanner.SegmentStream(seg, s0, s1)
-        new SheetScanner(in, sharedStrings, dateStyles, () => in.close())
+        new SheetScanCore(in, dateStyles, () => in.close())
       }
 
-    /** Pull-based row iterator over one worksheet — the shape a Spark DSv2
-      * PartitionReader needs (next()/get() driven from the scan), so the
-      * sheet never has to be buffered in memory. Close() releases the zip
+    /** Pull-based [[XCell]] row iterator over one worksheet, so the sheet
+      * never has to be buffered in memory. Close() releases the zip
       * stream; exhausting the iterator also closes it.
       *
-      * Hot path is the byte-level [[SheetScanner]]; `threads >= 2` engages
-      * the chunked [[ParallelSheetScanner]] (the reference's `threads`
-      * knob: one big workbook parsed by N cores) through
-      * [[chunkingRowIterator]] with a transform that hands each chunk's rows
-      * back unchanged; UTF-16 workbooks transcode on the fly
-      * ([[Utf16ToUtf8Stream]]) and ride the same scanners. */
+      * `threads >= 2` engages the chunked [[ParallelSheetScanner]] (the
+      * reference's `threads` knob: one big workbook parsed by N cores)
+      * through [[chunkingRowIterator]], each worker keeping its chunk's
+      * rows; UTF-16 workbooks transcode on the fly ([[Utf16ToUtf8Stream]])
+      * and ride the same scanners. The shared strings resolve against
+      * [[sharedStrings]], decoded here first. */
     def rowIterator(path: String, threads: Int = 1): CellRowIterator =
       if (threads < 2) rows(path, sharedStrings)
-      else chunkingRowIterator(path, threads, (rows, _) => rows) match {
-        case Left(empty) => empty
-        case Right(sc) => new ParallelSheetScanner.ChunkRows(sc)
-      }
+      else chunkingRowIterator(path, threads,
+          ParallelSheetScanner.cellRows(sharedStrings, dateStyles))
+        .map(new ParallelSheetScanner.ChunkRows(_))
+        .getOrElse(CellRowIterator.empty)
 
-    /** Parallel scanner with a WORKER-side per-CHUNK transform — the
-      * columnar DSv2 reader passes its rows→ColumnarBatch builder here so
-      * whole batches materialize off the consumer thread. Right(parallel
-      * scanner, drive with advanceChunk) on the byte path, UTF-16 included
-      * (it transcodes onto the byte scanner); Left(the empty iterator of a
-      * missing worksheet entry). The shared-strings table is not decoded
-      * here: the scanner's first worker decodes it while the producer
-      * starts inflating the sheet. */
+    /** Parallel scanner with a WORKER-side per-CHUNK `parse` — the
+      * columnar DSv2 reader passes its [[ColumnChunk]] scan here, so whole
+      * batches materialize off the consumer thread. Drive it with
+      * advanceChunk; None for a missing worksheet entry. UTF-16 transcodes
+      * onto the byte scanner. */
     private[xlsx] def chunkingRowIterator(path: String, threads: Int,
-        chunkConvert: (Array[Array[XCell]], Int) => AnyRef,
+        parse: (Array[Byte], Int, Int) => ParsedChunk,
         dropFirstRows: Long = 0L,
-        chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Either[CellRowIterator, ParallelSheetScanner] = {
-      segmentIndexFor(path, threads).foreach { seg =>
-        return Right(new ParallelSheetScanner(null, () => sharedStrings,
-          dateStyles, threads, () => (), chunkConvert, chunkBytes,
-          dropFirstRows, segmented = seg))
+        chunkBytes: Int = ParallelSheetScanner.DefaultChunkBytes): Option[ParallelSheetScanner] =
+      segmentIndexFor(path, threads) match {
+        case Some(seg) =>
+          Some(new ParallelSheetScanner(null, threads, () => (), parse,
+            chunkBytes, dropFirstRows, segmented = seg))
+        case None =>
+          openSniffed(path).map { case (in, closeAll) =>
+            new ParallelSheetScanner(in, threads, closeAll, parse, chunkBytes,
+              dropFirstRows)
+          }
       }
-      openSniffed(path) match {
-        case Left(it) => Left(it)
-        case Right((in, closeAll)) =>
-          Right(new ParallelSheetScanner(in, () => sharedStrings, dateStyles,
-            threads, closeAll, chunkConvert, chunkBytes, dropFirstRows))
-      }
-    }
 
     /** Raw inflated entry stream for throughput probes (graft.tools). */
     def entryStreamForProbe(path: String): (InputStream, () => Unit) =
@@ -433,8 +437,17 @@ object XlsxParser {
       }
 
     /** Open the zip and position the raw inflated byte stream at entry
-      * `name`; the thunk closes the zip stream. None if absent. */
-    private[xlsx] def openEntryStream(name: String): Option[(InputStream, () => Unit)] =
+      * `name`; the thunk closes the zip stream. None if absent.
+      *
+      * `checked` (the worksheet scans): a local file's entry stream checks
+      * the entry's CRC-32 at its end and names the file and entry in any
+      * inflate failure ([[CheckedEntryStream]]) — `ZipFile` checks
+      * neither, so a flipped byte that keeps the XML well formed would read
+      * as wrong values. The object-store path needs no wrapper:
+      * `ZipInputStream` checks the CRC-32 itself once a scan reads the
+      * entry to its end, which every full scan does. */
+    private[xlsx] def openEntryStream(name: String,
+        checked: Boolean = false): Option[(InputStream, () => Unit)] =
       localFile match {
         case Some(f) =>
           val zf =
@@ -448,7 +461,13 @@ object XlsxParser {
           Option(zf.getEntry(name)) match {
             case None => zf.close(); None
             case Some(e) =>
-              val s = zf.getInputStream(e)
+              val s =
+                try {
+                  val raw = zf.getInputStream(e)
+                  if (checked && e.getCrc != -1)
+                    new CheckedEntryStream(raw, e.getCrc, s"${f.getPath}: worksheet $name")
+                  else raw
+                } catch { case t: Throwable => zf.close(); throw t }
               Some((s, () => { try s.close() finally zf.close() }))
           }
         case None =>
@@ -472,6 +491,39 @@ object XlsxParser {
       i += 1
     }
     None
+  }
+
+  /** An entry stream whose bytes are checked against the entry's CRC-32
+    * when it ends; a mismatch, and any inflate failure on the way, fails
+    * with `<what> is corrupt: …`. */
+  private final class CheckedEntryStream(in: InputStream, crc32: Long, what: String)
+      extends InputStream {
+    private val crc = new java.util.zip.CRC32
+    private var ended = false
+    private def corrupt(why: String, cause: Throwable = null) =
+      new java.io.IOException(s"$what is corrupt: $why", cause)
+
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n =
+        try in.read(b, off, len)
+        catch {
+          case e @ (_: java.util.zip.ZipException | _: java.io.EOFException) =>
+            throw corrupt(String.valueOf(e.getMessage), e)
+        }
+      if (n > 0) crc.update(b, off, n)
+      else if (n < 0 && !ended) {
+        ended = true
+        if (crc.getValue != crc32) throw corrupt("CRC-32 mismatch")
+      }
+      n
+    }
+
+    override def close(): Unit = in.close()
   }
 
   /** StAX close() would close the whole zip stream; shield it. */

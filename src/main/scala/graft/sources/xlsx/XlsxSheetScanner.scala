@@ -4,10 +4,11 @@ import java.io.InputStream
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
-/** Pull iterator over worksheet rows — the contract a DSv2 PartitionReader
-  * drives. Implemented by the byte-level [[SheetScanner]], the chunked
-  * [[ParallelSheetScanner]]'s row adapter and the ods `OdsParser`; UTF-16
-  * sheets transcode onto the byte scanner. */
+/** Pull iterator over worksheet rows as [[XCell]]s — the face of the schema
+  * probe, the row-level specs and the ods `OdsParser`. Implemented by the
+  * byte-level [[SheetScanner]], the chunked [[ParallelSheetScanner]]'s row
+  * adapter and `OdsParser`; UTF-16 sheets transcode onto the byte scanner.
+  * A scan reads its columns through [[RowSource]] instead. */
 trait CellRowIterator extends Iterator[(Long, Array[XCell])] with AutoCloseable
 
 object CellRowIterator {
@@ -16,6 +17,76 @@ object CellRowIterator {
     override def hasNext: Boolean = false
     override def next(): (Long, Array[XCell]) = throw new NoSuchElementException
     override def close(): Unit = ()
+  }
+}
+
+/** The typed cell events of a worksheet scan, in document order: a row
+  * opens, its cells' values arrive, the row closes. Columns are 0-based
+  * sheet positions. The sinks are the column chunk ([[ColumnChunk]]), where
+  * a scan's values go, and the [[XCell]] row of [[SheetScanner]]. */
+trait CellSink {
+  /** A `<row>` opens: the cells seen since the last row end are void. */
+  def rowStart(): Unit
+  /** Whether the value of column `col` is used. When it is not, the value
+    * is not decoded; the cell still widens its row. */
+  def wants(col: Int): Boolean
+  def number(col: Int, v: Double): Unit
+  /** A number in a date-formatted cell: an Excel date serial. */
+  def date(col: Int, serial: Double): Unit
+  def bool(col: Int, v: Boolean): Unit
+  /** A shared-string cell: its index into the table, which may lie past
+    * the table's end (an error cell then). */
+  def shared(col: Int, id: Int): Unit
+  /** An inline or formula string, as UTF-8 bytes valid during the call. */
+  def text(col: Int, b: Array[Byte], off: Int, len: Int): Unit
+  /** An error cell, or a value that does not parse as its type. */
+  def error(col: Int): Unit
+  /** A row closes: its 0-based index, whether it carried `r="N"`, its
+    * width (one past its last cell) and how many cells it held. */
+  def rowEnd(idx: Long, explicit: Boolean, width: Int, cells: Int): Unit
+}
+
+/** Rows of one worksheet, scanned one at a time into a sink on the calling
+  * thread — the sequential face of a scan. */
+trait RowSource extends AutoCloseable {
+  /** Scans the next row into `sink`; false at the end of the rows. */
+  def nextRow(sink: CellSink): Boolean
+}
+
+object RowSource {
+  /** The rows of a missing worksheet entry. */
+  val empty: RowSource = new RowSource {
+    override def nextRow(sink: CellSink): Boolean = false
+    override def close(): Unit = ()
+  }
+
+  /** The rows of an [[XCell]] producer (ods), replayed as cell events. */
+  def of(rows: CellRowIterator): RowSource = new RowSource {
+    override def nextRow(sink: CellSink): Boolean = rows.hasNext && {
+      val (idx, cells) = rows.next()
+      sink.rowStart()
+      var held = 0
+      var c = 0
+      while (c < cells.length) {
+        val cell = cells(c)
+        if (cell != XCell.XNone) {
+          held += 1
+          if (sink.wants(c)) cell match {
+            case XCell.XString(s) =>
+              val b = s.getBytes(StandardCharsets.UTF_8)
+              sink.text(c, b, 0, b.length)
+            case XCell.XNumber(d) => sink.number(c, d)
+            case XCell.XDate(d) => sink.date(c, d)
+            case XCell.XBool(b) => sink.bool(c, b)
+            case _ => sink.error(c)
+          }
+        }
+        c += 1
+      }
+      sink.rowEnd(idx, false, cells.length, held)
+      true
+    }
+    override def close(): Unit = rows.close()
   }
 }
 
@@ -28,30 +99,32 @@ object CellRowIterator {
   *   - bulk `memchr`-style scans for markup boundaries (text runs and
   *     inter-tag gaps are `System.arraycopy`/index loops, not per-event
   *     dispatch),
-  *   - zero per-cell allocation on the markup side (element/attribute names
-  *     and values are matched in place against reusable char buffers; the
-  *     only per-cell allocations left are the `XCell` itself and the one
-  *     `String` that `Double.parseDouble` requires),
-  *   - shared-string indices parsed digit-by-digit without a `String`.
+  *   - zero per-cell allocation: element/attribute names and values are
+  *     matched in place against reusable buffers, numbers parse to a
+  *     primitive `double` (only a form outside the fast path builds the
+  *     `String` that `Double.parseDouble` requires), text is unescaped in
+  *     place, and shared-string indices parse digit by digit,
+  *   - typed events into a [[CellSink]] instead of cell objects.
   *
-  * Semantics are identical to the StAX path (same `XCell` lattice, same
-  * error-cell → NULL rules, reference: src/sheetreader_extension.cpp:117-135):
-  * the property-roundtrip and edge-case specs in XlsxSourceSpec run through
-  * this scanner. Assumes an ASCII-compatible encoding (UTF-8 in practice —
-  * multi-byte text passes through untouched and is decoded at String
-  * construction); workbooks with a UTF-16 BOM transcode to UTF-8 upstream
-  * (Utf16ToUtf8Stream) and ride this same scanner.
+  * Semantics are identical to the StAX oracle (same cell lattice, same
+  * error-cell rules, reference: src/sheetreader_extension.cpp:117-135).
+  * Assumes an ASCII-compatible encoding (UTF-8 in practice — multi-byte
+  * text passes through untouched); workbooks with a UTF-16 BOM transcode to
+  * UTF-8 upstream (Utf16ToUtf8Stream) and ride this same scanner.
   */
-final class SheetScanner(
+final class SheetScanCore private (
     in: InputStream,
-    strings: Array[String],
+    private var buf: Array[Byte],
     dates: Array[Boolean],
     closeUnderlying: () => Unit)
-    extends CellRowIterator {
-  import SheetScanner._
+    extends RowSource {
+  import SheetScanCore._
+
+  /** A scanner over the whole stream `in`. */
+  def this(in: InputStream, dates: Array[Boolean], closeUnderlying: () => Unit) =
+    this(in, new Array[Byte](1 << 16), dates, closeUnderlying)
 
   // ---- buffered byte cursor -----------------------------------------------
-  private val buf = new Array[Byte](1 << 16)
   private var pos = 0
   private var lim = 0
   private var eofSeen = false
@@ -91,38 +164,31 @@ final class SheetScanner(
   private var curStyle = -1
 
   // parser state
+  private var sink: CellSink = _
   private var rowIdx = -1L
-  /** Whether the last emitted row carried an explicit r="N" attribute —
-    * chunked parallel parsing needs this to stitch implicit row indices
-    * across chunk boundaries (a chunk-local scanner counts from -1). */
-  private[xlsx] var lastRowExplicit = false
-  private val cells = new ArrayBuffer[XCell]()
+  private var rowExplicit = false
+  private var width = 0 // one past the last cell column of the current row
+  private var rowCells = 0
   private var inV = false
   private var inIs = false
   private var inT = false
-
-  // ---- iterator plumbing --------------------------------------------------
-  private var nextRow: (Long, Array[XCell]) = _
+  private var numOk = false // did the last parseNumber succeed
   private var closed = false
 
-  override def hasNext: Boolean = {
-    if (nextRow != null) return true
-    if (closed) return false
-    nextRow = advance()
-    if (nextRow == null) { close(); false } else true
-  }
-
-  override def next(): (Long, Array[XCell]) = {
-    if (!hasNext) throw new NoSuchElementException
-    val r = nextRow; nextRow = null; r
-  }
+  override def nextRow(s: CellSink): Boolean =
+    !closed && {
+      sink = s
+      val more = advance()
+      if (!more) close()
+      more
+    }
 
   override def close(): Unit = if (!closed) { closed = true; closeUnderlying() }
 
   // ---- core state machine -------------------------------------------------
 
-  /** Parse forward to the next complete </row>; null at end of entry. */
-  private def advance(): (Long, Array[XCell]) = {
+  /** Parse forward through the next complete </row>; false at end of entry. */
+  private def advance(): Boolean = {
     while (true) {
       if (inV || inT) {
         // collectText consumes the run AND the markup that ended it
@@ -135,21 +201,19 @@ final class SheetScanner(
           var d = delim
           while (d != -1 && d != '>') d = rb()
           if (nmLen == 1 && nm(0) == 'v') { inV = false; endValue() }
-          else if (nameIs("is")) {
-            inIs = false; inT = false
-            setCell(XCell.XString(takeString()))
-          } else if (nameIs("row")) return (rowIdx, cells.toArray)
+          else if (nameIs("is")) { inIs = false; inT = false; endInline() }
+          else if (nameIs("row")) { endRow(); return true }
         } else if (b == '!') handleBang()
         else if (b == '?') skipPi()
-        else if (b == -1) return null
+        else if (b == -1) return false
         else {
           readName(b)
           if (nmLen == 1 && nm(0) == 'c') {
             aCol = -1; aType = TNum; aStyle = -1
             parseAttrs(ElemC)
-            curCol = if (aCol >= 0) aCol else cells.length
+            curCol = if (aCol >= 0) aCol else width
             curType = aType; curStyle = aStyle
-            // self-closing <c/>: styled empty cell → gap (XNone), nothing to do
+            // self-closing <c/>: styled empty cell → gap, nothing to do
           } else if (nmLen == 1 && nm(0) == 'v') {
             parseAttrs(ElemOther)
             txtLen = 0
@@ -157,22 +221,24 @@ final class SheetScanner(
           } else if (nameIs("row")) {
             aRow = -1L
             parseAttrs(ElemRow)
-            lastRowExplicit = aRow >= 1
+            rowExplicit = aRow >= 1
             rowIdx = if (aRow >= 1) aRow - 1 else rowIdx + 1
-            cells.clear()
-            if (selfClose) return (rowIdx, Array.empty[XCell])
+            width = 0
+            rowCells = 0
+            sink.rowStart()
+            if (selfClose) { endRow(); return true }
           } else if (nameIs("is")) {
             parseAttrs(ElemOther)
             txtLen = 0
-            if (selfClose) setCell(XCell.XString("")) else inIs = true
+            if (selfClose) endInline() else inIs = true
           } else if (inIs && nmLen == 1 && nm(0) == 't') {
             parseAttrs(ElemOther)
             if (!selfClose) inT = true
           } else parseAttrs(ElemOther) // unknown element: consume its tag
         }
-      } else return null // end of entry
+      } else return false // end of entry
     }
-    null // unreachable
+    false // unreachable
   }
 
   /** Bulk-skip bytes up to and past the next '<'. False at end of entry. */
@@ -223,7 +289,7 @@ final class SheetScanner(
       while (d != -1 && d != '>') d = rb()
       if (nmLen == 1 && nm(0) == 'v') { inV = false; endValue() }
       else if (inT && nmLen == 1 && nm(0) == 't') inT = false
-      else if (nameIs("is")) { inIs = false; inT = false; setCell(XCell.XString(takeString())) }
+      else if (nameIs("is")) { inIs = false; inT = false; endInline() }
     } else if (b != -1) {
       // unexpected child element inside text (e.g. rich-text markup):
       // consume its tag, keep collecting
@@ -418,17 +484,18 @@ final class SheetScanner(
     while (c != -1 && !(p1 == '?' && c == '>')) { p1 = c; c = rb() }
   }
 
-  // ---- cell materialization -----------------------------------------------
-  private def takeString(): String =
-    if (txtLen == 0) "" else new String(txt, 0, txtLen, StandardCharsets.UTF_8)
+  // ---- cell values --------------------------------------------------------
 
-  /** ASCII view of the text buffer with surrounding whitespace trimmed. */
-  private def takeAsciiTrimmed(): String = {
+  /** Whether the text buffer, whitespace-trimmed, reads as true: `1` or
+    * `true` in any case. */
+  private def isTrue(): Boolean = {
     var s = 0
     var e = txtLen
     while (s < e && (txt(s) & 0xff) <= ' ') s += 1
     while (e > s && (txt(e - 1) & 0xff) <= ' ') e -= 1
-    if (e == s) "" else new String(txt, s, e - s, StandardCharsets.US_ASCII)
+    if (e - s == 1) txt(s) == '1'
+    else e - s == 4 && (txt(s) | 0x20) == 't' && (txt(s + 1) | 0x20) == 'r' &&
+      (txt(s + 2) | 0x20) == 'u' && (txt(s + 3) | 0x20) == 'e'
   }
 
   /** Parse the text buffer as a non-negative shared-string index without
@@ -454,18 +521,20 @@ final class SheetScanner(
     if (neg) -v else v
   }
 
-  /** Parse the text buffer as a double. Fast path for plain decimal forms
-    * (sign, ≤15 significant digits, optional fraction): exact long
-    * mantissa scaled by one exact power-of-ten division — correctly
-    * rounded, hence bit-identical to Double.parseDouble (Clinger's safe
-    * range: mantissa < 2^53, |exponent| ≤ 22). Everything else (exponents,
-    * >15 digits, hex, NaN/Infinity) takes the JDK path. null = malformed. */
-  private def parseNumber(): java.lang.Double = {
+  /** Parse the text buffer as a double; `numOk` is false when it is
+    * malformed. Fast path for plain decimal forms (sign, ≤15 significant
+    * digits, optional fraction): exact long mantissa scaled by one exact
+    * power-of-ten division — correctly rounded, hence bit-identical to
+    * Double.parseDouble (Clinger's safe range: mantissa < 2^53, |exponent|
+    * ≤ 22). Everything else (exponents, >15 digits, hex, NaN/Infinity)
+    * takes the JDK path. */
+  private def parseNumber(): Double = {
+    numOk = false
     var s = 0
     var e = txtLen
     while (s < e && (txt(s) & 0xff) <= ' ') s += 1
     while (e > s && (txt(e - 1) & 0xff) <= ' ') e -= 1
-    if (s >= e) return null
+    if (s >= e) return 0.0
     var i = s
     var neg = false
     val c0 = txt(i)
@@ -485,46 +554,65 @@ final class SheetScanner(
       else plain = false
     }
     if (plain && digits > 0 && digits <= 15) {
-      val v = if (frac == 0) mant.toDouble else mant.toDouble / SheetScanner.Pow10(frac)
-      java.lang.Double.valueOf(if (neg) -v else v)
+      val v = if (frac == 0) mant.toDouble else mant.toDouble / Pow10(frac)
+      numOk = true
+      if (neg) -v else v
     } else
-      try java.lang.Double.valueOf(
-        new String(txt, s, e - s, StandardCharsets.US_ASCII))
-      catch { case _: NumberFormatException => null }
+      try {
+        val v = java.lang.Double.parseDouble(
+          new String(txt, s, e - s, StandardCharsets.US_ASCII))
+        numOk = true
+        v
+      } catch { case _: NumberFormatException => 0.0 }
   }
 
-  /** Materialize the finished <v>/<is> content as an XCell (same lattice and
-    * error rules as the StAX path / the reference). */
+  /** The column of the cell whose value just ended: the row widens to hold
+    * it. */
+  private def cellCol(): Int = {
+    val c = if (curCol < 0) width else curCol
+    if (c >= width) width = c + 1
+    rowCells += 1
+    c
+  }
+
+  /** Emit the finished <v> content as its cell type's event (same lattice
+    * and error rules as the StAX oracle and the reference). */
   private def endValue(): Unit = {
-    val cell: XCell = curType match {
+    val c = cellCol()
+    if (sink.wants(c)) curType match {
       case TShared =>
         val i = takeIndex()
-        if (i >= 0 && i < strings.length) XCell.XString(strings(i.toInt)) else XCell.XError
-      case TStr | TInline => XCell.XString(takeString())
-      case TBool =>
-        val s = takeAsciiTrimmed()
-        XCell.XBool(s == "1" || s.equalsIgnoreCase("true"))
-      case TErr => XCell.XError
+        if (i >= 0 && i <= Int.MaxValue) sink.shared(c, i.toInt) else sink.error(c)
+      case TStr | TInline => sink.text(c, txt, 0, txtLen)
+      case TBool => sink.bool(c, isTrue())
       case TNum =>
         val d = parseNumber()
-        if (d == null) XCell.XError
-        else if (curStyle >= 0 && curStyle < dates.length && dates(curStyle))
-          XCell.XDate(d.doubleValue())
-        else XCell.XNumber(d.doubleValue())
-      case _ => XCell.XError
+        if (!numOk) sink.error(c)
+        else if (curStyle >= 0 && curStyle < dates.length && dates(curStyle)) sink.date(c, d)
+        else sink.number(c, d)
+      case _ => sink.error(c) // t="e" and unknown types
     }
-    setCell(cell)
     txtLen = 0
   }
 
-  private def setCell(v: XCell): Unit = {
-    val c = if (curCol < 0) cells.length else curCol
-    while (cells.length <= c) cells += XCell.XNone
-    cells(c) = v
+  /** Emit the finished <is> content (an inline string). */
+  private def endInline(): Unit = {
+    val c = cellCol()
+    if (sink.wants(c)) sink.text(c, txt, 0, txtLen)
   }
+
+  private def endRow(): Unit = sink.rowEnd(rowIdx, rowExplicit, width, rowCells)
 }
 
-object SheetScanner {
+object SheetScanCore {
+  /** A scanner over `bytes[0, len)`, read in place: a parse worker's chunk. */
+  def over(bytes: Array[Byte], len: Int, dates: Array[Boolean]): SheetScanCore = {
+    val sc = new SheetScanCore(null, bytes, dates, () => ())
+    sc.lim = len
+    sc.eofSeen = true
+    sc
+  }
+
   /** Exact powers of ten up to 10^22 (the last exactly-representable one)
     * by iterative multiplication — every step's true product is
     * representable, so every entry is exact (math.pow only promises 1 ulp). */
@@ -548,6 +636,55 @@ object SheetScanner {
   private final val ElemRow = 0
   private final val ElemC = 1
   private final val ElemOther = -1
+}
+
+/** The worksheet's rows as [[XCell]]s: [[SheetScanCore]] writing into one
+  * row of cells, shared-string cells resolved against `strings` (an index
+  * past its end is an error cell). */
+final class SheetScanner private[xlsx] (core: SheetScanCore, strings: Array[String])
+    extends CellRowIterator {
+
+  def this(in: InputStream, strings: Array[String], dates: Array[Boolean],
+      closeUnderlying: () => Unit) =
+    this(new SheetScanCore(in, dates, closeUnderlying), strings)
+
+  private val cells = new ArrayBuffer[XCell]()
+  private var nextRow: (Long, Array[XCell]) = _
+  /** Whether the last row handed out carried an explicit r="N". */
+  private[xlsx] var lastRowExplicit = false
+
+  private val row = new CellSink {
+    private def put(c: Int, v: XCell): Unit = {
+      while (cells.length <= c) cells += XCell.XNone
+      cells(c) = v
+    }
+    override def rowStart(): Unit = cells.clear()
+    override def wants(col: Int): Boolean = true
+    override def number(col: Int, v: Double): Unit = put(col, XCell.XNumber(v))
+    override def date(col: Int, serial: Double): Unit = put(col, XCell.XDate(serial))
+    override def bool(col: Int, v: Boolean): Unit = put(col, XCell.XBool(v))
+    override def shared(col: Int, id: Int): Unit =
+      put(col, if (id < strings.length) XCell.XString(strings(id)) else XCell.XError)
+    override def text(col: Int, b: Array[Byte], off: Int, len: Int): Unit =
+      put(col, XCell.XString(
+        if (len == 0) "" else new String(b, off, len, StandardCharsets.UTF_8)))
+    override def error(col: Int): Unit = put(col, XCell.XError)
+    override def rowEnd(idx: Long, explicit: Boolean, width: Int, n: Int): Unit = {
+      nextRow = (idx, cells.toArray)
+      lastRowExplicit = explicit
+    }
+  }
+
+  override def hasNext: Boolean = nextRow != null || core.nextRow(row)
+
+  override def next(): (Long, Array[XCell]) = {
+    if (!hasNext) throw new NoSuchElementException
+    val r = nextRow
+    nextRow = null
+    r
+  }
+
+  override def close(): Unit = core.close()
 }
 
 /** Byte-level scanner for `xl/sharedStrings.xml` — the other hot entry of a
@@ -590,7 +727,24 @@ object SharedStringsScanner {
     * once the retained bytes would pass `maxBytes`; `out` then holds the
     * strings completed before that point, each at its table index. */
   def parseInto(in: InputStream, out: ArrayBuffer[String],
-      maxBytes: Long = DefaultMaxBytes, limit: Int = Int.MaxValue): Unit = {
+      maxBytes: Long = DefaultMaxBytes, limit: Int = Int.MaxValue): Unit =
+    scan(in, maxBytes, limit, (b, n) =>
+      out += (if (n == 0) "" else new String(b, 0, n, StandardCharsets.UTF_8)))
+
+  /** The whole table as one UTF-8 byte array per entry — a scan's string
+    * dictionary ([[SheetDictionary]]). Same scan, same budget. */
+  def parseBytes(in: InputStream, maxBytes: Long = DefaultMaxBytes): Array[Array[Byte]] = {
+    val out = ArrayBuffer[Array[Byte]]()
+    scan(in, maxBytes, Int.MaxValue, (b, n) =>
+      out += (if (n == 0) Array.emptyByteArray else java.util.Arrays.copyOf(b, n)))
+    out.toArray
+  }
+
+  /** The one table scan: `emit(bytes, length)` gets each entry's UTF-8
+    * bytes (valid during the call), in table order, up to `limit` of them. */
+  private def scan(in: InputStream, maxBytes: Long, limit: Int,
+      emit: (Array[Byte], Int) => Unit): Unit = {
+    var emitted = 0
     var retained = 0L
     // budget check on every accumulation, not just at </si>: ONE huge
     // string must hit the guard too (otherwise the buffer doubles
@@ -687,7 +841,7 @@ object SharedStringsScanner {
     }
 
     var b = rb()
-    while (b != -1 && out.length < limit) {
+    while (b != -1 && emitted < limit) {
       if (b == '<') {
         val c = rb()
         if (c == '/') {
@@ -700,8 +854,8 @@ object SharedStringsScanner {
             inSi = false
             retained += txtLen
             if (retained > maxBytes) throw new BudgetExceeded(maxBytes)
-            out += (if (txtLen == 0) ""
-                    else new String(txt, 0, txtLen, StandardCharsets.UTF_8))
+            emit(txt, txtLen)
+            emitted += 1
           }
         } else if (c == '!') {
           val d = rb()
@@ -725,7 +879,7 @@ object SharedStringsScanner {
         } else {
           readName(c)
           val selfClose = finishTag()
-          if (nameIs("si")) { inSi = true; txtLen = 0; if (selfClose) { inSi = false; out += "" } }
+          if (nameIs("si")) { inSi = true; txtLen = 0; if (selfClose) { inSi = false; emit(txt, 0); emitted += 1 } }
           else if (nameIs("t")) { if (inSi && !selfClose) inT = true }
           else if (nameIs("rPh") || nameIs("phoneticPr")) { if (!selfClose) phonetic += 1 }
         }

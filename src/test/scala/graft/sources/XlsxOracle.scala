@@ -10,8 +10,8 @@ import scala.collection.mutable.ArrayBuffer
 /** The scanner-free, vector-free reference path the fuzz and differential
   * specs compare the reader against: StAX rows and shared strings, and a
   * boxed cell conversion. None of it runs in a scan — the byte scanners
-  * and `XlsxPartitionReader.writeVector` do — so any divergence from it
-  * is a reader bug by definition. */
+  * and [[ColumnChunk]] do — so any divergence from it is a reader bug by
+  * definition. */
 object XlsxOracle {
   import XlsxParser.attr
 

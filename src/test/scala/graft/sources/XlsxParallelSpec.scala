@@ -4,6 +4,8 @@ import java.io.ByteArrayOutputStream
 
 import graft.SparkSpec
 
+import scala.jdk.CollectionConverters._
+
 /** Intra-file parallel parsing (the reference's `threads` knob): the chunked
   * ParallelSheetScanner must be row-for-row identical to the sequential
   * scanner, through both the Workbook API and the DSv2 `threads` option,
@@ -39,6 +41,12 @@ class XlsxParallelSpec extends SparkSpec {
     finally it.close()
   }
 
+  /** The live threads of xlsx pipelines (producer, prefetch, parse and
+    * deflate workers). */
+  private def xlsxThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t =>
+      t.isAlive && t.getName.startsWith("xlsx-")).toSet
+
   test("parallel scanner is row-identical to sequential on a 20k-row workbook") {
     val seq = drain(1)
     assert(seq.size == 20001) // header + 20k
@@ -61,17 +69,22 @@ class XlsxParallelSpec extends SparkSpec {
       () => new java.io.FileInputStream(file), Some(file))
     val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
     // tiny chunks force dozens of chunks through the chunk face; the
-    // transform runs in the workers and sees each chunk's parsed rows
-    val par = new ParallelSheetScanner(raw, () => wb.sharedStrings, wb.dateStyles,
-      threads = 3, closeAll, (rows, _) => rows.map(_.length),
+    // workers scan each chunk into five coerced string columns, so a row's
+    // non-null count is the number of cells its worker saw
+    val five = org.apache.spark.sql.types.StructType(Seq("id", "nm", "v", "d", "b")
+      .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType)))
+    val par = new ParallelSheetScanner(raw, threads = 3, closeAll,
+      new RowColumns(five, five, coerce = true).chunkParser(wb.dateStyles),
       chunkBytes = 32 << 10)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
     var chunks = 0
     try while (par.advanceChunk()) {
       chunks += 1
-      val conv = par.chunkBatch.asInstanceOf[Array[Int]]
+      val batch = par.chunk.asInstanceOf[ColumnChunk].batch(wb.sharedStringBytes())
+      assert(batch.numRows == par.chunkIdx.length)
       par.chunkIdx.indices.foreach { i =>
-        out += ((par.chunkIdx(i), conv(i), par.chunkWidths(i)))
+        val seen = (0 until 5).count(j => !batch.column(j).isNullAt(i))
+        out += ((par.chunkIdx(i), seen, par.chunkWidths(i)))
       }
     } finally par.close()
     val seq = drain(1)
@@ -137,19 +150,20 @@ class XlsxParallelSpec extends SparkSpec {
   test("early close terminates the worker pipeline") {
     val wb = new XlsxParser.Workbook(
       () => new java.io.FileInputStream(file), Some(file))
-    val before = Thread.activeCount()
+    val before = xlsxThreads()
     val it = wb.rowIterator("xl/worksheets/sheet1.xml", 4)
     assert(it.hasNext)
+    assert((xlsxThreads() -- before).nonEmpty) // the pipeline runs
     it.next()
     it.close() // mid-stream: producer + pool must die, stream must close
     // a second close is a no-op
     it.close()
     // give daemon threads a beat to exit
     val deadline = System.currentTimeMillis + 5000
-    while (Thread.activeCount() > before + 1 && System.currentTimeMillis < deadline)
+    while ((xlsxThreads() -- before).nonEmpty && System.currentTimeMillis < deadline)
       Thread.sleep(50)
-    assert(Thread.activeCount() <= before + 1,
-      s"worker threads leaked: ${Thread.activeCount()} > $before")
+    assert((xlsxThreads() -- before).isEmpty,
+      s"worker threads leaked: ${(xlsxThreads() -- before).map(_.getName)}")
   }
 
   test("ragged-wide row error propagates through the parallel reader") {
@@ -206,7 +220,7 @@ class XlsxParallelSpec extends SparkSpec {
         n
       }
     }
-    val before = Thread.activeCount()
+    val before = xlsxThreads()
     var closed = false
     val it = ParallelSheetScanner.rowIterator(failing, Array.empty,
       Array.empty, threads = 2, () => closed = true, chunkBytes = 16)
@@ -216,9 +230,104 @@ class XlsxParallelSpec extends SparkSpec {
     assert(msgs.contains("stream died"), msgs)
     assert(closed, "underlying close hook must run on failure")
     val deadline = System.currentTimeMillis + 5000
-    while (Thread.activeCount() > before + 1 && System.currentTimeMillis < deadline)
+    while ((xlsxThreads() -- before).nonEmpty && System.currentTimeMillis < deadline)
       Thread.sleep(50)
-    assert(Thread.activeCount() <= before + 1, "threads leaked after failure")
+    assert((xlsxThreads() -- before).isEmpty, "threads leaked after failure")
+  }
+
+  /** A workbook of `n` rows whose text cells are all shared strings: a
+    * table of `n` entries, then `n` rows of (shared string, number,
+    * shared string). */
+  private def sharedStringsWorkbook(n: Int): java.io.File = {
+    val sst = (0 until n).map(i => s"<si><t>text number $i</t></si>")
+      .mkString("""<sst xmlns="x">""", "", "</sst>")
+    val rows = (1 to n).map(i =>
+      s"""<row r="$i"><c r="A$i" t="s"><v>${i - 1}</v></c><c r="B$i"><v>$i.5</v></c>""" +
+        s"""<c r="C$i" t="s"><v>${(i * 7) % n}</v></c></row>""").mkString
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.ZipOutputStream(bos)
+    Seq(
+      "xl/workbook.xml" ->
+        """<workbook xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""",
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships><Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>""",
+      "xl/sharedStrings.xml" -> sst,
+      "xl/worksheets/sheet1.xml" -> s"<worksheet><sheetData>$rows</sheetData></worksheet>"
+    ).foreach { case (name, c) =>
+      z.putNextEntry(new java.util.zip.ZipEntry(name))
+      z.write(c.getBytes("UTF-8"))
+      z.closeEntry()
+    }
+    z.close()
+    val f = java.io.File.createTempFile("shared", ".xlsx")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, bos.toByteArray)
+    f
+  }
+
+  test("the scan's custom metrics reach BatchScanExec: table decode and " +
+      "chunk wait on the task thread, cells scanned") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val f = sharedStringsWorkbook(60000)
+    val df = spark.read.format("xlsx").option("threads", "2")
+      .load(f.getAbsolutePath)
+    assert(df.collect().length == 60000)
+    val plan = df.queryExecution.executedPlan
+    val scan = (plan +: plan.collect {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+    }).flatMap(_.collect { case b: BatchScanExec => b }).head
+    def metric(name: String): Long = scan.metrics(name).value
+    assert(scan.metrics.keySet.contains(XlsxScan.TableDecodeMs))
+    assert(metric(XlsxScan.CellsScanned) == 3L * 60000)
+    assert(metric(XlsxScan.TableDecodeMs) > 0)
+    assert(metric(XlsxScan.ChunkWaitMs) > 0)
+  }
+
+  /** Descriptors this process holds open on `f`. */
+  private def openFds(f: java.io.File): Int = {
+    val fds = new java.io.File("/proc/self/fd").listFiles()
+    if (fds == null) 0
+    else fds.count(fd => scala.util.Try(java.nio.file.Files.readSymbolicLink(fd.toPath))
+      .toOption.exists(_.toString == f.getCanonicalPath))
+  }
+
+  /** Waits for every `xlsx-*` thread not in `before` to end and every
+    * descriptor on `f` to close. */
+  private def assertTornDown(before: Set[Thread], f: java.io.File): Unit = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (((xlsxThreads() -- before).nonEmpty || openFds(f) > 0) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert((xlsxThreads() -- before).isEmpty, (xlsxThreads() -- before).map(_.getName))
+    assert(openFds(f) == 0, s"${openFds(f)} descriptors still open on $f")
+  }
+
+  test("a guard failure and a worker parse failure at threads 2 leave no " +
+      "xlsx thread and no open zip") {
+    val f = sharedStringsWorkbook(20000)
+    // the table guard, raised on the task thread while the workers scan
+    val before = xlsxThreads()
+    val e = intercept[Exception] {
+      spark.read.format("xlsx").option("threads", "2")
+        .option("max_shared_strings_bytes", "1000")
+        .load(f.getAbsolutePath).collect()
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(SharedStringsScanner.guardMessage(1000L))), e)
+    assertTornDown(before, f)
+    // a worker whose chunk parse fails: the cause surfaces, the scan ends
+    val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+    val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml", checked = true).get
+    val cols = new RowColumns(org.apache.spark.sql.types.StructType(Nil),
+      org.apache.spark.sql.types.StructType(Nil), false).chunkParser(wb.dateStyles)
+    val parsed = new java.util.concurrent.atomic.AtomicInteger()
+    val par = new ParallelSheetScanner(raw, threads = 2, closeAll,
+      (bytes, len, drop) =>
+        if (parsed.incrementAndGet() == 3) throw new IllegalStateException("chunk 3 failed")
+        else cols(bytes, len, drop),
+      chunkBytes = 16 << 10)
+    val e2 = intercept[IllegalStateException](while (par.advanceChunk()) ())
+    assert(e2.getMessage == "chunk 3 failed")
+    assertTornDown(before, f)
   }
 
   private def defaultOpts: XlsxOptions =

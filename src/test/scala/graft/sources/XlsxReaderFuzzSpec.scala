@@ -1,7 +1,5 @@
 package graft.sources.xlsx
 
-import java.io.ByteArrayInputStream
-
 import graft.SparkSpec
 import org.apache.spark.sql.types._
 
@@ -11,9 +9,11 @@ import scala.util.Random
   * random workbooks (comments, CDATA, entities, self-closing rows, implicit
   * row indices, bad shared-string refs) read through
   * `spark.read.format("xlsx")` — sequentially AND with tiny-chunk parallel
-  * parsing — must match an expected row set computed INDEPENDENTLY of the
-  * byte scanners and of the column-vector writer ([[XlsxOracle]]'s StAX
-  * rows and boxed `convert`, plus the reader's own resolve rules).
+  * parsing, whole and column-pruned, with and without coerceToString —
+  * must match an expected row set computed INDEPENDENTLY of the byte
+  * scanners and of the column chunks ([[SheetFuzz.oracleRows]]:
+  * [[XlsxOracle]]'s StAX rows and boxed `convert`, plus the reader's own
+  * resolve rules).
   * A workbook whose rows go ragged must raise the ragged error on every
   * path. This is the layer above XlsxScannerDifferentialSpec: it pins the
   * worker-side batch building, the producer's drop-dealing, index
@@ -22,39 +22,13 @@ import scala.util.Random
   */
 class XlsxReaderFuzzSpec extends SparkSpec {
 
-  /** Expected outcome, scanner-free: StAX rows + resolve + convert.
-    * Left(()) = the read must fail ragged; Right(rows-as-strings). */
-  private def expected(bytes: Array[Byte]): Either[Unit, Seq[Seq[String]]] = {
-    val wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
-    val opts = XlsxOptions.from(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-      java.util.Collections.emptyMap[String, String]()))
-    val resolved = XlsxSchema.resolve(wb, opts)
-    val rows = {
-      val it = XlsxOracle.rows(wb, "xl/worksheets/sheet1.xml")
-      try it.map(_._2).toList finally it.close()
-    }
-    val data = rows.drop(resolved.dropRows)
-    if (data.exists(_.length > resolved.baseWidth)) Left(())
-    else Right(data.map { cells =>
-      resolved.schema.fields.zipWithIndex.map { case (f, i) =>
-        val cell = if (i < cells.length) cells(i) else XCell.XNone
-        XlsxOracle.convert(cell, f.dataType, coerce = false) match {
-          case null => "∅"
-          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-          case d: java.lang.Double => d.toString
-          case b: java.lang.Boolean => b.toString
-          case days: java.lang.Integer if f.dataType == DateType =>
-            java.time.LocalDate.ofEpochDay(days.longValue).toString
-          case other => other.toString
-        }
-      }.toSeq
-    })
-  }
-
-  private def actual(path: String, extra: Map[String, String]): Seq[Seq[String]] = {
+  private def actual(path: String, extra: Map[String, String],
+      keep: Option[Seq[String]]): Seq[Seq[String]] = {
     var r = spark.read.format("xlsx")
     extra.foreach { case (k, v) => r = r.option(k, v) }
-    val df = r.load(path)
+    val all = r.load(path)
+    val df = keep.map(k => all.select(all.columns.filter(k.contains).map(all.col).toIndexedSeq: _*))
+      .getOrElse(all)
     val fields = df.schema.fields
     df.collect().toSeq.map { row =>
       fields.zipWithIndex.map { case (f, i) =>
@@ -79,15 +53,22 @@ class XlsxReaderFuzzSpec extends SparkSpec {
       val f = java.io.File.createTempFile("readerfuzz", ".xlsx")
       f.deleteOnExit()
       java.nio.file.Files.write(f.toPath, bytes)
+      val coerce = Map("coerceToString" -> (trial % 2 == 0).toString)
       val variants = Seq(
         Map("threads" -> "1"),
         Map("threads" -> "3", "chunkBytes" -> "64"),
-        Map("threads" -> "2", "chunkBytes" -> "193")) // prime: cuts mid-everything
-      expected(bytes) match {
+        Map("threads" -> "2", "chunkBytes" -> "193"), // prime: cuts mid-everything
+        Map("threads" -> "2", "chunkBytes" -> "48")).map(_ ++ coerce)
+      // every other column, when the trial reads a pruned scan
+      val keep =
+        if (trial % 3 != 0) None
+        else Some(spark.read.format("xlsx").options(coerce).load(f.getAbsolutePath)
+          .columns.toSeq.zipWithIndex.collect { case (n, i) if i % 2 == 0 => n })
+      SheetFuzz.oracleRows(bytes, coerce, keep) match {
         case Left(()) =>
           raggedTrials += 1
           variants.foreach { v =>
-            val e = intercept[Exception] { actual(f.getAbsolutePath, v) }
+            val e = intercept[Exception] { actual(f.getAbsolutePath, v, keep) }
             val msgs = Iterator.iterate(e: Throwable)(_.getCause)
               .takeWhile(_ != null)
               .map(t => Option(t.getMessage).getOrElse("")).mkString("; ")
@@ -96,7 +77,7 @@ class XlsxReaderFuzzSpec extends SparkSpec {
           }
         case Right(want) =>
           variants.foreach { v =>
-            val got = actual(f.getAbsolutePath, v)
+            val got = actual(f.getAbsolutePath, v, keep)
             assert(got.sortBy(_.mkString(" ")) == want.sortBy(_.mkString(" ")),
               s"trial $trial $v diverged\nsheet:\n$sheet\ngot: $got\nwant: $want")
           }

@@ -52,6 +52,83 @@ object SheetFuzz {
     "xl/styles.xml" -> stylesXml,
     "xl/worksheets/sheet1.xml" -> sheet)
 
+  /** The expected rows of `bytes` under `kv` options, scanner-free:
+    * StAX rows, the reader's resolve rules and the oracle's boxed
+    * conversion, limited to the `keep` columns (None: all of them).
+    * Left(()) = the read must fail ragged. */
+  def oracleRows(bytes: Array[Byte], kv: Map[String, String],
+      keep: Option[Seq[String]] = None): Either[Unit, Seq[Seq[String]]] = {
+    val wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+    val opts = XlsxOptions.from(new CaseInsensitiveStringMap(kv.asJava))
+    val resolved = XlsxSchema.resolve(wb, opts)
+    val rows = {
+      val it = XlsxOracle.rows(wb, "xl/worksheets/sheet1.xml")
+      try it.map(_._2).toList finally it.close()
+    }
+    val data = rows.drop(resolved.dropRows)
+    val fields = resolved.schema.fields.zipWithIndex
+      .filter { case (f, _) => keep.forall(_.contains(f.name)) }
+    if (data.exists(_.length > resolved.baseWidth)) Left(())
+    else Right(data.map { cells =>
+      fields.map { case (f, i) =>
+        val cell = if (i < cells.length) cells(i) else XCell.XNone
+        XlsxOracle.convert(cell, f.dataType, opts.coerceToString) match {
+          case null => "∅"
+          case days: java.lang.Integer if f.dataType == org.apache.spark.sql.types.DateType =>
+            java.time.LocalDate.ofEpochDay(days.longValue).toString
+          case v => v.toString
+        }
+      }.toSeq
+    })
+  }
+
+  /** The rows the columnar reader gives for `path` under `kv` options,
+    * read the way a DSv2 task reads them — through
+    * [[XlsxColumnarPartitionReader]] with `threads` workers, over each of
+    * `ranges` in turn (segment-range partitions) or the whole sheet —
+    * limited to the `keep` columns. `onBatch` sees every batch. */
+  def columnarRows(path: String, kv: Map[String, String], threads: Int,
+      keep: Option[Seq[String]] = None, ranges: Seq[Option[SegRange]] = Seq(None),
+      onBatch: org.apache.spark.sql.vectorized.ColumnarBatch => Unit = _ => ())
+      : Seq[Seq[String]] = {
+    import org.apache.spark.sql.types._
+    val opts = XlsxOptions.from(new CaseInsensitiveStringMap(kv.asJava))
+    val full = XlsxSchema.resolve(
+      XlsxDataSource.workbook(path, XlsxDataSource.hadoopConf()), opts).schema
+    val req = StructType(full.fields.filter(f => keep.forall(_.contains(f.name))))
+    ranges.flatMap { range =>
+      val r = new XlsxColumnarPartitionReader(path, None, full, req, opts,
+        XlsxDataSource.captureConf(), threads, range)
+      val out = ArrayBuffer[Seq[String]]()
+      try while (r.next()) {
+        val b = r.get()
+        onBatch(b)
+        (0 until b.numRows).foreach { i =>
+          out += req.fields.indices.map { j =>
+            val v = b.column(j)
+            if (v.isNullAt(i)) "∅"
+            else req.fields(j).dataType match {
+              case StringType => v.getUTF8String(i).toString
+              case DoubleType => v.getDouble(i).toString
+              case BooleanType => v.getBoolean(i).toString
+              case DateType => java.time.LocalDate.ofEpochDay(v.getInt(i).toLong).toString
+              case other => s"?$other"
+            }
+          }
+        }
+      } finally r.close()
+      out
+    }
+  }
+
+  /** A table of `n` distinct strings `s0 … s(n-1)`. */
+  def table(n: Int): String =
+    (0 until n).map(i => s"<si><t>s$i</t></si>").mkString("<sst>", "", "</sst>")
+
+  /** A scan that keeps no column: its chunks only count rows. */
+  val noColumns = new RowColumns(
+    org.apache.spark.sql.types.StructType(Nil), org.apache.spark.sql.types.StructType(Nil), false)
+
   def randomSheet(rnd: Random): String = {
     val sb = new StringBuilder
     def ws(): String = " " * rnd.nextInt(3) + (if (rnd.nextInt(4) == 0) "\n" else "")
@@ -196,19 +273,19 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
 
         // the chunk face as the columnar DSv2 reader drives it: stitched
         // indices, widths, and the producer's dealing of a leading-row
-        // drop, counted by a worker-side transform
+        // drop, counted by the worker-side column chunks
         Seq(0, 2).foreach { drop =>
           val wb4 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
           val par = wb4.chunkingRowIterator("xl/worksheets/sheet1.xml",
-            threads = 3, (rows, dropFirst) => Integer.valueOf(rows.length - dropFirst),
-            dropFirstRows = drop.toLong, chunkBytes = cb).toOption.get
+            threads = 3, SheetFuzz.noColumns.chunkParser(wb4.dateStyles),
+            dropFirstRows = drop.toLong, chunkBytes = cb).get
           val idx = Seq.newBuilder[Long]
           val widths = Seq.newBuilder[Int]
           var kept, dropped = 0
           try while (par.advanceChunk()) {
             idx ++= par.chunkIdx
             widths ++= par.chunkWidths
-            kept += par.chunkBatch.asInstanceOf[Integer].intValue
+            kept += par.chunk.asInstanceOf[ColumnChunk].stored
             dropped += par.chunkDropped
           } finally par.close()
           val expDropped = math.min(drop, stax.size)
@@ -279,10 +356,6 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
   private def prefixResolve(wb: XlsxParser.Workbook,
       o: XlsxOptions): Either[String, XlsxSchema.Resolved] =
     Try(XlsxSchema.resolve(wb, o)).toEither.left.map(_.getMessage)
-
-  /** A table of `n` distinct strings `s0 … s(n-1)`. */
-  private def table(n: Int): String =
-    (0 until n).map(i => s"<si><t>s$i</t></si>").mkString("<sst>", "", "</sst>")
 
   private def workbook(sheet: String, sst: Option[Array[Byte]]): XlsxParser.Workbook = {
     val bos = new ByteArrayOutputStream()
@@ -370,5 +443,179 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
     assert(names(check(sheet(s(0) + num), None)) == Seq("String0", "Numeric1"))
     assert(names(check(sheet("""<c t="inlineStr"><is><t>h</t></is></c>""", num),
       None)) == Seq("h"))
+  }
+}
+
+/** The columnar scan — scanner events written straight into column chunks,
+  * shared-string cells as dictionary ids resolved on the task thread —
+  * against the scanner-free oracle ([[SheetFuzz.oracleRows]]): sequential
+  * batches, parse workers with chunks small enough to split a table's
+  * users across many chunks, segmented workers and segment-range
+  * partitions. */
+class XlsxColumnChunkDifferentialSpec extends AnyFunSuite {
+  import SheetFuzz._
+
+  private def tempFile(bytes: Array[Byte]): String = {
+    val f = java.io.File.createTempFile("chunkdiff", ".xlsx")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, bytes)
+    f.getAbsolutePath
+  }
+
+  private def ragged(read: => Any): String =
+    Try(read).failed.toOption.map(e => Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("; "))
+      .getOrElse("no error")
+
+  /** Compares every read variant of `bytes` with the oracle. */
+  private def check(what: String, bytes: Array[Byte], kv: Map[String, String],
+      keep: Option[Seq[String]], variants: Seq[(Int, Int)]): Unit = {
+    val path = tempFile(bytes)
+    val want = Try(oracleRows(bytes, kv, keep))
+    variants.foreach { case (threads, chunkBytes) =>
+      val o = kv + ("chunkBytes" -> chunkBytes.toString)
+      want match {
+        case scala.util.Failure(e) => // an unresolvable sheet fails alike
+          assert(Try(columnarRows(path, o, threads, keep)).failed.map(_.getMessage)
+            .toOption.contains(e.getMessage), s"$what t=$threads")
+        case scala.util.Success(Left(())) =>
+          val msg = ragged(columnarRows(path, o, threads, keep))
+          assert(msg.contains("more columns"), s"$what t=$threads cb=$chunkBytes: $msg")
+        case scala.util.Success(Right(rows)) =>
+          val got = columnarRows(path, o, threads, keep)
+          assert(got == rows, s"$what t=$threads cb=$chunkBytes $kv keep=$keep\n" +
+            s"got: $got\nwant: $rows")
+      }
+    }
+  }
+
+  test("column chunks match the oracle on 150 random sheets, whole and " +
+      "pruned, with and without coerceToString, sequential and chunked") {
+    val rnd = new Random(0xC011)
+    val big = table(XlsxParser.ProbeStrings + 6)
+    val remap = Map("0" -> "0", "1" -> "1023", "2" -> "1024", "3" -> "1029",
+      "4" -> "5000")
+    (1 to 150).foreach { trial =>
+      val sheet = randomSheet(rnd)
+      val kv = Map("coerceToString" -> rnd.nextBoolean().toString,
+        "skipRows" -> rnd.nextInt(2).toString)
+      // the fuzz table (indices 3 and 4 past its end), and a table big
+      // enough that ids reach past the schema probe's prefix
+      val remapped = """t="s"><v>(\d)</v>""".r.replaceAllIn(sheet,
+        m => s"""t="s"><v>${remap(m.group(1))}</v>""")
+      Seq(workbookZip(sheet),
+          zip("xl/workbook.xml" -> workbookXml, "xl/_rels/workbook.xml.rels" -> relsXml,
+            "xl/sharedStrings.xml" -> big, "xl/styles.xml" -> stylesXml,
+            "xl/worksheets/sheet1.xml" -> remapped)).foreach { bytes =>
+        val names = Try(XlsxSchema.resolve(new XlsxParser.Workbook(
+          () => new ByteArrayInputStream(bytes)),
+          XlsxOptions.from(new CaseInsensitiveStringMap(kv.asJava))).schema.fieldNames.toSeq)
+          .getOrElse(Seq.empty)
+        val everyOther = Some(names.zipWithIndex.collect { case (n, i) if i % 2 == 1 => n })
+        Seq(None, everyOther).foreach { keep =>
+          check(s"trial $trial\n$sheet\n", bytes, kv, keep,
+            Seq((1, 1 << 20), (2, 48), (2, 256), (3, 97)))
+        }
+      }
+    }
+  }
+
+  test("column chunks match the oracle on an indexed workbook: sequential, " +
+      "chunked, segmented workers and segment ranges") {
+    val rnd = new Random(0x5E6)
+    val texts = Seq("plain", "a&b<c>\"d\"", "日本語🎉", "", " padded ", "line\nbreak")
+    val data = (1 to 40000).iterator.map { i =>
+      Seq[Any](
+        if (i % 97 == 0) null else i.toLong,
+        rnd.nextInt(6) match {
+          case 0 => -0.0
+          case 1 => null
+          case _ => rnd.nextDouble() * 1e6 - 5e5
+        },
+        if (i % 13 == 0) null else texts(rnd.nextInt(texts.size)) + i % 50,
+        rnd.nextBoolean(),
+        java.time.LocalDate.ofEpochDay(-800L + rnd.nextInt(40000)))
+    }
+    val bos = new ByteArrayOutputStream()
+    XlsxWriter.write(bos, Seq(XlsxWriter.SheetSpec("S",
+      Some(Seq("id", "v", "s", "b", "d")), data)))
+    val bytes = bos.toByteArray
+    val path = tempFile(bytes)
+    val seg = XlsxDataSource.workbook(path, XlsxDataSource.hadoopConf())
+      .segmentIndexRaw("xl/worksheets/sheet1.xml").get
+    assert(seg.segments >= 3, s"${seg.segments} segments")
+    Seq(Map.empty[String, String], Map("skipRows" -> "3", "coerceToString" -> "true"))
+      .foreach { kv =>
+        Seq(None, Some(Seq("v", "s"))).foreach { keep =>
+          val want = oracleRows(bytes, kv, keep).toOption.get
+          Seq(1, 2, 3, 4).foreach { t =>
+            assert(columnarRows(path, kv, t, keep) == want, s"threads $t $kv $keep")
+          }
+          val ranges = (0 until seg.segments).map(k => Some(SegRange(k, k + 1, seg.rowsBefore(k))))
+          assert(columnarRows(path, kv, 1, keep, ranges) == want, s"ranges $kv $keep")
+        }
+      }
+  }
+
+  private def sheetOf(rows: String*): String =
+    rows.zipWithIndex.map { case (cells, i) => s"""<row r="${i + 1}">$cells</row>""" }
+      .mkString("<worksheet><sheetData>", "", "</sheetData></worksheet>")
+
+  private def dictionaryFlags(path: String, kv: Map[String, String], threads: Int,
+      col: Int): Seq[Boolean] = {
+    val flags = ArrayBuffer[Boolean]()
+    columnarRows(path, kv, threads, onBatch = b => flags += b.column(col)
+      .asInstanceOf[org.apache.spark.sql.execution.vectorized.WritableColumnVector].hasDictionary)
+    flags.toSeq
+  }
+
+  test("pinned: a mixed string column, -0.0, a pruned read, a header " +
+      "dropped inside chunk 0, dictionary and plain string columns") {
+    def inl(s: String) = s"""<c t="inlineStr"><is><t>$s</t></is></c>"""
+    def sh(i: Int) = s"""<c t="s"><v>$i</v></c>"""
+    def num(v: String) = s"""<c><v>$v</v></c>"""
+    val sheet = sheetOf(
+      inl("junk"),
+      inl("s") + inl("n"),
+      sh(0) + num("1"),
+      inl("in&amp;line") + num("-0.0"),
+      """<c t="str"><v>fx</v></c>""" + num("-0"),
+      num("2.5") + num("3"),
+      sh(7) + num("4"),
+      """<c t="b"><v>1</v></c>""" + num("5"),
+      sh(1) + """<c t="e"><v>#N/A</v></c>""")
+    val bytes = workbookZip(sheet) // fuzz table: alpha, beta, ""
+    val path = tempFile(bytes)
+    val plain = Map("skipRows" -> "1")
+    val coerced = plain + ("coerceToString" -> "true")
+    // id 7 is past the table's end; entry 1 is rich text "be" + "ta"
+    assert(oracleRows(bytes, plain) == Right(Seq(
+      Seq("alpha", "1.0"), Seq("in&line", "-0.0"), Seq("fx", "-0.0"),
+      Seq("∅", "3.0"), Seq("∅", "4.0"), Seq("∅", "5.0"), Seq("beta", "∅"))))
+    assert(oracleRows(bytes, coerced).toOption.get(3) == Seq("2.500000", "3.0"))
+    assert(oracleRows(bytes, coerced).toOption.get(5) == Seq("TRUE", "5.0"))
+    Seq(plain, coerced).foreach { kv =>
+      Seq(None, Some(Seq("n")), Some(Seq("s"))).foreach { keep =>
+        val want = oracleRows(bytes, kv, keep).toOption.get
+        Seq((1, 1 << 20), (2, 1 << 20), (2, 40), (3, 130)).foreach { case (t, cb) =>
+          assert(columnarRows(path, kv + ("chunkBytes" -> cb.toString), t, keep) == want,
+            s"t=$t cb=$cb $kv $keep")
+        }
+      }
+    }
+    // -0.0 keeps its sign bit
+    val negZero = columnarRows(path, plain, 2, Some(Seq("n")))
+    assert(negZero(1) == Seq("-0.0") && negZero(2) == Seq("-0.0"))
+    // one chunk: the junk row and the header are chunk 0's dropped rows
+    assert(columnarRows(path, plain + ("hasHeader" -> "true"), 2) ==
+      oracleRows(bytes, plain + ("hasHeader" -> "true")).toOption.get)
+    // shared-string cells make a dictionary column, at threads 1 and 2
+    assert(dictionaryFlags(path, plain, 1, 0) == Seq(true))
+    assert(dictionaryFlags(path, plain, 2, 0) == Seq(true))
+    // a string column of inline strings only is written plain
+    val inline = tempFile(workbookZip(sheetOf(inl("h"), inl("a"), inl("b"))))
+    assert(dictionaryFlags(inline, Map("hasHeader" -> "true"), 1, 0) == Seq(false))
+    assert(dictionaryFlags(inline, Map("hasHeader" -> "true"), 2, 0) == Seq(false))
+    assert(columnarRows(inline, Map("hasHeader" -> "true"), 2) == Seq(Seq("a"), Seq("b")))
   }
 }

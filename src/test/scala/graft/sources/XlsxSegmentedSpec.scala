@@ -104,13 +104,13 @@ class XlsxSegmentedSpec extends SparkSpec {
     // pick a drop that lands strictly inside a later segment
     val drop = rows / 2 + 137
     val got = wb.chunkingRowIterator("xl/worksheets/sheet1.xml", threads = 4,
-      (rs, df) => Integer.valueOf(rs.length - df),
+      SheetFuzz.noColumns.chunkParser(wb.dateStyles),
       dropFirstRows = drop.toLong)
-    val par = got.toOption.get
+    val par = got.get
     var kept = 0L
     var sawDropped = 0L
     while (par.advanceChunk()) {
-      kept += par.chunkBatch.asInstanceOf[Integer].intValue()
+      kept += par.chunk.asInstanceOf[ColumnChunk].stored
       sawDropped += par.chunkDropped
     }
     assert(kept == (rows + 1L) - drop, s"kept $kept")

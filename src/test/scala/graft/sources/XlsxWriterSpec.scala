@@ -247,8 +247,8 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
       Files.write(bad.toPath, copy)
       val named = s"$bad: worksheet $Sheet segment 2 is corrupt: "
       // segment-range read: the error comes before any row of the segment
-      val it = workbook(bad).segmentRangeRowIterator(Sheet, 2, 3).get
-      val e = intercept[java.io.IOException](it.hasNext)
+      val it = workbook(bad).segmentRangeRows(Sheet, 2, 3).get
+      val e = intercept[java.io.IOException](it.nextRow(SheetFuzz.noColumns.newChunk(0)))
       it.close()
       assert(e.getMessage.startsWith(named), e.getMessage)
       // the segmented parallel scan
