@@ -127,20 +127,21 @@ object XlsxDataSource {
       .map(e => e.getKey -> e.getValue).toArray)
   }
 
-  def workbook(path: String, conf: Configuration,
+  /** `conf` is built on the first `open()`, which only a workbook that is
+    * not a local file calls: local paths get `ZipFile` central-directory
+    * seeks instead of re-opened streams. */
+  def workbook(path: String, conf: => Configuration,
       maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes): XlsxParser.Workbook = {
-    // The open() thunk re-opens the stream per zip-entry family; capture
-    // only the path string so the workbook is usable on executors. Local
-    // paths additionally get ZipFile central-directory seeks.
     val uri = new Path(path).toUri
     val local =
       if (uri.getScheme == null || uri.getScheme == "file")
         Some(new java.io.File(uri.getPath)).filter(_.isFile)
       else None
+    lazy val hadoop = conf
     new XlsxParser.Workbook(() => {
       val p = new Path(path)
-      p.getFileSystem(conf).open(p)
-    }, local, maxSharedStringsBytes)
+      p.getFileSystem(hadoop).open(p)
+    }, local, maxSharedStringsBytes, path)
   }
 }
 
@@ -190,16 +191,19 @@ final class XlsxScan(
   override def toBatch: Batch = this
   override def description(): String = s"xlsx scan of ${paths.size} file(s)"
 
+  /** The session's Hadoop conf, captured once for planning and for every
+    * reader of the scan. */
+  private lazy val conf = XlsxDataSource.captureConf()
+
   override def planInputPartitions(): Array[InputPartition] =
-    XlsxScan.partitionsFor(paths, opts)
+    XlsxScan.partitionsFor(paths, opts, conf)
 
   override def supportedCustomMetrics(): Array[CustomMetric] = Array(
     new XlsxScan.TableDecodeMetric, new XlsxScan.ChunkWaitMetric,
     new XlsxScan.CellsMetric)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XlsxPartitionReaderFactory(fullSchema, required, opts,
-      XlsxDataSource.captureConf())
+    new XlsxPartitionReaderFactory(fullSchema, required, opts, conf)
 
   /** Streaming face: the same scan over files arriving in a directory —
     * each micro-batch is the set of not-yet-seen files (one partition per
@@ -254,9 +258,12 @@ object XlsxScan {
     * not data. Both paths return identical partitions in identical order
     * (spec-asserted). */
   def partitionsFor(paths: Seq[String], opts: XlsxOptions,
-      cutover: Int = DistributedEnumerationCutover): Array[InputPartition] =
-    assignThreads(
-      trySplitByIndex(rawPartitionsFor(paths, opts, cutover), opts), opts)
+      conf: => XlsxDataSource.ConfProps = XlsxDataSource.captureConf(),
+      cutover: Int = DistributedEnumerationCutover): Array[InputPartition] = {
+    lazy val captured = conf
+    assignThreads(trySplitByIndex(
+      rawPartitionsFor(paths, opts, captured, cutover), opts, captured), opts)
+  }
 
   /** DISTRIBUTED SINGLE-FILE SCAN: when the scan would under-parallelize
     * (fewer partitions than cores) and a workbook carries the graft
@@ -269,11 +276,10 @@ object XlsxScan {
     * reference's intra-file semantics verbatim (no split); foreign
     * workbooks (no index) keep the thread fan-out path. */
   private def trySplitByIndex(parts: Array[XlsxInputPartition],
-      opts: XlsxOptions): Array[XlsxInputPartition] = {
+      opts: XlsxOptions, conf: => XlsxDataSource.ConfProps): Array[XlsxInputPartition] = {
     if (opts.threads.nonEmpty || parts.isEmpty) return parts
     val cores = executorCores()
     if (parts.length >= cores) return parts
-    val conf = XlsxDataSource.captureConf()
     val metas: Array[Option[ParallelSheetScanner.SegmentIndex]] = parts.map { p =>
       try {
         val wb = XlsxDataSource.workbook(p.path, conf.toConf,
@@ -304,18 +310,18 @@ object XlsxScan {
   }
 
   private def rawPartitionsFor(paths: Seq[String], opts: XlsxOptions,
-      cutover: Int): Array[XlsxInputPartition] =
+      conf: => XlsxDataSource.ConfProps, cutover: Int): Array[XlsxInputPartition] =
     if (!opts.allSheets)
       paths.map(p => XlsxInputPartition(p)).toArray
     else {
-      val conf = XlsxDataSource.captureConf()
+      val props = conf // shipped with the distributed enumeration
       val spark = SparkSession.getActiveSession
       if (paths.size > cutover && spark.isDefined) {
         val sc = spark.get.sparkContext
         val nTasks = math.max(1, math.min(2000, paths.size / 64))
         sc.parallelize(paths, nTasks)
           .flatMap { p =>
-            val wb = XlsxDataSource.workbook(p, conf.toConf)
+            val wb = XlsxDataSource.workbook(p, props.toConf)
             wb.sheets.map(si => (p, si.name, si.target))
           }
           .collect() // partition-index order == paths order: deterministic
@@ -329,7 +335,7 @@ object XlsxScan {
           val futures = paths.map { p =>
             pool.submit(new java.util.concurrent.Callable[Seq[XlsxInputPartition]] {
               override def call(): Seq[XlsxInputPartition] = {
-                val wb = XlsxDataSource.workbook(p, conf.toConf)
+                val wb = XlsxDataSource.workbook(p, props.toConf)
                 wb.sheets.map(si =>
                   XlsxInputPartition(p, Some(SheetRef(si.name, si.target))))
               }
@@ -701,7 +707,48 @@ final class XlsxWriteBuilder(info: LogicalWriteInfo, opts: XlsxOptions,
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
       new XlsxBatchWrite(path, info.schema(), opts, doTruncate, format)
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      if (format.measured) XlsxWrite.metrics() else Array.empty
   }
+}
+
+object XlsxWrite {
+  // The write's task metrics, summed over tasks in the write node's SQL
+  // metrics: the sheet's deflate time on whichever thread ran it (Spark's
+  // task CPU time sees only the task thread), the task thread's wait for
+  // deflate results, and the sheet entry's XML and deflated bytes.
+  final val DeflateMs = "xlsxDeflateMs"
+  final val DeflateWaitMs = "xlsxDeflateWaitMs"
+  final val SheetXmlBytes = "xlsxSheetXmlBytes"
+  final val SheetDeflatedBytes = "xlsxSheetDeflatedBytes"
+
+  // Spark re-creates a metric from its class name: each needs its own
+  // no-argument class
+  final class DeflateMetric extends CustomSumMetric {
+    override def name(): String = DeflateMs
+    override def description(): String = "xlsx sheet deflate, all threads (ms)"
+  }
+  final class DeflateWaitMetric extends CustomSumMetric {
+    override def name(): String = DeflateWaitMs
+    override def description(): String = "xlsx task thread waiting for deflate (ms)"
+  }
+  final class XmlBytesMetric extends CustomSumMetric {
+    override def name(): String = SheetXmlBytes
+    override def description(): String = "xlsx sheet XML bytes"
+  }
+  final class DeflatedBytesMetric extends CustomSumMetric {
+    override def name(): String = SheetDeflatedBytes
+    override def description(): String = "xlsx sheet deflated bytes"
+  }
+
+  def metrics(): Array[CustomMetric] = Array(new DeflateMetric,
+    new DeflateWaitMetric, new XmlBytesMetric, new DeflatedBytesMetric)
+
+  def taskMetrics(s: SheetStats): Array[CustomTaskMetric] = Array(
+    XlsxScan.taskMetric(DeflateMs, s.deflateNs / 1000000L),
+    XlsxScan.taskMetric(DeflateWaitMs, s.waitNs / 1000000L),
+    XlsxScan.taskMetric(SheetXmlBytes, s.xmlBytes),
+    XlsxScan.taskMetric(SheetDeflatedBytes, s.deflatedBytes))
 }
 
 final class XlsxBatchWrite(path: String, schema: StructType, opts: XlsxOptions,
@@ -780,8 +827,23 @@ final class XlsxDataWriter(
           "string, double/float, int/long/short/byte, boolean, date)")
   }
 
+  private var finished = false
+
+  /** The rows, then the sheet's finish: the write task takes its last
+    * metrics between `writeAll` and `commit`, so they count the whole
+    * sheet only when it is finished here. */
+  override def writeAll(records: util.Iterator[InternalRow]): Unit = {
+    super.writeAll(records)
+    finish()
+  }
+
+  private def finish(): Unit = if (!finished) { finished = true; sheet.finish() }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    if (format.measured) XlsxWrite.taskMetrics(sheet.stats) else Array.empty
+
   override def commit(): WriterCommitMessage = {
-    sheet.finish()
+    finish()
     out.close()
     XlsxCommit(file.toString)
   }

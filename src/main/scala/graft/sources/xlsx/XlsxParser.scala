@@ -123,10 +123,14 @@ object XlsxParser {
     * prefix and the sheet for the schema probe, the whole shared-strings
     * table and the sheet for the scan), so direct seeks measurably cut
     * per-file overhead on multi-file scans. Object stores keep the
-    * streaming path. */
+    * streaming path.
+    *
+    * `path` names the workbook in the errors of the streaming path, as the
+    * local file's path names it in those of `ZipFile`. */
   final class Workbook(open: () => InputStream,
       localFile: Option[java.io.File] = None,
-      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes) {
+      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes,
+      path: String = "xlsx stream") {
 
     /** Sheets in workbook order: (name, worksheet part path). */
     lazy val sheets: Seq[SheetInfo] = {
@@ -437,7 +441,11 @@ object XlsxParser {
       }
 
     /** Open the zip and position the raw inflated byte stream at entry
-      * `name`; the thunk closes the zip stream. None if absent.
+      * `name`; the thunk closes the zip stream. None if absent. An archive
+      * that cannot be read as a zip — not one, truncated, or with a
+      * corrupt entry — fails with `<path>: not a readable zip archive (…)`
+      * on either path; on the streaming path also while the entry is read
+      * ([[NamedZipStream]]).
       *
       * `checked` (the worksheet scans): a local file's entry stream checks
       * the entry's CRC-32 at its end and names the file and entry in any
@@ -453,10 +461,7 @@ object XlsxParser {
           val zf =
             try new java.util.zip.ZipFile(f)
             catch { case e: java.util.zip.ZipException =>
-              val named = new java.util.zip.ZipException(
-                s"${f.getPath}: not a readable zip archive (${e.getMessage})")
-              named.initCause(e)
-              throw named
+              throw NamedZipStream.unreadable(f.getPath, e.getMessage, e)
             }
           Option(zf.getEntry(name)) match {
             case None => zf.close(); None
@@ -472,12 +477,16 @@ object XlsxParser {
           }
         case None =>
           val in = new ZipInputStream(open())
-          var e = in.getNextEntry
-          while (e != null) {
-            if (e.getName == name)
-              return Some((new NonClosingStream(in), () => in.close()))
-            e = in.getNextEntry
-          }
+          try {
+            var e = NamedZipStream.named(path)(in.getNextEntry)
+            if (e == null)
+              throw NamedZipStream.unreadable(path, "no zip entry found", null)
+            while (e != null) {
+              if (e.getName == name)
+                return Some((new NamedZipStream(in, path), () => in.close()))
+              e = NamedZipStream.named(path)(in.getNextEntry)
+            }
+          } catch { case t: Throwable => in.close(); throw t }
           in.close()
           None
       }
@@ -526,10 +535,29 @@ object XlsxParser {
     override def close(): Unit = in.close()
   }
 
-  /** StAX close() would close the whole zip stream; shield it. */
-  private final class NonClosingStream(in: InputStream) extends InputStream {
-    override def read(): Int = in.read()
-    override def read(b: Array[Byte], off: Int, len: Int): Int = in.read(b, off, len)
+  /** An entry of a `ZipInputStream`: names the archive in a read failure,
+    * and shields the zip stream from StAX's close(). */
+  private final class NamedZipStream(in: InputStream, path: String)
+      extends InputStream {
+    override def read(): Int = NamedZipStream.named(path)(in.read())
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      NamedZipStream.named(path)(in.read(b, off, len))
     override def close(): Unit = ()
+  }
+
+  private object NamedZipStream {
+    def unreadable(path: String, why: String, cause: Throwable): java.util.zip.ZipException = {
+      val e = new java.util.zip.ZipException(s"$path: not a readable zip archive ($why)")
+      e.initCause(cause)
+      e
+    }
+
+    /** `body`, its zip and end-of-stream failures named by `path`. */
+    def named[T](path: String)(body: => T): T =
+      try body
+      catch {
+        case e @ (_: java.util.zip.ZipException | _: java.io.EOFException) =>
+          throw unreadable(path, String.valueOf(e.getMessage), e)
+      }
   }
 }

@@ -12,6 +12,9 @@ import scala.collection.mutable.ArrayBuffer
   * write task, in files named `part-*.<extension>`. */
 trait SheetFormat extends Serializable {
   def extension: String
+  /** Whether its sheet writers measure their compression
+    * ([[SheetWriter.stats]]). */
+  def measured: Boolean = false
   /** `threads`: compression workers the sheet may run beside the calling
     * thread. A format that compresses inline ignores it. */
   def sheetWriter(out: OutputStream, sheetName: String,
@@ -27,6 +30,20 @@ trait SheetWriter {
   def addRow(values: Seq[Any]): Unit
   def finish(): Unit
   def abort(): Unit
+  /** The sheet's compression so far; zeros unless the format is
+    * [[SheetFormat.measured]]. */
+  def stats: SheetStats = SheetStats.Zero
+}
+
+/** A sheet writer's compression figures: deflate time summed over the
+  * sheet's segments on whichever thread ran them, the time the writing
+  * thread waited for deflate results, and the sheet entry's XML and
+  * deflated bytes. */
+final case class SheetStats(deflateNs: Long, waitNs: Long, xmlBytes: Long,
+    deflatedBytes: Long)
+
+object SheetStats {
+  val Zero: SheetStats = SheetStats(0L, 0L, 0L, 0L)
 }
 
 /** Minimal SpreadsheetML (.xlsx) writer — the sandbox-local way to produce
@@ -40,14 +57,15 @@ trait SheetWriter {
   * style index 1 (numFmtId 14) so readers tag them as dates.
   *
   * Rows are encoded as bytes into a segment buffer of about
-  * [[SegmentBytes]]; each full segment deflates on its own `Deflater`,
-  * inline or on a deflate worker, and segments reach the stream in order.
-  * Memory is therefore bounded by the segments in flight, about
-  * `(threads + 1) × SegmentBytes`, whatever the row count. The zip
+  * [[SegmentBytes]]; each full segment deflates at [[DeflateLevel]] on its
+  * own `Deflater`, inline or on a deflate worker, and segments reach the
+  * stream in order. Memory is therefore bounded by the segments in flight,
+  * about `(threads + 1) × SegmentBytes`, whatever the row count. The zip
   * records around the pre-deflated data come from [[ZipRaw]]'s encoders.
   */
 object XlsxWriter extends SheetFormat {
   val extension = "xlsx"
+  override val measured = true
   def sheetWriter(out: OutputStream, sheetName: String,
       header: Option[Seq[String]], threads: Int): SheetWriter =
     new StreamingWorkbookWriter(out, sheetName, header, threads)
@@ -68,8 +86,28 @@ object XlsxWriter extends SheetFormat {
     * no sequential inflate), foreign readers see a perfectly ordinary
     * deflate stream and ignore the extra part. The parquet row-group idea
     * applied inside a standards-valid xlsx. The same independence lets
-    * the writer deflate segments in parallel. */
-  val SegmentBytes: Int = 2 << 20
+    * the writer deflate segments in parallel. 1 MiB keeps the one deflate
+    * that runs after the last row short and the writer's buffers small;
+    * the reader takes its cuts from the index, so a workbook written with
+    * another segment size reads the same way. */
+  val SegmentBytes: Int = 1 << 20
+
+  /** The zlib level of every entry the writer deflates: the fastest level
+    * whose output stays within 10% of the default level 6's bytes on both
+    * measured sheets. One thread deflating each sheet in 2 MiB segments,
+    * minimum of 12 runs, OpenJDK 17 with the system zlib on a 4-core x86
+    * box:
+    *
+    * | sheet | level 6 | level 4 | level 2 | level 1 |
+    * |---|---|---|---|---|
+    * | graft-written, 30k rows, 8.2 MB of XML | 153 ms, 1.50 MB | 89 ms, +4.5% bytes | 67 ms, +15.1% | 63 ms, +23.0% |
+    * | Excel-style, 100k rows, 21.5 MB of XML | 434 ms, 3.58 MB | 215 ms, +5.6% | 171 ms, +18.6% | 157 ms, +29.3% |
+    *
+    * Level 3 writes +12.4% and +13.7% bytes, level 5 +0.8% and +0.7% at
+    * a cost between levels 4 and 6. Level 4 about halves the deflate CPU
+    * of level 6, and the first sheet inflates about as fast (18.2 against
+    * 17.9 ms). */
+  val DeflateLevel: Int = 4
 
   /** Magic + version prefix of the segment index entry. */
   val SegmentMagic: Long = 0x4752465453454731L // "GRFTSEG1"
@@ -127,6 +165,8 @@ object XlsxWriter extends SheetFormat {
     }
 
     def abort(): Unit = try sheet.abort() finally out.close()
+
+    override def stats: SheetStats = sheet.stats
   }
 
   private def staticParts(zip: ZipSink, sheetNames: Seq[String]): Unit = {
@@ -243,17 +283,19 @@ object XlsxWriter extends SheetFormat {
 
   // ---- the worksheet: encode → deflate → write --------------------------------
 
-  /** `bytes(0 until length)`: a deflated segment, and the CRC-32 of the XML
-    * it came from. */
+  /** `bytes(0 until length)`: a deflated segment, the CRC-32 of the XML
+    * it came from, and the nanoseconds its deflate and checksum took. */
   private final class Deflated(val bytes: Array[Byte], val length: Int,
-      val crc: Int)
+      val crc: Int, val ns: Long)
 
-  /** Deflate `in(0 until len)` on a fresh raw `Deflater` at the default
-    * level. A segment ends in a FULL_FLUSH (byte-aligned, nothing after it
-    * refers back into it), the `last` one in the stream's final block, so
-    * segments deflated apart concatenate into one valid deflate stream. */
+  /** Deflate `in(0 until len)` on a fresh raw `Deflater` at
+    * [[DeflateLevel]]. A segment ends in a FULL_FLUSH (byte-aligned, nothing
+    * after it refers back into it), the `last` one in the stream's final
+    * block, so segments deflated apart concatenate into one valid deflate
+    * stream. */
   private def deflateSegment(in: Array[Byte], len: Int, last: Boolean): Deflated = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    val t0 = System.nanoTime()
+    val d = new Deflater(DeflateLevel, true)
     try {
       d.setInput(in, 0, len)
       if (last) d.finish()
@@ -269,7 +311,7 @@ object XlsxWriter extends SheetFormat {
       }
       val crc = new CRC32
       crc.update(in, 0, len)
-      new Deflated(out, n, crc.getValue.toInt)
+      new Deflated(out, n, crc.getValue.toInt, System.nanoTime() - t0)
     } finally d.end()
   }
 
@@ -305,6 +347,8 @@ object XlsxWriter extends SheetFormat {
     private var compressed = 0L // deflate bytes written
     private var rows = 0L
     private var segmentRows = 0L // rows before the segment being encoded
+    private var deflateNs = 0L // over the segments written
+    private var waitNs = 0L
 
     zip.startEntry(path)
     enc.bytes(SheetOpen)
@@ -355,9 +399,16 @@ object XlsxWriter extends SheetFormat {
         enc.reset(if (spare.isEmpty) new Array[Byte](buf.length) else spare.poll())
     }
 
+    /** The sheet entry so far: deflate time and waits over the segments
+      * written, XML bytes handed to deflate, deflated bytes written. */
+    def stats: SheetStats = SheetStats(deflateNs, waitNs, uncompressed, compressed)
+
     private def writeHead(): Unit = {
       val p = inFlight.poll()
+      val t0 = System.nanoTime()
       val d = result(p.task)
+      waitNs += System.nanoTime() - t0
+      deflateNs += d.ns
       if (p.uStart > 0) cuts += Array(compressed, p.uStart, p.rowsBefore)
       zip.data(d)
       compressed += d.length

@@ -134,6 +134,67 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
     }
   }
 
+  /** `in(from until from + len)` deflated raw at `level` on a fresh
+    * `Deflater`, ending in FULL_FLUSH or, when `last`, in `finish`. */
+  private def deflated(level: Int, in: Array[Byte], from: Int, len: Int,
+      last: Boolean): Array[Byte] = {
+    val d = new Deflater(level, true)
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](64 << 10)
+    try {
+      d.setInput(in, from, len)
+      if (last) {
+        d.finish()
+        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      } else {
+        var n = buf.length
+        while (n == buf.length) {
+          n = d.deflate(buf, 0, buf.length, Deflater.FULL_FLUSH)
+          out.write(buf, 0, n)
+        }
+      }
+    } finally d.end()
+    out.toByteArray
+  }
+
+  private def rawBytes(f: File, offset: Long, len: Int): Array[Byte] = {
+    val raf = new RandomAccessFile(f, "r")
+    try {
+      val b = new Array[Byte](len)
+      raf.seek(offset)
+      raf.readFully(b)
+      b
+    } finally raf.close()
+  }
+
+  test("every segment is its XML deflated alone at level 4, ending in a " +
+      "FULL_FLUSH or, the last, in finish; every other entry in one finish") {
+    assert(XlsxWriter.DeflateLevel == 4)
+    val c = WriterGoldenData.Cases.last
+    val f = written(c, writers(2)._2)
+    val xml = entryBytes(f, Sheet)
+    val seg = workbook(f).segmentIndexRaw(Sheet).get
+    assert(seg.segments >= 3)
+    (0 until seg.segments).foreach { k =>
+      val start = seg.compressedStart(k)
+      val raw = rawBytes(f, seg.dataOffset + start,
+        (seg.compressedStart(k + 1) - start).toInt)
+      val want = deflated(4, xml, seg.uncompressedStart(k).toInt,
+        seg.uncompressedLength(k), last = k == seg.segments - 1)
+      assert(java.util.Arrays.equals(raw, want), s"segment $k")
+    }
+    val zf = new ZipFile(f)
+    val others = try zf.entries().asScala.map(_.getName).filter(_ != Sheet).toList
+      finally zf.close()
+    assert(others.contains(XlsxWriter.segmentIndexName(Sheet)))
+    others.foreach { name =>
+      val content = entryBytes(f, name)
+      val re = ZipRaw.locate(f, name).get
+      assert(java.util.Arrays.equals(rawBytes(f, re.dataOffset, re.compressedSize.toInt),
+        deflated(4, content, 0, content.length, last = true)), name)
+    }
+  }
+
   test("the archive reads through ZipFile, ZipInputStream and ZipRaw with " +
       "equal CRC and sizes, and again after Zip64Force.rewrite") {
     WriterGoldenData.Cases.foreach { c =>
@@ -306,6 +367,42 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
       .write.format("xlsx").mode("overwrite").save(dir)
     eventually(timeout(Span(5, Seconds)))(assert(deflateThreads.isEmpty))
     assert(spark.read.format("xlsx").load(dir).count() == 30000)
+  }
+
+  test("the write node's SQL metrics carry the sheet's deflate time on every " +
+      "thread and its XML and deflated bytes, equal to the central directory's") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_metrics_").toString
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // one partition on local[4]: AUTO deflates on 2 threads; rows of about
+    // 250 XML bytes make 5 segments
+    val write = try {
+      spark.range(0, 20000, 1, 1)
+        .select(col("id"), udf((i: Long) => s"row $i " + "abcdefghij" * 10)
+          .apply(col("id")).as("s"), (col("id") * 0.5).as("x"))
+        .write.format("xlsx").mode("overwrite").save(dir)
+      Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .flatMap(_.collect { case n if n.metrics.contains(XlsxWrite.DeflateMs) => n })
+        .next()
+    } finally spark.listenerManager.unregister(listener)
+    def metric(name: String): Long = write.metrics(name).value
+    val f = new File(dir).listFiles().filter(_.getName.endsWith(".xlsx")).head
+    val seg = workbook(f).segmentIndexRaw(Sheet).get
+    assert(seg.segments >= 3)
+    val zf = new ZipFile(f)
+    val entry = try zf.getEntry(Sheet) finally zf.close()
+    assert(metric(XlsxWrite.SheetXmlBytes) == entry.getSize)
+    assert(metric(XlsxWrite.SheetDeflatedBytes) == entry.getCompressedSize)
+    assert(metric(XlsxWrite.DeflateMs) > 0)
+    assert(write.metrics.contains(XlsxWrite.DeflateWaitMs))
   }
 
   /** `body` with the failing task's expected error logs switched off. */
