@@ -200,7 +200,8 @@ final class XlsxScan(
 
   override def supportedCustomMetrics(): Array[CustomMetric] = Array(
     new XlsxScan.TableDecodeMetric, new XlsxScan.ChunkWaitMetric,
-    new XlsxScan.CellsMetric)
+    new XlsxScan.CellsMetric, new XlsxScan.InflateMetric,
+    new XlsxScan.TrackMetric, new XlsxScan.ScanMetric)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XlsxPartitionReaderFactory(fullSchema, required, opts, conf)
@@ -217,10 +218,17 @@ final class XlsxScan(
 object XlsxScan {
   // The scan's task metrics, summed over tasks in BatchScanExec's SQL
   // metrics: the shared-strings decode and the wait for parse workers on
-  // the task thread, and the cells scanned.
+  // the task thread, the cells scanned, and the read's stages summed over
+  // every thread that ran them — inflate (the prefetch thread, the
+  // segment inflates, or a sequential scanner's refills), row-boundary
+  // tracking (the producer) and the scan (the parse workers, or the task
+  // thread with its refills excluded).
   final val TableDecodeMs = "xlsxTableDecodeMs"
   final val ChunkWaitMs = "xlsxChunkWaitMs"
   final val CellsScanned = "xlsxCellsScanned"
+  final val InflateMs = "xlsxInflateMs"
+  final val TrackMs = "xlsxTrackMs"
+  final val ScanMs = "xlsxScanMs"
 
   final class TableDecodeMetric extends CustomSumMetric {
     override def name(): String = TableDecodeMs
@@ -233,6 +241,18 @@ object XlsxScan {
   final class CellsMetric extends CustomSumMetric {
     override def name(): String = CellsScanned
     override def description(): String = "xlsx cells scanned"
+  }
+  final class InflateMetric extends CustomSumMetric {
+    override def name(): String = InflateMs
+    override def description(): String = "xlsx sheet inflate, all threads (ms)"
+  }
+  final class TrackMetric extends CustomSumMetric {
+    override def name(): String = TrackMs
+    override def description(): String = "xlsx row-boundary tracking (ms)"
+  }
+  final class ScanMetric extends CustomSumMetric {
+    override def name(): String = ScanMs
+    override def description(): String = "xlsx cell scan, all threads (ms)"
   }
 
   private[xlsx] def taskMetric(metric: String, v: Long): CustomTaskMetric =
@@ -563,11 +583,20 @@ final class RowBatchReader(rows: RowSource, dropRows: Long,
   private var current: ColumnarBatch = _
   /** Cells scanned so far. */
   var cells = 0L
+  /** Nanoseconds spent scanning rows into batches, the stream's reads
+    * excluded. */
+  var scanNs = 0L
+
+  /** Nanoseconds spent reading (inflating) the rows' stream. */
+  def readNs: Long = rows.readNs
 
   override def next(): Boolean = {
     val chunk = cols.newChunk(math.min(owed, Int.MaxValue).toInt, RowBatchReader.BatchRows)
+    val t0 = System.nanoTime()
+    val read0 = rows.readNs
     while (!chunk.full && rows.nextRow(chunk)) ()
     chunk.finish()
+    scanNs += System.nanoTime() - t0 - (rows.readNs - read0)
     owed -= chunk.dropped
     cells += chunk.cells
     XlsxPartitionReader.raggedCheck(chunk, baseWidth)
@@ -686,7 +715,13 @@ final class XlsxColumnarPartitionReader(
     XlsxScan.taskMetric(XlsxScan.TableDecodeMs, tableNs / 1000000L),
     XlsxScan.taskMetric(XlsxScan.ChunkWaitMs, waitNs / 1000000L),
     XlsxScan.taskMetric(XlsxScan.CellsScanned,
-      if (seq != null) seq.cells else chunkCells))
+      if (seq != null) seq.cells else chunkCells),
+    XlsxScan.taskMetric(XlsxScan.InflateMs,
+      (if (seq != null) seq.readNs else parIter.inflateNs) / 1000000L),
+    XlsxScan.taskMetric(XlsxScan.TrackMs,
+      (if (seq != null) 0L else parIter.trackNs) / 1000000L),
+    XlsxScan.taskMetric(XlsxScan.ScanMs,
+      (if (seq != null) seq.scanNs else parIter.scanNs) / 1000000L))
 
   override def close(): Unit =
     if (seq != null) seq.close() else parIter.close()

@@ -4,6 +4,7 @@ import java.io.InputStream
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
 import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import java.util.zip.{CRC32, DataFormatException, Inflater}
 
 import scala.collection.mutable.ArrayBuffer
@@ -90,6 +91,10 @@ final class ParallelSheetScanner(
     new java.util.concurrent.ArrayBlockingQueue[Array[Byte]](threads * 2)
   @volatile private var producerError: Throwable = _
   @volatile private var stopped = false
+  // stage times, summed over the threads that did the work
+  private val inflateNanos = new AtomicLong // segment inflates in the workers
+  private val scanNanos = new AtomicLong // chunk parses in the workers
+  @volatile private var trackNanos = 0L // boundary tracking, producer only
 
   private val pool: ExecutorService =
     Executors.newFixedThreadPool(threads, ParallelSheetScanner.daemonThreads("xlsx-parse"))
@@ -138,7 +143,9 @@ final class ParallelSheetScanner(
         } else if (n > 0) {
           val from = filled
           filled += n
+          val t0 = System.nanoTime()
           val b = tracker.scan(buf, from, filled)
+          trackNanos += System.nanoTime() - t0
           if (b >= 0) lastBoundary = b
           if (filled >= chunkBytes && lastBoundary > 0) {
             // zero-copy handoff: the worker parses [0, lastBoundary) of THIS
@@ -166,7 +173,9 @@ final class ParallelSheetScanner(
       case _: InterruptedException => // close() raced us; fall through to End
       case t: Throwable => producerError = t
     } finally {
-      putQuietly(End)
+      // close() interrupts this thread: one that lands during the last
+      // hand-off is a stop too, never an uncaught exception
+      try putQuietly(End) catch { case _: InterruptedException => }
     }
   }
 
@@ -183,9 +192,12 @@ final class ParallelSheetScanner(
         Int.MaxValue.toLong).toInt
       val segNo = k
       putQuietly(pool.submit(new Callable[ParsedChunk] {
-        override def call(): ParsedChunk =
-          parseChunk(seg.inflate(segChannel, segNo, bufPool.poll()),
-            seg.uncompressedLength(segNo), drop)
+        override def call(): ParsedChunk = {
+          val t0 = System.nanoTime()
+          val bytes = seg.inflate(segChannel, segNo, bufPool.poll())
+          inflateNanos.addAndGet(System.nanoTime() - t0)
+          parseChunk(bytes, seg.uncompressedLength(segNo), drop)
+        }
       }))
       k += 1
     }
@@ -205,7 +217,9 @@ final class ParallelSheetScanner(
     }))
 
   private def parseChunk(chunk: Array[Byte], len: Int, dropFirst: Int): ParsedChunk = {
+    val t0 = System.nanoTime()
     val out = parse(chunk, len, dropFirst)
+    scanNanos.addAndGet(System.nanoTime() - t0)
     // the chunk's bytes are fully consumed — recycle the buffer; offer()
     // drops it when the pool is at capacity (exact bound, no size() scan)
     bufPool.offer(chunk)
@@ -269,6 +283,15 @@ final class ParallelSheetScanner(
     * ragged checks — the sequential reader never width-checks dropped rows. */
   def chunkDropped: Int = chunkCur.dropped
 
+  /** Nanoseconds spent inflating the sheet: the prefetch thread's reads,
+    * or the workers' segment inflates. */
+  def inflateNs: Long =
+    inflateNanos.get + (if (prefetch != null) prefetch.readNs else 0L)
+  /** Nanoseconds the producer spent locating row boundaries. */
+  def trackNs: Long = trackNanos
+  /** Nanoseconds the workers spent parsing chunks. */
+  def scanNs: Long = scanNanos.get
+
   override def close(): Unit = if (!stopped) {
     stopped = true
     producer.interrupt()
@@ -286,33 +309,45 @@ final class ParallelSheetScanner(
 
 /** Background-reader InputStream: a daemon thread drains `in` into FULL
   * `bufSize` buffers (an InflaterInputStream yields ~4 KiB per read — the
-  * refill loop amortizes that) on a `depth`-bounded queue. Single-consumer. */
+  * refill loop amortizes that) on a `depth`-bounded queue. Single-consumer.
+  * A buffer the consumer has drained goes back to the reader through a
+  * bounded free queue, so a read allocates at most `depth + 2` of them. */
 private final class PrefetchStream(in: java.io.InputStream, bufSize: Int,
     depth: Int, cancelled: () => Boolean) extends java.io.InputStream {
   import java.util.concurrent.{ArrayBlockingQueue, TimeUnit}
   private val queue = new ArrayBlockingQueue[AnyRef](depth)
+  private val free = new ArrayBlockingQueue[Array[Byte]](depth + 2)
   @volatile private var err: Throwable = _
   @volatile private var stopped = false
+  /** Nanoseconds the reader thread spent in `in.read`. */
+  @volatile var readNs = 0L
   private case object Eof
 
   private val reader = new Thread(() => {
     try {
       var done = false
       while (!done && !stopped && !cancelled()) {
-        val buf = new Array[Byte](bufSize)
+        val recycled = free.poll()
+        val buf = if (recycled != null) recycled else new Array[Byte](bufSize)
         var n = 0
         var r = 0
+        val t0 = System.nanoTime()
         while (n < bufSize && r >= 0) {
           r = in.read(buf, n, bufSize - n)
           if (r > 0) n += r
         }
+        readNs += System.nanoTime() - t0
         if (n > 0) put((buf, n))
         if (r < 0) done = true
       }
     } catch {
       case _: InterruptedException =>
       case t: Throwable => err = t
-    } finally put(Eof)
+    } finally {
+      // shutdown() interrupts this thread: one that lands during the last
+      // hand-off is a stop too, never an uncaught exception
+      try put(Eof) catch { case _: InterruptedException => }
+    }
   }, "xlsx-inflate")
   reader.setDaemon(true)
   reader.start()
@@ -337,9 +372,11 @@ private final class PrefetchStream(in: java.io.InputStream, bufSize: Int,
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
     if (eof) return -1
     while (cur == null || curPos >= curLen) {
+      if (cur != null) { free.offer(cur); cur = null }
       queue.take() match {
         case Eof =>
           eof = true
+          free.clear() // a finished stream holds no buffer
           if (err != null) throw new java.io.IOException(err)
           return -1
         case (buf: Array[Byte], n: Integer) =>
@@ -356,6 +393,7 @@ private final class PrefetchStream(in: java.io.InputStream, bufSize: Int,
     stopped = true
     reader.interrupt()
     while (queue.poll() != null) ()
+    free.clear()
   }
 }
 
@@ -538,11 +576,20 @@ object ParallelSheetScanner {
   * `<v>`/`<is><t>` text content (where the scanner swallows stray close tags
   * as part of `handleTextMarkup`), and not shadowed by the scanner's
   * 12-byte entity-name consumption quirk. The transitions below mirror
-  * SheetScanner method-for-method; divergence is a bug by definition and is
-  * fuzzed against it.
+  * [[SheetScanCore]]'s per-byte machinery method-for-method; divergence is a
+  * bug by definition and is fuzzed against it.
+  *
+  * Like the scanner, the tracker has a fused fast path over per-byte spill
+  * states: in text context one unaligned 8-byte probe consumes `</c>`,
+  * `<v>`, `</v>`, `</row>`, `<is>`, `</is>`, `<t>`, `</t>` and the common
+  * `<row r="…">`/`<c r="…">` forms whole, and every other construct, and
+  * every tag that crosses the end of a slice, takes the per-byte states.
+  * Both read names and literals through the one tag table
+  * ([[SheetMarkup]]), so they cannot disagree on what a tag is.
   */
 final class RowBoundaryTracker {
   import RowBoundaryTracker._
+  import SheetMarkup._
 
   // Persistent state between scan() calls. Inside scan() everything is
   // hoisted into locals — the tracker runs on ONE thread and must outrun N
@@ -583,8 +630,8 @@ final class RowBoundaryTracker {
     var last = -1
     var p = from
 
-    // (classification is RowBoundaryTracker.classify — a static helper, so
-    // the hoisted locals stay unboxed registers)
+    // (classification is SheetMarkup.classify — a static helper, so the
+    // hoisted locals stay unboxed registers)
 
     while (p < to) {
       (st: @annotation.switch) match {
@@ -617,8 +664,7 @@ final class RowBoundaryTracker {
               // in the current containment context, so this is a pure
               // short-circuit — tags with attributes and every rare
               // construct fall through to the machinery below.
-              val w8 = org.apache.spark.unsafe.Platform.getLong(buf,
-                org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + q)
+              val w8 = SheetMarkup.word(buf, q)
               ltText = iv || it
               if ((w8 & 0xFFFFFFFFL) == LitCloseC) { p = q + 4; true }
               else if ((w8 & 0xFFFFFFL) == LitOpenV) {
@@ -685,7 +731,7 @@ final class RowBoundaryTracker {
                   }
                   if (!stop) { word = w; wlen = n; p = r; st = CloseName; fast = false }
                   else {
-                    k = RowBoundaryTracker.classify(w, n)
+                    k = classify(w, 0L, n)
                     while (r < to && buf(r) != '>') r += 1
                     if (r >= to) { p = r; st = CloseRest; fast = false }
                     else {
@@ -721,7 +767,7 @@ final class RowBoundaryTracker {
                   }
                   if (!stop) { word = w; wlen = n; p = r; st = OpenName; fast = false }
                   else {
-                    k = RowBoundaryTracker.classify(w, n)
+                    k = classify(w, 0L, n)
                     if (buf(r) == '>') {
                       p = r + 1
                       if (!ltText) {
@@ -836,7 +882,7 @@ final class RowBoundaryTracker {
           word = w; wlen = n
           if (!stop) p = q
           else {
-            k = RowBoundaryTracker.classify(w, n)
+            k = classify(w, 0L, n)
             // fused common delimiter: a bare '>' ends the tag right here
             if (buf(q) == '>') {
               p = q + 1
@@ -865,7 +911,7 @@ final class RowBoundaryTracker {
           word = w; wlen = n
           if (!stop) p = q
           else {
-            k = RowBoundaryTracker.classify(w, n)
+            k = classify(w, 0L, n)
             // fused CloseRest: skip to '>' and apply close semantics
             var r = q
             while (r < to && buf(r) != '>') r += 1
@@ -1054,55 +1100,6 @@ final class RowBoundaryTracker {
 }
 
 object RowBoundaryTracker {
-  /** Bytes that terminate an element/attribute name in SheetScanner.readName. */
-  final val NameStop: Array[Boolean] = {
-    val a = new Array[Boolean](256)
-    Seq(' ', '\t', '\n', '\r', '>', '/', '=').foreach(c => a(c) = true)
-    a
-  }
-
-  /** Platform.getLong reads NATIVE order; the literal constants below are
-    * little-endian, so the probe only runs on LE hardware (x86/aarch64 —
-    * everything Spark ships on). On a BE JVM the masked compares would test
-    * the wrong byte positions, so the probe is compiled out entirely and
-    * every tag takes the generic (still exact) machinery. */
-  final val LittleEndian: Boolean =
-    java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.LITTLE_ENDIAN
-
-  // whole-tag literals, little-endian byte order as Platform.getLong reads
-  // them on x86/aarch64; masked to the literal's length
-  final val LitCloseC: Long = 0x3E632F3CL // "</c>"
-  final val LitOpenV: Long = 0x3E763CL // "<v>"
-  final val LitCloseV: Long = 0x3E762F3CL // "</v>"
-  final val LitCloseRow: Long = 0x3E776F722F3CL // "</row>"
-  final val LitOpenIs: Long = 0x3E73693CL // "<is>"
-  final val LitCloseIs: Long = 0x3E73692F3CL // "</is>"
-  final val LitOpenT: Long = 0x3E743CL // "<t>"
-  final val LitCloseT: Long = 0x3E742F3CL // "</t>"
-  final val LitRowRQ: Long = 0x223D7220776F723CL // `<row r="` (8 bytes)
-  final val LitCRQ: Long = 0x223D7220633CL // `<c r="` (6 bytes)
-
-  // element names packed little-endian byte-per-char, as scan() builds them
-  final val WordRow: Long = 'r' | ('o'.toLong << 8) | ('w'.toLong << 16)
-  final val WordV: Long = 'v'
-  final val WordIs: Long = 'i' | ('s'.toLong << 8)
-  final val WordT: Long = 't'
-
-  final val KOther = 0
-  final val KRow = 1
-  final val KV = 2
-  final val KIs = 3
-  final val KT = 4
-
-  /** Classify a packed element name: row / v / is / t (anything else —
-    * including c — has no effect on boundary state). */
-  def classify(w: Long, n: Int): Int =
-    if (n == 3 && w == WordRow) KRow
-    else if (n == 1 && w == WordV) KV
-    else if (n == 2 && w == WordIs) KIs
-    else if (n == 1 && w == WordT) KT
-    else KOther
-
   final val Text = 0
   final val Lt = 1
   final val OpenName = 2

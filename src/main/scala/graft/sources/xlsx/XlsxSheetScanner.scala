@@ -51,6 +51,8 @@ trait CellSink {
 trait RowSource extends AutoCloseable {
   /** Scans the next row into `sink`; false at the end of the rows. */
   def nextRow(sink: CellSink): Boolean
+  /** Nanoseconds spent reading (inflating) the underlying stream so far. */
+  def readNs: Long = 0L
 }
 
 object RowSource {
@@ -93,63 +95,49 @@ object RowSource {
 /** Byte-level SpreadsheetML worksheet scanner — the per-core hot path of the
   * xlsx scan. The reference's C++ core gets its throughput from a custom
   * in-situ XML scanner rather than a general parser; this is the same idea
-  * re-expressed on the JVM: a single-pass state machine over the inflated
-  * entry bytes with
+  * re-expressed on the JVM (SheetReader's argument: a parser specialised
+  * to SpreadsheetML, not a general XML one): one pass over the inflated
+  * entry bytes, typed events into a [[CellSink]], no per-cell allocation.
   *
-  *   - bulk `memchr`-style scans for markup boundaries (text runs and
-  *     inter-tag gaps are `System.arraycopy`/index loops, not per-event
-  *     dispatch),
-  *   - zero per-cell allocation: element/attribute names and values are
-  *     matched in place against reusable buffers, numbers parse to a
-  *     primitive `double` (only a form outside the fast path builds the
-  *     `String` that `Double.parseDouble` requires), text is unescaped in
-  *     place, and shared-string indices parse digit by digit,
-  *   - typed events into a [[CellSink]] instead of cell objects.
+  * Two layers read the bytes:
+  *
+  *   - The fused fast path ([[fastTags]]) works on the buffered window with
+  *     the cursor in locals. One unaligned 8-byte load per tag
+  *     ([[SheetMarkup]]'s literals) recognises `<row r="`, `<c r="` with
+  *     its ` t="…"`/` s="…"` continuations and `>`/`/>`, `<v>`, `</v>`,
+  *     `</c>`, `</row>`, `<is>`, `<t>` and `<is><t>`…`</t></is>`. It
+  *     decodes the `r=` ref and the `s=` index in place, parses a `<v>`
+  *     number or shared-string id straight from the window, and hands an
+  *     entity-free inline string to the sink as a slice of the window.
+  *   - The per-byte machinery ([[tag]], [[parseAttrs]], [[collectText]])
+  *     takes every other construct — entities, CDATA, comments, processing
+  *     instructions, other names and attribute forms — and every probe that
+  *     would cross the window's end. The fast path hands over at the exact
+  *     byte where it stops, in the state the per-byte machinery would be in
+  *     there, so the two paths give the same events by construction
+  *     (differential-fuzzed, and fed through 1–7 byte reads).
   *
   * Semantics are identical to the StAX oracle (same cell lattice, same
   * error-cell rules, reference: src/sheetreader_extension.cpp:117-135).
-  * Assumes an ASCII-compatible encoding (UTF-8 in practice — multi-byte
-  * text passes through untouched); workbooks with a UTF-16 BOM transcode to
-  * UTF-8 upstream (Utf16ToUtf8Stream) and ride this same scanner.
+  * Numbers take an exact fast path (≤15 significant digits, one exact
+  * power-of-ten division), so they are bit-identical to
+  * `Double.parseDouble`. Assumes an ASCII-compatible encoding (UTF-8 in
+  * practice — multi-byte text passes through untouched); workbooks with a
+  * UTF-16 BOM transcode to UTF-8 upstream (Utf16ToUtf8Stream) and ride this
+  * same scanner.
   */
 final class SheetScanCore private (
     in: InputStream,
-    private var buf: Array[Byte],
+    window: Array[Byte],
     dates: Array[Boolean],
     closeUnderlying: () => Unit)
-    extends RowSource {
+    extends MarkupCursor(in, window) with RowSource {
+  import SheetMarkup._
   import SheetScanCore._
 
   /** A scanner over the whole stream `in`. */
   def this(in: InputStream, dates: Array[Boolean], closeUnderlying: () => Unit) =
     this(in, new Array[Byte](1 << 16), dates, closeUnderlying)
-
-  // ---- buffered byte cursor -----------------------------------------------
-  private var pos = 0
-  private var lim = 0
-  private var eofSeen = false
-
-  private def fill(): Boolean = {
-    if (eofSeen) return false
-    var n = in.read(buf)
-    while (n == 0) n = in.read(buf)
-    if (n < 0) { eofSeen = true; false }
-    else { pos = 0; lim = n; true }
-  }
-
-  /** Next byte as 0..255, or -1 at end of entry. */
-  private def rb(): Int = {
-    if (pos >= lim && !fill()) -1
-    else { val b = buf(pos); pos += 1; b & 0xff }
-  }
-
-  // ---- reusable scratch buffers -------------------------------------------
-  private val nm = new Array[Char](32) // current element/attribute local name
-  private var nmLen = 0
-  private var delim = 0 // byte that terminated the last readName
-
-  private var txt = new Array[Byte](256) // accumulated <v>/<t> content
-  private var txtLen = 0
 
   // parsed attribute slots (per current tag)
   private var selfClose = false
@@ -157,6 +145,7 @@ final class SheetScanCore private (
   private var aCol = -1
   private var aType = TNum
   private var aStyle = -1
+  private val typeBuf = new Array[Byte](12) // a t="…" value on the per-byte path
 
   // current cell context (set at <c>, consumed at </v> / </is>)
   private var curCol = -1
@@ -172,8 +161,10 @@ final class SheetScanCore private (
   private var inV = false
   private var inIs = false
   private var inT = false
-  private var numOk = false // did the last parseNumber succeed
+  private var numOk = false // did the last number parse succeed
   private var closed = false
+
+  override def readNs: Long = streamNs
 
   override def nextRow(s: CellSink): Boolean =
     !closed && {
@@ -190,69 +181,227 @@ final class SheetScanCore private (
   /** Parse forward through the next complete </row>; false at end of entry. */
   private def advance(): Boolean = {
     while (true) {
-      if (inV || inT) {
-        // collectText consumes the run AND the markup that ended it
-        collectText()
-      } else if (skipToLt()) {
-        // cursor is just past a '<'
-        val b = rb()
-        if (b == '/') {
-          readName(rb())
-          var d = delim
-          while (d != -1 && d != '>') d = rb()
-          if (nmLen == 1 && nm(0) == 'v') { inV = false; endValue() }
-          else if (nameIs("is")) { inIs = false; inT = false; endInline() }
-          else if (nameIs("row")) { endRow(); return true }
-        } else if (b == '!') handleBang()
-        else if (b == '?') skipPi()
-        else if (b == -1) return false
-        else {
-          readName(b)
-          if (nmLen == 1 && nm(0) == 'c') {
-            aCol = -1; aType = TNum; aStyle = -1
-            parseAttrs(ElemC)
-            curCol = if (aCol >= 0) aCol else width
-            curType = aType; curStyle = aStyle
-            // self-closing <c/>: styled empty cell → gap, nothing to do
-          } else if (nmLen == 1 && nm(0) == 'v') {
-            parseAttrs(ElemOther)
-            txtLen = 0
-            if (selfClose) endValue() else inV = true
-          } else if (nameIs("row")) {
-            aRow = -1L
-            parseAttrs(ElemRow)
-            rowExplicit = aRow >= 1
-            rowIdx = if (aRow >= 1) aRow - 1 else rowIdx + 1
-            width = 0
-            rowCells = 0
-            sink.rowStart()
-            if (selfClose) { endRow(); return true }
-          } else if (nameIs("is")) {
-            parseAttrs(ElemOther)
-            txtLen = 0
-            if (selfClose) endInline() else inIs = true
-          } else if (inIs && nmLen == 1 && nm(0) == 't') {
-            parseAttrs(ElemOther)
-            if (!selfClose) inT = true
-          } else parseAttrs(ElemOther) // unknown element: consume its tag
-        }
-      } else return false // end of entry
+      if (inV || inT) collectText() // consumes the run AND the markup that ended it
+      else {
+        val r = fastTags()
+        if (r == RowDone) return true
+        if (r == AtLt) {
+          val t = tag()
+          if (t != Go) return t == RowDone
+        } else if (r == Drained && !fill()) return false
+      }
     }
     false // unreachable
   }
 
-  /** Bulk-skip bytes up to and past the next '<'. False at end of entry. */
-  private def skipToLt(): Boolean = {
+  /** The fused fast path over the window, outside text content: skips to
+    * each '<' and consumes whole hot tags. Returns [[RowDone]] after a row
+    * end, [[AtLt]] with the cursor just past a '<' that the per-byte
+    * [[tag]] must read, [[Drained]] at the window's end outside any tag,
+    * and [[Go]] when a text element opened or the per-byte machinery
+    * finished a tag (the caller loops). */
+  private def fastTags(): Int = {
+    val b = buf
+    val l = lim
+    var p = pos
     while (true) {
-      var p = pos
-      val l = lim
-      val b = buf
       while (p < l && b(p) != '<') p += 1
-      if (p < l) { pos = p + 1; return true }
-      pos = p
-      if (!fill()) return false
+      if (p >= l) { pos = p; return Drained }
+      if (!LittleEndian || p + 8 > l) { pos = p + 1; return AtLt }
+      val w = word(b, p)
+      if ((w & M4) == LitCloseC) p += 4
+      else if ((w & M6) == LitCRQ) {
+        val q = cellTag(b, p + 6, l)
+        if (q >= 0) p = q
+        else if (q == Bail) { pos = p + 1; return AtLt }
+        else return Go
+      } else if ((w & M3) == LitOpenV) {
+        // the value runs to the next markup; plain text then </v> is read
+        // in place, anything else collects through the text buffer
+        val s = p + 3
+        val e = textEnd(b, s, l)
+        if (e + 4 <= l && word4(b, e) == LitCloseV) {
+          value(b, s, e)
+          p = e + 4
+        } else { resetText(); inV = true; pos = s; return Go }
+      } else if ((w & M6) == LitCloseRow) {
+        pos = p + 6
+        endRow()
+        return RowDone
+      } else if (w == LitRowRQ) {
+        val q = rowTag(b, p + 8, l)
+        if (q >= 0) p = q
+        else if (q == Bail) { pos = p + 1; return AtLt }
+        else return if (q == Ended) RowDone else Go
+      } else if ((w & M7) == LitIsT) {
+        // an inline string: entity-free text in the window goes to the
+        // sink as a slice of it
+        val s = p + 7
+        val e = textEnd(b, s, l)
+        if (e + 9 <= l && word(b, e) == LitCloseTIs && b(e + 8) == '>') {
+          inIs = false
+          val c = cellCol()
+          if (sink.wants(c)) sink.text(c, b, s, e - s)
+          textIsSlice(s, e - s)
+          p = e + 9
+        } else { resetText(); inIs = true; inT = true; pos = s; return Go }
+      } else if ((w & M4) == LitOpenIs) { resetText(); inIs = true; p += 4 }
+      else if ((w & M3) == LitOpenT) {
+        p += 3
+        if (inIs) { inT = true; pos = p; return Go }
+      } else { pos = p + 1; return AtLt }
     }
-    false // unreachable
+    Go // unreachable
+  }
+
+  /** The rest of a `<c r="` tag from `b(from)`, the ref's first byte: the
+    * position past the tag, [[Bail]] when a value runs past the window, or
+    * [[Slow]] when [[parseAttrs]] finished an attribute form the fast path
+    * does not read. */
+  private def cellTag(b: Array[Byte], from: Int, l: Int): Int = {
+    aCol = -1; aType = TNum; aStyle = -1
+    // the ref: letters give the column, digits (the row) only validate
+    var i = from
+    var col = 0
+    var hasCol = false
+    var bad = false
+    while (i < l && b(i) != '"') {
+      val c = b(i)
+      if (c >= 'A' && c <= 'Z') { col = col * 26 + (c - 'A' + 1); hasCol = true }
+      else if (c >= 'a' && c <= 'z') { col = col * 26 + (c - 'a' + 1); hasCol = true }
+      else if (c < '0' || c > '9') bad = true
+      i += 1
+    }
+    if (i >= l) return Bail
+    if (!bad && hasCol) aCol = col - 1
+    i += 1
+    while (true) {
+      if (i >= l) return Bail
+      val c = b(i)
+      if (c == '>') { cellOpened(); return i + 1 }
+      if (c == '/' && i + 1 < l && b(i + 1) == '>') { cellOpened(); return i + 2 }
+      val k = if (c == ' ' && i + 4 <= l) word4(b, i) else 0
+      if (k == LitTQ || k == LitSQ) {
+        val s = i + 4
+        var e = s
+        while (e < l && b(e) != '"') e += 1
+        if (e >= l) return Bail
+        if (k == LitTQ) aType = typeCode(b, s, e - s)
+        else {
+          var num = 0L
+          var hasNum = false
+          var badS = false
+          var j = s
+          while (j < e) {
+            val d = b(j)
+            if (d >= '0' && d <= '9') { num = num * 10 + (d - '0'); hasNum = true }
+            else if (!((d >= 'A' && d <= 'Z') || (d >= 'a' && d <= 'z'))) badS = true
+            j += 1
+          }
+          if (!badS && hasNum) aStyle = num.toInt
+        }
+        i = e + 1
+      } else {
+        pos = i + 1
+        delim = c & 0xff
+        parseAttrs(ElemC)
+        cellOpened()
+        return Slow
+      }
+    }
+    Slow // unreachable
+  }
+
+  /** The rest of a `<row r="` tag from `b(from)`: the position past an
+    * open tag, [[Ended]] after a self-closing one (a whole row; the cursor
+    * is set), [[Bail]] when the ref runs past the window, or [[Slow]] when
+    * [[parseAttrs]] finished the tag. */
+  private def rowTag(b: Array[Byte], from: Int, l: Int): Int = {
+    aRow = -1L
+    var i = from
+    var num = 0L
+    var hasNum = false
+    var bad = false
+    while (i < l && b(i) != '"') {
+      val c = b(i)
+      if (c >= '0' && c <= '9') { num = num * 10 + (c - '0'); hasNum = true }
+      else if (!((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z'))) bad = true
+      i += 1
+    }
+    if (i + 1 >= l) return Bail
+    if (!bad && hasNum) aRow = num
+    i += 1
+    val c = b(i)
+    if (c == '>') { selfClose = false; rowOpened(); i + 1 }
+    else if (c == '/' && i + 1 < l && b(i + 1) == '>') {
+      selfClose = true
+      pos = i + 2
+      rowOpened()
+      Ended
+    } else {
+      pos = i + 1
+      delim = c & 0xff
+      parseAttrs(ElemRow)
+      if (rowOpened()) Ended else Slow
+    }
+  }
+
+  private def cellOpened(): Unit = {
+    curCol = if (aCol >= 0) aCol else width
+    curType = aType; curStyle = aStyle
+  }
+
+  /** A row tag's attributes are read: the row opens, and a self-closing
+    * one ends at once (true). */
+  private def rowOpened(): Boolean = {
+    rowExplicit = aRow >= 1
+    rowIdx = if (aRow >= 1) aRow - 1 else rowIdx + 1
+    width = 0
+    rowCells = 0
+    sink.rowStart()
+    if (selfClose) { endRow(); true } else false
+  }
+
+  /** The per-byte dispatch of one tag, the cursor just past its '<':
+    * [[Go]], [[RowDone]] or [[End]]. */
+  private def tag(): Int = {
+    val b = rb()
+    if (b == '/') {
+      readName(rb())
+      var d = delim
+      while (d != -1 && d != '>') d = rb()
+      val k = nameKind
+      if (k == KV) { inV = false; endValue() }
+      else if (k == KIs) { inIs = false; inT = false; endInline() }
+      else if (k == KRow) { endRow(); return RowDone }
+    } else if (b == '!') handleBang(inV || inT)
+    else if (b == '?') skipPi()
+    else if (b == -1) return End
+    else {
+      readName(b)
+      val k = nameKind
+      if (k == KC) {
+        aCol = -1; aType = TNum; aStyle = -1
+        parseAttrs(ElemC)
+        cellOpened() // self-closing <c/>: styled empty cell → gap, nothing to do
+      } else if (k == KV) {
+        parseAttrs(ElemOther)
+        resetText()
+        if (selfClose) endValue() else inV = true
+      } else if (k == KRow) {
+        aRow = -1L
+        parseAttrs(ElemRow)
+        if (rowOpened()) return RowDone
+      } else if (k == KIs) {
+        parseAttrs(ElemOther)
+        resetText()
+        if (selfClose) endInline() else inIs = true
+      } else if (inIs && k == KT) {
+        parseAttrs(ElemOther)
+        if (!selfClose) inT = true
+      } else parseAttrs(ElemOther) // unknown element: consume its tag
+    }
+    Go
   }
 
   /** Accumulate text content (inside <v> or <is><t>) up to the next markup
@@ -265,13 +414,15 @@ final class SheetScanCore private (
       val l = lim
       val b = buf
       val start = p
-      while (p < l && b(p) != '<' && b(p) != '&') p += 1
+      p = textEnd(b, p, l)
       if (p > start) txtAppendRange(b, start, p - start)
       pos = p
       if (p >= l) {
         if (!fill()) { inV = false; inT = false; return }
-      } else if (b(p) == '&') { pos = p + 1; readEntity() }
-      else { pos = p + 1; handleTextMarkup(); return }
+      } else if (b(p) == '&') {
+        val q = entityAt(p, l)
+        if (q >= 0) pos = q else { pos = p + 1; readEntity() }
+      } else { pos = p + 1; handleTextMarkup(); return }
     }
   }
 
@@ -282,14 +433,15 @@ final class SheetScanCore private (
     // else is a real tag the main loop must see. We re-create the main
     // loop's dispatch here for the two cases text can produce.
     val b = rb()
-    if (b == '!') handleBang()
+    if (b == '!') handleBang(inV || inT)
     else if (b == '/') {
       readName(rb())
       var d = delim
       while (d != -1 && d != '>') d = rb()
-      if (nmLen == 1 && nm(0) == 'v') { inV = false; endValue() }
-      else if (inT && nmLen == 1 && nm(0) == 't') inT = false
-      else if (nameIs("is")) { inIs = false; inT = false; endInline() }
+      val k = nameKind
+      if (k == KV) { inV = false; endValue() }
+      else if (inT && k == KT) inT = false
+      else if (k == KIs) { inIs = false; inT = false; endInline() }
     } else if (b != -1) {
       // unexpected child element inside text (e.g. rich-text markup):
       // consume its tag, keep collecting
@@ -298,29 +450,9 @@ final class SheetScanCore private (
     }
   }
 
-  /** Read a local name starting at byte b0 (namespace prefixes stripped);
-    * stops at whitespace / '>' / '/' / '=' / EOF, stored in `delim`. */
-  private def readName(b0: Int): Unit = {
-    nmLen = 0
-    var b = b0
-    while (b != -1 && b != ' ' && b != '\t' && b != '\n' && b != '\r' &&
-           b != '>' && b != '/' && b != '=') {
-      if (b == ':') nmLen = 0 // drop prefix
-      else if (nmLen < nm.length) { nm(nmLen) = b.toChar; nmLen += 1 }
-      b = rb()
-    }
-    delim = b
-  }
-
-  private def nameIs(s: String): Boolean = {
-    if (nmLen != s.length) return false
-    var i = 0
-    while (i < nmLen) { if (nm(i) != s.charAt(i)) return false; i += 1 }
-    true
-  }
-
-  /** Parse attributes up to the tag end; `selfClose` reports '/>'. Only the
-    * attributes the element kind cares about are decoded. */
+  /** Parse attributes up to the tag end, starting from the byte in
+    * `delim`; `selfClose` reports '/>'. Only the attributes the element
+    * kind cares about are decoded. */
   private def parseAttrs(kind: Int): Unit = {
     selfClose = false
     var b = delim
@@ -351,9 +483,10 @@ final class SheetScanCore private (
   private def readAttrValue(quote: Int, kind: Int): Unit = {
     // r (row): digits → aRow.  r (cell): letters*digits → aCol.
     // t: type code → aType.  s: style index → aStyle.
-    val wantR = nmLen == 1 && nm(0) == 'r'
-    val wantT = kind == ElemC && nmLen == 1 && nm(0) == 't'
-    val wantS = kind == ElemC && nmLen == 1 && nm(0) == 's'
+    val one = nameLen == 1
+    val wantR = one && nameW == 'r'
+    val wantT = kind == ElemC && one && nameW == 't'
+    val wantS = kind == ElemC && one && nameW == 's'
     if (!wantR && !wantT && !wantS) { // skip value bytes
       var b = rb()
       while (b != -1 && b != quote) b = rb()
@@ -361,14 +494,13 @@ final class SheetScanCore private (
     }
     if (wantT) {
       // match against the closed set of cell-type codes in place
-      val tb = new Array[Char](12)
       var n = 0
       var b = rb()
       while (b != -1 && b != quote) {
-        if (n < tb.length) { tb(n) = b.toChar; n += 1 }
+        if (n < typeBuf.length) { typeBuf(n) = b.toByte; n += 1 }
         b = rb()
       }
-      aType = typeCode(tb, n)
+      aType = typeCode(typeBuf, 0, n)
       return
     }
     // numeric/ref values: letters feed the column accumulator, digits the
@@ -395,125 +527,36 @@ final class SheetScanCore private (
     }
   }
 
-  private def typeCode(tb: Array[Char], n: Int): Int =
-    if (n == 1) tb(0) match {
-      case 's' => TShared
-      case 'b' => TBool
-      case 'e' => TErr
-      case 'n' => TNum
-      case _   => TOther
-    }
-    else if (n == 3 && tb(0) == 's' && tb(1) == 't' && tb(2) == 'r') TStr
-    else if (n == 9 && new String(tb, 0, 9) == "inlineStr") TInline
-    else TOther
-
-  // ---- text accumulation --------------------------------------------------
-  private def txtEnsure(extra: Int): Unit =
-    if (txtLen + extra > txt.length) {
-      var cap = txt.length * 2
-      while (cap < txtLen + extra) cap *= 2
-      txt = java.util.Arrays.copyOf(txt, cap)
-    }
-
-  private def txtAppend(b: Int): Unit = {
-    txtEnsure(1); txt(txtLen) = b.toByte; txtLen += 1
-  }
-
-  private def txtAppendRange(src: Array[Byte], off: Int, len: Int): Unit = {
-    txtEnsure(len); System.arraycopy(src, off, txt, txtLen, len); txtLen += len
-  }
-
-  private def txtAppendCodePoint(cp: Int): Unit =
-    if (cp < 0x80) txtAppend(cp)
-    else if (cp < 0x800) { txtAppend(0xC0 | (cp >> 6)); txtAppend(0x80 | (cp & 0x3F)) }
-    else if (cp < 0x10000) {
-      txtAppend(0xE0 | (cp >> 12)); txtAppend(0x80 | ((cp >> 6) & 0x3F)); txtAppend(0x80 | (cp & 0x3F))
-    } else {
-      txtAppend(0xF0 | (cp >> 18)); txtAppend(0x80 | ((cp >> 12) & 0x3F))
-      txtAppend(0x80 | ((cp >> 6) & 0x3F)); txtAppend(0x80 | (cp & 0x3F))
-    }
-
-  /** Decode one entity reference (cursor just past '&'). Predefined names
-    * and decimal/hex character references; unknown names are dropped —
-    * lenient where StAX would abort the scan. */
-  private def readEntity(): Unit = {
-    val eb = new Array[Char](12)
-    var n = 0
-    var b = rb()
-    while (b != -1 && b != ';' && n < eb.length) { eb(n) = b.toChar; n += 1; b = rb() }
-    if (n == 3 && eb(0) == 'a' && eb(1) == 'm' && eb(2) == 'p') txtAppend('&')
-    else if (n == 2 && eb(0) == 'l' && eb(1) == 't') txtAppend('<')
-    else if (n == 2 && eb(0) == 'g' && eb(1) == 't') txtAppend('>')
-    else if (n == 4 && new String(eb, 0, 4) == "quot") txtAppend('"')
-    else if (n == 4 && new String(eb, 0, 4) == "apos") txtAppend('\'')
-    else if (n > 1 && eb(0) == '#')
-      try {
-        val cp =
-          if (n > 2 && (eb(1) == 'x' || eb(1) == 'X'))
-            Integer.parseInt(new String(eb, 2, n - 2), 16)
-          else Integer.parseInt(new String(eb, 1, n - 1))
-        txtAppendCodePoint(cp)
-      } catch { case _: NumberFormatException => }
-  }
-
-  /** Comment, CDATA or DOCTYPE (cursor just past "<!"). CDATA content feeds
-    * the text buffer when inside <v>/<t>. */
-  private def handleBang(): Unit = {
-    val b = rb()
-    if (b == '-') { // <!--  ...  -->
-      rb() // second '-'
-      var p2 = 0; var p1 = 0; var c = rb()
-      while (c != -1 && !(p2 == '-' && p1 == '-' && c == '>')) { p2 = p1; p1 = c; c = rb() }
-    } else if (b == '[') { // <![CDATA[ ... ]]>
-      var i = 0
-      while (i < 6 && rb() != -1) i += 1 // consume "CDATA["
-      val collect = inV || inT
-      var a = rb(); var m = rb(); var c = rb()
-      while (c != -1 && !(a == ']' && m == ']' && c == '>')) {
-        if (collect) txtAppend(a)
-        a = m; m = c; c = rb()
-      }
-    } else { // DOCTYPE etc: skip to '>'
-      var c = b
-      while (c != -1 && c != '>') c = rb()
-    }
-  }
-
-  private def skipPi(): Unit = { // <? ... ?>
-    var p1 = 0; var c = rb()
-    while (c != -1 && !(p1 == '?' && c == '>')) { p1 = c; c = rb() }
-  }
-
   // ---- cell values --------------------------------------------------------
 
-  /** Whether the text buffer, whitespace-trimmed, reads as true: `1` or
+  /** Whether `a[from, to)`, whitespace-trimmed, reads as true: `1` or
     * `true` in any case. */
-  private def isTrue(): Boolean = {
-    var s = 0
-    var e = txtLen
-    while (s < e && (txt(s) & 0xff) <= ' ') s += 1
-    while (e > s && (txt(e - 1) & 0xff) <= ' ') e -= 1
-    if (e - s == 1) txt(s) == '1'
-    else e - s == 4 && (txt(s) | 0x20) == 't' && (txt(s + 1) | 0x20) == 'r' &&
-      (txt(s + 2) | 0x20) == 'u' && (txt(s + 3) | 0x20) == 'e'
+  private def isTrue(a: Array[Byte], from: Int, to: Int): Boolean = {
+    var s = from
+    var e = to
+    while (s < e && (a(s) & 0xff) <= ' ') s += 1
+    while (e > s && (a(e - 1) & 0xff) <= ' ') e -= 1
+    if (e - s == 1) a(s) == '1'
+    else e - s == 4 && (a(s) | 0x20) == 't' && (a(s + 1) | 0x20) == 'r' &&
+      (a(s + 2) | 0x20) == 'u' && (a(s + 3) | 0x20) == 'e'
   }
 
-  /** Parse the text buffer as a non-negative shared-string index without
-    * allocating; Long.MinValue on any non-integer content. */
-  private def takeIndex(): Long = {
-    var s = 0
-    var e = txtLen
-    while (s < e && (txt(s) & 0xff) <= ' ') s += 1
-    while (e > s && (txt(e - 1) & 0xff) <= ' ') e -= 1
+  /** `a[from, to)` as a shared-string index, without allocating;
+    * Long.MinValue on any non-integer content. */
+  private def index(a: Array[Byte], from: Int, to: Int): Long = {
+    var s = from
+    var e = to
+    while (s < e && (a(s) & 0xff) <= ' ') s += 1
+    while (e > s && (a(e - 1) & 0xff) <= ' ') e -= 1
     if (s >= e) return Long.MinValue
     var neg = false
     var i = s
-    val c0 = txt(i)
+    val c0 = a(i)
     if (c0 == '-') { neg = true; i += 1 } else if (c0 == '+') i += 1
     if (i >= e) return Long.MinValue
     var v = 0L
     while (i < e) {
-      val d = txt(i) - '0'
+      val d = a(i) - '0'
       if (d < 0 || d > 9) return Long.MinValue
       v = v * 10 + d
       i += 1
@@ -521,23 +564,23 @@ final class SheetScanCore private (
     if (neg) -v else v
   }
 
-  /** Parse the text buffer as a double; `numOk` is false when it is
-    * malformed. Fast path for plain decimal forms (sign, ≤15 significant
-    * digits, optional fraction): exact long mantissa scaled by one exact
+  /** `a[from, to)` as a double; `numOk` is false when it is malformed.
+    * Fast path for plain decimal forms (sign, ≤15 significant digits,
+    * optional fraction): exact long mantissa scaled by one exact
     * power-of-ten division — correctly rounded, hence bit-identical to
     * Double.parseDouble (Clinger's safe range: mantissa < 2^53, |exponent|
     * ≤ 22). Everything else (exponents, >15 digits, hex, NaN/Infinity)
     * takes the JDK path. */
-  private def parseNumber(): Double = {
+  private def number(a: Array[Byte], from: Int, to: Int): Double = {
     numOk = false
-    var s = 0
-    var e = txtLen
-    while (s < e && (txt(s) & 0xff) <= ' ') s += 1
-    while (e > s && (txt(e - 1) & 0xff) <= ' ') e -= 1
+    var s = from
+    var e = to
+    while (s < e && (a(s) & 0xff) <= ' ') s += 1
+    while (e > s && (a(e - 1) & 0xff) <= ' ') e -= 1
     if (s >= e) return 0.0
     var i = s
     var neg = false
-    val c0 = txt(i)
+    val c0 = a(i)
     if (c0 == '-') { neg = true; i += 1 } else if (c0 == '+') i += 1
     var mant = 0L
     var digits = 0
@@ -545,7 +588,7 @@ final class SheetScanCore private (
     var seenDot = false
     var plain = i < e
     while (plain && i < e) {
-      val b = txt(i)
+      val b = a(i)
       if (b >= '0' && b <= '9') {
         mant = mant * 10 + (b - '0'); digits += 1
         if (seenDot) frac += 1
@@ -560,7 +603,7 @@ final class SheetScanCore private (
     } else
       try {
         val v = java.lang.Double.parseDouble(
-          new String(txt, s, e - s, StandardCharsets.US_ASCII))
+          new String(a, s, e - s, StandardCharsets.US_ASCII))
         numOk = true
         v
       } catch { case _: NumberFormatException => 0.0 }
@@ -575,28 +618,32 @@ final class SheetScanCore private (
     c
   }
 
-  /** Emit the finished <v> content as its cell type's event (same lattice
-    * and error rules as the StAX oracle and the reference). */
-  private def endValue(): Unit = {
+  /** Emit the <v> content `a[from, to)` as its cell type's event (same
+    * lattice and error rules as the StAX oracle and the reference). */
+  private def value(a: Array[Byte], from: Int, to: Int): Unit = {
     val c = cellCol()
-    if (sink.wants(c)) curType match {
+    if (sink.wants(c)) (curType: @annotation.switch) match {
       case TShared =>
-        val i = takeIndex()
+        val i = index(a, from, to)
         if (i >= 0 && i <= Int.MaxValue) sink.shared(c, i.toInt) else sink.error(c)
-      case TStr | TInline => sink.text(c, txt, 0, txtLen)
-      case TBool => sink.bool(c, isTrue())
+      case TStr | TInline => sink.text(c, a, from, to - from)
+      case TBool => sink.bool(c, isTrue(a, from, to))
       case TNum =>
-        val d = parseNumber()
+        val d = number(a, from, to)
         if (!numOk) sink.error(c)
         else if (curStyle >= 0 && curStyle < dates.length && dates(curStyle)) sink.date(c, d)
         else sink.number(c, d)
       case _ => sink.error(c) // t="e" and unknown types
     }
-    txtLen = 0
+    resetText()
   }
+
+  /** Emit the text buffer as a finished <v>. */
+  private def endValue(): Unit = { settle(); value(txt, 0, txtLen) }
 
   /** Emit the finished <is> content (an inline string). */
   private def endInline(): Unit = {
+    settle()
     val c = cellCol()
     if (sink.wants(c)) sink.text(c, txt, 0, txtLen)
   }
@@ -624,6 +671,21 @@ object SheetScanCore {
     a
   }
 
+  /** The cell type a `t="…"` value `b[off, off + n)` names. */
+  private def typeCode(b: Array[Byte], off: Int, n: Int): Int =
+    if (n == 1) b(off).toChar match {
+      case 's' => TShared
+      case 'b' => TBool
+      case 'e' => TErr
+      case 'n' => TNum
+      case _   => TOther
+    }
+    else if (n == 3 && b(off) == 's' && b(off + 1) == 't' && b(off + 2) == 'r') TStr
+    else if (n == 9 && b(off) == 'i' && b(off + 1) == 'n' && b(off + 2) == 'l' &&
+        b(off + 3) == 'i' && b(off + 4) == 'n' && b(off + 5) == 'e' &&
+        b(off + 6) == 'S' && b(off + 7) == 't' && b(off + 8) == 'r') TInline
+    else TOther
+
   // cell-type codes from t="..."
   private final val TNum = 0 // absent / "n"
   private final val TShared = 1 // "s"
@@ -636,6 +698,17 @@ object SheetScanCore {
   private final val ElemRow = 0
   private final val ElemC = 1
   private final val ElemOther = -1
+
+  // outcomes of the scanner's steps
+  private final val Go = 0 // keep scanning
+  private final val RowDone = 1 // a row ended
+  private final val AtLt = 2 // the cursor is just past a '<' for the per-byte dispatch
+  private final val Drained = 3 // the window is used up outside any tag
+  private final val End = 4 // the entry ended
+  // a fast tag's outcome, beside a position at least 0
+  private final val Bail = -1 // not decidable in the window: re-read from the '<'
+  private final val Slow = -2 // the per-byte machinery finished the tag
+  private final val Ended = -3 // a self-closing row: a whole row
 }
 
 /** The worksheet's rows as [[XCell]]s: [[SheetScanCore]] writing into one
@@ -690,7 +763,11 @@ final class SheetScanner private[xlsx] (core: SheetScanCore, strings: Array[Stri
 /** Byte-level scanner for `xl/sharedStrings.xml` — the other hot entry of a
   * real-world workbook (Excel interns every worksheet string here, so for
   * string-heavy sheets this table IS most of the bytes). Same technique as
-  * [[SheetScanner]]: one pass, bulk text runs, entities and CDATA decoded
+  * [[SheetScanCore]]: a fused fast path over the window that recognises
+  * `<si>`, `<t>`, `<t xml:space="preserve">`, `</t>`, `</si>`, `<r>` and
+  * `</r>` with one 8-byte load each ([[SheetMarkup]]), and hands an
+  * entity-free `<si><t>…</t></si>` straight from the window; the per-byte
+  * machinery takes every other construct, with entities and CDATA decoded
   * inline. `<rPh>`/`<phoneticPr>` subtrees (furigana) are excluded from the
   * string value, matching the StAX path and the reference. */
 object SharedStringsScanner {
@@ -728,105 +805,145 @@ object SharedStringsScanner {
     * strings completed before that point, each at its table index. */
   def parseInto(in: InputStream, out: ArrayBuffer[String],
       maxBytes: Long = DefaultMaxBytes, limit: Int = Int.MaxValue): Unit =
-    scan(in, maxBytes, limit, (b, n) =>
-      out += (if (n == 0) "" else new String(b, 0, n, StandardCharsets.UTF_8)))
+    new TableScan(in, maxBytes, limit) {
+      override def emit(b: Array[Byte], off: Int, n: Int): Unit =
+        out += (if (n == 0) "" else new String(b, off, n, StandardCharsets.UTF_8))
+    }.run()
 
   /** The whole table as one UTF-8 byte array per entry — a scan's string
     * dictionary ([[SheetDictionary]]). Same scan, same budget. */
   def parseBytes(in: InputStream, maxBytes: Long = DefaultMaxBytes): Array[Array[Byte]] = {
     val out = ArrayBuffer[Array[Byte]]()
-    scan(in, maxBytes, Int.MaxValue, (b, n) =>
-      out += (if (n == 0) Array.emptyByteArray else java.util.Arrays.copyOf(b, n)))
+    new TableScan(in, maxBytes, Int.MaxValue) {
+      override def emit(b: Array[Byte], off: Int, n: Int): Unit =
+        out += (if (n == 0) Array.emptyByteArray else java.util.Arrays.copyOfRange(b, off, off + n))
+    }.run()
     out.toArray
   }
 
-  /** The one table scan: `emit(bytes, length)` gets each entry's UTF-8
-    * bytes (valid during the call), in table order, up to `limit` of them. */
-  private def scan(in: InputStream, maxBytes: Long, limit: Int,
-      emit: (Array[Byte], Int) => Unit): Unit = {
-    var emitted = 0
-    var retained = 0L
-    // budget check on every accumulation, not just at </si>: ONE huge
-    // string must hit the guard too (otherwise the buffer doubles
-    // unboundedly before the si ever closes)
-    def checkBudget(pending: Int): Unit =
-      if (retained + pending > maxBytes) throw new BudgetExceeded(maxBytes)
-    val buf = new Array[Byte](1 << 16)
-    var pos = 0
-    var lim = 0
-    var eof = false
-    var txt = new Array[Byte](256)
-    var txtLen = 0
-    val nm = new Array[Char](24)
-    var nmLen = 0
-    var delim = 0
-    var inSi = false
-    var inT = false
-    var phonetic = 0 // depth inside rPh / phoneticPr
+  /** The one table scan: [[emit]] gets each entry's UTF-8 bytes (valid
+    * during the call), in table order, up to `limit` of them. The budget is
+    * checked on every accumulation, not just at `</si>`: ONE huge string
+    * must hit the guard too. */
+  private abstract class TableScan(in: InputStream, maxBytes: Long, limit: Int)
+      extends MarkupCursor(in, new Array[Byte](1 << 16)) {
+    import SheetMarkup._
 
-    def fill(): Boolean = {
-      if (eof) return false
-      var n = in.read(buf)
-      while (n == 0) n = in.read(buf)
-      if (n < 0) { eof = true; false } else { pos = 0; lim = n; true }
-    }
-    def rb(): Int =
-      if (pos >= lim && !fill()) -1
-      else { val b = buf(pos); pos += 1; b & 0xff }
+    def emit(b: Array[Byte], off: Int, n: Int): Unit
 
-    def txtAppend(b: Int): Unit = {
-      checkBudget(txtLen + 1)
-      if (txtLen == txt.length) txt = java.util.Arrays.copyOf(txt, txt.length * 2)
-      txt(txtLen) = b.toByte; txtLen += 1
-    }
-    def txtAppendCp(cp: Int): Unit =
-      if (cp < 0x80) txtAppend(cp)
-      else if (cp < 0x800) { txtAppend(0xC0 | (cp >> 6)); txtAppend(0x80 | (cp & 0x3F)) }
-      else if (cp < 0x10000) {
-        txtAppend(0xE0 | (cp >> 12)); txtAppend(0x80 | ((cp >> 6) & 0x3F)); txtAppend(0x80 | (cp & 0x3F))
-      } else {
-        txtAppend(0xF0 | (cp >> 18)); txtAppend(0x80 | ((cp >> 12) & 0x3F))
-        txtAppend(0x80 | ((cp >> 6) & 0x3F)); txtAppend(0x80 | (cp & 0x3F))
+    private var emitted = 0
+    private var retained = 0L
+    private var inSi = false
+    private var inT = false
+    private var phonetic = 0 // depth inside rPh / phoneticPr
+    txtRoom = maxBytes
+
+    override protected def overBudget(): Nothing = throw new BudgetExceeded(maxBytes)
+
+    def run(): Unit =
+      while (emitted < limit) {
+        val r = fastTags()
+        if (r == AtLt) tag()
+        else if (r == Drained && !fill()) return
       }
-    def entity(): Unit = {
-      val eb = new Array[Char](12); var n = 0
-      var b = rb()
-      while (b != -1 && b != ';' && n < eb.length) { eb(n) = b.toChar; n += 1; b = rb() }
-      val s = new String(eb, 0, n)
-      s match {
-        case "amp" => txtAppend('&')
-        case "lt" => txtAppend('<')
-        case "gt" => txtAppend('>')
-        case "quot" => txtAppend('"')
-        case "apos" => txtAppend('\'')
-        case _ if s.startsWith("#") =>
-          try txtAppendCp(
-            if (s.length > 2 && (s.charAt(1) == 'x' || s.charAt(1) == 'X'))
-              Integer.parseInt(s.substring(2), 16)
-            else Integer.parseInt(s.substring(1)))
-          catch { case _: NumberFormatException => }
-        case _ =>
+
+    /** The fused fast path over the window: text runs inside `<t>` and
+    * whole hot tags. Returns [[AtLt]] with the cursor just past a '<' for
+    * the per-byte [[tag]], [[Drained]] at the window's end, and [[Go]]
+    * when the caller must loop (an entity left the window, or `limit`
+    * entries are out). */
+    private def fastTags(): Int = {
+      val b = buf
+      val l = lim
+      var p = pos
+      while (true) {
+        if (inT && phonetic == 0) {
+          val s = p
+          p = textEnd(b, p, l)
+          if (p > s) txtAppendRange(b, s, p - s)
+        } else while (p < l && b(p) != '<') p += 1
+        if (p >= l) { pos = p; return Drained }
+        if (b(p) == '&') {
+          val q = entityAt(p, l)
+          if (q < 0) { pos = p + 1; readEntity(); return Go }
+          p = q
+        } else if (!LittleEndian || p + 8 > l) { pos = p + 1; return AtLt }
+        else {
+          val w = word(b, p)
+          if ((w & M7) == LitSiT) {
+            // a whole entity-free entry in the window goes out as a slice
+            val s = p + 7
+            val e = textEnd(b, s, l)
+            if (e + 9 <= l && word(b, e) == LitCloseTSi && b(e + 8) == '>') {
+              val n = e - s
+              if (n > txtRoom) overBudget()
+              textIsSlice(s, n)
+              inSi = false
+              inT = false
+              retained += n
+              txtRoom = maxBytes - retained
+              emit(b, s, n)
+              emitted += 1
+              p = e + 9
+              if (emitted >= limit) { pos = p; return Go }
+            } else { inSi = true; resetText(); inT = true; p = s }
+          } else if ((w & M4) == LitOpenSi) { inSi = true; resetText(); p += 4 }
+          else if ((w & M3) == LitOpenT) { if (inSi) inT = true; p += 3 }
+          else if ((w & M4) == LitCloseT) { inT = false; p += 4 }
+          else if ((w & M5) == LitCloseSi) {
+            p += 5
+            closeSi()
+            if (emitted >= limit) { pos = p; return Go }
+          } else if ((w & M3) == LitOpenR) p += 3
+          else if ((w & M4) == LitCloseR) p += 4
+          else if (w == LitTPreserve0 && p + 24 <= l && word(b, p + 8) == LitTPreserve1 &&
+              word(b, p + 16) == LitTPreserve2) { if (inSi) inT = true; p += 24 }
+          else { pos = p + 1; return AtLt }
+        }
+      }
+      Go // unreachable
+    }
+
+    /** `</si>`: the entry ends, even outside an `<si>`, with whatever text
+      * the buffer holds. */
+    private def closeSi(): Unit = {
+      settle()
+      inSi = false
+      retained += txtLen
+      if (retained > maxBytes) overBudget()
+      txtRoom = maxBytes - retained
+      emit(txt, 0, txtLen)
+      emitted += 1
+    }
+
+    /** The per-byte dispatch of one tag, the cursor just past its '<'. */
+    private def tag(): Unit = {
+      val c = rb()
+      if (c == '/') {
+        readName(rb())
+        var d = delim
+        while (d != -1 && d != '>') d = rb()
+        val k = nameKind
+        if (k == KT) inT = false
+        else if (k == KRPh || k == KPhoneticPr) phonetic -= 1
+        else if (k == KSi) closeSi()
+      } else if (c == '!') handleBang(inT && phonetic == 0)
+      else if (c == '?') skipPi()
+      else {
+        readName(c)
+        val selfClose = finishTag()
+        val k = nameKind
+        if (k == KSi) {
+          inSi = true
+          resetText()
+          if (selfClose) { inSi = false; emit(txt, 0, 0); emitted += 1 }
+        } else if (k == KT) { if (inSi && !selfClose) inT = true }
+        else if (k == KRPh || k == KPhoneticPr) { if (!selfClose) phonetic += 1 }
       }
     }
-    def readName(b0: Int): Unit = {
-      nmLen = 0
-      var b = b0
-      while (b != -1 && b != ' ' && b != '\t' && b != '\n' && b != '\r' &&
-             b != '>' && b != '/' && b != '=') {
-        if (b == ':') nmLen = 0
-        else if (nmLen < nm.length) { nm(nmLen) = b.toChar; nmLen += 1 }
-        b = rb()
-      }
-      delim = b
-    }
-    def nameIs(s: String): Boolean = {
-      if (nmLen != s.length) return false
-      var i = 0
-      while (i < nmLen) { if (nm(i) != s.charAt(i)) return false; i += 1 }
-      true
-    }
+
     /** Consume the rest of a start tag; true if self-closing. */
-    def finishTag(): Boolean = {
+    private def finishTag(): Boolean = {
       var b = delim
       var lastSlash = false
       var inQ = 0
@@ -839,76 +956,10 @@ object SharedStringsScanner {
       }
       false
     }
-
-    var b = rb()
-    while (b != -1 && emitted < limit) {
-      if (b == '<') {
-        val c = rb()
-        if (c == '/') {
-          readName(rb())
-          var d = delim
-          while (d != -1 && d != '>') d = rb()
-          if (nameIs("t")) inT = false
-          else if (nameIs("rPh") || nameIs("phoneticPr")) phonetic -= 1
-          else if (nameIs("si")) {
-            inSi = false
-            retained += txtLen
-            if (retained > maxBytes) throw new BudgetExceeded(maxBytes)
-            emit(txt, txtLen)
-            emitted += 1
-          }
-        } else if (c == '!') {
-          val d = rb()
-          if (d == '-') { // comment
-            rb()
-            var p2 = 0; var p1 = 0; var e = rb()
-            while (e != -1 && !(p2 == '-' && p1 == '-' && e == '>')) { p2 = p1; p1 = e; e = rb() }
-          } else if (d == '[') { // CDATA
-            var i = 0
-            while (i < 6 && rb() != -1) i += 1
-            val collect = inT && phonetic == 0
-            var a = rb(); var m = rb(); var e = rb()
-            while (e != -1 && !(a == ']' && m == ']' && e == '>')) {
-              if (collect) txtAppend(a)
-              a = m; m = e; e = rb()
-            }
-          } else { var e = d; while (e != -1 && e != '>') e = rb() }
-        } else if (c == '?') {
-          var p1 = 0; var e = rb()
-          while (e != -1 && !(p1 == '?' && e == '>')) { p1 = e; e = rb() }
-        } else {
-          readName(c)
-          val selfClose = finishTag()
-          if (nameIs("si")) { inSi = true; txtLen = 0; if (selfClose) { inSi = false; emit(txt, 0); emitted += 1 } }
-          else if (nameIs("t")) { if (inSi && !selfClose) inT = true }
-          else if (nameIs("rPh") || nameIs("phoneticPr")) { if (!selfClose) phonetic += 1 }
-        }
-        b = rb()
-      } else {
-        if (inT && phonetic == 0) {
-          // bulk text run
-          if (b == '&') entity()
-          else {
-            txtAppend(b)
-            var p = pos
-            val l = lim
-            val start = p
-            while (p < l && buf(p) != '<' && buf(p) != '&') p += 1
-            if (p > start) {
-              checkBudget(txtLen + (p - start))
-              if (txtLen + (p - start) > txt.length) {
-                var cap = txt.length * 2
-                while (cap < txtLen + (p - start)) cap *= 2
-                txt = java.util.Arrays.copyOf(txt, cap)
-              }
-              System.arraycopy(buf, start, txt, txtLen, p - start)
-              txtLen += p - start
-            }
-            pos = p
-          }
-        }
-        b = rb()
-      }
-    }
   }
+
+  // outcomes of the table scan's fast path
+  private final val Go = 0
+  private final val AtLt = 1
+  private final val Drained = 2
 }

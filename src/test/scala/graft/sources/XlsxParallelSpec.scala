@@ -269,18 +269,59 @@ class XlsxParallelSpec extends SparkSpec {
       "chunk wait on the task thread, cells scanned") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val f = sharedStringsWorkbook(60000)
-    val df = spark.read.format("xlsx").option("threads", "2")
-      .load(f.getAbsolutePath)
-    assert(df.collect().length == 60000)
-    val plan = df.queryExecution.executedPlan
-    val scan = (plan +: plan.collect {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-    }).flatMap(_.collect { case b: BatchScanExec => b }).head
-    def metric(name: String): Long = scan.metrics(name).value
-    assert(scan.metrics.keySet.contains(XlsxScan.TableDecodeMs))
-    assert(metric(XlsxScan.CellsScanned) == 3L * 60000)
-    assert(metric(XlsxScan.TableDecodeMs) > 0)
-    assert(metric(XlsxScan.ChunkWaitMs) > 0)
+    /** The scan node's metrics after a read at `threads`. */
+    def read(threads: Int): String => Long = {
+      val df = spark.read.format("xlsx").option("threads", threads.toString)
+        .load(f.getAbsolutePath)
+      assert(df.collect().length == 60000)
+      val plan = df.queryExecution.executedPlan
+      val scan = (plan +: plan.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      }).flatMap(_.collect { case b: BatchScanExec => b }).head
+      assert(scan.metrics.keySet.contains(XlsxScan.TableDecodeMs))
+      name => scan.metrics(name).value
+    }
+    val t2 = read(2)
+    assert(t2(XlsxScan.CellsScanned) == 3L * 60000)
+    assert(t2(XlsxScan.TableDecodeMs) > 0)
+    assert(t2(XlsxScan.ChunkWaitMs) > 0)
+    // the read's stages, summed over the threads that ran them
+    assert(t2(XlsxScan.InflateMs) > 0 && t2(XlsxScan.TrackMs) > 0 &&
+      t2(XlsxScan.ScanMs) > 0)
+    val t1 = read(1)
+    assert(t1(XlsxScan.CellsScanned) == 3L * 60000)
+    assert(t1(XlsxScan.InflateMs) > 0 && t1(XlsxScan.ScanMs) > 0 &&
+      t1(XlsxScan.TrackMs) == 0)
+  }
+
+  test("closing threads-2 scans after their first chunk fires no uncaught " +
+      "exception and leaves no xlsx thread") {
+    val f = sharedStringsWorkbook(90000)
+    val sheetLen = {
+      val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+      val (in, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
+      try in.readAllBytes().length finally closeAll()
+    }
+    val before = xlsxThreads()
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val old = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((t: Thread, e: Throwable) =>
+      fired.add(s"${t.getName}: $e"))
+    try {
+      (1 to 20).foreach { i =>
+        // 3 to 8 chunks: the producer is blocked on a chunk, or on the end
+        // of the sheet, when the scan closes
+        val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+        val par = wb.chunkingRowIterator("xl/worksheets/sheet1.xml", 2,
+          SheetFuzz.noColumns.chunkParser(wb.dateStyles),
+          chunkBytes = sheetLen / (3 + i % 6)).get
+        assert(par.advanceChunk())
+        Thread.sleep(20)
+        par.close()
+      }
+      assertTornDown(before, f)
+    } finally Thread.setDefaultUncaughtExceptionHandler(old)
+    assert(fired.isEmpty, fired.asScala.mkString("; "))
   }
 
   /** Descriptors this process holds open on `f`. */
