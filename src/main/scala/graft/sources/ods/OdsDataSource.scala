@@ -2,7 +2,6 @@ package graft.sources.ods
 
 import java.util
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,7 +14,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, RowSource, XlsxDataSource, XlsxOptions, XlsxSchema, XlsxWriteBuilder}
+import graft.sources.xlsx.{CellRowIterator, RowBatchReader, RowColumns, RowSource, XlsxDataSource, XlsxOptions, XlsxSchema, XlsxWriteBuilder, ZipRaw}
 
 /** `spark.read.format("ods")` / `df.write.format("ods")` — the OpenDocument
   * spreadsheet twin of the xlsx source, a thin format layer over the xlsx
@@ -59,10 +58,8 @@ object OdsDataSource {
   /** The target table's rows of one document. */
   def rows(path: String, opts: XlsxOptions,
       conf: XlsxDataSource.ConfProps): CellRowIterator =
-    OdsParser.rows(() => {
-      val p = new Path(path)
-      p.getFileSystem(conf.toConf).open(p)
-    }, opts.sheetName, opts.effectiveSheetIndex)
+    OdsParser.rows(ZipRaw.Archive.at(path, conf.toConf), opts.sheetName,
+      opts.effectiveSheetIndex)
 
   def resolve(path: String, opts: XlsxOptions,
       conf: XlsxDataSource.ConfProps): XlsxSchema.Resolved =

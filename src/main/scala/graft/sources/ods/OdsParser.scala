@@ -2,11 +2,10 @@ package graft.sources.ods
 
 import java.io.InputStream
 import java.time.LocalDate
-import java.util.zip.ZipInputStream
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
-import graft.sources.xlsx.{CellRowIterator, XCell, XlsxOptions}
+import graft.sources.xlsx.{CellRowIterator, XCell, XlsxOptions, ZipRaw}
 
 /** OpenDocument spreadsheet (.ods) content parser — the second container
   * format of the spreadsheet family. Reads `content.xml` with StAX and
@@ -41,18 +40,6 @@ object OdsParser {
     f
   }
 
-  /** Position a ZipInputStream at content.xml (ods keeps it top-level). */
-  private def openContent(open: () => InputStream): ZipInputStream = {
-    val zip = new ZipInputStream(open())
-    var e = zip.getNextEntry
-    while (e != null && e.getName != "content.xml") e = zip.getNextEntry
-    if (e == null) {
-      zip.close()
-      throw new IllegalArgumentException("ods: no content.xml entry in container")
-    }
-    zip
-  }
-
   private def attr(r: XMLStreamReader, local: String): String = {
     var i = 0
     while (i < r.getAttributeCount) {
@@ -71,17 +58,20 @@ object OdsParser {
     * when `sheet` is None — pulled from one StAX cursor. Row indices are
     * 0-based positions in the table. A missing table raises when the
     * document ends without it. */
-  def rows(open: () => InputStream, sheet: Option[String],
-      sheetIndex: Int): CellRowIterator =
-    new TableRows(openContent(open), sheet, sheetIndex)
+  def rows(archive: ZipRaw.Archive, sheet: Option[String],
+      sheetIndex: Int): CellRowIterator = {
+    val (in, closeAll) = archive.open("content.xml").getOrElse(
+      throw new IllegalArgumentException(s"${archive.path}: no content.xml entry in the ods container"))
+    new TableRows(in, closeAll, sheet, sheetIndex)
+  }
 
   private val NoCells = Array.empty[XCell]
 
-  private final class TableRows(zip: ZipInputStream, sheet: Option[String],
-      sheetIndex: Int) extends CellRowIterator {
+  private final class TableRows(in: InputStream, closeAll: () => Unit,
+      sheet: Option[String], sheetIndex: Int) extends CellRowIterator {
     private val r =
-      try factory.createXMLStreamReader(zip)
-      catch { case t: Throwable => zip.close(); throw t }
+      try factory.createXMLStreamReader(in)
+      catch { case t: Throwable => closeAll(); throw t }
     private var closed = false
     private val tableNames = scala.collection.mutable.ArrayBuffer[String]()
     private var inTarget = false
@@ -112,7 +102,7 @@ object OdsParser {
 
     override def close(): Unit = if (!closed) {
       closed = true
-      try r.close() finally zip.close()
+      try r.close() finally closeAll()
     }
 
     private def finish(): Boolean = {

@@ -127,22 +127,11 @@ object XlsxDataSource {
       .map(e => e.getKey -> e.getValue).toArray)
   }
 
-  /** `conf` is built on the first `open()`, which only a workbook that is
-    * not a local file calls: local paths get `ZipFile` central-directory
-    * seeks instead of re-opened streams. */
+  /** The workbook at `path` ([[ZipRaw.Archive.at]]): `conf` is built only
+    * for a file that is not local. */
   def workbook(path: String, conf: => Configuration,
-      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes): XlsxParser.Workbook = {
-    val uri = new Path(path).toUri
-    val local =
-      if (uri.getScheme == null || uri.getScheme == "file")
-        Some(new java.io.File(uri.getPath)).filter(_.isFile)
-      else None
-    lazy val hadoop = conf
-    new XlsxParser.Workbook(() => {
-      val p = new Path(path)
-      p.getFileSystem(hadoop).open(p)
-    }, local, maxSharedStringsBytes, path)
-  }
+      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes): XlsxParser.Workbook =
+    new XlsxParser.Workbook(ZipRaw.Archive.at(path, conf), maxSharedStringsBytes)
 }
 
 final class XlsxTable(
@@ -689,7 +678,13 @@ final class XlsxColumnarPartitionReader(
     strings
   }
 
-  override def next(): Boolean = {
+  /** A ragged row or a parse error may be a corrupt sheet's first sign:
+    * then the sheet's corruption error is reported instead. */
+  override def next(): Boolean =
+    try nextBatch()
+    catch { case e: RuntimeException => throw wb.corruptionBefore(sheetTarget, e) }
+
+  private def nextBatch(): Boolean = {
     // first call: decode the table while the parse workers scan the sheet
     if (cols.needsTable) table()
     if (seq != null) seq.next()

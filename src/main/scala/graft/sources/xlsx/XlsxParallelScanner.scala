@@ -1,8 +1,6 @@
 package graft.sources.xlsx
 
 import java.io.InputStream
-import java.nio.channels.FileChannel
-import java.nio.file.StandardOpenOption
 import java.util.concurrent.{ArrayBlockingQueue, Callable, ExecutionException, ExecutorService, Executors, Future, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import java.util.zip.{CRC32, DataFormatException, Inflater}
@@ -109,10 +107,9 @@ final class ParallelSheetScanner(
     if (segmented == null) new PrefetchStream(in, 1 << 20, 8, () => stopped)
     else null
 
-  // one channel, positional (thread-safe) reads from every worker
-  private val segChannel =
-    if (segmented == null) null
-    else FileChannel.open(segmented.file.toPath, StandardOpenOption.READ)
+  // one source, positioned (thread-safe) reads from every worker
+  private val segSource =
+    if (segmented == null) null else segmented.archive.source()
 
   private val producer = new Thread(() => produce(), "xlsx-chunk-producer")
   producer.setDaemon(true)
@@ -194,7 +191,7 @@ final class ParallelSheetScanner(
       putQuietly(pool.submit(new Callable[ParsedChunk] {
         override def call(): ParsedChunk = {
           val t0 = System.nanoTime()
-          val bytes = seg.inflate(segChannel, segNo, bufPool.poll())
+          val bytes = seg.inflate(segSource, segNo, bufPool.poll())
           inflateNanos.addAndGet(System.nanoTime() - t0)
           parseChunk(bytes, seg.uncompressedLength(segNo), drop)
         }
@@ -299,8 +296,8 @@ final class ParallelSheetScanner(
     pool.shutdownNow()
     // drain so a blocked producer put can finish dying
     while (queue.poll() != null) ()
-    if (segChannel != null) {
-      try segChannel.close()
+    if (segSource != null) {
+      try segSource.close()
       catch { case _: java.io.IOException => }
     }
     closeUnderlying()
@@ -414,16 +411,16 @@ object ParallelSheetScanner {
     }
   }
 
-  /** A workbook's graft row-group index, resolved to raw file geometry:
-    * `cuts(i) = (compressed offset, uncompressed offset, rows before)` of
-    * the (i+1)-th segment start WITHIN the deflate data of worksheet
-    * `entry`, which begins at `dataOffset` in `file`. Segment boundaries
-    * are writer-recorded FULL_FLUSH points landing exactly after a
-    * `</row>` in Text state, so each slice inflates AND parses
+  /** A workbook's graft row-group index, resolved to raw archive
+    * geometry: `cuts(i) = (compressed offset, uncompressed offset, rows
+    * before)` of the (i+1)-th segment start WITHIN the deflate data of
+    * worksheet `entry`, which begins at `dataOffset` in `archive`. Segment
+    * boundaries are writer-recorded FULL_FLUSH points landing exactly
+    * after a `</row>` in Text state, so each slice inflates AND parses
     * independently. `segmentCrcs` holds each segment's CRC-32 (index
     * version 3), or is null for a version-2 index, whose segments are
     * read unchecked. */
-  final case class SegmentIndex(file: java.io.File, entry: String,
+  final case class SegmentIndex(archive: ZipRaw.Archive, entry: String,
       dataOffset: Long, compressedSize: Long, cuts: Array[Array[Long]],
       totalUncomp: Long, totalRows: Long, segmentCrcs: Array[Int]) {
     def segments: Int = cuts.length + 1
@@ -436,26 +433,23 @@ object ParallelSheetScanner {
     def uncompressedLength(k: Int): Int =
       (uncompressedStart(k + 1) - uncompressedStart(k)).toInt
 
-    /** Segment `k`, pread from `ch` and inflated into `reuse` when it is
+    /** Segment `k`, read from `src` and inflated into `reuse` when it is
       * large enough (else into a new array, which is returned), its
       * CRC-32 checked when the index records one. Every failure names the
       * file, the worksheet and the segment. */
-    def inflate(ch: FileChannel, k: Int, reuse: Array[Byte]): Array[Byte] = {
+    def inflate(src: ZipRaw.Source, k: Int, reuse: Array[Byte]): Array[Byte] = {
       def corrupt(why: String) = new java.io.IOException(
-        s"$file: worksheet $entry segment $k is corrupt: $why")
+        s"${archive.path}: worksheet $entry segment $k is corrupt: $why")
       val cLen = (compressedStart(k + 1) - compressedStart(k)).toInt
       val uLen = uncompressedLength(k)
-      val comp = java.nio.ByteBuffer.allocate(cLen)
-      var pos = dataOffset + compressedStart(k)
-      while (comp.hasRemaining) {
-        val r = ch.read(comp, pos)
-        if (r < 0) throw corrupt(s"end of file at offset $pos")
-        pos += r
-      }
+      val comp = new Array[Byte](cLen)
+      val pos = dataOffset + compressedStart(k)
+      try src.readFully(pos, comp, 0, cLen)
+      catch { case _: java.io.EOFException => throw corrupt(s"end of file inside offsets $pos + $cLen") }
       val out = if (reuse != null && reuse.length >= uLen) reuse else new Array[Byte](uLen)
       val inf = new Inflater(true)
       try {
-        inf.setInput(comp.array(), 0, cLen)
+        inf.setInput(comp, 0, cLen)
         var off = 0
         while (off < uLen) {
           val n = inf.inflate(out, off, uLen - off)
@@ -479,14 +473,14 @@ object ParallelSheetScanner {
     * handed out, so a corrupt segment fails before any of its rows. */
   private[xlsx] final class SegmentStream(seg: SegmentIndex, s0: Int, s1: Int)
       extends InputStream {
-    private val ch = FileChannel.open(seg.file.toPath, StandardOpenOption.READ)
+    private val src = seg.archive.source()
     private var next = s0
     private var buf: Array[Byte] = _
     private var pos, len = 0
 
     private def fill(): Boolean = {
       while (pos == len && next < s1) {
-        buf = seg.inflate(ch, next, buf)
+        buf = seg.inflate(src, next, buf)
         pos = 0
         len = seg.uncompressedLength(next)
         next += 1
@@ -504,7 +498,7 @@ object ParallelSheetScanner {
         pos += m
         m
       }
-    override def close(): Unit = ch.close()
+    override def close(): Unit = src.close()
   }
 
   /** Row face over the chunk face: each worker keeps its chunk's rows as

@@ -2,7 +2,6 @@ package graft.sources.xlsx
 
 import java.io.InputStream
 import java.time.LocalDate
-import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
@@ -85,10 +84,12 @@ private[xlsx] final class Utf16ToUtf8Stream(in: InputStream)
   override def close(): Unit = reader.close()
 }
 
-/** Streaming XLSX (zip + SpreadsheetML) puller built on JDK ZipInputStream +
-  * StAX. One pass per needed zip entry; only the shared-strings table is held
-  * in memory (sized by the file, not the dataset — same tradeoff as the
-  * reference core). No external dependencies.
+/** Streaming XLSX (zip + SpreadsheetML) puller over [[ZipRaw]]'s archive
+  * reader, with byte scanners for the worksheet and the shared strings and
+  * StAX for the small parts. One pass per needed zip entry; only the
+  * shared-strings table is held in memory (sized by the file, not the
+  * dataset — same tradeoff as the reference core). No external
+  * dependencies.
   */
 object XlsxParser {
   private val xif = {
@@ -106,8 +107,12 @@ object XlsxParser {
     * whole table. */
   val ProbeStrings: Int = 1024
 
-  /** Opens `open()` several times — once per zip entry family — so the
-    * source can be any re-openable stream (local file, HDFS, S3A).
+  /** One workbook, read entry by entry through `archive`, which parses the
+    * central directory once and reads each entry by position — the same
+    * way on a local file, HDFS or S3A. A reader opens about seven entries
+    * per file (rels, workbook, styles, the shared-strings prefix and the
+    * sheet for the schema probe, the whole shared-strings table and the
+    * sheet for the scan), and none costs a pass over another.
     *
     * Only a scan decodes the whole shared-strings table
     * ([[sharedStringBytes]]; the [[XCell]] faces use [[sharedStrings]]);
@@ -116,21 +121,9 @@ object XlsxParser {
     * budget is enforced where the table is decoded, on the scan task's
     * thread.
     *
-    * `localFile`, when set, short-circuits entry access through
-    * `java.util.zip.ZipFile` (central-directory seek) instead of
-    * sequentially inflating the stream up to each entry — a reader opens
-    * ~7 entries per file (rels, workbook, styles, the shared-strings
-    * prefix and the sheet for the schema probe, the whole shared-strings
-    * table and the sheet for the scan), so direct seeks measurably cut
-    * per-file overhead on multi-file scans. Object stores keep the
-    * streaming path.
-    *
-    * `path` names the workbook in the errors of the streaming path, as the
-    * local file's path names it in those of `ZipFile`. */
-  final class Workbook(open: () => InputStream,
-      localFile: Option[java.io.File] = None,
-      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes,
-      path: String = "xlsx stream") {
+    * The archive's path names the workbook in every error. */
+  final class Workbook(archive: ZipRaw.Archive,
+      maxSharedStringsBytes: Long = SharedStringsScanner.DefaultMaxBytes) {
 
     /** Sheets in workbook order: (name, worksheet part path). */
     lazy val sheets: Seq[SheetInfo] = {
@@ -190,7 +183,7 @@ object XlsxParser {
       * StAX shared-strings path is a test oracle). None when the part is
       * absent. */
     private def sharedStringsEntry[T](parse: InputStream => T): Option[T] =
-      openEntryStream("xl/sharedStrings.xml").map { case (raw, closeAll) =>
+      archive.open("xl/sharedStrings.xml").map { case (raw, closeAll) =>
         try parse(sniffUtf16(raw)) finally closeAll()
       }
 
@@ -272,25 +265,41 @@ object XlsxParser {
         new SheetScanCore(in, dateStyles, closeAll)
       }.getOrElse(RowSource.empty)
 
-    /** Open `path` with its CRC-32 checked ([[openEntryStream]]) and sniff
-      * the encoding BOM once: the positioned byte stream + closer for the
-      * byte scanners, or None for a missing worksheet entry. A UTF-16 BOM
+    /** Open worksheet `path` and sniff the encoding BOM once: the byte
+      * stream + closer for the byte scanners, or None for a missing
+      * worksheet entry. A UTF-16 BOM
       * does not fall back to StAX (r10): the entry transcodes to UTF-8 on
       * the fly and rides the same scanner + columnar pipeline — the scanner
       * matches tags bytewise and ignores the prolog's declared encoding.
       * The single copy of this dispatch — rows, sheetRows and
       * chunkingRowIterator ride it. */
     private def openSniffed(path: String): Option[(InputStream, () => Unit)] =
-      openEntryStream(path, checked = true).map { case (raw, closeAll) =>
+      archive.open(path, "worksheet").map { case (raw, closeAll) =>
         (sniffUtf16(raw), closeAll)
       }
 
+    /** After a scan of worksheet `path` failed with `e` (a ragged row, a
+      * parse error): `e`, unless the entry itself is corrupt — a flipped
+      * byte that keeps the deflate stream valid can make a row look ragged
+      * long before the entry's CRC-32 is checked at its end. Then the
+      * named corruption error, with `e` attached as suppressed. */
+    private[xlsx] def corruptionBefore(path: String, e: Throwable): Throwable =
+      try {
+        archive.open(path, "worksheet").foreach { case (in, closeAll) =>
+          try { val buf = new Array[Byte](1 << 16); while (in.read(buf) >= 0) () }
+          finally closeAll()
+        }
+        e
+      } catch {
+        case c: java.io.IOException => c.addSuppressed(e); c
+      }
+
     /** The workbook's graft row-group index for a worksheet entry, when
-      * present AND the raw deflate geometry is locatable (file-backed,
-      * zip32, method=deflate). A workbook with an index is our own
-      * writer's output — UTF-8 by construction, so the segmented path
-      * never needs the encoding sniff. Any parse surprise → None → the
-      * streaming pipeline (parallelism fallback, never correctness).
+      * present and its worksheet entry is DEFLATED. A workbook with an
+      * index is our own writer's output — UTF-8 by construction, so the
+      * segmented path never needs the encoding sniff. An index that does
+      * not describe the entry → None → the streaming pipeline (parallelism
+      * fallback, never correctness).
       *
       * `threads >= 3` gate: in segment mode the N workers carry inflate
       * AND parse, while the streaming pipeline runs producer + prefetch
@@ -319,12 +328,14 @@ object XlsxParser {
       * records no entry fields and is ignored. */
     private[xlsx] def segmentIndexRaw(path: String)
         : Option[ParallelSheetScanner.SegmentIndex] =
-      localFile.flatMap { f =>
-        openEntryStream(XlsxWriter.segmentIndexName(path)).flatMap {
-          case (s, closeAll) =>
+      archive.read { (src, dir) =>
+        for {
+          ie <- dir.entry(XlsxWriter.segmentIndexName(path))
+          sheet <- dir.entry(path) if sheet.method == java.util.zip.ZipEntry.DEFLATED
+          seg <- {
+            val in = dir.open(src, ie, s"${archive.path}: entry ${ie.name}")
             try {
-              val d = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(s))
+              val d = new java.io.DataInputStream(new java.io.BufferedInputStream(in))
               val version =
                 if (d.readLong() != XlsxWriter.SegmentMagic) 0 else d.readInt()
               if (version != 2 && version != 3) None
@@ -335,22 +346,18 @@ object XlsxParser {
                 }
                 val totalUncomp = d.readLong()
                 val totalRows = d.readLong()
-                val crc = d.readLong()
-                val compressed = d.readLong()
-                val uncompressed = d.readLong()
+                val entry = (d.readLong(), d.readLong(), d.readLong())
                 val segmentCrcs =
                   if (version == 3) Array.fill(n + 1)(d.readInt()) else null
-                ZipRaw.locate(f, path)
-                  .filter(re => re.method == java.util.zip.ZipEntry.DEFLATED &&
-                    re.crc == crc && re.compressedSize == compressed &&
-                    re.uncompressedSize == uncompressed)
-                  .map(re => ParallelSheetScanner.SegmentIndex(
-                    f, path, re.dataOffset, re.compressedSize, cuts,
-                    totalUncomp, totalRows, segmentCrcs))
+                if (entry != ((sheet.crc, sheet.compressedSize, sheet.uncompressedSize))) None
+                else Some(ParallelSheetScanner.SegmentIndex(archive, path,
+                  dir.dataOffset(src, sheet), sheet.compressedSize, cuts,
+                  totalUncomp, totalRows, segmentCrcs))
               }
             } catch { case _: java.io.IOException => None }
-            finally closeAll()
-        }
+            finally in.close()
+          }
+        } yield seg
       }
 
     /** Sequential cell events over segments [s0, s1) of an indexed
@@ -407,9 +414,9 @@ object XlsxParser {
           }
       }
 
-    /** Raw inflated entry stream for throughput probes (graft.tools). */
+    /** Inflated entry stream and its closer, for throughput probes. */
     def entryStreamForProbe(path: String): (InputStream, () => Unit) =
-      openEntryStream(path).getOrElse(
+      archive.open(path).getOrElse(
         throw new IllegalArgumentException(s"no entry $path"))
 
     private def readRels(): Map[String, String] = {
@@ -431,64 +438,12 @@ object XlsxParser {
         case None =>
       }
 
-    /** Open the zip and position an XML reader at entry `name`; the returned
-      * thunk closes both the XML reader and the zip stream. None if the
-      * entry does not exist. */
+    /** An XML reader over entry `name` and the thunk that closes it and
+      * the entry. None if the entry does not exist. */
     private[xlsx] def openEntry(name: String): Option[(XMLStreamReader, () => Unit)] =
-      openEntryStream(name).map { case (s, closeAll) =>
+      archive.open(name).map { case (s, closeAll) =>
         val xr = xif.createXMLStreamReader(s)
         (xr, () => { try xr.close() finally closeAll() })
-      }
-
-    /** Open the zip and position the raw inflated byte stream at entry
-      * `name`; the thunk closes the zip stream. None if absent. An archive
-      * that cannot be read as a zip — not one, truncated, or with a
-      * corrupt entry — fails with `<path>: not a readable zip archive (…)`
-      * on either path; on the streaming path also while the entry is read
-      * ([[NamedZipStream]]).
-      *
-      * `checked` (the worksheet scans): a local file's entry stream checks
-      * the entry's CRC-32 at its end and names the file and entry in any
-      * inflate failure ([[CheckedEntryStream]]) — `ZipFile` checks
-      * neither, so a flipped byte that keeps the XML well formed would read
-      * as wrong values. The object-store path needs no wrapper:
-      * `ZipInputStream` checks the CRC-32 itself once a scan reads the
-      * entry to its end, which every full scan does. */
-    private[xlsx] def openEntryStream(name: String,
-        checked: Boolean = false): Option[(InputStream, () => Unit)] =
-      localFile match {
-        case Some(f) =>
-          val zf =
-            try new java.util.zip.ZipFile(f)
-            catch { case e: java.util.zip.ZipException =>
-              throw NamedZipStream.unreadable(f.getPath, e.getMessage, e)
-            }
-          Option(zf.getEntry(name)) match {
-            case None => zf.close(); None
-            case Some(e) =>
-              val s =
-                try {
-                  val raw = zf.getInputStream(e)
-                  if (checked && e.getCrc != -1)
-                    new CheckedEntryStream(raw, e.getCrc, s"${f.getPath}: worksheet $name")
-                  else raw
-                } catch { case t: Throwable => zf.close(); throw t }
-              Some((s, () => { try s.close() finally zf.close() }))
-          }
-        case None =>
-          val in = new ZipInputStream(open())
-          try {
-            var e = NamedZipStream.named(path)(in.getNextEntry)
-            if (e == null)
-              throw NamedZipStream.unreadable(path, "no zip entry found", null)
-            while (e != null) {
-              if (e.getName == name)
-                return Some((new NamedZipStream(in, path), () => in.close()))
-              e = NamedZipStream.named(path)(in.getNextEntry)
-            }
-          } catch { case t: Throwable => in.close(); throw t }
-          in.close()
-          None
       }
   }
 
@@ -500,64 +455,5 @@ object XlsxParser {
       i += 1
     }
     None
-  }
-
-  /** An entry stream whose bytes are checked against the entry's CRC-32
-    * when it ends; a mismatch, and any inflate failure on the way, fails
-    * with `<what> is corrupt: …`. */
-  private final class CheckedEntryStream(in: InputStream, crc32: Long, what: String)
-      extends InputStream {
-    private val crc = new java.util.zip.CRC32
-    private var ended = false
-    private def corrupt(why: String, cause: Throwable = null) =
-      new java.io.IOException(s"$what is corrupt: $why", cause)
-
-    override def read(): Int = {
-      val one = new Array[Byte](1)
-      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
-    }
-
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val n =
-        try in.read(b, off, len)
-        catch {
-          case e @ (_: java.util.zip.ZipException | _: java.io.EOFException) =>
-            throw corrupt(String.valueOf(e.getMessage), e)
-        }
-      if (n > 0) crc.update(b, off, n)
-      else if (n < 0 && !ended) {
-        ended = true
-        if (crc.getValue != crc32) throw corrupt("CRC-32 mismatch")
-      }
-      n
-    }
-
-    override def close(): Unit = in.close()
-  }
-
-  /** An entry of a `ZipInputStream`: names the archive in a read failure,
-    * and shields the zip stream from StAX's close(). */
-  private final class NamedZipStream(in: InputStream, path: String)
-      extends InputStream {
-    override def read(): Int = NamedZipStream.named(path)(in.read())
-    override def read(b: Array[Byte], off: Int, len: Int): Int =
-      NamedZipStream.named(path)(in.read(b, off, len))
-    override def close(): Unit = ()
-  }
-
-  private object NamedZipStream {
-    def unreadable(path: String, why: String, cause: Throwable): java.util.zip.ZipException = {
-      val e = new java.util.zip.ZipException(s"$path: not a readable zip archive ($why)")
-      e.initCause(cause)
-      e
-    }
-
-    /** `body`, its zip and end-of-stream failures named by `path`. */
-    def named[T](path: String)(body: => T): T =
-      try body
-      catch {
-        case e @ (_: java.util.zip.ZipException | _: java.io.EOFException) =>
-          throw unreadable(path, String.valueOf(e.getMessage), e)
-      }
   }
 }

@@ -9,14 +9,15 @@ import graft.SparkSpec
 
 import scala.util.Try
 
-/** The stream path checks each worksheet's CRC-32: a byte flipped in a
-  * `ZipFile`-read sheet fails the read with an error that names the file
-  * and the entry, never returning wrong rows. The flips here keep the
-  * sheet well formed and its rows the same shape — a digit becomes another
-  * digit inside a `<v>` — so only the checksum can tell. The sheet is
-  * deflated at level 0 (stored deflate blocks, where its text lies in the
-  * archive as it is) or STORED. The object-store path (`ZipInputStream`)
-  * checks the CRC-32 itself once a scan reads the entry to its end. */
+/** The archive reader checks each entry's CRC-32: a byte flipped in a
+  * sheet fails the read with an error that names the file and the entry,
+  * never returning wrong rows. The first flips keep the sheet well formed
+  * and its rows the same shape — a digit becomes another digit inside a
+  * `<v>` — so only the checksum can tell; `ZipFile`, which checks nothing,
+  * is the oracle that they do. The sheet is deflated at level 0 (stored
+  * deflate blocks, where its text lies in the archive as it is), at level
+  * 9, or STORED. A flip that makes a row look ragged reports the
+  * corruption, not the ragged row. */
 class XlsxChecksumSpec extends SparkSpec {
   private val Sheet = "xl/worksheets/sheet1.xml"
   private val rows = 3000
@@ -103,41 +104,78 @@ class XlsxChecksumSpec extends SparkSpec {
           val e = intercept[Exception](read(f, t))
           assert(messages(e).contains(named), s"level $level at $at threads $t: ${messages(e)}")
         }
-        // the object-store path: ZipInputStream's own check at entry end
-        val streamed = new XlsxParser.Workbook(() => new java.io.ByteArrayInputStream(bad))
+        // a workbook read from memory: the same checked reader
+        val streamed = TestArchives.workbook(bad, path = "mem/bad.xlsx")
         Seq(1, 2).foreach { t =>
           val e = intercept[Exception] {
             val it = streamed.rowIterator(Sheet, t)
             try while (it.hasNext) it.next() finally it.close()
           }
-          assert(messages(e).contains("invalid entry CRC"), s"stream threads $t: ${messages(e)}")
+          assert(messages(e).contains(s"mem/bad.xlsx: worksheet $Sheet is corrupt: CRC-32 mismatch"),
+            s"stream threads $t: ${messages(e)}")
         }
       }
     }
   }
 
+  /** `bad` read at each of `threads` (None: AUTO) gives `want` or the
+    * named corruption error of its sheet; returns how many reads erred. */
+  private def rightOrCorrupt(bad: Array[Byte], want: Seq[String],
+      threads: Seq[Option[Int]], what: String): Int = {
+    val f = tempFile(bad)
+    threads.count { t =>
+      val r = spark.read.format("xlsx")
+      Try(t.fold(r)(n => r.option("threads", n.toString)).load(f.getAbsolutePath)
+          .collect().map(_.toString).toSeq).fold(
+        e => {
+          assert(messages(e).contains(s"${f.getPath}: worksheet $Sheet is corrupt"),
+            s"$what threads $t: ${messages(e)}")
+          true
+        },
+        got => { assert(got == want, s"$what threads $t read wrong rows"); false })
+    }
+  }
+
+  private def sheetData(zip: Array[Byte]): (Int, Int) = TestArchives.dataRange(zip, Sheet)
+
   test("a byte flipped in a compressed sheet gives an error or the right " +
       "rows, never wrong rows") {
     val good = workbook(9)
     val want = read(tempFile(good), 1)
-    val zf = new java.util.zip.ZipFile(tempFile(good))
-    val (from, until) =
-      try {
-        val raw = ZipRaw.locate(new java.io.File(zf.getName), Sheet).get
-        (raw.dataOffset, raw.dataOffset + raw.compressedSize)
-      } finally zf.close()
-    var named = 0
-    (1 to 8).foreach { k =>
-      val at = (from + (until - from) * k / 9).toInt
+    val (from, until) = sheetData(good)
+    val erred = (1 to 8).map { k =>
+      val at = from + (until - from) * k / 9
       val bad = good.clone()
       bad(at) = (bad(at) ^ 0x10).toByte
-      val f = tempFile(bad)
-      Seq(1, 2).foreach { t =>
-        Try(read(f, t)).fold(
-          e => if (messages(e).contains(s"${f.getPath}: worksheet $Sheet is corrupt")) named += 1,
-          got => assert(got == want, s"flip at $at threads $t read wrong rows"))
-      }
+      rightOrCorrupt(bad, want, Seq(Some(1), Some(2)), s"flip at $at")
+    }.sum
+    assert(erred > 0)
+  }
+
+  test("64 bytes flipped in a STORED sheet give the named corruption error, " +
+      "not a ragged row, at threads 1, 2 and AUTO") {
+    val good = workbook(-1)
+    val want = read(tempFile(good), 1)
+    val (from, until) = sheetData(good)
+    (1 to 4).foreach { k =>
+      val at = from + (until - from) * k / 5
+      val bad = good.clone()
+      (at until at + 64).foreach(i => bad(i) = (bad(i) ^ 0x10).toByte)
+      assert(rightOrCorrupt(bad, want, Seq(Some(1), Some(2), None), s"flip at $at") == 3)
     }
-    assert(named > 0)
+  }
+
+  test("a genuinely ragged sheet still reports its ragged row") {
+    val sheet = ("<worksheet><sheetData><row r=\"1\"><c r=\"A1\"><v>1</v></c></row>" +
+      "<row r=\"2\"><c r=\"A2\"><v>2</v></c><c r=\"B2\"><v>3</v></c></row>" +
+      "</sheetData></worksheet>").getBytes(StandardCharsets.UTF_8)
+    val f = tempFile(SheetFuzz.zip("xl/workbook.xml" -> SheetFuzz.workbookXml,
+      "xl/_rels/workbook.xml.rels" -> SheetFuzz.relsXml,
+      Sheet -> new String(sheet, StandardCharsets.UTF_8)))
+    Seq(1, 2).foreach { t =>
+      val e = intercept[Exception](read(f, t))
+      assert(messages(e).contains("Row 2 has more columns than the first row"),
+        s"threads $t: ${messages(e)}")
+    }
   }
 }

@@ -46,21 +46,18 @@ class XlsxGuardSpec extends SparkSpec {
 
   test("sharedStrings over the per-task byte budget aborts with a clear error") {
     val bytes = hotStringsWorkbook(n = 50, len = 100) // ~5 KB of string data
-    val wb = new XlsxParser.Workbook(
-      () => new java.io.ByteArrayInputStream(bytes),
-      maxSharedStringsBytes = 1000L)
+    val wb = TestArchives.workbook(bytes, maxSharedStringsBytes = 1000L)
     val e = intercept[IllegalStateException](wb.sharedStrings)
     assert(e.getMessage.contains("sharedStrings"), e.getMessage)
     assert(e.getMessage.contains("maxSharedStringsBytes"), e.getMessage)
     // same table under the default budget parses fine
-    val ok = new XlsxParser.Workbook(() => new java.io.ByteArrayInputStream(bytes))
+    val ok = TestArchives.workbook(bytes)
     assert(ok.sharedStrings.length == 50)
     // ONE giant string must hit the guard too (enforced per append, not
     // only at </si> — otherwise the buffer doubles unboundedly first)
     val one = zipOf("xl/sharedStrings.xml" ->
       s"""<sst><si><t>${"y" * 5000}</t></si></sst>""")
-    val wb1 = new XlsxParser.Workbook(
-      () => new java.io.ByteArrayInputStream(one), maxSharedStringsBytes = 1000L)
+    val wb1 = TestArchives.workbook(one, maxSharedStringsBytes = 1000L)
     val e1 = intercept[IllegalStateException](wb1.sharedStrings)
     assert(e1.getMessage.contains("sharedStrings"))
   }

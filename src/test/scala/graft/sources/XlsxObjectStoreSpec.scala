@@ -1,6 +1,6 @@
 package graft.sources.xlsx
 
-import java.io.{ByteArrayInputStream, File}
+import java.io.File
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions.{col, sum}
 
 /** The local file system under the scheme `graftfs`: a stand-in object
   * store that only a session conf registers (`fs.graftfs.impl`), so a
-  * workbook read through it takes the `ZipInputStream` path. */
-final class GraftTestFs extends RawLocalFileSystem {
+  * workbook read through it takes the Hadoop positioned-read source
+  * (`FSDataInputStream.readFully(position, …)`) instead of a local
+  * `FileChannel`. */
+class GraftTestFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
 }
@@ -62,8 +64,13 @@ class XlsxObjectStoreSpec extends SparkSpec {
       Seq(None, Some("1")).foreach { threads =>
         val reader = spark.read.format("xlsx")
         val df = threads.fold(reader)(reader.option("threads", _)).load(remote(f))
-        // not a local file: no segment-range split
-        assert(df.rdd.getNumPartitions == 1)
+        // not a local file, split all the same: at AUTO into
+        // min(segments, cores) segment ranges, at threads 1 not at all
+        val segments = TestArchives.workbook(workbook)
+          .segmentIndexRaw("xl/worksheets/sheet1.xml").get.segments
+        assert(segments >= 3)
+        assert(df.rdd.getNumPartitions ==
+          (if (threads.isEmpty) math.min(segments, XlsxScan.executorCores()) else 1))
         val r = df.agg(sum(col("id")), sum(col("x"))).head()
         assert(r.getDouble(0).toLong == rows.toLong * (rows - 1) / 2, threads)
         assert(df.filter(col("s").endsWith("pad")).count() == rows, threads)
@@ -82,8 +89,7 @@ class XlsxObjectStoreSpec extends SparkSpec {
       })
       assert(messages(e).contains(s"${f.getAbsolutePath}: not a readable zip archive ("),
         s"$what: ${messages(e)}")
-      val wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes),
-        path = s"mem/$what.xlsx")
+      val wb = TestArchives.workbook(bytes, path = s"mem/$what.xlsx")
       val e2 = intercept[Exception] {
         val it = wb.rowIterator(wb.sheetPath(None, 1))
         try while (it.hasNext) it.next() finally it.close()

@@ -29,11 +29,10 @@ class XlsxParallelSpec extends SparkSpec {
   }
 
   private def drain(threads: Int, chunkBytes: Int = 0): Seq[(Long, Seq[XCell])] = {
-    val wb = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
+    val wb = TestArchives.workbook(file)
     val it =
       if (chunkBytes > 0) {
-        val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
+        val (raw, closeAll) = wb.entryStreamForProbe("xl/worksheets/sheet1.xml")
         ParallelSheetScanner.rowIterator(raw, wb.sharedStrings, wb.dateStyles,
           threads, closeAll, chunkBytes)
       } else wb.rowIterator("xl/worksheets/sheet1.xml", threads)
@@ -65,9 +64,8 @@ class XlsxParallelSpec extends SparkSpec {
   }
 
   test("worker-side conversion stitches indices and widths across many chunks") {
-    val wb = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
-    val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
+    val wb = TestArchives.workbook(file)
+    val (raw, closeAll) = wb.entryStreamForProbe("xl/worksheets/sheet1.xml")
     // tiny chunks force dozens of chunks through the chunk face; the
     // workers scan each chunk into five coerced string columns, so a row's
     // non-null count is the number of cells its worker saw
@@ -148,8 +146,7 @@ class XlsxParallelSpec extends SparkSpec {
   }
 
   test("early close terminates the worker pipeline") {
-    val wb = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(file), Some(file))
+    val wb = TestArchives.workbook(file)
     val before = xlsxThreads()
     val it = wb.rowIterator("xl/worksheets/sheet1.xml", 4)
     assert(it.hasNext)
@@ -298,8 +295,8 @@ class XlsxParallelSpec extends SparkSpec {
       "exception and leaves no xlsx thread") {
     val f = sharedStringsWorkbook(90000)
     val sheetLen = {
-      val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
-      val (in, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml").get
+      val wb = TestArchives.workbook(f)
+      val (in, closeAll) = wb.entryStreamForProbe("xl/worksheets/sheet1.xml")
       try in.readAllBytes().length finally closeAll()
     }
     val before = xlsxThreads()
@@ -311,7 +308,7 @@ class XlsxParallelSpec extends SparkSpec {
       (1 to 20).foreach { i =>
         // 3 to 8 chunks: the producer is blocked on a chunk, or on the end
         // of the sheet, when the scan closes
-        val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+        val wb = TestArchives.workbook(f)
         val par = wb.chunkingRowIterator("xl/worksheets/sheet1.xml", 2,
           SheetFuzz.noColumns.chunkParser(wb.dateStyles),
           chunkBytes = sheetLen / (3 + i % 6)).get
@@ -356,8 +353,8 @@ class XlsxParallelSpec extends SparkSpec {
       .exists(t => String.valueOf(t.getMessage).contains(SharedStringsScanner.guardMessage(1000L))), e)
     assertTornDown(before, f)
     // a worker whose chunk parse fails: the cause surfaces, the scan ends
-    val wb = new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
-    val (raw, closeAll) = wb.openEntryStream("xl/worksheets/sheet1.xml", checked = true).get
+    val wb = TestArchives.workbook(f)
+    val (raw, closeAll) = wb.entryStreamForProbe("xl/worksheets/sheet1.xml")
     val cols = new RowColumns(org.apache.spark.sql.types.StructType(Nil),
       org.apache.spark.sql.types.StructType(Nil), false).chunkParser(wb.dateStyles)
     val parsed = new java.util.concurrent.atomic.AtomicInteger()

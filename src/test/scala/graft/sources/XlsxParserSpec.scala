@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import graft.sources.xlsx.{XCell, XlsxParser}
+import graft.sources.xlsx.{TestArchives, XCell, XlsxParser}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parser-level edge cases on hand-crafted SpreadsheetML (things our own
@@ -29,7 +29,7 @@ class XlsxParserSpec extends AnyFunSuite {
   }
 
   private def workbook(bytes: Array[Byte]) =
-    new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+    TestArchives.workbook(bytes)
 
   private val workbookXml =
     """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"

@@ -58,7 +58,7 @@ object SheetFuzz {
     * Left(()) = the read must fail ragged. */
   def oracleRows(bytes: Array[Byte], kv: Map[String, String],
       keep: Option[Seq[String]] = None): Either[Unit, Seq[Seq[String]]] = {
-    val wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+    val wb = TestArchives.workbook(bytes)
     val opts = XlsxOptions.from(new CaseInsensitiveStringMap(kv.asJava))
     val resolved = XlsxSchema.resolve(wb, opts)
     val rows = {
@@ -248,9 +248,9 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
       def drain(it: Iterator[(Long, Array[XCell])]): Seq[(Long, Seq[XCell])] =
         it.map { case (i, cells) => (i, cells.toSeq) }.toList
 
-      val wb1 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+      val wb1 = TestArchives.workbook(bytes)
       val scanner = drain(wb1.rowIterator("xl/worksheets/sheet1.xml"))
-      val wb2 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+      val wb2 = TestArchives.workbook(bytes)
       val stax = drain(XlsxOracle.rows(wb2, "xl/worksheets/sheet1.xml"))
 
       assert(scanner == stax,
@@ -261,9 +261,9 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
       // comments, CDATA, self-closing rows and implicit row indices; the
       // merged output must be identical to the sequential scanners
       Seq(48, 256).foreach { cb =>
-        val wb3 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+        val wb3 = TestArchives.workbook(bytes)
         val (raw, closeAll) =
-          wb3.openEntryStream("xl/worksheets/sheet1.xml").get
+          wb3.entryStreamForProbe("xl/worksheets/sheet1.xml")
         val chunked = drain(ParallelSheetScanner.rowIterator(raw,
           wb3.sharedStrings, wb3.dateStyles, threads = 3, closeAll,
           chunkBytes = cb))
@@ -275,7 +275,7 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
         // indices, widths, and the producer's dealing of a leading-row
         // drop, counted by the worker-side column chunks
         Seq(0, 2).foreach { drop =>
-          val wb4 = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+          val wb4 = TestArchives.workbook(bytes)
           val par = wb4.chunkingRowIterator("xl/worksheets/sheet1.xml",
             threads = 3, SheetFuzz.noColumns.chunkParser(wb4.dateStyles),
             dropFirstRows = drop.toLong, chunkBytes = cb).get
@@ -370,7 +370,7 @@ class XlsxScannerDifferentialSpec extends AnyFunSuite {
     put("xl/worksheets/sheet1.xml", sheet.getBytes(StandardCharsets.UTF_8))
     z.close()
     val bytes = bos.toByteArray
-    new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+    TestArchives.workbook(bytes)
   }
 
   private def utf8(s: String): Option[Array[Byte]] =
@@ -507,8 +507,7 @@ class XlsxColumnChunkDifferentialSpec extends AnyFunSuite {
           zip("xl/workbook.xml" -> workbookXml, "xl/_rels/workbook.xml.rels" -> relsXml,
             "xl/sharedStrings.xml" -> big, "xl/styles.xml" -> stylesXml,
             "xl/worksheets/sheet1.xml" -> remapped)).foreach { bytes =>
-        val names = Try(XlsxSchema.resolve(new XlsxParser.Workbook(
-          () => new ByteArrayInputStream(bytes)),
+        val names = Try(XlsxSchema.resolve(TestArchives.workbook(bytes),
           XlsxOptions.from(new CaseInsensitiveStringMap(kv.asJava))).schema.fieldNames.toSeq)
           .getOrElse(Seq.empty)
         val everyOther = Some(names.zipWithIndex.collect { case (n, i) if i % 2 == 1 => n })

@@ -153,7 +153,7 @@ class XlsxScannerEdgeSpec extends AnyFunSuite {
     val bytes = workbookZip(pinnedSheet)
     def drain(it: CellRowIterator): Seq[(Long, Seq[XCell])] =
       try it.map { case (i, cells) => (i, cells.toSeq) }.toList finally it.close()
-    def wb = new XlsxParser.Workbook(() => new ByteArrayInputStream(bytes))
+    def wb = TestArchives.workbook(bytes)
     val stax = drain(XlsxOracle.rows(wb, "xl/worksheets/sheet1.xml"))
     assert(stax.size == 6)
     assert(stax(3)._2.take(4) == Seq(XCell.XNumber(42.0), XCell.XNumber(1.2345678901234568e16),
@@ -161,7 +161,7 @@ class XlsxScannerEdgeSpec extends AnyFunSuite {
     assert(drain(wb.rowIterator("xl/worksheets/sheet1.xml")) == stax)
     Seq(48, 97, 256).foreach { cb =>
       val w = wb
-      val (raw, closeAll) = w.openEntryStream("xl/worksheets/sheet1.xml").get
+      val (raw, closeAll) = w.entryStreamForProbe("xl/worksheets/sheet1.xml")
       assert(drain(ParallelSheetScanner.rowIterator(raw, w.sharedStrings, w.dateStyles,
         threads = 2, closeAll, chunkBytes = cb)) == stax, s"chunkBytes $cb")
     }

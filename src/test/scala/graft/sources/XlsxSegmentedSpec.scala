@@ -36,8 +36,7 @@ class XlsxSegmentedSpec extends SparkSpec {
     f
   }
 
-  private def wb: XlsxParser.Workbook =
-    new XlsxParser.Workbook(() => new java.io.FileInputStream(file), Some(file))
+  private def wb: XlsxParser.Workbook = TestArchives.workbook(file)
 
   test("writer emits a parseable index and ZipRaw locates the raw entry") {
     val zf = new java.util.zip.ZipFile(file) // flushes keep the zip standard
@@ -77,7 +76,7 @@ class XlsxSegmentedSpec extends SparkSpec {
         assert(d.readInt() == c.getValue.toInt, s"segment $k CRC-32")
       }
       assert(d.read() == -1)
-      val re = ZipRaw.locate(file, "xl/worksheets/sheet1.xml")
+      val re = TestArchives.locate(file, "xl/worksheets/sheet1.xml")
       assert(re.isDefined && re.get.method == java.util.zip.ZipEntry.DEFLATED)
       assert(re.get.compressedSize > prevC)
       assert(re.get.crc == crc && re.get.compressedSize == csize &&
@@ -119,7 +118,7 @@ class XlsxSegmentedSpec extends SparkSpec {
 
   test("zip64: ZipRaw resolves a forced-zip64 directory to the same raw " +
       "geometry, and the segmented read stays row-identical") {
-    val z32 = ZipRaw.locate(file, "xl/worksheets/sheet1.xml").get
+    val z32 = TestArchives.locate(file, "xl/worksheets/sheet1.xml").get
     val bytes64 = Zip64Force.rewrite(
       java.nio.file.Files.readAllBytes(file.toPath))
     val f64 = java.io.File.createTempFile("segspec64", ".xlsx")
@@ -131,11 +130,10 @@ class XlsxSegmentedSpec extends SparkSpec {
     finally zf.close()
     // zip64 directory resolves to the SAME raw byte geometry (data bytes
     // are untouched by the rewrite)
-    val z64 = ZipRaw.locate(f64, "xl/worksheets/sheet1.xml").get
+    val z64 = TestArchives.locate(f64, "xl/worksheets/sheet1.xml").get
     assert(z64 == z32, s"zip64 geometry drifted: $z64 vs $z32")
     // and the fully-parallel segmented read engages and matches
-    val wb64 = new XlsxParser.Workbook(
-      () => new java.io.FileInputStream(f64), Some(f64))
+    val wb64 = TestArchives.workbook(f64)
     val seq = wb.rowIterator("xl/worksheets/sheet1.xml", threads = 1)
     val par = wb64.rowIterator("xl/worksheets/sheet1.xml", threads = 4)
     var n = 0
@@ -149,8 +147,7 @@ class XlsxSegmentedSpec extends SparkSpec {
     assert(!par.hasNext && n == rows + 1)
   }
 
-  test("hostile zip64: a 0x0001 extra field whose self-declared size " +
-      "exceeds the entry's actual extra bytes returns None, never throws") {
+  test("hostile zip64: a short 0x0001 field fails, naming the file") {
     val bytes64 = Zip64Force.rewrite(
       java.nio.file.Files.readAllBytes(file.toPath))
     // chop the target entry's DECLARED extra length so only the 4-byte
@@ -179,19 +176,24 @@ class XlsxSegmentedSpec extends SparkSpec {
     val fh = java.io.File.createTempFile("hostile64", ".xlsx")
     fh.deleteOnExit()
     java.nio.file.Files.write(fh.toPath, bytes64)
-    // the documented contract for untrusted workbooks: any parse surprise
-    // falls back to the streaming pipeline (None) — never a crashed task
-    assert(ZipRaw.locate(fh, "xl/worksheets/sheet1.xml").isEmpty)
+    // an archive whose directory does not parse is not read at all (as
+    // `ZipFile` rejects it too): the error names it, and no read of the
+    // field runs past the extra bytes
+    val e = intercept[java.util.zip.ZipException](
+      TestArchives.locate(fh, "xl/worksheets/sheet1.xml"))
+    assert(e.getMessage.startsWith(s"${fh.getPath}: not a readable zip archive ("),
+      e.getMessage)
+    intercept[java.util.zip.ZipException](new java.util.zip.ZipFile(fh))
   }
 
   test("a workbook without an index falls back to the streaming pipeline") {
-    // stream-written (no local file) → no segment path, identical rows
+    // one segment's worth of rows: no index, no segment path, every row
     val bos = new java.io.ByteArrayOutputStream()
     XlsxWriter.write(bos, Seq(XlsxWriter.SheetSpec("S", None,
       (1 to 500).iterator.map(i => Seq[Any](i.toLong, s"v$i")))))
     val bytes = bos.toByteArray
-    val wb2 = new XlsxParser.Workbook(
-      () => new java.io.ByteArrayInputStream(bytes), None)
+    val wb2 = TestArchives.workbook(bytes)
+    assert(wb2.segmentIndexRaw("xl/worksheets/sheet1.xml").isEmpty)
     val par = wb2.rowIterator("xl/worksheets/sheet1.xml", threads = 4)
     var n = 0
     while (par.hasNext) { par.next(); n += 1 }
@@ -225,7 +227,7 @@ class XlsxSegmentedSpec extends SparkSpec {
 
     val sheet = "xl/worksheets/sheet1.xml"
     def index(f: java.io.File) =
-      new XlsxParser.Workbook(() => new java.io.FileInputStream(f), Some(f))
+      TestArchives.workbook(f)
         .segmentIndexRaw(sheet)
     assert(index(src).exists(_.cuts.nonEmpty), "the source must be indexed")
     val kept = new java.util.zip.ZipFile(repacked)

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
 /** The xlsx writer's container and encoder: the sheet XML equals what the
   * previous writer (a `java.io.Writer` over a `ZipOutputStream`) wrote for
   * every value type, whatever the deflate thread count; the archive reads
-  * through every zip reader the sources use; the zip64 record forms read
+  * through the sources' zip reader and both JDK ones; the zip64 record forms read
   * back past 4 GiB; a corrupt segment fails with a named error; and an
   * aborted write leaves neither a file nor a thread behind. */
 class XlsxWriterSpec extends SparkSpec with Eventually {
@@ -65,7 +65,7 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
   }
 
   private def workbook(f: File) =
-    new XlsxParser.Workbook(() => new FileInputStream(f), Some(f))
+    TestArchives.workbook(f)
 
   private def sha256(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(b)
@@ -189,7 +189,7 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
     assert(others.contains(XlsxWriter.segmentIndexName(Sheet)))
     others.foreach { name =>
       val content = entryBytes(f, name)
-      val re = ZipRaw.locate(f, name).get
+      val re = TestArchives.locate(f, name).get
       assert(java.util.Arrays.equals(rawBytes(f, re.dataOffset, re.compressedSize.toInt),
         deflated(4, content, 0, content.length, last = true)), name)
     }
@@ -205,7 +205,7 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
       }.toMap finally zf.close()
       assert(meta.contains(Sheet) && meta.contains("xl/styles.xml"))
       assert(meta.contains(XlsxWriter.segmentIndexName(Sheet)) == (c.name == "many"))
-      // the object-store path: ZipInputStream checks each data descriptor's
+      // the streaming oracle: ZipInputStream checks each data descriptor's
       // CRC and sizes against what it inflated
       val zin = new ZipInputStream(new FileInputStream(f))
       try {
@@ -222,13 +222,13 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
         assert(n == meta.size)
       } finally zin.close()
       meta.foreach { case (name, (crc, csize, size)) =>
-        val re = ZipRaw.locate(f, name).get
+        val re = TestArchives.locate(f, name).get
         assert((re.crc, re.compressedSize, re.uncompressedSize) == ((crc, csize, size)))
       }
       val f64 = tempFile(s"golden64-${c.name}")
       Files.write(f64.toPath, Zip64Force.rewrite(Files.readAllBytes(f.toPath)))
       assert(java.util.Arrays.equals(entryBytes(f64, Sheet), entryBytes(f, Sheet)))
-      assert(ZipRaw.locate(f64, Sheet) == ZipRaw.locate(f, Sheet))
+      assert(TestArchives.locate(f64, Sheet) == TestArchives.locate(f, Sheet))
     }
   }
 
@@ -269,10 +269,10 @@ class XlsxWriterSpec extends SparkSpec with Eventually {
       xOffset
     } finally raf.close()
     assert(xOffset > 0xffffffffL)
-    assert(ZipRaw.locate(f, "pad.bin") ==
-      Some(ZipRaw.RawEntry(30L + pad.length, big, 8, 0L, big + 1)))
-    assert(ZipRaw.locate(f, "x.txt") ==
-      Some(ZipRaw.RawEntry(xOffset + 30 + name.length, dLen, 8, crc, content.length)))
+    assert(TestArchives.locate(f, "pad.bin") ==
+      Some(TestArchives.RawEntry(30L + pad.length, big, 8, 0L, big + 1)))
+    assert(TestArchives.locate(f, "x.txt") ==
+      Some(TestArchives.RawEntry(xOffset + 30 + name.length, dLen, 8, crc, content.length)))
     val zf = new ZipFile(f)
     try {
       val p = zf.getEntry("pad.bin")
